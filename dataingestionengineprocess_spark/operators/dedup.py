@@ -523,111 +523,116 @@ def prefix_filter_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         F.col(id_col).alias("id"),
         F.explode(shingles(text_col, n)).alias("s"),
     ).persist()
-    freq = sh.groupBy("s").agg(F.count("*").alias("f"))
-    by_rarity = sh.join(freq, "s").groupBy("id").agg(
-        F.sort_array(F.collect_list(F.struct("f", "s"))).alias("fs")
-    )
-    # Referenced three times below (prefix explode + both verification
-    # sides) -- cache the rarity-sorted sets so the freq-join/
-    # collect_list subtree doesn't execute per reference. persist (not
-    # localCheckpoint: measured 2.3x faster here -- no eager RDD
-    # materialization of the wide arrays); the cache is released below
-    # once the (small) pair result is checkpointed.
-    toksets = by_rarity.select(
-        "id",
-        F.transform("fs", lambda x: x.getField("s")).alias("toks"),
-        F.size("fs").alias("n"),
-    ).persist()
-    # The prefix must be PPJoin-safe for every pair the REFERENCE
-    # admits. Two corrections to the textbook |S| - ceil(t|S|) + 1:
-    # (a) the reference thresholds on round(jac, 4), so pairs with
-    #     true jac down to t - 5e-5 qualify -- size the prefix for
-    #     that effective threshold;
-    # (b) ceil in DOUBLE arithmetic can overshoot when t*n has an
-    #     inflated double repr (ceil(0.55*100) == 56), which would
-    #     shrink the prefix and drop pairs -- the 1e-9 guard keeps
-    #     the ceil exact for thresholds with sane decimal precision.
-    t_eff = threshold - 5e-5
-    plen = (
-        F.col("n")
-        - F.ceil(F.lit(t_eff) * F.col("n") - F.lit(1e-9))
-        + 1
-    ).cast("int")
-    # Candidate generation stays NARROW: only (id, prefix-shingle,
-    # position, set-size) rows enter the self-join and only
-    # (id_a, id_b) pairs get deduplicated -- the full shingle arrays
-    # would otherwise ride through two shuffles. Verification re-joins
-    # the arrays once per side afterwards (the same narrow-pair-dedup
-    # move minhash_neardup_pairs makes).
-    pref = toksets.select(
-        "id", F.col("n"),
-        F.posexplode(F.slice("toks", F.lit(1), plen)).alias("pos0", "p"),
-    ).select("id", "n", (F.col("pos0") + 1).alias("pos"), "p")
-    a = pref.select(F.col("id").alias("id_a"), F.col("n").alias("pna"),
-                    F.col("pos").alias("pia"), "p")
-    b = pref.select(F.col("id").alias("id_b"), F.col("n").alias("pnb"),
-                    F.col("pos").alias("pib"), "p")
-    # Two more PPJoin prunes, both exactness-safe (a qualifying pair's
-    # FIRST common token always survives them, see below), applied
-    # BEFORE the dedup shuffle so pruned candidates never move:
-    # - LENGTH filter: jac <= min(|A|,|B|)/max(|A|,|B|), so a
-    #   qualifying pair's sizes are within a factor 1/t_eff.
-    # - POSITIONAL filter: toks are in one canonical order, so a match
-    #   at positions (i, j) bounds the intersection by
-    #   1 + min(|A|-i, |B|-j); a qualifying pair needs
-    #   I >= ceil(t_eff*(|A|+|B|)/(1+t_eff)) (jac>=t <=> I>=t*(|A|+|B|)/(1+t)).
-    #   For the pair's first common token every common token sits at
-    #   or after (i, j), so that row's bound holds and the pair is kept.
-    #   The 1e-9 slack keeps both float comparisons conservative.
-    alpha = F.ceil(
-        F.lit(t_eff) * (F.col("pna") + F.col("pnb")) / F.lit(1.0 + t_eff)
-        - F.lit(1e-9)
-    )
-    ubound = F.lit(1) + F.least(
-        F.col("pna") - F.col("pia"), F.col("pnb") - F.col("pib")
-    )
-    pair_ids = (
-        a.join(b, "p")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            (F.col("pna") >= F.lit(t_eff) * F.col("pnb") - F.lit(1e-9))
-            & (F.col("pnb") >= F.lit(t_eff) * F.col("pna") - F.lit(1e-9))
-            & (ubound >= alpha)
+    toksets = None
+    try:
+        freq = sh.groupBy("s").agg(F.count("*").alias("f"))
+        by_rarity = sh.join(freq, "s").groupBy("id").agg(
+            F.sort_array(F.collect_list(F.struct("f", "s"))).alias("fs")
         )
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cand = (
-        pair_ids
-        .join(
-            toksets.select(F.col("id").alias("id_a"),
-                           F.col("toks").alias("toks_a"),
-                           F.col("n").alias("na")),
-            "id_a",
+        # Referenced three times below (prefix explode + both verification
+        # sides) -- cache the rarity-sorted sets so the freq-join/
+        # collect_list subtree doesn't execute per reference. persist (not
+        # localCheckpoint: measured 2.3x faster here -- no eager RDD
+        # materialization of the wide arrays); the cache is released below
+        # once the (small) pair result is checkpointed.
+        toksets = by_rarity.select(
+            "id",
+            F.transform("fs", lambda x: x.getField("s")).alias("toks"),
+            F.size("fs").alias("n"),
+        ).persist()
+        # The prefix must be PPJoin-safe for every pair the REFERENCE
+        # admits. Two corrections to the textbook |S| - ceil(t|S|) + 1:
+        # (a) the reference thresholds on round(jac, 4), so pairs with
+        #     true jac down to t - 5e-5 qualify -- size the prefix for
+        #     that effective threshold;
+        # (b) ceil in DOUBLE arithmetic can overshoot when t*n has an
+        #     inflated double repr (ceil(0.55*100) == 56), which would
+        #     shrink the prefix and drop pairs -- the 1e-9 guard keeps
+        #     the ceil exact for thresholds with sane decimal precision.
+        t_eff = threshold - 5e-5
+        plen = (
+            F.col("n")
+            - F.ceil(F.lit(t_eff) * F.col("n") - F.lit(1e-9))
+            + 1
+        ).cast("int")
+        # Candidate generation stays NARROW: only (id, prefix-shingle,
+        # position, set-size) rows enter the self-join and only
+        # (id_a, id_b) pairs get deduplicated -- the full shingle arrays
+        # would otherwise ride through two shuffles. Verification re-joins
+        # the arrays once per side afterwards (the same narrow-pair-dedup
+        # move minhash_neardup_pairs makes).
+        pref = toksets.select(
+            "id", F.col("n"),
+            F.posexplode(F.slice("toks", F.lit(1), plen)).alias("pos0", "p"),
+        ).select("id", "n", (F.col("pos0") + 1).alias("pos"), "p")
+        a = pref.select(F.col("id").alias("id_a"), F.col("n").alias("pna"),
+                        F.col("pos").alias("pia"), "p")
+        b = pref.select(F.col("id").alias("id_b"), F.col("n").alias("pnb"),
+                        F.col("pos").alias("pib"), "p")
+        # Two more PPJoin prunes, both exactness-safe (a qualifying pair's
+        # FIRST common token always survives them, see below), applied
+        # BEFORE the dedup shuffle so pruned candidates never move:
+        # - LENGTH filter: jac <= min(|A|,|B|)/max(|A|,|B|), so a
+        #   qualifying pair's sizes are within a factor 1/t_eff.
+        # - POSITIONAL filter: toks are in one canonical order, so a match
+        #   at positions (i, j) bounds the intersection by
+        #   1 + min(|A|-i, |B|-j); a qualifying pair needs
+        #   I >= ceil(t_eff*(|A|+|B|)/(1+t_eff))
+        #   (jac>=t <=> I>=t*(|A|+|B|)/(1+t)).
+        #   For the pair's first common token every common token sits at
+        #   or after (i, j), so that row's bound holds and the pair is kept.
+        #   The 1e-9 slack keeps both float comparisons conservative.
+        alpha = F.ceil(
+            F.lit(t_eff) * (F.col("pna") + F.col("pnb")) / F.lit(1.0 + t_eff)
+            - F.lit(1e-9)
         )
-        .join(
-            toksets.select(F.col("id").alias("id_b"),
-                           F.col("toks").alias("toks_b"),
-                           F.col("n").alias("nb")),
-            "id_b",
+        ubound = F.lit(1) + F.least(
+            F.col("pna") - F.col("pia"), F.col("pnb") - F.col("pib")
         )
-    )
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    # Round BEFORE thresholding, exactly like ngram_jaccard_pairs --
-    # a pair at jac = t - 0.00004 rounds up into the reference output,
-    # so the optimized plan must admit it too.
-    jac = F.round(inter / (F.col("na") + F.col("nb") - inter), 4)
-    out = (
-        cand.filter(jac >= threshold)
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        # Qualifying pairs are tiny relative to the corpus: checkpoint
-        # them eagerly so the toksets cache can be dropped here instead
-        # of leaking past the operator.
-        .localCheckpoint(eager=True)
-    )
-    toksets.unpersist()
-    sh.unpersist()
-    return out
+        pair_ids = (
+            a.join(b, "p")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .filter(
+                (F.col("pna") >= F.lit(t_eff) * F.col("pnb") - F.lit(1e-9))
+                & (F.col("pnb") >= F.lit(t_eff) * F.col("pna") - F.lit(1e-9))
+                & (ubound >= alpha)
+            )
+            .select("id_a", "id_b")
+            .dropDuplicates(["id_a", "id_b"])
+        )
+        cand = (
+            pair_ids
+            .join(
+                toksets.select(F.col("id").alias("id_a"),
+                               F.col("toks").alias("toks_a"),
+                               F.col("n").alias("na")),
+                "id_a",
+            )
+            .join(
+                toksets.select(F.col("id").alias("id_b"),
+                               F.col("toks").alias("toks_b"),
+                               F.col("n").alias("nb")),
+                "id_b",
+            )
+        )
+        inter = F.size(F.array_intersect("toks_a", "toks_b"))
+        # Round BEFORE thresholding, exactly like ngram_jaccard_pairs --
+        # a pair at jac = t - 0.00004 rounds up into the reference output,
+        # so the optimized plan must admit it too.
+        jac = F.round(inter / (F.col("na") + F.col("nb") - inter), 4)
+        return (
+            cand.filter(jac >= threshold)
+            .select("id_a", "id_b", jac.alias("jaccard"))
+            # Qualifying pairs are tiny relative to the corpus:
+            # checkpoint them eagerly so the caches can be dropped
+            # below instead of leaking past the operator.
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        # released on every exit, a failed build included
+        if toksets is not None:
+            toksets.unpersist()
+        sh.unpersist()
 
 
 # ---------------------------------------------------------------------------

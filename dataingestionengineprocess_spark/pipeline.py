@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from .operators.dedup import dedup_exact
 from .operators.quality import ValidationResult, validate
+from .session import local_frame
 from .streaming.telemetry import emit_run_status
 from .sinks.warehouse import (
     RunStatus,
@@ -661,9 +662,8 @@ def ingest_new_files(spark: SparkSession, feed: FeedConfig,
     jvm = spark.sparkContext._jvm
     lp = jvm.org.apache.hadoop.fs.Path(ledger_path)
     fs = lp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    listing = spark.createDataFrame(
-        files, "path string, size long, mtime_ms long"
-    )
+    listing = local_frame(spark, files,
+                          "path string, size long, mtime_ms long")
     seen: set[tuple[str, int, int]] = set()
     if fs.exists(lp):
         # "Which of the listed files has the ledger already seen?" as a
@@ -702,8 +702,8 @@ def ingest_new_files(spark: SparkSession, feed: FeedConfig,
     status = ingest_batch(
         spark, feed, [p for p, _, _ in new], sinks, run_id=run_id
     )
-    ledger_rows = spark.createDataFrame(
-        [(p, s, m, run_id) for p, s, m in new],
+    ledger_rows = local_frame(
+        spark, [(p, s, m, run_id) for p, s, m in new],
         "path string, size long, mtime_ms long, run_id string",
     )
     ledger_rows.coalesce(1).write.mode("append").parquet(ledger_path)

@@ -11,8 +11,10 @@ AQE's coalescing to shrink the default).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 #: Configs applied to every session this engine builds. Each one is a
 #: conscious scale decision, not a magic number:
@@ -113,3 +115,38 @@ def release_persistent_rdds(spark: SparkSession) -> None:
     it = jmap.values().iterator()
     while it.hasNext():
         it.next().unpersist(False)
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple],
+                schema: str | T.StructType) -> DataFrame:
+    """A small DataFrame of driver-known rows, built JVM-side.
+
+    ``spark.createDataFrame(<python list>, ddl)`` parallelizes the list
+    into ``defaultParallelism`` slices behind a PythonRDD, so every
+    action over it starts Python workers: about 1 s of mostly idle
+    wall on a 4-core host for a 1-row control-plane write (the `_runs`
+    status row, the file ledger append). Here the rows go column-wise
+    into an Arrow table the JVM reads as a local relation (a
+    ``LocalTableScan``): no Python worker and no extra job, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.
+
+    ``schema`` (a DDL string or a StructType) is the result's schema
+    exactly -- names, types, nullability. Rows are tuples in schema
+    order; None is null.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    width = len(arrow_schema)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"local_frame: every row needs {width} fields")
+    cols = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -47,6 +47,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 _VDIR = "_v"
 _WIDTH = 10  # zero-padded => lexicographic order == numeric order
 _NAME_RE = re.compile(
@@ -161,8 +163,8 @@ class VersionedTable:
                 n, app, epoch, summary.getLength(),
                 int(summary.getFileCount()), n == cur,
             ))
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "version int, app string, epoch long, bytes long, "
             "n_files int, is_current boolean",
         )

@@ -30,6 +30,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 @dataclass
 class SinkConfig:
@@ -157,8 +159,8 @@ def new_run_id() -> str:
 
 def write_status(spark: SparkSession, warehouse_dir: str,
                  status: RunStatus) -> None:
-    df = spark.createDataFrame(
-        [(
+    df = local_frame(
+        spark, [(
             status.run_id, status.feed, status.rows_read, status.rows_loaded,
             status.rows_rejected, status.rows_quarantined,
             float(status.started_at), float(status.finished_at),

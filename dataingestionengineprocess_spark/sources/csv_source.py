@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -84,12 +86,10 @@ def read_csv_feed(spark: SparkSession, path: str | list[str],
         reader = reader.option("timestampFormat", timestamp_format)
     df = reader.csv(path).withColumn(source_file_col, F.input_file_name())
     if mode != "PERMISSIVE":
-        empty_rejects = spark.createDataFrame(
-            [], T.StructType([
-                T.StructField("raw_record", T.StringType()),
-                T.StructField(source_file_col, T.StringType()),
-            ])
-        )
+        empty_rejects = local_frame(spark, [], T.StructType([
+            T.StructField("raw_record", T.StringType()),
+            T.StructField(source_file_col, T.StringType()),
+        ]))
         return CsvBatch(clean=df, rejects=empty_rejects)
     # PERMISSIVE quirk: corrupt-record access requires materialized
     # parse results; cache keeps the split single-scan semantics.

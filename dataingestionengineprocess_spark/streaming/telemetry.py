@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from ..session import local_frame
+
 PROGRESS_TABLE = "_stream_progress"
 
 
@@ -56,7 +58,7 @@ class ParquetMetricsExporter(MetricsExporter):
     def export_progress(self, spark: SparkSession,
                         rows: list[tuple]) -> None:
         if rows:
-            (spark.createDataFrame(rows, _SCHEMA).coalesce(1)
+            (local_frame(spark, rows, _SCHEMA).coalesce(1)
              .write.mode("append")
              .parquet(os.path.join(self.warehouse_dir, PROGRESS_TABLE)))
 

@@ -837,3 +837,27 @@ def test_incremental_admission_supports_string_ids(spark):
     # tie between corp-a and corp-b at jaccard 1.0 -> smallest id wins
     assert out["new-1"].match_id == "corp-a"
     assert out["new-2"].status == "admit"
+
+
+def test_prefix_filter_releases_caches_when_build_fails(spark, monkeypatch):
+    """The shingle and token-set caches are released on every exit: a
+    build that fails after both persists must leave the session cache
+    manager as it found it."""
+    from dataingestionengineprocess_spark.operators.dedup import (
+        prefix_filter_jaccard_pairs,
+    )
+
+    def _fail(self, *a, **k):
+        raise RuntimeError("injected failure after persist")
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y z")],
+        "doc_id long, text string",
+    )
+    spark.catalog.clearCache()
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    # patch the concrete class: pyspark.sql.DataFrame is its abstract base
+    monkeypatch.setattr(type(docs), "localCheckpoint", _fail)
+    with pytest.raises(RuntimeError, match="injected"):
+        prefix_filter_jaccard_pairs(docs, n=2, threshold=0.5)
+    assert jcm.isEmpty()

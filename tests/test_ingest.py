@@ -52,12 +52,14 @@ not_a_number,frank,2.0,OPEN,2024-01-03 09:00:00
 """
 
 
-def _feed(spark) -> FeedConfig:
-    dim = spark.createDataFrame(
-        [("alice", "US"), ("bob", "EU"), ("carol", "US"),
-         ("dave", "APAC"), ("erin", "EU"), ("grace", "US")],
-        "cust_name string, region string",
-    )
+DIM_ROWS = [("alice", "US"), ("bob", "EU"), ("carol", "US"),
+            ("dave", "APAC"), ("erin", "EU"), ("grace", "US")]
+DIM_DDL = "cust_name string, region string"
+
+
+def _feed(spark, dim=None) -> FeedConfig:
+    if dim is None:
+        dim = spark.createDataFrame(DIM_ROWS, DIM_DDL)
     return FeedConfig(
         name="orders_feed",
         schema=SCHEMA,
@@ -123,7 +125,9 @@ def test_batch_metrics_come_from_observe_not_count(spark, landing, sinks,
     via observe(), never via standalone .count() passes. Poisoning
     DataFrame.count proves the batch path triggers no counting action;
     the status row must still carry correct numbers."""
-    from pyspark.sql import DataFrame
+    # the concrete class: pyspark.sql.DataFrame is its abstract base,
+    # and patching the base leaves the real count() untouched
+    from pyspark.sql.classic.dataframe import DataFrame
 
     def _no_count(self):
         raise AssertionError(
@@ -406,3 +410,174 @@ def test_ingest_new_files_ledger(spark, landing, sinks):
         os.path.join(sinks.warehouse_dir, "orders_feed_ledger"))
     assert ledger.count() == 3
     assert ledger.select("run_id").distinct().count() == 3
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_control_plane_frames_start_no_python_worker(spark, landing, sinks,
+                                                     tmp_path, monkeypatch,
+                                                     arrow):
+    """A8 companion for the control plane: the ledger listing and
+    append, the `_runs` row, the DROPMALFORMED empty rejects and the
+    `_stream_progress` rows are driver-known and built JVM-side via
+    `local_frame`. Poisoning SparkContext.parallelize -- the entry of
+    every list-built frame, whose actions start Python workers --
+    proves no per-run path takes that route, with the Arrow conf
+    either way; counts, ledger rows and `_runs` rows must still be
+    right."""
+    from types import SimpleNamespace
+
+    from pyspark import SparkContext
+    from pyspark.sql import Observation
+
+    from dataingestionengineprocess_spark.pipeline import ingest_new_files
+    from dataingestionengineprocess_spark.session import local_frame
+    from dataingestionengineprocess_spark.sinks.warehouse import (
+        write_run_partition,
+    )
+    from dataingestionengineprocess_spark.sources.csv_source import (
+        read_csv_feed,
+    )
+    from dataingestionengineprocess_spark.streaming.telemetry import (
+        RunTelemetryListener,
+        read_progress,
+    )
+
+    def _no_parallelize(self, *a, **k):
+        raise AssertionError(
+            "control-plane frames must be built JVM-side (local_frame), "
+            "not parallelized from a Python list"
+        )
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        feed = _feed(spark, dim=local_frame(spark, DIM_ROWS, DIM_DDL))
+        monkeypatch.setattr(SparkContext, "parallelize", _no_parallelize)
+
+        (landing / "a.csv").write_text(GOOD_CSV)
+        s1 = ingest_new_files(spark, feed, str(landing), sinks)
+        assert (s1.rows_read, s1.rows_loaded, s1.rows_quarantined,
+                s1.rows_rejected) == (5, 2, 2, 0)
+        (landing / "b.csv").write_text(BAD_ROWS_CSV)
+        s2 = ingest_new_files(spark, feed, str(landing), sinks)
+        assert (s2.rows_read, s2.rows_loaded, s2.rows_quarantined,
+                s2.rows_rejected) == (3, 1, 0, 2)
+        assert ingest_new_files(spark, feed, str(landing), sinks) is None
+
+        ledger = spark.read.parquet(
+            os.path.join(sinks.warehouse_dir, "orders_feed_ledger"))
+        assert sorted(
+            (os.path.basename(r.path), r.run_id) for r in ledger.collect()
+        ) == [("a.csv", s1.run_id), ("b.csv", s2.run_id)]
+        runs = {r.run_id: (r.rows_read, r.rows_loaded, r.rows_quarantined,
+                           r.rows_rejected, r.status)
+                for r in read_status(spark, sinks.warehouse_dir).collect()}
+        assert runs == {s1.run_id: (5, 2, 2, 0, "SUCCEEDED"),
+                        s2.run_id: (3, 1, 0, 2, "SUCCEEDED")}
+
+        batch = read_csv_feed(spark, str(landing / "b.csv"), SCHEMA,
+                              mode="DROPMALFORMED")
+        rej_obs = Observation("guard_rejects")
+        part = write_run_partition(
+            batch.rejects.observe(rej_obs, F.count(F.lit(1)).alias("rows")),
+            str(tmp_path / "rejects"), "run-dm",
+        )
+        assert rej_obs.get["rows"] == 0
+        assert spark.read.parquet(part).columns == [
+            "raw_record", "_source_file"]
+        assert [r.order_id for r in batch.clean.collect()] == [5]
+
+        listener = RunTelemetryListener()
+        listener.onQueryStarted(SimpleNamespace(
+            id="q1", runId="r1", name="probe", timestamp="t0"))
+        listener.onQueryProgress(SimpleNamespace(progress=SimpleNamespace(
+            id="q1", runId="r1", batchId=0, name="probe", numInputRows=7,
+            inputRowsPerSecond=3.5, processedRowsPerSecond=None,
+            durationMs={"triggerExecution": 12}, timestamp="t1")))
+        listener.onQueryTerminated(SimpleNamespace(
+            id="q1", runId="r1", exception=None))
+        listener.flush(spark, sinks.warehouse_dir)
+        prog = read_progress(spark, sinks.warehouse_dir).collect()
+        assert [(r.event, r.num_input_rows) for r in prog] == [
+            ("started", 0), ("progress", 7), ("terminated", 0)]
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_control_plane_tables_read_across_old_and_new_writers(spark, landing,
+                                                              sinks):
+    """`_runs` partitions, ledger files and `_stream_progress` files
+    written by the earlier list-built writer (spark.createDataFrame
+    over a Python list) and by `local_frame` read back as ONE table
+    with ONE schema -- no mergeSchema -- and the ledger semi-join still
+    skips files the old writer recorded."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from dataingestionengineprocess_spark.pipeline import (
+        _list_landing_files,
+        ingest_new_files,
+    )
+    from dataingestionengineprocess_spark.sinks.warehouse import (
+        RunStatus,
+        write_status,
+    )
+    from dataingestionengineprocess_spark.streaming import telemetry
+
+    wh = sinks.warehouse_dir
+    runs_ddl = ("run_id string, feed string, rows_read long, "
+                "rows_loaded long, rows_rejected long, "
+                "rows_quarantined long, started_at double, "
+                "finished_at double, duration_s double, status string")
+    (spark.createDataFrame(
+        [("run-old", "orders_feed", 5, 2, 0, 2, 1.0, 2.5, 1.5, "SUCCEEDED")],
+        runs_ddl,
+    ).drop("run_id").coalesce(1).write.mode("overwrite")
+     .parquet(os.path.join(wh, "_runs", "run_id=run-old")))
+    write_status(spark, wh, RunStatus(
+        run_id="run-new", feed="orders_feed", rows_read=3, rows_loaded=1,
+        rows_rejected=2, rows_quarantined=0, started_at=3.0,
+        finished_at=4.25,
+    ))
+
+    (landing / "a.csv").write_text(GOOD_CSV)
+    ledger_path = os.path.join(wh, "orders_feed_ledger")
+    spark.createDataFrame(
+        [(p, s, m, "run-old") for p, s, m in
+         _list_landing_files(spark, str(landing))],
+        "path string, size long, mtime_ms long, run_id string",
+    ).coalesce(1).write.mode("append").parquet(ledger_path)
+    (landing / "b.csv").write_text(BAD_ROWS_CSV)
+    status = ingest_new_files(spark, _feed(spark), str(landing), sinks)
+    assert status.rows_read == 3, "a.csv is in the old ledger: skip it"
+    assert ingest_new_files(spark, _feed(spark), str(landing), sinks) is None
+
+    progress = [("q1", "r1", -1, "probe", 0, 0.0, 0.0, 0, "started", "t0"),
+                ("q1", "r1", 0, None, 7, 3.5, 1.25, 12, "progress", "t1")]
+    (spark.createDataFrame(progress[:1], telemetry._SCHEMA).coalesce(1)
+     .write.mode("append").parquet(os.path.join(wh, telemetry.PROGRESS_TABLE)))
+    telemetry.ParquetMetricsExporter(wh).export_progress(spark, progress[1:])
+    assert sorted(tuple(r) for r in telemetry.read_progress(spark, wh)
+                  .collect()) == sorted(progress)
+
+    # one old-writer file + the new writer's files per table
+    for table, n_files in (("_runs", 3), ("orders_feed_ledger", 2),
+                           (telemetry.PROGRESS_TABLE, 2)):
+        files = glob.glob(os.path.join(wh, table, "**", "*.parquet"),
+                          recursive=True)
+        assert len(files) == n_files, files
+        first, *rest = (pq.read_schema(f) for f in files)
+        for other in rest:
+            assert other.equals(first, check_metadata=True), (table, other)
+
+    runs = {r.run_id: r for r in read_status(spark, wh).collect()}
+    assert set(runs) == {"run-old", "run-new", status.run_id}
+    assert runs["run-old"].duration_s == 1.5
+    assert runs["run-new"].duration_s == 1.25
+    ledger = spark.read.parquet(ledger_path)
+    assert ledger.columns == ["path", "size", "mtime_ms", "run_id"]
+    assert sorted((os.path.basename(r.path), r.run_id)
+                  for r in ledger.collect()) == [
+        ("a.csv", "run-old"), ("b.csv", status.run_id)]

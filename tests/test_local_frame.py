@@ -1,0 +1,84 @@
+"""`session.local_frame`: driver-known rows built JVM-side.
+
+Round-trip properties the control-plane writers (`_runs`, the file
+ledger, `_stream_progress`) rely on -- the result schema IS the DDL's
+StructType and the collected rows ARE the input -- plus a source
+check that keeps list-built frames off the per-run paths.
+"""
+
+from __future__ import annotations
+
+import json
+import pathlib
+
+import pytest
+from pyspark.sql import types as T
+
+from dataingestionengineprocess_spark.session import local_frame
+
+ALL_TYPES = "s string, l long, i int, d double, b boolean"
+
+
+@pytest.mark.parametrize("rows", [
+    [],
+    [(None, None, None, None, None)],
+    [("x", 2 ** 40, -7, 1.5, True), (None, None, None, None, None),
+     ("", 0, 0, -0.25, False)],
+], ids=["empty", "all-null", "mixed"])
+def test_round_trip_rows_and_schema(spark, rows):
+    df = local_frame(spark, rows, ALL_TYPES)
+    want = T.StructType.fromDDL(ALL_TYPES)
+    assert df.schema == want
+    # the JVM-side schema too, not only the Python-side cached copy
+    assert T.StructType.fromJson(json.loads(df._jdf.schema().json())) == want
+    assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_struct_type_schema_keeps_names_and_nullability(spark):
+    schema = T.StructType([
+        T.StructField("raw_record", T.StringType(), True),
+        T.StructField("n", T.LongType(), False),
+    ])
+    df = local_frame(spark, [("a", 1)], schema)
+    assert df.schema == schema
+    assert df.collect()[0].asDict() == {"raw_record": "a", "n": 1}
+
+
+def test_landing_sweep_scale_listing(spark):
+    """A 10,000-file listing (one landing sweep at scale) round-trips
+    intact and joins like any other frame."""
+    rows = [(f"file:/landing/part-{i:05d}.csv", 1000 + i,
+             1_700_000_000_000 + i) for i in range(10_000)]
+    df = local_frame(spark, rows, "path string, size long, mtime_ms long")
+    assert df.schema == T.StructType.fromDDL(
+        "path string, size long, mtime_ms long")
+    assert sorted(tuple(r) for r in df.collect()) == rows
+    probe = local_frame(spark, rows[::1000],
+                        "path string, size long, mtime_ms long")
+    semi = df.join(probe, ["path", "size", "mtime_ms"], "left_semi")
+    assert semi.count() == 10
+
+
+def test_rejects_rows_of_the_wrong_width(spark):
+    with pytest.raises(ValueError, match="2 fields"):
+        local_frame(spark, [("a", 1), ("b",)], "s string, l long")
+
+
+def test_no_list_built_frames_on_per_run_paths():
+    """Per-run code (pipeline, sinks, streaming, sources) builds
+    driver-known frames through `local_frame` only: a
+    `createDataFrame(` call there would put a Python-worker job back
+    on every ingest run."""
+    pkg = (pathlib.Path(__file__).resolve().parent.parent
+           / "dataingestionengineprocess_spark")
+    files = [pkg / "pipeline.py"] + [
+        f for d in ("sinks", "streaming", "sources")
+        for f in sorted((pkg / d).glob("*.py"))
+    ]
+    offenders = [
+        f"{f.relative_to(pkg)}:{n}"
+        for f in files
+        for n, line in enumerate(f.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    assert not offenders, offenders
