@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..session import local_frame
 
 
 def _adjacent_pairs(syms: str = "syms") -> Column:
@@ -178,8 +179,8 @@ def bpe_train_merges(docs: DataFrame, text_col: str = "text",
         merges = _local_merge_loop(
             [(r["freq"], r["syms"]) for r in rows], num_merges, min_freq
         )
-        return spark.createDataFrame(
-            merges,
+        return local_frame(
+            spark, merges,
             "rank int, left string, right string, merged string, "
             "pair_freq long",
         )
@@ -206,8 +207,8 @@ def bpe_train_merges(docs: DataFrame, text_col: str = "text",
             "freq", _merge_expr(F.col("syms"), l, r).alias("syms")
         ).localCheckpoint(eager=True)
 
-    return spark.createDataFrame(
-        merges,
+    return local_frame(
+        spark, merges,
         "rank int, left string, right string, merged string, pair_freq long",
     )
 

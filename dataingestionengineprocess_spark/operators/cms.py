@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def build_cms(df: DataFrame, col: str, eps: float = 0.0001,
               confidence: float = 0.99, seed: int = 42) -> bytes:
@@ -57,7 +59,7 @@ def cms_point_estimates(df: DataFrame, col: str, probes: list,
     # probe column keeps the source column's type (count_min_sketch
     # supports integral AND string columns)
     probe_type = df.schema[col].dataType.simpleString()
-    return spark.createDataFrame(
-        [(p, e) for p, e in zip(probes, ests)],
+    return local_frame(
+        spark, [(p, e) for p, e in zip(probes, ests)],
         f"{col} {probe_type}, est_count long",
     )

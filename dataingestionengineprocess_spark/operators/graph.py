@@ -9,8 +9,10 @@ citation/co-occurrence graph is the canonical form.
 Scale design: the edge subtree (often expensive -- the co-purchase
 query derives it from a self-join + distinct) is materialized ONCE
 with the out-degree folded in as a per-edge weight, so each iteration
-is exactly one join + ONE shuffle (contributions grouped by
-destination) over a static, already-partitioned table; lineage is
+is exactly one join + ONE shuffle over a static, already-partitioned
+table: the contributions and a zero row per node are summed by node in
+one aggregate, which also carries nodes with no in-edges (no second
+join against the node table); lineage is
 truncated with localCheckpoint every few iterations so the plan does
 not grow linearly with iteration count (the classic iterative-Spark
 trap).
@@ -81,8 +83,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     uniformly: rank = (1-d) * p(node) + d * contribs, ranks
     initialized to p and summing to ~1 (minus dangling leakage).
     Nodes absent from ``reset`` get p = 0. The teleport column rides
-    the (checkpointed) node table, so the per-iteration work is
-    byte-identical to the uniform case.
+    the (checkpointed) node table into each step's one aggregate, so
+    the per-iteration plan has the same shape as the uniform case.
     """
     if out_degrees is not None:
         out_deg = F.broadcast(out_degrees.select(
@@ -175,11 +177,12 @@ def pagerank_iteration(w_edges: DataFrame, nodes: DataFrame,
                        ranks: DataFrame, damping: float,
                        use_broadcast: bool) -> DataFrame:
     """One PageRank step over the stationary weighted edges: the
-    contribution join (broadcast or pre-bucketed shuffle), the
-    per-destination sum, and the damped rebuild against the full node
-    set. Exposed separately so plan-shape tests can prove the
-    iteration's join strategy before the driving loop's checkpoints
-    replan it as an opaque LogicalRDD scan."""
+    contribution join (broadcast or pre-bucketed shuffle) and ONE
+    per-node aggregate over the contributions plus a zero row per
+    node, so the damped rebuild covers the full node set without a
+    second (join) shuffle. Exposed separately so plan-shape tests can
+    prove the iteration's join strategy before the driving loop's
+    checkpoints replan it as an opaque LogicalRDD scan."""
     rank_side = ranks.withColumnRenamed("node", "__src")
     if use_broadcast:
         # Ranks broadcast: the node set is the small dimension of a
@@ -188,22 +191,27 @@ def pagerank_iteration(w_edges: DataFrame, nodes: DataFrame,
         # carries only per-partition PARTIAL sums (<= nodes/partition
         # rows), not one row per edge.
         rank_side = F.broadcast(rank_side)
-    contribs = (
-        w_edges.join(rank_side, "__src")
-        .groupBy("node")
-        .agg(F.sum(F.col("rank") * F.col("__w")).alias("contrib"))
-    )
     # Personalized teleport: a "__p" column on the node table routes
-    # the (1-d) mass to the reset distribution instead of uniformly.
+    # the (1-d) mass to the reset distribution instead of uniformly;
+    # it rides the same aggregate (max over the node row's p and the
+    # contribution rows' NULLs).
+    p_col = ["__p"] if "__p" in nodes.columns else []
+    contribs = w_edges.join(rank_side, "__src").select(
+        "node", (F.col("rank") * F.col("__w")).alias("__c"),
+        *[F.lit(None).cast("double").alias(c) for c in p_col],
+    )
+    # Every node contributes one 0.0 row, so nodes with no in-edges
+    # still get their teleport rank from the same aggregate, with no
+    # join against the node table (x + 0.0 == x: only the summation
+    # order varies, as it does across partitionings).
+    keys = nodes.select("node", F.lit(0.0).alias("__c"), *p_col)
+    summed = contribs.unionByName(keys).groupBy("node").agg(
+        F.sum("__c").alias("contrib"), *[F.max(c).alias(c) for c in p_col]
+    )
     base = (F.lit(1.0 - damping) * F.col("__p")
-            if "__p" in nodes.columns else F.lit(1.0 - damping))
-    return (
-        nodes.join(contribs, "node", "left")
-        .select(
-            "node",
-            (base + F.lit(damping) * F.coalesce("contrib", F.lit(0.0)))
-            .alias("rank"),
-        )
+            if p_col else F.lit(1.0 - damping))
+    return summed.select(
+        "node", (base + F.lit(damping) * F.col("contrib")).alias("rank")
     )
 
 

@@ -43,7 +43,9 @@ from .similarity import (
     _centroid_score_structs,
     kmeans_centroids,
     kmeans_centroids_local,
+    vector_dim,
 )
+from ..session import local_frame
 
 __all__ = [
     "semantic_dedup", "semantic_dedup_multi", "pq_topk", "pq_codebooks",
@@ -375,6 +377,27 @@ def _portable_books(corpus: DataFrame, m: int, ks: int,
     ]
 
 
+def _check_caller_books(books: list[list[list[float]]], m: int, ks: int,
+                        corpus: DataFrame, vec_col: str) -> None:
+    """Reject caller-trained codebooks that are not m x ks cells of
+    dim / m doubles each: encoding uses the ``m`` argument while
+    scoring and the persisted cells follow the books, so a mismatch
+    would silently mis-score instead of failing. The vector dimension
+    comes from one probe of the corpus (an empty corpus skips that
+    part of the check)."""
+    dsub = len(books[0][0]) if books and books[0] else 0
+    dim = vector_dim(corpus, vec_col)
+    ok = (dsub > 0 and len(books) == m
+          and all(len(b) == ks and all(len(c) == dsub for c in b)
+                  for b in books)
+          and (dim is None or m * dsub == dim))
+    if not ok:
+        raise ValueError(
+            f"books must be m={m} codebooks of ks={ks} cells, each of "
+            f"dim/m doubles (vector dim {dim})"
+        )
+
+
 def pq_codebooks_local(corpus: DataFrame, m: int = 8, ks: int = 16,
                        id_col: str = "vec_id", vec_col: str = "embedding",
                        max_iter: int = 10, seed: int = 7,
@@ -547,9 +570,15 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     contract, exactly as with ``corpus_index`` in the admission
     operator.
     """
-    corpus = spread_input(corpus)
+    raw, corpus = corpus, spread_input(corpus)
     if books is not None:
-        pass  # caller-trained model; skip the training collect
+        # caller-trained model: skip the training collect, but never
+        # silently ignore a training knob or a mis-shaped model
+        if sample_mod is not None:
+            raise ValueError(
+                "sample_mod tunes training; caller-supplied books skip it"
+            )
+        _check_caller_books(books, m, ks, raw, vec_col)
     elif train == "local":
         if sample_mod is not None:
             raise ValueError(
@@ -671,7 +700,7 @@ def build_pq_index(corpus: DataFrame, index_path: str, m: int = 8,
     keep their pinned version, and a crashed rebuild is invisible.
     Returns {version, n_vectors}.
     """
-    corpus = spread_input(corpus)
+    raw, corpus = corpus, spread_input(corpus)
     from ..sinks.versioned import VersionedTable
 
     spark = corpus.sparkSession
@@ -681,7 +710,7 @@ def build_pq_index(corpus: DataFrame, index_path: str, m: int = 8,
         # to both the index build and the direct path -- one training
         # collect, bit-identical cells on both sides (training is
         # deterministic, so this equals retraining; see pq_topk).
-        pass
+        _check_caller_books(books, m, ks, raw, vec_col)
     elif train == "portable":
         books = _portable_books(corpus, m, ks, id_col, vec_col)
     elif train == "local":
@@ -706,7 +735,8 @@ def build_pq_index(corpus: DataFrame, index_path: str, m: int = 8,
         F.lit(None).cast("int").alias("c"),
         F.lit(None).cast("array<double>").alias("cell"),
     )
-    cells = spark.createDataFrame(
+    cells = local_frame(
+        spark,
         [("cell", None, None, j, c, books[j][c])
          for j in range(m) for c in range(ks)],
         "kind string, neighbor_id long, codes array<int>, "

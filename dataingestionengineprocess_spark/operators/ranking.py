@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _nf(order_cols: list[str]) -> list:
     """The pinned sort orders: ASC NULLS FIRST, stated not assumed."""
@@ -74,8 +76,8 @@ def _with_offsets(df: DataFrame, order_cols: list[str],
     for pid in range(max(totals) + 1 if totals else 0):
         offsets.append((pid, acc))
         acc += int(totals.get(pid, 0) or 0)
-    off = spark.createDataFrame(offsets or [(0, 0)],
-                                "__pid int, __off long")
+    off = local_frame(spark, offsets or [(0, 0)],
+                      "__pid int, __off long")
     return parted.join(F.broadcast(off), "__pid")
 
 
@@ -124,8 +126,8 @@ def distributed_prefix_sums(df: DataFrame, order_cols: list[str],
             acc[cc] += int((row[cc] if row is not None else 0) or 0)
     off_schema = "__pid int, " + ", ".join(
         f"__off_{cc} long" for cc in weights)
-    off = spark.createDataFrame(
-        offsets or [tuple([0] + [0] * len(weights))], off_schema)
+    off = local_frame(
+        spark, offsets or [tuple([0] + [0] * len(weights))], off_schema)
     w = Window.partitionBy("__pid").orderBy(*_nf(order_cols)).rowsBetween(
         Window.unboundedPreceding, 0)
     out = parted.join(F.broadcast(off), "__pid")

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 _M = 1_000_000
 
 
@@ -128,8 +130,8 @@ def systematic_weighted_sample(df: DataFrame, weight_col: str,
         offsets.append((pid, acc))
         acc += int(part_totals.get(pid, 0) or 0)
     total = acc
-    off = df.sparkSession.createDataFrame(
-        offsets, "__pid int, __off long"
+    off = local_frame(
+        df.sparkSession, offsets, "__pid int, __off long"
     )
     w = Window.partitionBy("__pid").orderBy(order_col).rowsBetween(
         Window.unboundedPreceding, 0

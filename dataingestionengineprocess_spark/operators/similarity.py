@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, cosine, dot, l2_norm
 from .skew import spread_input
+from ..session import local_frame
 
 
 def _plane(seed: str, plane_idx: int, dim: int) -> list[float]:
@@ -334,8 +335,8 @@ def kmeans_centroids(corpus: DataFrame, n_clusters: int,
     spark = corpus.sparkSession
 
     def centroid_df(cents: list[list[float]]) -> DataFrame:
-        return spark.createDataFrame(
-            [(j, c) for j, c in enumerate(cents)],
+        return local_frame(
+            spark, [(j, c) for j, c in enumerate(cents)],
             "clabel int, carr array<double>",
         )
 
@@ -457,8 +458,8 @@ def kmeans_centroids_local(corpus: DataFrame, n_clusters: int,
             if mask.any():
                 cents[c] = x[mask].mean(axis=0)
     spark = corpus.sparkSession
-    return spark.createDataFrame(
-        [(j, [float(v) for v in c]) for j, c in enumerate(cents)],
+    return local_frame(
+        spark, [(j, [float(v) for v in c]) for j, c in enumerate(cents)],
         "clabel int, carr array<double>",
     )
 
@@ -536,8 +537,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         # list balance, not correctness); this mode exists so the
         # FULL IVF pipeline -- assignment, probing, re-rank -- is
         # independently replayable by the DuckDB oracle.
-        cent = corpus.sparkSession.createDataFrame(
-            [(j, v) for j, v in enumerate(
+        cent = local_frame(
+            corpus.sparkSession, [(j, v) for j, v in enumerate(
                 portable_init_sample(corpus, n_lists, id_col, vec_col))],
             "clabel int, carr array<double>",
         )
@@ -564,15 +565,16 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     spark = corpus.sparkSession
     if not cent_rows:
         # empty corpus -> no lists -> no neighbors (schema-stable)
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             "query_id long, neighbor_id long, cos_sim double, rank long",
         )
     labels = [t[0] for t in cent_rows]
     cvecs = [t[1] for t in cent_rows]
     inline = len(cvecs) * len(cvecs[0]) <= _INLINE_CENTROID_BUDGET
-    label_df = F.broadcast(spark.createDataFrame(
-        [(j, l) for j, l in enumerate(labels)], ["__j", "clabel"]
+    label_df = F.broadcast(local_frame(
+        spark, list(enumerate(labels)),
+        f"__j bigint, clabel {cent.schema['clabel'].dataType.simpleString()}",
     ))
 
     def assign(df: DataFrame, prefix: str, n: int) -> DataFrame:
@@ -625,6 +627,15 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     )
 
 
+def vector_dim(df: DataFrame, vec_col: str = "embedding") -> int | None:
+    """Length of the first non-null vector in ``vec_col`` (None when
+    there is none): one small job over the scan, for operators whose
+    plan needs the dimension on the driver."""
+    row = df.where(F.col(vec_col).isNotNull()).select(
+        F.size(vec_col).alias("d")).head()
+    return None if row is None else int(row["d"])
+
+
 def brp_similarity_join(corpus: DataFrame, threshold_cos: float = 0.4,
                         id_col: str = "vec_id", vec_col: str = "embedding",
                         bucket_length: float = 2.0,
@@ -641,19 +652,26 @@ def brp_similarity_join(corpus: DataFrame, threshold_cos: float = 0.4,
     bucket-join shape as our hand-rolled `lsh_topk`, but with MLlib's
     p-stable-projection hashing and multi-probe join machinery.
 
-    Returns (id_a, id_b, cos_sim) with id_a < id_b, cos >= threshold.
+    Returns (id_a, id_b, cos_sim) with id_a < id_b, cos >= threshold;
+    an empty corpus gives an empty frame of the same schema.
+
+    Building the plan runs ONE job: the dimension probe on the raw
+    scan. The dimension rides the ``features`` column as ML attribute
+    metadata, so ``fit`` reads it from the schema instead of running
+    its own ``head()`` over the spread + normalize.
     """
     import math
 
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.linalg import VectorUDT  # noqa: F401  (schema dep)
 
     dist_threshold = math.sqrt(max(0.0, 2.0 - 2.0 * threshold_cos))
 
     from ..functions.vectors import l2_normalize
-    from .skew import spread_input
 
+    # An empty corpus has no dimension; any width gives the same empty
+    # pair set, and the fit never reads the data.
+    dim = vector_dim(corpus, vec_col) or 1
     # spread FIRST: a single-file parquet source arrives as ONE
     # partition, and the whole self-join map side (normalize, the
     # p-stable hash UDF, posexplode, the candidate-pair build against
@@ -669,7 +687,8 @@ def brp_similarity_join(corpus: DataFrame, threshold_cos: float = 0.4,
         )
         # zero-norm vectors normalize to NULL/NaN elements -- drop them
         .filter(~F.exists("__unit", lambda x: x.isNull() | F.isnan(x)))
-        .select("id", array_to_vector("__unit").alias("features"))
+        .select("id", array_to_vector("__unit").alias(
+            "features", metadata={"ml_attr": {"num_attrs": dim}}))
     )
 
     brp = BucketedRandomProjectionLSH(
@@ -836,6 +855,6 @@ def kmeans_portable_fit(corpus: DataFrame, n_clusters: int = 8,
         (j, counts.get(j, 0), d, centroids[j][d])
         for j in range(n_clusters) for d in range(dim)
     ]
-    return spark.createDataFrame(
-        rows, "clabel int, n bigint, d int, c double"
+    return local_frame(
+        spark, rows, "clabel int, n bigint, d int, c double"
     )

@@ -419,8 +419,11 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # PageRank over the part co-purchase graph: parts sharing an order are
 # linked (both directions, so the graph is symmetric and dangling-free)
-# and link analysis surfaces the "hub" parts. Iterative: one shuffle
-# per iteration, lineage checkpoint-truncated -- see operators/graph.py.
+# and link analysis surfaces the "hub" parts. Iterative: each step is
+# one broadcast join of the ranks onto the edges plus ONE shuffle (the
+# contributions and a zero row per node summed by node; no second join
+# against the node table), lineage checkpoint-truncated -- see
+# operators/graph.py.
 #
 # FULLY ORACLED (upgraded from rows-only): the iteration count is a
 # fixed 8, so the "fixpoint" is just 8 unrolled join+agg steps -- the

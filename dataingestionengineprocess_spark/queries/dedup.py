@@ -29,6 +29,7 @@ from ..functions.vectors import (
     quantized_cosine,
 )
 from . import register
+from ..session import local_frame
 
 # ---------------------------------------------------------------------------
 # Exact dedup via content fingerprint (deterministic keep-smallest-id).
@@ -358,8 +359,8 @@ def simhash_certificate_facts(spark: SparkSession, docs: DataFrame,
          10 * n_hit >= recall_floor_tenths * n_exact),
         ("soundness_j080", n_exact, n_unsound == 0),
     ]
-    return spark.createDataFrame(
-        rows, "item string, n_exact long, ok boolean").orderBy("item")
+    return local_frame(
+        spark, rows, "item string, n_exact long, ok boolean").orderBy("item")
 
 
 def simhash_certificate_oracle(tokens_sql: str,
@@ -829,8 +830,8 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str,
         ("t045_isolated_kept", n_iso449, bad_iso45 == 0),
         ("t092_no_spurious_drops", n_iso919, bad_iso92 == 0),
     ]
-    return spark.createDataFrame(
-        rows, "item string, fact long, ok boolean").orderBy("item")
+    return local_frame(
+        spark, rows, "item string, fact long, ok boolean").orderBy("item")
 
 
 # ---------------------------------------------------------------------------

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..sources.python_datasource import register as register_feed_source
 from . import register
+from ..session import local_frame
 
 # ---------------------------------------------------------------------------
 # SQL UDF: net price with declared parameter and return types. The oracle
@@ -474,7 +475,8 @@ def agg_cms_supplier_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     ests = cms_estimate(spark, bytes(row["sk"]), _CMS_PROBES)
     n_total = int(row["n_total"])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 p,

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from . import register
+from ..session import local_frame
 
 # ---------------------------------------------------------------------------
 # Flagship: TPC-H Q1-style pricing summary (scan -> filter -> agg -> sort).
@@ -930,10 +931,11 @@ def join_range_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import range_bucket_join
 
     orders = load(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("budget", 0.0, 75000.0), ("mid", 75000.0, 200000.0),
          ("premium", 200000.0, 350000.0), ("luxury", 350000.0, 600000.0)],
-        ["tier", "lo", "hi"],
+        "tier string, lo double, hi double",
     )
     joined = range_bucket_join(
         orders, "o_totalprice", bands, "lo", "hi", bucket_width=25000.0

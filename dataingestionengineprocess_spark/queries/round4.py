@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load, scratch_dir
 from . import register
+from ..session import local_frame
 
 _DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -668,8 +669,8 @@ def text_bpe_train_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
          f is not None),
         ("well_formed_chain", None, None, None, well_formed),
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "item string, left_sym string, right_sym string, "
         "pair_freq long, ok boolean",
     ).orderBy("item")

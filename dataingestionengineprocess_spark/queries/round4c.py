@@ -23,6 +23,7 @@ from ..catalog import load, scratch_dir
 from ..functions.text import tokens
 from . import register
 from ..functions.exact import snap6 as _snap6
+from ..session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -881,6 +882,7 @@ def ml_logreg_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("x_chars", math.floor(w[1] * 1e6 + 0.5) / 1e6, n, n_correct),
         ("x_tokens", math.floor(w[2] * 1e6 + 0.5) / 1e6, n, n_correct),
     ]
-    return spark.createDataFrame(
-        rows, "term string, weight_s double, n_rows bigint, n_correct bigint"
+    return local_frame(
+        spark, rows,
+        "term string, weight_s double, n_rows bigint, n_correct bigint",
     ).orderBy("term")

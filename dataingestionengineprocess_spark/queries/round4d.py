@@ -26,6 +26,7 @@ from ..catalog import load, scratch_dir
 from ..functions.text import tokens
 from . import register
 from ..functions.exact import snap6 as _snap6
+from ..session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -441,8 +442,9 @@ def ml_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[-_ABL_LR * (((t[j] - r[f"s{j}"]) / n_m) / 1e6)
                   for j in range(3)],
             ))
-        mdf = spark.createDataFrame(
-            models, "excl string, n_m long, w0 double, w1 double, w2 double"
+        mdf = local_frame(
+            spark, models,
+            "excl string, n_m long, w0 double, w1 double, w2 double",
         )
 
         margin = (F.col("w0") + F.col("w1") * F.col("x1")
@@ -464,8 +466,8 @@ def ml_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
             w = [w0, w1, w2]
             final.append((src, *[w[j] - _ABL_LR * ((row[f"s{j}"] / n_m) / 1e6)
                                  for j in range(3)]))
-        fdf = spark.createDataFrame(
-            final, "excl string, w0 double, w1 double, w2 double"
+        fdf = local_frame(
+            spark, final, "excl string, w0 double, w1 double, w2 double"
         )
 
         ev = (

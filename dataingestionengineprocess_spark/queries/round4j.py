@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from . import register
 from ..functions.exact import snap6 as _snap6, q6f as _q6f
+from ..session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -185,8 +186,8 @@ def ml_pca_power_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr_q = sum(_q6f(cov[i][i]) for i in range(dim))
     explained_s = (None if tr_q == 0
                    else math.floor(lam_s / (tr_q / 1e6) * 1e6 + 0.5) / 1e6)
-    return spark.createDataFrame(
-        [(i, v[i], lam_s, explained_s) for i in range(dim)],
+    return local_frame(
+        spark, [(i, v[i], lam_s, explained_s) for i in range(dim)],
         "d long, loading_s double, lambda_s double, explained_s double",
     )
 

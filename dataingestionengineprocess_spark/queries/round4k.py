@@ -32,6 +32,7 @@ from ..catalog import load
 from ..functions.exact import q6f as _q6f, snap6 as _snap6
 from ..functions.text import md5_bucket
 from . import register
+from ..session import local_frame
 
 # ---------------------------------------------------------------------------
 # Spatial grid join. Coordinates are md5-derived points in the unit
@@ -305,8 +306,8 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s").alias("state"),
                 F.col("o").alias("out_transitions"), "idx")
     )
-    pi_df = spark.createDataFrame(
-        [(j, pi[j]) for j in pi], "idx long, stationary_s double")
+    pi_df = local_frame(
+        spark, [(j, pi[j]) for j in pi], "idx long, stationary_s double")
     return (
         out.join(F.broadcast(pi_df), "idx")
         .select("state", "out_transitions", "stationary_s")

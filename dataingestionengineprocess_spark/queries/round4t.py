@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..catalog import load, scratch_dir
 from ..functions.exact import snap6 as _snap6
 from . import register
+from ..session import local_frame
 
 # ---------------------------------------------------------------------------
 # XML file source. The writer frames rows under rowTag; the readback
@@ -205,7 +206,7 @@ def ml_threshold_sweep_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _snap6(F.element_at("embedding", 1).cast("double")).alias("s"),
     )
     axis = F.broadcast(
-        spark.createDataFrame([(t,) for t in _THRESHOLDS], "thr double"))
+        local_frame(spark, [(t,) for t in _THRESHOLDS], "thr double"))
     conf = (
         scored.crossJoin(axis)
         .groupBy("thr")

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions.exact import snap6 as _snap6
 from . import register
+from ..session import local_frame
 
 # ---------------------------------------------------------------------------
 # ACF. Daily counts densified onto the full 0..n-1 day axis (absent
@@ -113,7 +114,7 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # bounded day axis, reused 3x
     )
     lags = F.broadcast(
-        spark.createDataFrame([(k,) for k in range(1, 8)], "lag long"))
+        local_frame(spark, [(k,) for k in range(1, 8)], "lag long"))
     a = centered.alias("a")
     b = centered.alias("b")
     prods = (

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions.exact import q6f as _q6f, snap6 as _snap6
 from . import register
+from ..session import local_frame
 
 _ATTR_STEPS = 12
 
@@ -244,8 +245,8 @@ def events_markov_attribution(spark: SparkSession,
             (s, round_half_up(bv * 1e6) / 1e6,
              round_half_up(rv * 1e6) / 1e6,
              None if re_q is None else re_q / 1e6, share))
-    model = spark.createDataFrame(
-        out_rows,
+    model = local_frame(
+        spark, out_rows,
         "state string, pconv_base_s double, pconv_removed_s double, "
         "re_s double, share_s double",
     )

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions.exact import US_PER_DAY as _US_PER_DAY, snap6 as _snap6
 from . import register
+from ..session import local_frame
 
 _ADSTOCK_LAMBDA = 0.7
 _ADSTOCK_SPAN = 31  # fixture days; decay beyond this contributes 0
@@ -100,8 +101,8 @@ def events_adstock_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     d0 = counts.agg(F.min("day").cast("long").alias("dmin"))
     rel = counts.crossJoin(F.broadcast(d0)).select(
         "event_type", (F.col("day") - F.col("dmin")).alias("t"), "x")
-    decay = spark.createDataFrame(
-        list(enumerate(_DECAY)), "d long, w double")
+    decay = local_frame(
+        spark, list(enumerate(_DECAY)), "d long, w double")
     a = rel.select("event_type", "t")
     b = rel.select(F.col("event_type").alias("et2"),
                    F.col("t").alias("t2"), "x")

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions.exact import snap6 as _snap6_expr
 from . import register
+from ..session import local_frame
 
 
 def tws_runtime_available() -> bool:
@@ -429,10 +430,10 @@ def ml_gbdt_stumps_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             math.floor(wl * 1e6 + 0.5) / 1e6,
             math.floor(wr * 1e6 + 0.5) / 1e6, n, mse_s)
            for r, (feat, t, gain_s, wl, wr) in ((1, s1), (2, s2))]
-    return spark.createDataFrame(
-        out, "round bigint, feature string, threshold bigint, "
-             "gain_s double, w_left_s double, w_right_s double, "
-             "n_rows bigint, mse_s double").orderBy("round")
+    return local_frame(
+        spark, out, "round bigint, feature string, threshold bigint, "
+                    "gain_s double, w_left_s double, w_right_s double, "
+                    "n_rows bigint, mse_s double").orderBy("round")
 
 
 # ---------------------------------------------------------------------------

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from . import register
+from ..session import local_frame
 
 # ---------------------------------------------------------------------------
 # MinHash-LSH (xxhash64 default) certificate. The exact side uses the
@@ -144,8 +145,8 @@ def dedup_minhash_lsh_certificate(spark: SparkSession, sf_dir: str,
         ("exact_pairs_j070_present", n_exact, n_exact > 0),
         ("recall_floor_090", n_exact, 10 * n_hit >= 9 * n_exact),
     ]
-    return spark.createDataFrame(
-        rows, "item string, n_exact long, ok boolean").orderBy("item")
+    return local_frame(
+        spark, rows, "item string, n_exact long, ok boolean").orderBy("item")
 
 
 # ---------------------------------------------------------------------------
@@ -283,5 +284,5 @@ def similarity_brp_lsh_certificate(spark: SparkSession, sf_dir: str,
         ("recall_floor_080", n_exact, 10 * n_hit >= 8 * n_exact),
         ("sound_no_false_positives", n_exact, n_stray == 0),
     ]
-    return spark.createDataFrame(
-        rows, "item string, n_exact long, ok boolean").orderBy("item")
+    return local_frame(
+        spark, rows, "item string, n_exact long, ok boolean").orderBy("item")

@@ -23,6 +23,7 @@ from ..operators.similarity import (
 from ..functions.text import STOPWORDS
 from ..functions.vectors import as_double, dot
 from . import register
+from ..session import local_frame
 
 _SW_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
@@ -251,8 +252,8 @@ def ann_certificate_facts(spark: SparkSession, emb: DataFrame,
          10 * n_hit >= recall_floor_tenths * n_top5),
         ("scores_exact_rerank", n_queries, n_badscore == 0),
     ]
-    return spark.createDataFrame(
-        rows, "item string, fact long, ok boolean").orderBy("item")
+    return local_frame(
+        spark, rows, "item string, fact long, ok boolean").orderBy("item")
 
 
 def _ann_certificate_oracle(recall_floor_tenths: int) -> str:

@@ -24,6 +24,7 @@ from ..functions.text import (
     tokens,
 )
 from . import register
+from ..session import local_frame
 
 _SW_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
@@ -212,8 +213,8 @@ def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("fingerprint_bijective", agg["d_text"],
          agg["d_fp"] == agg["d_text"] == agg["d_both"]),
     ]
-    return spark.createDataFrame(
-        rows, "item string, fact long, ok boolean").orderBy("item")
+    return local_frame(
+        spark, rows, "item string, fact long, ok boolean").orderBy("item")
 
 
 # ---------------------------------------------------------------------------
@@ -709,8 +710,8 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
          f2["left"] if f2 else None, f2["right"] if f2 else None,
          int(f2["pair_freq"]) if f2 else None, f2 is not None),
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "item string, left_sym string, right_sym string, "
         "fact long, ok boolean",
     ).orderBy("item")
@@ -823,8 +824,8 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("sample_pieces_2merge", int(s["n_p2"]), True),
         ("tokens_total", int(s["n_toks_op"]), True),
     ]
-    return spark.createDataFrame(
-        rows, "item string, fact long, ok boolean").orderBy("item")
+    return local_frame(
+        spark, rows, "item string, fact long, ok boolean").orderBy("item")
 
 
 # ---------------------------------------------------------------------------

@@ -307,6 +307,85 @@ def test_brp_similarity_join_recall(spark, emb):
     assert approx <= near_exact, f"{len(approx - near_exact)} false positives"
 
 
+def test_brp_build_runs_only_the_dimension_probe(spark, sf_dir):
+    """Building the BRP join runs exactly one job -- the dimension
+    probe on the raw scan -- because ``fit`` reads the dimension from
+    the features column's ML attribute metadata."""
+    import uuid
+
+    from dataingestionengineprocess_spark.operators.similarity import (
+        brp_similarity_join,
+    )
+
+    emb = load(spark, sf_dir, "embeddings")
+    sc = spark.sparkContext
+    tag = f"brp-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(tag, "brp build")
+    try:
+        brp_similarity_join(emb, threshold_cos=0.4)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(tag))
+    finally:
+        sc.setJobGroup("brp-idle", "")
+    assert n_jobs == 1
+
+
+def test_brp_pairs_match_data_probed_fit(spark, sf_dir):
+    """The metadata-sized fit gives the same pair set as MLlib's own
+    data-probed fit over the per-element normalize (the previous form
+    of the operator): same seed, same dimension, same hash planes."""
+    import math
+
+    from pyspark.ml.feature import BucketedRandomProjectionLSH
+    from pyspark.ml.functions import array_to_vector
+
+    from dataingestionengineprocess_spark.functions.vectors import (
+        as_double,
+        l2_norm,
+    )
+    from dataingestionengineprocess_spark.operators.similarity import (
+        brp_similarity_join,
+    )
+
+    emb = load(spark, sf_dir, "embeddings")
+    v = as_double("embedding")
+    unit = (
+        emb.select(F.col("vec_id").alias("id"),
+                   F.transform(v, lambda x: x / l2_norm(v)).alias("u"))
+        .filter(~F.exists("u", lambda x: x.isNull() | F.isnan(x)))
+        .select("id", array_to_vector("u").alias("features"))
+    )
+    model = BucketedRandomProjectionLSH(
+        inputCol="features", outputCol="hashes", bucketLength=2.0,
+        numHashTables=3, seed=42,
+    ).fit(unit)
+    ref = {
+        (r.id_a, r.id_b, r.cos_sim)
+        for r in model.approxSimilarityJoin(
+            unit, unit, math.sqrt(2.0 - 2.0 * 0.4), distCol="dist")
+        .select(F.col("datasetA.id").alias("id_a"),
+                F.col("datasetB.id").alias("id_b"),
+                F.round(1.0 - F.col("dist") * F.col("dist") / 2.0, 6)
+                .alias("cos_sim"))
+        .filter(F.col("id_a") < F.col("id_b")).collect()
+    }
+    got = {tuple(r) for r in
+           brp_similarity_join(emb, threshold_cos=0.4).collect()}
+    assert ref and got == ref
+
+
+def test_brp_empty_corpus_returns_empty_frame(spark, sf_dir):
+    """No vectors, no pairs: an empty frame with the schema a
+    non-empty corpus gets (MLlib's data-probed fit raised here)."""
+    from dataingestionengineprocess_spark.operators.similarity import (
+        brp_similarity_join,
+    )
+
+    emb = load(spark, sf_dir, "embeddings")
+    out = brp_similarity_join(emb.where(F.lit(False)), threshold_cos=0.4)
+    assert out.collect() == []
+    assert out.schema == brp_similarity_join(emb, threshold_cos=0.4).schema
+
+
 def test_dedup_exact_deterministic(spark, docs):
     d1 = dedup_exact(docs, ["lang", "source"], ["doc_id"])
     d2 = dedup_exact(docs, ["lang", "source"], ["doc_id"])
@@ -422,6 +501,51 @@ def test_pq_recall_at_5(spark, emb):
          for r in pq_topk(emb, queries, k=5, refine=48).collect()}
     recall = len(e & a) / len(e)
     assert recall >= 0.55, f"PQ recall@5 = {recall:.2f}"
+
+
+def test_pq_rejects_mis_shaped_caller_books(spark, emb, tmp_path):
+    """Caller-trained codebooks must be m x ks cells of dim/m doubles:
+    a wrong codebook count, cell count or cell width (the vector
+    dimension) fails loudly on both PQ entry points."""
+    from dataingestionengineprocess_spark.operators.quantize import (
+        build_pq_index,
+        pq_codebooks_local,
+        pq_topk,
+    )
+
+    books = pq_codebooks_local(emb, m=8, ks=16)
+    queries = emb.filter(F.col("vec_id") < 5)
+    bad = {
+        "extra codebook": books + [books[0]],
+        "missing cell": [b[:-1] for b in books],
+        "wrong width": [[c + [0.0] for c in b] for b in books],
+    }
+    for why, b in bad.items():
+        with pytest.raises(ValueError, match="books"):
+            pq_topk(emb, queries, m=8, ks=16, books=b)
+        with pytest.raises(ValueError, match="books"):
+            build_pq_index(emb, str(tmp_path / "idx"), m=8, ks=16, books=b)
+    # the m / ks arguments must agree with well-shaped books too
+    with pytest.raises(ValueError, match="books"):
+        pq_topk(emb, queries, m=4, ks=16, books=books)
+    with pytest.raises(ValueError, match="books"):
+        build_pq_index(emb, str(tmp_path / "idx"), m=8, ks=8, books=books)
+    # well-shaped books still search
+    assert pq_topk(emb, queries, m=8, ks=16, books=books).count() > 0
+
+
+def test_pq_rejects_sample_mod_with_caller_books(spark, emb):
+    """``sample_mod`` tunes training, which caller books skip: passing
+    both is an error, not a silently ignored knob."""
+    from dataingestionengineprocess_spark.operators.quantize import (
+        pq_codebooks_local,
+        pq_topk,
+    )
+
+    books = pq_codebooks_local(emb, m=8, ks=16)
+    with pytest.raises(ValueError, match="sample_mod"):
+        pq_topk(emb, emb.filter(F.col("vec_id") < 5), m=8, ks=16,
+                books=books, sample_mod=4)
 
 
 def test_pq_codebooks_deterministic(spark, emb):

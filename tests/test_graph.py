@@ -129,3 +129,70 @@ def test_pagerank_shuffle_path_releases_edge_cache(spark, star_edges):
     pagerank(star_edges, iterations=2, checkpoint_every=1,
              broadcast_node_limit=0).collect()
     assert jcm.isEmpty()
+
+
+def _weighted_star(spark, star_edges):
+    """(w_edges, nodes) as `pagerank` builds them, eagerly
+    checkpointed so a plan over one iteration shows only that
+    iteration's operators."""
+    deg = star_edges.groupBy("src").agg(F.count("*").alias("__deg"))
+    w_edges = (
+        star_edges.join(deg, "src")
+        .select(
+            F.col("src").alias("__src"), F.col("dst").alias("node"),
+            (F.lit(1.0) / F.col("__deg")).alias("__w"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    nodes = (
+        w_edges.select(F.col("__src").alias("node"))
+        .union(w_edges.select("node")).distinct()
+        .localCheckpoint(eager=True)
+    )
+    return w_edges, nodes
+
+
+def test_pagerank_broadcast_step_plans_one_node_shuffle(spark, star_edges):
+    """A broadcast-path step sums the contributions and the zero row
+    per node in ONE aggregate: one hash exchange on node and the
+    broadcast contribution join as the only join -- no second join
+    against the node table."""
+    import re
+
+    from dataingestionengineprocess_spark.operators.graph import (
+        pagerank_iteration,
+    )
+
+    w_edges, nodes = _weighted_star(spark, star_edges)
+    ranks = nodes.withColumn("rank", F.lit(1.0))
+    for reset in (False, True):
+        node_side = (nodes.withColumn("__p", F.lit(0.2)) if reset
+                     else nodes)
+        out = pagerank_iteration(w_edges, node_side, ranks, 0.85,
+                                 use_broadcast=True)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning(node") == 1, plan
+        joins = re.findall(
+            r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
+            r"|BroadcastNestedLoopJoin|CartesianProduct)", plan)
+        assert joins == ["BroadcastHashJoin"], plan
+
+
+def test_pagerank_broadcast_step_costs_two_jobs(spark, star_edges):
+    """Each broadcast-path iteration runs exactly two jobs (the rank
+    broadcast and the one node-keyed shuffle): 4 iterations cost 4
+    jobs more than 2."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def jobs(iterations):
+        tag = f"pagerank-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(tag, "pagerank job count")
+        try:
+            pagerank(star_edges, iterations=iterations).collect()
+            return len(sc.statusTracker().getJobIdsForGroup(tag))
+        finally:
+            sc.setJobGroup("pagerank-idle", "")
+
+    assert jobs(4) - jobs(2) == 4

@@ -64,21 +64,73 @@ def test_rejects_rows_of_the_wrong_width(spark):
         local_frame(spark, [("a", 1), ("b",)], "s string, l long")
 
 
-def test_no_list_built_frames_on_per_run_paths():
-    """Per-run code (pipeline, sinks, streaming, sources) builds
-    driver-known frames through `local_frame` only: a
-    `createDataFrame(` call there would put a Python-worker job back
-    on every ingest run."""
+def test_no_list_built_frames_in_the_package():
+    """The package builds driver-known frames through `local_frame`
+    only: a `createDataFrame(` call anywhere but `session.py` (where
+    `local_frame` itself lives) would put a Python-worker job back on
+    the path that builds it -- an ingest run, an operator's centroid
+    or offset table, a certificate's result rows."""
     pkg = (pathlib.Path(__file__).resolve().parent.parent
            / "dataingestionengineprocess_spark")
-    files = [pkg / "pipeline.py"] + [
-        f for d in ("sinks", "streaming", "sources")
-        for f in sorted((pkg / d).glob("*.py"))
-    ]
     offenders = [
         f"{f.relative_to(pkg)}:{n}"
-        for f in files
+        for f in sorted(pkg.rglob("*.py"))
+        if f != pkg / "session.py"
         for n, line in enumerate(f.read_text().splitlines(), 1)
         if "createDataFrame(" in line
     ]
     assert not offenders, offenders
+
+
+#: Per-row aggregates over a whole vector: evaluated inside a
+#: ``transform`` lambda they are re-folded once per element.
+_ROW_AGGREGATES = {"l2_norm", "sq_norm"}
+
+
+def _per_element_aggregates(source: str) -> list[str]:
+    """``transform(`` lambdas in ``source`` that call a per-row
+    aggregate or read a local bound to one (``n = l2_norm(a)`` then
+    ``transform(a, lambda x: x / n)``) -- the O(d^2) form."""
+    import ast
+
+    def callee(node) -> str | None:
+        return (getattr(node.func, "attr", getattr(node.func, "id", None))
+                if isinstance(node, ast.Call) else None)
+
+    def calls_aggregate(node) -> bool:
+        return any(callee(c) in _ROW_AGGREGATES for c in ast.walk(node))
+
+    found = set()
+    for fn in ast.walk(ast.parse(source)):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        bound = {
+            t.id
+            for a in ast.walk(fn)
+            if isinstance(a, ast.Assign) and calls_aggregate(a.value)
+            for t in a.targets if isinstance(t, ast.Name)
+        }
+        for call in ast.walk(fn):
+            if callee(call) != "transform":
+                continue
+            for lam in call.args:
+                if isinstance(lam, ast.Lambda) and (
+                        calls_aggregate(lam.body)
+                        or any(isinstance(n, ast.Name) and n.id in bound
+                               for n in ast.walk(lam.body))):
+                    found.add(f"line {call.lineno}")
+    return sorted(found)
+
+
+def test_vector_helpers_fold_no_norm_per_element():
+    """`functions/vectors.py` never puts a per-row norm inside a
+    ``transform`` lambda (the check itself flags both spellings)."""
+    assert _per_element_aggregates(
+        "def f(a):\n    n = l2_norm(a)\n"
+        "    return F.transform(a, lambda x: x / n)\n")
+    assert _per_element_aggregates(
+        "def f(a):\n    return F.transform(a, lambda x: x / sq_norm(a))\n")
+    src = (pathlib.Path(__file__).resolve().parent.parent
+           / "dataingestionengineprocess_spark" / "functions"
+           / "vectors.py").read_text()
+    assert not _per_element_aggregates(src)
