@@ -10,6 +10,8 @@ and are hash-checked end to end by full SQL replica oracles.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -192,27 +194,27 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: token-list source for the standard document SimHash oracle
 _DOC_TOKENS_SQL = "SELECT doc_id, string_split(text, ' ') AS t FROM documents"
 
+#: the shingle certificates' audit stratum, ``id_a % _STRATUM_MOD == 0``
+#: on both engines (`shingle_certificate_oracle` interpolates it)
+_STRATUM_MOD = 3
+
 
 def exact_jaccard_stratum(docs: DataFrame, text_col: str,
-                          tenths: int, stratum_mod: int = 3) -> tuple:
+                          tenths: int) -> tuple:
     """Shared exact-side scaffold of the shingle-Jaccard certificates
     (`simhash_certificate_facts` here, `dedup_minhash_lsh_certificate`
     in round7.py -- one source so a layout change cannot silently
     diverge the kernels): the spread + checkpointed 3-token shingle
-    stream, per-doc shingle sizes, and the ``id % stratum_mod == 0``
-    stratum's exact integer-J >= tenths/10 pair set (checkpointed --
-    it feeds both the count fact and the recall join). The stratum
-    filter pushes BELOW the shingle self-join, so the exact side is a
-    bounded audit at any scale; `tools/scale_probe.py`'s
-    ``*_cert_audit`` ops measure exactly this shape through a decade.
+    stream, per-doc shingle sizes, and the ``id % 3 == 0`` stratum's
+    exact integer-J >= tenths/10 pair set (checkpointed -- it feeds
+    both the count fact and the recall join). The stratum filter
+    pushes BELOW the shingle self-join, so the exact side costs a
+    third of the full self-join.
 
-    ``stratum_mod`` is the bounded-audit-sample knob (VERDICT r9 #6):
-    the registered certificates keep the default (their oracles
-    hardcode the same modulus), while a 100x corpus raises it so the
-    audit side's cost stays a fixed budget -- the fact SEMANTICS
-    (canonical shape, recall floor over the stratum universe, exact
-    stratum pair count) are modulus-independent; only the stratum's
-    size changes.
+    `tools/scale_probe.py`'s ``*_cert_audit`` ops build their own,
+    related shape rather than calling this: the stratum fixed at the
+    unreplicated ids, no shingle checkpoint, a count at the end. They
+    bound how this audit grows with the corpus; they do not time it.
 
     The shingle checkpoint is justified INSIDE this helper: ``sh``
     feeds three consumers here (both sides of the stratum self-join
@@ -234,7 +236,7 @@ def exact_jaccard_stratum(docs: DataFrame, text_col: str,
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
     inter = (
         sh.select(F.col("id").alias("id_a"), "s")
-        .filter(F.col("id_a") % stratum_mod == 0)
+        .filter(F.col("id_a") % _STRATUM_MOD == 0)
         .join(sh.select(F.col("id").alias("id_b"), "s"), "s")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
@@ -255,119 +257,88 @@ def exact_jaccard_stratum(docs: DataFrame, text_col: str,
     return sh, sizes, exact
 
 
-def simhash_certificate_facts(spark: SparkSession, docs: DataFrame,
-                              found: DataFrame, text_col: str,
-                              recall_floor_tenths: int,
-                              stratum_mod: int = 3) -> DataFrame:
-    """Oracle-checkable audit of an engine-hash near-dup pair set
-    against the exact integer-Jaccard shingle universe. Shared by
-    `dedup_simhash` (text tokens) and `multimodal_phash_neardup`
-    (hex payload blocks).
+def _certificate_items(present_item: str, recall_floor_tenths: int,
+                       sound_item: str) -> tuple[str, str, str, str]:
+    """The four item names of a pair-set certificate, in the order
+    `pair_certificate_facts` computes them."""
+    return ("canonical_unique", present_item,
+            f"recall_floor_0{recall_floor_tenths}0", sound_item)
 
-    Four facts, each anchored to the engine-independent n_exact (the
-    ``id % 3 == 0`` stratum's exact J>=0.9 pair count -- the filter
-    pushes below the shingle self-join, so the exact side is a
-    bounded audit at any scale, the round-7 certificate pattern):
-    canonical/unique output, the stratum universe is non-empty,
-    recall on the stratum clears ``recall_floor_tenths``, and EVERY
-    found pair (not just the stratum) has exact J >= 0.8 in integer
-    arithmetic -- soundness scored by a found-pairs-only lookup join,
-    never all-pairs.
 
-    Cost shape (VERDICT r8 #6): the shingle stream is materialized
-    ONCE (four consumers -- stratum self-join left/right, sizes, and
-    the found-id semi-pruned soundness sides -- would otherwise each
-    re-scan and re-explode the corpus; storing the token stream once
-    to disk-backed blocks is the same compute-for-storage trade a
-    shuffle makes), and every scalar fact lands in ONE action: the
-    independent one-row aggregates cross-join into a single row, so
-    the driver pays one job instead of six serial ones."""
-    found = found.select("id_a", "id_b").localCheckpoint(eager=True)
+def pair_certificate_facts(spark: SparkSession, exact: DataFrame,
+                           found: DataFrame, present_item: str,
+                           recall_floor_tenths: int, sound_item: str,
+                           bad_count: Callable[[DataFrame], DataFrame],
+                           ) -> DataFrame:
+    """Oracle-checkable audit of an engine pair set against the exact
+    pair set of its audit stratum -- the one kernel behind the
+    SimHash/pHash, MinHash-LSH and BRP-LSH certificates.
 
-    # exact stratum universe: J >= 0.9 as 10*inter >= 9*union, via
-    # the shared scaffold (one source with the MinHash certificate).
-    # stratum_mod defaults match the oracle's hardcoded modulus; a
-    # larger modulus is the bounded-audit knob for scale probes
-    # (VERDICT r9 #6 -- Spark-side only, the driver never varies it).
-    sh, sizes, exact = exact_jaccard_stratum(
-        docs, text_col, tenths=9, stratum_mod=stratum_mod)
+    ``exact`` and ``found`` carry ``id_a``/``id_b``; ``found`` may
+    carry more columns for the soundness check. Four ``(item,
+    n_exact, ok)`` rows, ordered by item, each anchored to the
+    engine-independent n_exact:
 
-    # soundness: shingle overlap recomputed for the FOUND pairs only
-    # (semi-prune the shingle stream to found ids, then keep only
-    # found pairs before the count -- |found| rows, never all-pairs)
-    sh_a = sh.join(found.select("id_a").distinct(),
-                   sh["id"] == F.col("id_a")).select("id_a", "s")
-    sh_b = sh.join(found.select("id_b").distinct(),
-                   sh["id"] == F.col("id_b")).select("id_b", "s")
-    found_inter = (
-        sh_a.join(sh_b, "s")
-        .join(found, ["id_a", "id_b"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    # LEFT-join sizes: a doc with zero shingles (under-n-token text)
-    # has no sizes row, and an inner join would silently drop its
-    # found pairs from the soundness audit. Such pairs have an empty
-    # feature union -- sound only when BOTH sides are empty (identical
-    # empty feature sets collide legitimately); any other shape is
-    # counted unsound.
-    found_scored = (
-        found.join(found_inter, ["id_a", "id_b"], "left")
-        .join(sizes.select(F.col("id").alias("id_a"),
-                           F.col("n_sh").alias("n_a")), "id_a", "left")
-        .join(sizes.select(F.col("id").alias("id_b"),
-                           F.col("n_sh").alias("n_b")), "id_b", "left")
-        .select(F.coalesce(F.col("n_inter"), F.lit(0)).alias("n_inter"),
-                (F.coalesce(F.col("n_a"), F.lit(0))
-                 + F.coalesce(F.col("n_b"), F.lit(0))
-                 - F.coalesce(F.col("n_inter"), F.lit(0))).alias("n_union"))
-    )
+    - ``canonical_unique``: every found pair has id_a < id_b and none
+      repeats;
+    - ``present_item``: the exact set is non-empty;
+    - ``recall_floor_0<t>0``: at least t/10 of the exact pairs were
+      found (t = ``recall_floor_tenths``);
+    - ``sound_item``: ``bad_count`` is zero. It maps the checkpointed
+      found set to a one-row, one-column aggregate: the number of
+      found pairs that break the caller's soundness rule. A NULL count
+      (a sum over an empty set) passes.
 
-    # bounded driver state: scalar audit counts only, ONE action --
-    # each aggregate is a single row, so the cross-join chain is a
-    # constant-size model-state fan-out, never data x data
-    unsound = (
-        # 0/0 union (both docs shingle-less) is a sound collision;
-        # n_inter=0 with a non-empty union falls out of the first arm
-        (10 * F.col("n_inter") < 8 * F.col("n_union"))
-        & (F.col("n_union") > 0)
-        | ((F.col("n_union") == 0) & (F.col("n_inter") != 0)))
-    facts = (
+    The found set is checkpointed once, and every count lands in ONE
+    action: the one-row aggregates cross-join into a single row, a
+    constant-size fan-out, never data x data."""
+    found = found.localCheckpoint(eager=True)
+    pairs = found.select("id_a", "id_b")
+    s = (
         exact.agg(F.count(F.lit(1)).alias("n_exact"))
-        .crossJoin(found.agg(
-            F.count(F.lit(1)).alias("n_found"),
-            F.sum(F.when(~(F.col("id_a") < F.col("id_b")), 1)
+        # one aggregate over the distinct pairs counts both shape
+        # facts: each group carries its multiplicity, so the repeats
+        # (n_found - n_distinct) are the sum of count - 1
+        .crossJoin(pairs.groupBy("id_a", "id_b").count().agg(
+            F.sum(F.col("count") - 1).alias("n_dup"),
+            F.sum(F.when(~(F.col("id_a") < F.col("id_b")), F.col("count"))
                   .otherwise(0)).alias("n_noncanon")))
-        .crossJoin(found.distinct().agg(
-            F.count(F.lit(1)).alias("n_distinct")))
-        .crossJoin(found.join(exact, ["id_a", "id_b"]).agg(
+        .crossJoin(pairs.join(exact, ["id_a", "id_b"]).agg(
             F.count(F.lit(1)).alias("n_hit")))
-        .crossJoin(found_scored.agg(
-            F.sum(F.when(unsound, 1).otherwise(0)).alias("n_unsound")))
+        .crossJoin(bad_count(found).toDF("n_bad"))
         .collect()[0]
     )
-    n_exact = facts["n_exact"]
-    n_hit = facts["n_hit"]
-    n_noncanon = int(facts["n_noncanon"] or 0)
-    n_dup = facts["n_found"] - facts["n_distinct"]
-    n_unsound = int(facts["n_unsound"] or 0)
-
-    rows = [
-        ("canonical_unique", n_exact, n_noncanon == 0 and n_dup == 0),
-        ("exact_pairs_j090_present", n_exact, n_exact > 0),
-        (f"recall_floor_0{recall_floor_tenths}0", n_exact,
-         10 * n_hit >= recall_floor_tenths * n_exact),
-        ("soundness_j080", n_exact, n_unsound == 0),
-    ]
+    n_exact = s["n_exact"]
+    oks = (not s["n_noncanon"] and not s["n_dup"],
+           n_exact > 0,
+           10 * s["n_hit"] >= recall_floor_tenths * n_exact,
+           not s["n_bad"])
+    rows = [(item, n_exact, ok) for item, ok in zip(
+        _certificate_items(present_item, recall_floor_tenths, sound_item),
+        oks)]
     return local_frame(
         spark, rows, "item string, n_exact long, ok boolean").orderBy("item")
 
 
-def simhash_certificate_oracle(tokens_sql: str,
-                               recall_floor_tenths: int) -> str:
-    """DuckDB side of `simhash_certificate_facts`: recompute the
-    stratified exact J>=0.9 universe from the same token stream and
-    assert the engine-side booleans TRUE."""
+def certificate_oracle_rows(present_item: str, recall_floor_tenths: int,
+                            sound_item: str) -> str:
+    """DuckDB tail of a `pair_certificate_facts` oracle, read from a
+    one-row ``ex(n_exact)`` CTE: the same four items, the presence
+    item recomputed and every engine-side boolean asserted TRUE."""
+    return "\nUNION ALL ".join(
+        f"SELECT '{item}' AS item, n_exact, "
+        f"{'n_exact > 0' if item == present_item else 'TRUE'} AS ok FROM ex"
+        for item in _certificate_items(present_item, recall_floor_tenths,
+                                       sound_item)
+    ) + "\nORDER BY item\n"
+
+
+def shingle_certificate_oracle(tokens_sql: str, jaccard_tenths: int,
+                               present_item: str, recall_floor_tenths: int,
+                               sound_item: str) -> str:
+    """DuckDB side of the shingle certificates: recompute the stratum's
+    exact integer J >= jaccard_tenths/10 pair count from the same
+    token stream (``tokens_sql`` yields ``doc_id, t``)."""
     return f"""
 WITH sh AS (
   SELECT doc_id AS id,
@@ -379,7 +350,8 @@ WITH sh AS (
 sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
 inter AS (
   SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.s = b.s AND a.id < b.id AND a.id % 3 = 0
+  FROM sh a JOIN sh b
+    ON a.s = b.s AND a.id < b.id AND a.id % {_STRATUM_MOD} = 0
   GROUP BY 1, 2
 ),
 ex AS (
@@ -387,21 +359,86 @@ ex AS (
   FROM inter
   JOIN sizes sa ON sa.id = id_a
   JOIN sizes sb ON sb.id = id_b
-  WHERE 10 * n_inter >= 9 * (sa.n_sh + sb.n_sh - n_inter)
+  WHERE 10 * n_inter >= {jaccard_tenths} * (sa.n_sh + sb.n_sh - n_inter)
 )
-SELECT 'canonical_unique' AS item, n_exact, TRUE AS ok FROM ex
-UNION ALL SELECT 'exact_pairs_j090_present', n_exact, n_exact > 0 FROM ex
-UNION ALL SELECT 'recall_floor_0{recall_floor_tenths}0', n_exact, TRUE FROM ex
-UNION ALL SELECT 'soundness_j080', n_exact, TRUE FROM ex
-ORDER BY item
-"""
+{certificate_oracle_rows(present_item, recall_floor_tenths, sound_item)}"""
+
+
+def simhash_certificate_facts(spark: SparkSession, docs: DataFrame,
+                              found: DataFrame, text_col: str,
+                              recall_floor_tenths: int) -> DataFrame:
+    """`pair_certificate_facts` for an engine-hash near-dup pair set
+    against the exact integer-Jaccard shingle universe. Shared by
+    `dedup_simhash` (text tokens) and `multimodal_phash_neardup`
+    (hex payload blocks).
+
+    The exact set is the ``id % 3 == 0`` stratum's J>=0.9 pairs; the
+    soundness item asks that EVERY found pair (not just the stratum)
+    has exact J >= 0.8 in integer arithmetic -- scored by a
+    found-pairs-only lookup join, never all-pairs. The shingle stream
+    is materialized once for its five consumers (stratum self-join
+    left/right, sizes, and the found-id semi-pruned soundness sides)."""
+    sh, sizes, exact = exact_jaccard_stratum(docs, text_col, tenths=9)
+
+    def n_unsound(found: DataFrame) -> DataFrame:
+        # shingle overlap recomputed for the FOUND pairs only
+        # (semi-prune the shingle stream to found ids, then keep only
+        # found pairs before the count -- |found| rows, never all-pairs)
+        sh_a = sh.join(found.select("id_a").distinct(),
+                       sh["id"] == F.col("id_a")).select("id_a", "s")
+        sh_b = sh.join(found.select("id_b").distinct(),
+                       sh["id"] == F.col("id_b")).select("id_b", "s")
+        found_inter = (
+            sh_a.join(sh_b, "s")
+            .join(found, ["id_a", "id_b"])
+            .groupBy("id_a", "id_b")
+            .agg(F.count("*").alias("n_inter"))
+        )
+        # LEFT-join sizes: a doc with zero shingles (under-n-token
+        # text) has no sizes row, and an inner join would silently
+        # drop its found pairs from the soundness audit. Such pairs
+        # have an empty feature union -- sound only when BOTH sides
+        # are empty (identical empty feature sets collide
+        # legitimately); any other shape is counted unsound.
+        found_scored = (
+            found.join(found_inter, ["id_a", "id_b"], "left")
+            .join(sizes.select(F.col("id").alias("id_a"),
+                               F.col("n_sh").alias("n_a")), "id_a", "left")
+            .join(sizes.select(F.col("id").alias("id_b"),
+                               F.col("n_sh").alias("n_b")), "id_b", "left")
+            .select(F.coalesce(F.col("n_inter"), F.lit(0)).alias("n_inter"),
+                    (F.coalesce(F.col("n_a"), F.lit(0))
+                     + F.coalesce(F.col("n_b"), F.lit(0))
+                     - F.coalesce(F.col("n_inter"), F.lit(0)))
+                    .alias("n_union"))
+        )
+        unsound = (
+            # 0/0 union (both docs shingle-less) is a sound collision;
+            # n_inter=0 with a non-empty union falls out of the first
+            # arm
+            (10 * F.col("n_inter") < 8 * F.col("n_union"))
+            & (F.col("n_union") > 0)
+            | ((F.col("n_union") == 0) & (F.col("n_inter") != 0)))
+        return found_scored.agg(F.sum(F.when(unsound, 1).otherwise(0)))
+
+    return pair_certificate_facts(
+        spark, exact, found.select("id_a", "id_b"),
+        "exact_pairs_j090_present", recall_floor_tenths, "soundness_j080",
+        n_unsound)
+
+
+def simhash_certificate_oracle(tokens_sql: str,
+                               recall_floor_tenths: int) -> str:
+    """DuckDB side of `simhash_certificate_facts`."""
+    return shingle_certificate_oracle(
+        tokens_sql, 9, "exact_pairs_j090_present", recall_floor_tenths,
+        "soundness_j080")
 
 
 @register("dedup_simhash",
           oracle=simhash_certificate_oracle(_DOC_TOKENS_SQL,
                                             recall_floor_tenths=5))
-def dedup_simhash(spark: SparkSession, sf_dir: str,
-                  stratum_mod: int = 3) -> DataFrame:
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup audit, deployable xxhash64 bit votes -- now
     ORACLE-BACKED (VERDICT r7 #5): instead of the engine-specific pair
     list (rows-only forever), the query emits the certificate facts of
@@ -418,8 +455,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str,
         repartition_to=spark.sparkContext.defaultParallelism,
     )
     return simhash_certificate_facts(spark, docs, found, "text",
-                                     recall_floor_tenths=5,
-                                     stratum_mod=stratum_mod)
+                                     recall_floor_tenths=5)
 
 
 
@@ -663,7 +699,10 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # below the pair join (the round-7 certificate pattern: one n/5 x n
 # scan feeds BOTH thresholds), so the audit is a bounded sample at
 # any scale; the drop-witness check touches |drops| rows only.
-_SEMANTIC_CERT_ORACLE = """
+#: the isolation audit stratum, ``vec_id % _SEM_AUDIT_MOD == 0`` on both
+#: engines (the oracle below interpolates it)
+_SEM_AUDIT_MOD = 5
+_SEMANTIC_CERT_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, embedding FROM embeddings
   WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
@@ -674,13 +713,13 @@ mx AS (
                                                b.embedding::DOUBLE[])
                         * 1e6 + 0.5) AS BIGINT)) AS mxcq
   FROM e a JOIN e b ON a.vec_id <> b.vec_id
-  WHERE a.vec_id % 5 = 0
+  WHERE a.vec_id % {_SEM_AUDIT_MOD} = 0
   GROUP BY 1
 ),
 base AS (
   SELECT v.vec_id, m.mxcq FROM embeddings v
   LEFT JOIN mx m ON v.vec_id = m.vec_id
-  WHERE v.vec_id % 5 = 0
+  WHERE v.vec_id % {_SEM_AUDIT_MOD} = 0
 ),
 f AS (
   SELECT
@@ -710,8 +749,7 @@ _SEM_AUDIT_T_HIGH = 0.92
 
 
 @register("dedup_semantic_embedding", oracle=_SEMANTIC_CERT_ORACLE)
-def dedup_semantic_embedding(spark: SparkSession, sf_dir: str,
-                             audit_mod: int = 5) -> DataFrame:
+def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup audit, deployable k-means-quantizer configuration --
     now ORACLE-BACKED (VERDICT r7 #5): the k-means labels and greedy
     kept set are engine-side choices no SQL replica can replay, but
@@ -750,18 +788,15 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str,
     cq = quantized_cosine().alias("cq")
     # one (n/5) x n scan feeds both isolation thresholds; the stratum
     # filter pushes below the pair join
-    # audit_mod defaults match the oracle's hardcoded % 5; a larger
-    # modulus is the bounded-audit knob for scale probes (VERDICT r9
-    # #6 -- Spark-side only, the driver never varies it).
     nmax = (
-        va.filter(F.col("id_a") % audit_mod == 0)
+        va.filter(F.col("id_a") % _SEM_AUDIT_MOD == 0)
         .join(vb, F.col("id_a") != F.col("id_b"))
         .select("id_a", cq)
         .groupBy("id_a").agg(F.max("cq").alias("mxcq"))
     )
     base = (
         emb.select(F.col("vec_id").alias("id_a"))
-        .filter(F.col("id_a") % audit_mod == 0)
+        .filter(F.col("id_a") % _SEM_AUDIT_MOD == 0)
         .join(nmax, "id_a", "left")
         .localCheckpoint(eager=True)
     )

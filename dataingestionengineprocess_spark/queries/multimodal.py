@@ -379,8 +379,7 @@ def _phash_certificate_oracle() -> str:
 
 
 @register("multimodal_phash_neardup", oracle=_phash_certificate_oracle())
-def multimodal_phash_neardup(spark: SparkSession, sf_dir: str,
-                             stratum_mod: int = 3) -> DataFrame:
+def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-dup audit over binary payload blocks,
     deployable xxhash64 votes -- now ORACLE-BACKED (VERDICT r7 #5)
     via the shared `simhash_certificate_facts` kernel on the
@@ -405,8 +404,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str,
         repartition_to=spark.sparkContext.defaultParallelism,
     )
     return simhash_certificate_facts(spark, bdocs, found, "block_str",
-                                     recall_floor_tenths=3,
-                                     stratum_mod=stratum_mod)
+                                     recall_floor_tenths=3)
 
 
 def _phash_portable_oracle() -> str:

@@ -28,7 +28,13 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from . import register
-from ..session import local_frame
+from .dedup import (
+    _DOC_TOKENS_SQL,
+    certificate_oracle_rows,
+    exact_jaccard_stratum,
+    pair_certificate_facts,
+    shingle_certificate_oracle,
+)
 
 # ---------------------------------------------------------------------------
 # MinHash-LSH (xxhash64 default) certificate. The exact side uses the
@@ -45,38 +51,13 @@ from ..session import local_frame
 # property of the fixture).
 # ---------------------------------------------------------------------------
 
-_MINHASH_CERT_ORACLE = """
-WITH sh AS (
-  SELECT doc_id AS id,
-         unnest(list_distinct([array_to_string(t[i:i+2], ' ')
-                               for i in range(1, len(t) - 1)])) AS s
-  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-  WHERE len(t) >= 3
-),
-sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-inter AS (
-  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.s = b.s AND a.id < b.id AND a.id % 3 = 0
-  GROUP BY 1, 2
-),
-ex AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_exact
-  FROM inter
-  JOIN sizes sa ON sa.id = id_a
-  JOIN sizes sb ON sb.id = id_b
-  WHERE 10 * n_inter >= 7 * (sa.n_sh + sb.n_sh - n_inter)
-)
-SELECT 'canonical_unique' AS item, n_exact, TRUE AS ok FROM ex
-UNION ALL SELECT 'estimates_k_over_32', n_exact, TRUE FROM ex
-UNION ALL SELECT 'exact_pairs_j070_present', n_exact, n_exact > 0 FROM ex
-UNION ALL SELECT 'recall_floor_090', n_exact, TRUE FROM ex
-ORDER BY item
-"""
+_MINHASH_CERT_ORACLE = shingle_certificate_oracle(
+    _DOC_TOKENS_SQL, 7, "exact_pairs_j070_present", 9, "estimates_k_over_32")
 
 
 @register("dedup_minhash_lsh_certificate", oracle=_MINHASH_CERT_ORACLE)
-def dedup_minhash_lsh_certificate(spark: SparkSession, sf_dir: str,
-                                  stratum_mod: int = 3) -> DataFrame:
+def dedup_minhash_lsh_certificate(spark: SparkSession,
+                                  sf_dir: str) -> DataFrame:
     """Audit the xxhash64 MinHash-LSH default against the exact
     integer-Jaccard pair universe: canonical/unique output, every
     estimate an exact k/32 at or above the 0.5 threshold, and >=90%
@@ -84,22 +65,16 @@ def dedup_minhash_lsh_certificate(spark: SparkSession, sf_dir: str,
     stratum (the filter pushes below the shingle self-join, so the
     exact side is a bounded audit at any scale)."""
     from ..operators.dedup import minhash_neardup_pairs
-    from .dedup import exact_jaccard_stratum
 
     docs = load(spark, sf_dir, "documents")
 
     # exact stratum universe J >= 0.7 via the shared scaffold (ONE
-    # source with the SimHash/pHash kernel: spread + checkpointed
-    # shingle stream, stratum filter below the self-join -- the
-    # round-9 layout, VERDICT r8 #6). The discarded _sh/_sizes do NOT
-    # orphan the scaffold's shingle checkpoint: sh feeds three
+    # source with the SimHash/pHash kernel). The discarded _sh/_sizes
+    # do NOT orphan the scaffold's shingle checkpoint: sh feeds three
     # consumers inside the helper itself (self-join left/right +
     # sizes), so the materialization pays for itself here too (ADVICE
-    # r9). stratum_mod defaults to the oracle's hardcoded % 3; larger
-    # moduli are the bounded-audit knob for scale probes (VERDICT r9
-    # #6 -- Spark-side only, the driver never varies it).
-    _sh, _sizes, exact = exact_jaccard_stratum(
-        docs, "text", tenths=7, stratum_mod=stratum_mod)
+    # r9).
+    _sh, _sizes, exact = exact_jaccard_stratum(docs, "text", tenths=7)
     # est_round=None: unrounded estimates are exact multiples of 1/32
     # (the portable twin's convention), so the k/32 invariant is an
     # equality, not a tolerance.
@@ -107,46 +82,17 @@ def dedup_minhash_lsh_certificate(spark: SparkSession, sf_dir: str,
         docs, num_hashes=32, bands=16, est_threshold=0.5,
         repartition_to=spark.sparkContext.defaultParallelism,
         est_round=None,
-    ).localCheckpoint(eager=True)
-
-    # bounded driver state: scalar audit counts only, ONE action of
-    # cross-joined one-row aggregates (the round-9 kernel layout)
-    s = (
-        exact.agg(F.count(F.lit(1)).alias("n_exact"))
-        .crossJoin(lsh.agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(F.when(~(F.col("id_a") < F.col("id_b")), 1)
-                  .otherwise(0)).alias("n_noncanon"),
-            F.max(F.abs(F.col("est_jaccard") * 32
-                        - F.round(F.col("est_jaccard") * 32, 0)))
-            .alias("dev"),
-            F.min("est_jaccard").alias("mn")))
-        .crossJoin(lsh.select("id_a", "id_b").distinct().agg(
-            F.count(F.lit(1)).alias("n_distinct")))
-        .crossJoin(lsh.select("id_a", "id_b")
-                   .join(exact, ["id_a", "id_b"]).agg(
-            F.count(F.lit(1)).alias("n_hit")))
-        .collect()[0]
     )
-    n_exact = s["n_exact"]
-    n_pairs = s["n_pairs"]
-    n_hit = s["n_hit"]
-    n_noncanon = int(s["n_noncanon"] or 0)
-    n_dup = n_pairs - s["n_distinct"]
-    # Vacuously true on an empty pair set (non-emptiness is gated by
-    # exact_pairs_j070_present, not here -- an audit sample where LSH
-    # legitimately finds nothing must not flag the k/32 invariant).
-    ok_est = (n_pairs == 0
-              or (s["dev"] == 0.0 and s["mn"] >= 0.5))
-
-    rows = [
-        ("canonical_unique", n_exact, n_noncanon == 0 and n_dup == 0),
-        ("estimates_k_over_32", n_exact, bool(ok_est)),
-        ("exact_pairs_j070_present", n_exact, n_exact > 0),
-        ("recall_floor_090", n_exact, 10 * n_hit >= 9 * n_exact),
-    ]
-    return local_frame(
-        spark, rows, "item string, n_exact long, ok boolean").orderBy("item")
+    k32 = F.col("est_jaccard") * 32
+    est_ok = ((F.abs(k32 - F.round(k32, 0)) == 0)
+              & (F.col("est_jaccard") >= 0.5))
+    # an empty pair set passes vacuously (non-emptiness is gated by
+    # exact_pairs_j070_present -- an audit sample where LSH
+    # legitimately finds nothing must not flag the k/32 invariant)
+    return pair_certificate_facts(
+        spark, exact, lsh, "exact_pairs_j070_present", 9,
+        "estimates_k_over_32",
+        lambda found: found.agg(F.sum(F.when(est_ok, 0).otherwise(1))))
 
 
 # ---------------------------------------------------------------------------
@@ -174,7 +120,10 @@ def dedup_minhash_lsh_certificate(spark: SparkSession, sf_dir: str,
 #     soundness item already gets at 399900.
 # ---------------------------------------------------------------------------
 
-_BRP_CERT_ORACLE = """
+#: the BRP recall audit stratum, ``id_a % _BRP_AUDIT_MOD == 0`` on both
+#: engines (the oracle below interpolates it)
+_BRP_AUDIT_MOD = 5
+_BRP_CERT_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, embedding FROM embeddings
   WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
@@ -185,21 +134,17 @@ p AS (
                                            b.embedding::DOUBLE[])
                     * 1e6 + 0.5) AS BIGINT) AS cq
   FROM e a JOIN e b ON a.vec_id < b.vec_id
-  WHERE a.vec_id % 5 = 0
+  WHERE a.vec_id % {_BRP_AUDIT_MOD} = 0
 ),
 ex AS (SELECT CAST(count(*) AS BIGINT) AS n_exact FROM p
        WHERE cq >= 400100)
-SELECT 'canonical_unique' AS item, n_exact, TRUE AS ok FROM ex
-UNION ALL SELECT 'exact_pairs_present', n_exact, n_exact > 0 FROM ex
-UNION ALL SELECT 'recall_floor_080', n_exact, TRUE FROM ex
-UNION ALL SELECT 'sound_no_false_positives', n_exact, TRUE FROM ex
-ORDER BY item
-"""
+{certificate_oracle_rows("exact_pairs_present", 8,
+                         "sound_no_false_positives")}"""
 
 
 @register("similarity_brp_lsh_certificate", oracle=_BRP_CERT_ORACLE)
-def similarity_brp_lsh_certificate(spark: SparkSession, sf_dir: str,
-                                   audit_mod: int = 5) -> DataFrame:
+def similarity_brp_lsh_certificate(spark: SparkSession,
+                                   sf_dir: str) -> DataFrame:
     """Audit the MLlib BucketedRandomProjectionLSH self-join:
     canonical/unique output, zero found pairs below the 0.3999 noise
     guard (exact cosine recomputed per found pair), >=80% recall of
@@ -225,64 +170,33 @@ def similarity_brp_lsh_certificate(spark: SparkSession, sf_dir: str,
     vb = norm_side(spread, "vec_id", "embedding", "id_b", "vb", "nb")
     cq = quantized_cosine().alias("cq")
     # exact side: only the audit stratum ever joins (filter pushed
-    # below the pair join -- 1/5 of the all-pairs work at the default
-    # audit_mod; the oracle hardcodes % 5, so non-default moduli are
-    # the Spark-side bounded-audit knob for scale probes, VERDICT r9
-    # #6)
+    # below the pair join -- 1/5 of the all-pairs work)
     exact = (
-        va.filter(F.col("id_a") % audit_mod == 0)
+        va.filter(F.col("id_a") % _BRP_AUDIT_MOD == 0)
         .join(vb, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", cq)
         .filter(F.col("cq") >= 400100)
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
-    approx = (
-        brp_similarity_join(emb, threshold_cos=0.4)
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
-    )
-    # soundness: exact cosine for the FOUND pairs only (lookup join).
-    # LEFT joins so a pair naming an id absent from the corpus or a
-    # zero-norm vector counts as a STRAY (NULL cq) instead of
-    # vanishing from the audit (brp_similarity_join drops zero-norm
-    # vectors itself, so on well-formed output nothing is NULL -- the
-    # left join guards a regressed operator, the ADVICE-r8 class).
-    found_scored = (
-        approx.join(va, "id_a", "left").join(vb, "id_b", "left")
-        .select(cq)
-    )
+    approx = brp_similarity_join(emb, threshold_cos=0.4).select(
+        "id_a", "id_b")
 
-    # bounded driver state: scalar audit counts only, ONE action of
-    # cross-joined one-row aggregates (the round-9 kernel layout)
-    s = (
-        exact.agg(F.count(F.lit(1)).alias("n_exact"))
-        .crossJoin(approx.agg(
-            F.count(F.lit(1)).alias("n_found"),
-            F.sum(F.when(~(F.col("id_a") < F.col("id_b")), 1)
-                  .otherwise(0)).alias("n_noncanon")))
-        .crossJoin(approx.distinct().agg(
-            F.count(F.lit(1)).alias("n_distinct")))
-        .crossJoin(approx.join(exact, ["id_a", "id_b"]).agg(
-            F.count(F.lit(1)).alias("n_hit")))
-        .crossJoin(found_scored.agg(
-            F.sum(F.when(F.col("cq").isNull()
-                         | (F.col("cq") < 399900), 1).otherwise(0))
-            .alias("n_stray")))
-        .collect()[0]
-    )
-    n_exact = s["n_exact"]
-    n_found = s["n_found"]
-    n_hit = s["n_hit"]
-    n_stray = int(s["n_stray"] or 0)
-    n_noncanon = int(s["n_noncanon"] or 0)
-    n_dup = n_found - s["n_distinct"]
+    def n_stray(found: DataFrame) -> DataFrame:
+        # exact cosine for the FOUND pairs only (lookup join). LEFT
+        # joins so a pair naming an id absent from the corpus or a
+        # zero-norm vector counts as a STRAY (NULL cq) instead of
+        # vanishing from the audit (brp_similarity_join drops
+        # zero-norm vectors itself, so on well-formed output nothing
+        # is NULL -- the left join guards a regressed operator, the
+        # ADVICE-r8 class).
+        return (
+            found.join(va, "id_a", "left").join(vb, "id_b", "left")
+            .select(cq)
+            .agg(F.sum(F.when(F.col("cq").isNull()
+                              | (F.col("cq") < 399900), 1).otherwise(0)))
+        )
 
-    rows = [
-        ("canonical_unique", n_exact, n_noncanon == 0 and n_dup == 0),
-        ("exact_pairs_present", n_exact, n_exact > 0),
-        ("recall_floor_080", n_exact, 10 * n_hit >= 8 * n_exact),
-        ("sound_no_false_positives", n_exact, n_stray == 0),
-    ]
-    return local_frame(
-        spark, rows, "item string, n_exact long, ok boolean").orderBy("item")
+    return pair_certificate_facts(
+        spark, exact, approx, "exact_pairs_present", 8,
+        "sound_no_false_positives", n_stray)

@@ -55,6 +55,14 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+#: ENGINE_CONFS keys `tune_session` leaves alone: partition sizing is
+#: the session builder's call (a harness sizes shuffle partitions to
+#: its own cores), and no oracle-checked semantic depends on it.
+_SIZING_CONFS = frozenset({
+    "spark.sql.shuffle.partitions",
+    "spark.sql.files.maxPartitionBytes",
+})
+
 
 def get_spark(app_name: str = "dataingestionengineprocess-spark",
               master: str | None = None,
@@ -87,18 +95,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The driver harness may hand us a session it built itself; every
     query entrypoint calls this so oracle-sensitive semantics (UTC
     timezone, AQE, Arrow) hold regardless of who built the session.
-    Static confs (shuffle partitions pre-AQE) are left alone.
+    Sizing confs (``_SIZING_CONFS``) are left to the session's builder.
     """
-    for key in (
-        "spark.sql.session.timeZone",
-        "spark.sql.adaptive.enabled",
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.join.preferSortMergeJoin",
-        "spark.sql.execution.arrow.pyspark.enabled",
-        "spark.sql.legacy.parquet.nanosAsLong",
-    ):
-        spark.conf.set(key, ENGINE_CONFS[key])
+    for key, value in ENGINE_CONFS.items():
+        if key not in _SIZING_CONFS:
+            spark.conf.set(key, value)
     return spark
 
 

@@ -1,19 +1,27 @@
-"""Unit tests for the round-8 certificate audit kernels.
+"""Unit tests for the certificate audit kernels.
 
-`simhash_certificate_facts` and `ann_certificate_facts` take the
+`pair_certificate_facts` (and its SimHash entry
+`simhash_certificate_facts`) and `ann_certificate_facts` take the
 engine's FOUND set as an argument, so every invariant they assert can
 be pinned directly with synthetic found sets -- including the failure
 directions the fixture-backed registry queries can never exercise
-(a noncanonical pair, an unsound pair, a wrong re-rank score) and the
-zero-shingle edge cases the round-8 review fixed.
+(a noncanonical or repeated pair, an unsound pair, a stray BRP pair, a
+non-k/32 MinHash estimate, a wrong re-rank score) and the zero-shingle
+edge cases the round-8 review fixed. The MinHash and BRP certificates
+are driven through their registered queries over a tiny parquet
+fixture, with the LSH operator replaced by a synthetic found set.
 """
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
+from dataingestionengineprocess_spark.queries import all_queries
 from dataingestionengineprocess_spark.queries.dedup import (
+    pair_certificate_facts,
     simhash_certificate_facts,
 )
 from dataingestionengineprocess_spark.queries.similarity import (
@@ -80,6 +88,116 @@ def test_simhash_kernel_zero_shingle_pairs(spark):
     facts = _facts(simhash_certificate_facts(spark, docs, mixed, "text",
                                              recall_floor_tenths=5))
     assert not facts["soundness_j080"]["ok"], facts
+
+
+def _no_bad(found):
+    return found.agg(F.lit(0))
+
+
+def test_pair_kernel_flags_a_repeated_pair(spark):
+    exact = _pairs(spark, [(0, 3)])
+    facts = _facts(pair_certificate_facts(
+        spark, exact, _pairs(spark, [(0, 3), (0, 3)]), "present", 5,
+        "sound", _no_bad))
+    assert not facts["canonical_unique"]["ok"]
+    assert all(r["ok"] for item, r in facts.items()
+               if item != "canonical_unique"), facts
+
+
+def test_pair_kernel_recall_floor_is_inclusive(spark):
+    """10 exact pairs at a 0.8 floor: 8 found passes, 7 fails."""
+    exact_rows = [(i, i + 100) for i in range(10)]
+    exact = _pairs(spark, exact_rows)
+    for n_found, ok in ((8, True), (7, False)):
+        facts = _facts(pair_certificate_facts(
+            spark, exact, _pairs(spark, exact_rows[:n_found]), "present",
+            8, "sound", _no_bad))
+        assert facts["recall_floor_080"]["ok"] is ok, (n_found, facts)
+        assert facts["recall_floor_080"]["n_exact"] == 10
+
+
+def _write_table(spark, root, name, rows, schema):
+    spark.createDataFrame(rows, schema).write.parquet(
+        str(root / f"{name}.parquet"))
+
+
+@pytest.mark.parametrize("stray", [(0, 99), (0, 4)],
+                         ids=["missing_id", "zero_norm_id"])
+def test_brp_certificate_counts_strays(spark, tmp_path, monkeypatch,
+                                       stray):
+    """A found pair naming an id absent from the corpus, or a
+    zero-norm vector, has a NULL exact cosine and counts as a stray."""
+    import dataingestionengineprocess_spark.operators.similarity as sim
+
+    _write_table(spark, tmp_path, "embeddings",
+                 [(0, [1.0, 0.0]), (1, [1.0, 0.1]), (2, [0.0, 1.0]),
+                  (3, [0.1, 1.0]), (4, [0.0, 0.0])],
+                 "vec_id long, embedding array<float>")
+    good = [(0, 1), (2, 3)]
+    for found, sound in ((good, True), (good + [stray], False)):
+        monkeypatch.setattr(
+            sim, "brp_similarity_join",
+            lambda emb, threshold_cos, rows=found: _pairs(spark, rows))
+        facts = _facts(all_queries()["similarity_brp_lsh_certificate"](
+            spark, str(tmp_path)))
+        assert facts["sound_no_false_positives"]["ok"] is sound, facts
+        # the exact side is the vec_id % 5 == 0 stratum: only (0, 1)
+        assert facts["exact_pairs_present"]["n_exact"] == 1
+
+
+@pytest.mark.parametrize("estimates,ok", [
+    ([0.5, 1.0], True),        # 16/32 and 32/32
+    ([0.51], False),           # not an exact k/32
+    ([15 / 32], False),        # an exact k/32 below the 0.5 threshold
+    ([], True),                # empty found set: vacuously true
+], ids=["exact_k32", "not_k32", "below_threshold", "empty"])
+def test_minhash_certificate_checks_estimates(spark, tmp_path,
+                                              monkeypatch, estimates, ok):
+    import dataingestionengineprocess_spark.operators.dedup as ops
+
+    _write_table(spark, tmp_path, "documents", _CORPUS,
+                 "doc_id long, text string")
+    rows = [(0, 3 + i, e) for i, e in enumerate(estimates)]
+    monkeypatch.setattr(
+        ops, "minhash_neardup_pairs",
+        lambda docs, **kw: spark.createDataFrame(
+            rows, "id_a long, id_b long, est_jaccard double"))
+    facts = _facts(all_queries()["dedup_minhash_lsh_certificate"](
+        spark, str(tmp_path)))
+    assert facts["estimates_k_over_32"]["ok"] is ok, facts
+    assert facts["exact_pairs_j070_present"]["n_exact"] == 1
+
+
+#: Spark jobs that building and collecting each pair-set certificate
+#: runs at sf0.001 in the test session, as (fewest, most): the
+#: checkpoints (the shingle stream where there is one, the exact set,
+#: the found set) and the one action, each with the stages AQE submits
+#: as jobs of their own. The SimHash and pHash soundness joins re-plan
+#: at run time, and whether AQE resubmits two of their stages depends
+#: on which stage finishes first, so those two vary by up to 2 from
+#: run to run.
+_CERT_JOBS = {
+    "dedup_simhash": (38, 42),
+    "multimodal_phash_neardup": (38, 42),
+    "dedup_minhash_lsh_certificate": (31, 31),
+    "similarity_brp_lsh_certificate": (28, 28),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CERT_JOBS))
+def test_certificate_job_counts(spark, sf_dir, name):
+    """Pins the job count of each kernel user, so a change to the
+    kernel cannot add a checkpoint or a second action unnoticed."""
+    sc = spark.sparkContext
+    tag = f"cert-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(tag, f"{name} job count")
+    try:
+        all_queries()[name](spark, sf_dir).collect()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(tag))
+    finally:
+        sc.setJobGroup("cert-jobs-idle", "")
+    fewest, most = _CERT_JOBS[name]
+    assert fewest <= n_jobs <= most, n_jobs
 
 
 @pytest.fixture(scope="module")

@@ -17,7 +17,8 @@ i * 10_000_000, so joins stay FK-consistent and duplicate/neighbor
 density grows with the corpus instead of collapsing onto the same ids
 (the scale_probe.py rule, extended to the whole star schema).
 region/nation are constant-size dims at any scale factor and are
-copied as-is. The staged directory is keyed on (source dir, k) and
+copied as-is. A source whose keys already reach REPLICA_OFFSET is
+rejected. The staged directory is keyed on (source dir, k) and
 reused across invocations -- staging is scaffolding, never timed.
 
 Prints one JSON line: {"cpus": N, "k": k, "queries": {name: sec}}.
@@ -62,7 +63,27 @@ REPLICA_OFFSET = 10_000_000
 
 
 def stage(spark, sf_dir: str, k: int) -> str:
+    """Stage the k-times replicated copy of ``sf_dir``; return its dir.
+
+    Raises ValueError, before anything is written, when an offset
+    column of the source holds a key outside [0, REPLICA_OFFSET):
+    replica i's keys would then collide with replica i+1's."""
     import hashlib
+
+    if k > 1:
+        for name, cols in OFFSET_COLS.items():
+            if not cols:
+                continue
+            df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+            row = df.agg(*[F.min(c) for c in cols],
+                         *[F.max(c) for c in cols]).first()
+            bad = [c for c, lo, hi in zip(cols, row[:len(cols)],
+                                          row[len(cols):])
+                   if lo is not None and (lo < 0 or hi >= REPLICA_OFFSET)]
+            if bad:
+                raise ValueError(
+                    f"{name}: keys of {bad} fall outside "
+                    f"[0, {REPLICA_OFFSET}); replicas would collide")
 
     ident = hashlib.md5(f"{sf_dir}|{k}".encode()).hexdigest()[:10]
     dst = os.path.join("/tmp", f"engine_sfscale_{ident}")
