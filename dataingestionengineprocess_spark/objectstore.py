@@ -4,15 +4,16 @@ warehouse of the reference architecture (Untitled Diagram.drawio:13-15,
 code change.
 
 Every path this engine touches already flows through either
-``spark.read``/``df.write`` or the Hadoop FileSystem API
-(`pipeline._list_landing_files`, the ledger/quarantine moves, the
-versioned-table staging renames), both of which resolve the
+``spark.read``/``df.write`` or the Hadoop FileSystem API via
+`hadoop_fs` (`pipeline._list_landing_files`, the ledger/quarantine
+moves, the versioned-table staging renames), both of which resolve the
 filesystem FROM THE URI SCHEME. A feed rooted at
 ``s3a://bucket/landing`` therefore needs no engine change -- only the
 Hadoop confs below on the session. No AWS call happens here (a stated
-non-goal, SURVEY.md §7): this module only assembles conf dicts and
-validates URIs; the sandbox exercises the same scheme-resolution path
-with ``file://`` URIs (tests/test_objectstore.py).
+non-goal, SURVEY.md §7): this module only assembles conf dicts,
+validates URIs and resolves FileSystem handles; the tests exercise
+the same scheme-resolution path with ``file://`` URIs
+(tests/test_objectstore.py).
 
 All keys are the public Hadoop S3A / Spark cloud-integration surface:
 - hadoop-aws `fs.s3a.*` (committers, endpoint, path-style access,
@@ -121,6 +122,17 @@ def validate_store_uri(uri: str) -> str:
         raise ValueError(
             f"{parsed.scheme}:// URI needs a bucket/authority: {uri!r}")
     return uri
+
+
+def hadoop_fs(spark, path: str):
+    """``(FileSystem, Path)`` for ``path``: the Hadoop FileSystem its URI
+    scheme resolves to under the session's Hadoop conf, and the Hadoop
+    Path to pass to it. The one place the engine reaches for the JVM
+    filesystem API, so every move, listing and delete resolves
+    ``s3a://``, ``hdfs://`` and local paths the same way."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return (hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()),
+            hpath)
 
 
 def warehouse_unload_confs() -> dict[str, str]:

@@ -9,9 +9,10 @@ becomes the declarative stage chain below, the Redshift + PostgreSQL
 dual write (:79-98) becomes `write_warehouse` + `write_oltp`, and the
 CloudWatch completion signal (:147-148) becomes a `_runs` status row.
 
-One feed = one `FeedConfig`. The same stage chain serves batch
-(`ingest_batch`) and Structured Streaming (`ingest_stream`, which
-wraps it in `foreachBatch` -- ST1/ST7).
+One feed = one `FeedConfig`. Batch (`ingest_batch`) and Structured
+Streaming (`ingest_stream`, one run per `foreachBatch` epoch --
+ST1/ST7) share the run tail: stage chain, the four sink writes and the
+status row (`_finish_run`).
 """
 
 from __future__ import annotations
@@ -24,19 +25,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .objectstore import hadoop_fs
 from .operators.dedup import dedup_exact
-from .operators.quality import ValidationResult, validate
+from .operators.quality import VIOLATIONS_COL, ValidationResult, validate
 from .session import local_frame
 from .streaming.telemetry import emit_run_status
 from .sinks.warehouse import (
     RunStatus,
     SinkConfig,
+    merge_upsert,
     new_run_id,
+    swap_into_place,
     write_oltp,
     write_run_partition,
     write_warehouse,
 )
-from .sources.csv_source import CORRUPT_COL, read_csv_feed
+from .sources.csv_source import (
+    CsvBatch,
+    csv_reader,
+    read_csv_feed,
+    split_corrupt_records,
+    with_corrupt_col,
+)
 
 
 @dataclass
@@ -166,79 +176,118 @@ def run_stages(
     return curated, result.quarantined, result
 
 
+def _finish_run(spark: SparkSession, feed: FeedConfig, sinks: SinkConfig,
+                run_id: str, batch: CsvBatch, started: float) -> RunStatus:
+    """The run tail `ingest_batch` and `ingest_stream` share: stage chain
+    over the batch's clean rows, the four sink writes, the status row.
+
+    Every sink write targets the run's own ``_run_id`` partition
+    (`write_run_partition` / dynamic overwrite), so a retried run --
+    same run_id after a mid-run crash, or a replayed foreachBatch
+    epoch -- REPLACES its partitions in every table instead of
+    appending a second copy.
+
+    Telemetry policy (A8): every count rides along on a write action
+    via ``observe()``; no standalone ``.count()`` (at 100 TB a separate
+    counting pass would re-read the whole batch). Each observation
+    sits directly over a cache, never inside the curated lineage: when
+    the curated result is empty, AQE replaces that whole lineage with
+    an empty relation and drops any observation inside it, so the
+    clean count is taken over the validated (cached) rows on the
+    quarantine write, and the loaded count over the cached curated
+    rows on the warehouse write.
+
+    The run's caches are released on every exit, failed runs included
+    (a stream would otherwise leak one cache entry per micro-batch)."""
+    from pyspark.sql import Observation
+
+    load_obs = Observation(f"loaded_{run_id}")
+    rej_obs = Observation(f"rejects_{run_id}")
+    quar_obs = Observation(f"quarantine_{run_id}")
+    curated = validation = None
+    try:
+        curated, _, validation = run_stages(feed, batch.clean)
+        # One curated pipeline execution: the warehouse write populates
+        # the cache, the OLTP write reuses the cached rows.
+        curated = curated.withColumn("_run_id", F.lit(run_id)).cache()
+        write_warehouse(
+            curated.observe(load_obs, F.count(F.lit(1)).alias("rows")),
+            sinks.warehouse_dir, feed.name,
+            partition_cols=["_run_id"], mode="overwrite",
+        )
+        write_oltp(curated.drop("_run_id"), sinks, f"{feed.name}_oltp",
+                   run_id=run_id)
+        # Rejects/quarantine are separate branches of the cached scans;
+        # their writes ARE the actions that produce their counts.
+        # Quarantined rows are persisted, not just counted: silently
+        # discarding rule violations would lose partner data.
+        write_run_partition(
+            batch.rejects.observe(rej_obs, F.count(F.lit(1)).alias("rows")),
+            os.path.join(sinks.warehouse_dir, f"{feed.name}_rejects"), run_id,
+        )
+        violated = F.size(VIOLATIONS_COL) > 0
+        write_run_partition(
+            validation.marked.observe(
+                quar_obs, F.count(F.lit(1)).alias("clean"),
+                F.count_if(violated).alias("rows"),
+            ).filter(violated)
+            .withColumn(VIOLATIONS_COL, F.array_join(VIOLATIONS_COL, ",")),
+            os.path.join(sinks.warehouse_dir, f"{feed.name}_quarantine"),
+            run_id,
+        )
+        rows_rejected = int(rej_obs.get["rows"])
+        status = RunStatus(
+            run_id=run_id, feed=feed.name,
+            rows_read=int(quar_obs.get["clean"]) + rows_rejected,
+            rows_loaded=int(load_obs.get["rows"]),
+            rows_rejected=rows_rejected,
+            rows_quarantined=int(quar_obs.get["rows"]),
+            started_at=started, finished_at=time.time(),
+        )
+        emit_run_status(spark, sinks, status)
+        return status
+    finally:
+        for cached in (curated, validation, batch):
+            if cached is not None:
+                cached.unpersist()
+
+
 def ingest_batch(spark: SparkSession, feed: FeedConfig,
                  src_path: str | list[str],
                  sinks: SinkConfig, run_id: str | None = None) -> RunStatus:
-    """One landing-zone batch, end to end. Idempotent per run_id: the
-    warehouse write replaces the run's own partition on re-run.
-
-    Telemetry policy (A8): every count in the RunStatus rides along on
-    a write action via ``observe()`` -- rows_clean on the curated
-    write, rows_rejected on the rejects write, rows_quarantined on the
-    quarantine write. Zero standalone ``.count()`` actions; at 100 TB
-    a separate counting pass would re-read the whole batch.
-    """
-    from pyspark.sql import Observation
-
+    """One landing-zone batch, end to end (see `_finish_run`). Idempotent
+    per run_id: every sink write replaces the run's own partition on
+    re-run."""
     started = time.time()
     run_id = run_id or new_run_id()
-
     batch = read_csv_feed(
         spark, src_path, feed.schema, timestamp_format=feed.timestamp_format
     )
-    clean_obs = Observation(f"clean_{run_id}")
-    clean = batch.clean.observe(clean_obs, F.count(F.lit(1)).alias("rows"))
-    curated, quarantined, validation = run_stages(feed, clean)
-    load_obs = Observation(f"loaded_{run_id}")
-    curated = (
-        curated.observe(load_obs, F.count(F.lit(1)).alias("rows"))
-        .withColumn("_run_id", F.lit(run_id))
-        .cache()
-    )
+    return _finish_run(spark, feed, sinks, run_id, batch, started)
 
-    # One curated pipeline execution: the warehouse write populates the
-    # cache and fires clean_obs + load_obs; the OLTP write reuses the
-    # cached rows. EVERY sink write below targets the run's own
-    # _run_id partition (write_run_partition / dynamic overwrite), so
-    # a retried run (same run_id after a mid-run crash) REPLACES its
-    # own partitions everywhere instead of appending duplicates -- the
-    # "idempotent per run_id" claim holds for curated, OLTP, rejects,
-    # quarantine, and the status row.
-    write_warehouse(curated, sinks.warehouse_dir, feed.name,
-                    partition_cols=["_run_id"], mode="overwrite")
-    write_oltp(curated.drop("_run_id"), sinks, f"{feed.name}_oltp",
-               run_id=run_id)
 
-    # Rejects/quarantine are separate branches of the scan; their
-    # writes ARE the actions that produce their counts (overwrite of an
-    # empty partition is a metadata-only touch, not a data pass).
-    rej_obs = Observation(f"rejects_{run_id}")
-    write_run_partition(
-        batch.rejects.observe(rej_obs, F.count(F.lit(1)).alias("rows")),
-        os.path.join(sinks.warehouse_dir, f"{feed.name}_rejects"), run_id,
-    )
-    quar_obs = Observation(f"quarantine_{run_id}")
-    write_run_partition(
-        quarantined.withColumn("_violations", F.array_join("_violations", ","))
-        .observe(quar_obs, F.count(F.lit(1)).alias("rows")),
-        os.path.join(sinks.warehouse_dir, f"{feed.name}_quarantine"), run_id,
-    )
+def _read_csv_stream(spark: SparkSession, schema: T.StructType,
+                     src_dir: str, timestamp_format: str | None = None,
+                     max_files_per_trigger: int | None = None) -> DataFrame:
+    """Streaming file source over the landing directory, parsed by the
+    same `csv_reader` chain as the batch path."""
+    reader = csv_reader(spark.readStream, schema,
+                        timestamp_format=timestamp_format)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.csv(src_dir)
 
-    rows_rejected = int(rej_obs.get["rows"])
-    status = RunStatus(
-        run_id=run_id, feed=feed.name,
-        rows_read=int(clean_obs.get["rows"]) + rows_rejected,
-        rows_loaded=int(load_obs.get["rows"]),
-        rows_rejected=rows_rejected,
-        rows_quarantined=int(quar_obs.get["rows"]),
-        started_at=started, finished_at=time.time(),
+
+def _drain(stream: DataFrame, process_batch, checkpoint_dir: str):
+    """Start ``stream`` with ``process_batch`` per micro-batch, draining
+    what is available now."""
+    return (
+        stream.writeStream
+        .foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    emit_run_status(spark, sinks, status)
-    # all writes done: release the batch's cached plans
-    curated.unpersist()
-    validation.unpersist()
-    batch.unpersist()
-    return status
 
 
 def ingest_stream(spark: SparkSession, feed: FeedConfig, src_dir: str,
@@ -247,7 +296,8 @@ def ingest_stream(spark: SparkSession, feed: FeedConfig, src_dir: str,
     """Continuous landing-zone ingest (ST1/ST7): the streaming file
     source tracks processed files in the checkpoint (exactly-once per
     file -- the durable replacement for the Lambda trigger), and each
-    micro-batch runs the same stage chain inside foreachBatch.
+    micro-batch runs the same run tail as `ingest_batch` inside
+    foreachBatch.
 
     Returns the started StreamingQuery; callers typically
     ``q.awaitTermination()`` (or rely on availableNow to drain and
@@ -257,23 +307,12 @@ def ingest_stream(spark: SparkSession, feed: FeedConfig, src_dir: str,
     # table inside each micro-batch rather than silently becoming
     # all-null rows (PERMISSIVE without the column loses the raw line
     # AND the failure signal -- telemetry would report a clean batch).
-    stream_schema = T.StructType(
-        list(feed.schema.fields)
-        + [T.StructField(CORRUPT_COL, T.StringType(), True)]
+    stream = _read_csv_stream(
+        spark, with_corrupt_col(feed.schema), src_dir,
+        feed.timestamp_format, max_files_per_trigger,
     )
-    reader = (
-        spark.readStream.schema(stream_schema)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.csv(src_dir)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import Observation
-
         started = time.time()
         # Zero-padded epoch so run-partition names sort chronologically
         # ("stream-10" < "stream-9" otherwise); see expire_runs.
@@ -284,91 +323,21 @@ def ingest_stream(spark: SparkSession, feed: FeedConfig, src_dir: str,
         # the NEW partition name) and double the batch's rows. Hadoop
         # FS API so the cleanup also works on object stores.
         if epoch_id < 10 ** 11:  # padded and unpadded names differ
-            legacy = os.path.join(
+            fs, legacy = hadoop_fs(spark, os.path.join(
                 sinks.warehouse_dir, feed.name, f"_run_id=stream-{epoch_id}"
-            )
-            jvm = spark.sparkContext._jvm
-            lp = jvm.org.apache.hadoop.fs.Path(legacy)
-            fs = lp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-            if fs.exists(lp):
-                fs.delete(lp, True)
-        read_obs = Observation(f"read_{run_id}")
-        # _source_file must be stamped BEFORE .cache(): the curated
-        # write materializes the cache first, and input_file_name()
-        # evaluated later over InMemoryRelation returns '' -- the
-        # rejects branch would lose its file lineage. Capturing it
-        # during the file scan stores the value in the cached rows
-        # (mirrors read_csv_feed's batch-path ordering).
-        observed = (
-            batch_df.withColumn("_source_file", F.input_file_name())
-            .observe(read_obs, F.count(F.lit(1)).alias("rows"))
-            .cache()
-        )
-        # clean drops _source_file too: the streaming curated/OLTP
-        # schema predates the lineage column, and appending a new
-        # column to existing sink tables (JDBC append, mixed-schema
-        # _run_id partitions) would break pre-upgrade consumers --
-        # lineage is a rejects-table concern here
-        clean = observed.filter(F.col(CORRUPT_COL).isNull()).drop(
-            CORRUPT_COL, "_source_file"
-        )
-        rejects = observed.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("raw_record"),
-            F.col("_source_file"),
-        )
-        curated, quarantined, validation = run_stages(feed, clean)
-        load_obs = Observation(f"loaded_{run_id}")
-        curated = (
-            curated.observe(load_obs, F.count(F.lit(1)).alias("rows"))
-            .withColumn("_run_id", F.lit(run_id))
-            .cache()
-        )
-        # Every write is keyed by the epoch's _run_id with dynamic
-        # partition overwrite: foreachBatch is at-least-once, so a
-        # replayed epoch (crash between the writes and the checkpoint
-        # commit) REPLACES its own partitions in all five tables
-        # instead of appending a second copy.
-        write_warehouse(curated, sinks.warehouse_dir, feed.name,
-                        partition_cols=["_run_id"], mode="overwrite")
-        write_oltp(curated.drop("_run_id"), sinks, f"{feed.name}_oltp",
-                   run_id=run_id)
-        rej_obs = Observation(f"rejects_{run_id}")
-        write_run_partition(
-            rejects.observe(rej_obs, F.count(F.lit(1)).alias("rows")),
-            os.path.join(sinks.warehouse_dir, f"{feed.name}_rejects"), run_id,
-        )
-        # Quarantined rows are persisted (not just counted): the write
-        # is the action that fires the count observation, and silently
-        # discarding rule violations would lose partner data.
-        quar_obs = Observation(f"quarantine_{run_id}")
-        write_run_partition(
-            quarantined.withColumn(
-                "_violations", F.array_join("_violations", ",")
-            ).observe(quar_obs, F.count(F.lit(1)).alias("rows")),
-            os.path.join(sinks.warehouse_dir, f"{feed.name}_quarantine"),
-            run_id,
-        )
-        emit_run_status(spark, sinks, RunStatus(
-            run_id=run_id, feed=feed.name,
-            rows_read=int(read_obs.get["rows"]),
-            rows_loaded=int(load_obs.get["rows"]),
-            rows_rejected=int(rej_obs.get["rows"]),
-            rows_quarantined=int(quar_obs.get["rows"]),
-            started_at=started, finished_at=time.time(),
-        ))
-        # release this epoch's cached plans (a long-running stream
-        # would otherwise grow one cache entry per micro-batch)
-        curated.unpersist()
-        validation.unpersist()
-        observed.unpersist()
+            ))
+            if fs.exists(legacy):
+                fs.delete(legacy, True)
+        batch = split_corrupt_records(batch_df)
+        # clean drops _source_file: the streaming curated/OLTP schema
+        # predates the lineage column, and appending a new column to
+        # existing sink tables (JDBC append, mixed-schema _run_id
+        # partitions) would break pre-upgrade consumers -- lineage is a
+        # rejects-table concern here
+        batch.clean = batch.clean.drop("_source_file")
+        _finish_run(spark, feed, sinks, run_id, batch, started)
 
-    return (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(stream, process_batch, checkpoint_dir)
 
 
 def upsert_stream(spark: SparkSession, schema: T.StructType, src_dir: str,
@@ -388,45 +357,26 @@ def upsert_stream(spark: SparkSession, schema: T.StructType, src_dir: str,
     interval (bigger, fewer merges) or partition the table by key range
     so each merge rewrites only touched partitions.
     """
-    from .sinks.warehouse import merge_upsert
-
-    reader = (
-        spark.readStream.schema(schema)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.csv(src_dir)
     path = os.path.join(warehouse_dir, table)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        hp = jvm.org.apache.hadoop.fs.Path(path)
-        if hp.getFileSystem(conf).exists(hp):
+        fs, hp = hadoop_fs(spark, path)
+        if fs.exists(hp):
             merge_upsert(spark, warehouse_dir, table, batch_df,
                          keys=keys, order_col=order_col)
         else:
             # First batch bootstraps the table (dedup within the batch
             # so a key delivered twice in one file still keeps latest).
-            from pyspark.sql.window import Window
+            dedup_exact(
+                batch_df, keys, [F.col(order_col).desc()]
+            ).write.parquet(path)
 
-            w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-            (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1).drop("__rn")
-                .write.parquet(path)
-            )
-
-    return (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        _read_csv_stream(spark, schema, src_dir,
+                         max_files_per_trigger=max_files_per_trigger),
+        process_batch, checkpoint_dir,
     )
 
 
@@ -466,15 +416,10 @@ def upsert_stream_versioned(spark: SparkSession, schema: T.StructType,
     Concurrent readers stay on their pinned snapshot throughout (no
     merge window where the table path is missing, unlike the
     plain-parquet `upsert_stream`)."""
-    reader = (
-        spark.readStream.schema(schema)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return upsert_stream_into_versioned(
-        reader.csv(src_dir), table_path, keys, order_col, checkpoint_dir
+        _read_csv_stream(spark, schema, src_dir,
+                         max_files_per_trigger=max_files_per_trigger),
+        table_path, keys, order_col, checkpoint_dir,
     )
 
 
@@ -485,8 +430,6 @@ def upsert_stream_into_versioned(stream: DataFrame, table_path: str,
     streaming DataFrame: every micro-batch keep-latest-MERGEs into the
     versioned table, stamped (checkpoint-derived app, epoch) for
     exactly-once replay dedup."""
-    from pyspark.sql.window import Window
-
     from .sinks.versioned import VersionedTable
 
     spark = stream.sparkSession
@@ -498,23 +441,15 @@ def upsert_stream_into_versioned(stream: DataFrame, table_path: str,
             return
         if vt.current_version() is None:
             # Bootstrap: first snapshot is the batch deduped keep-latest.
-            w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
             vt.publish(
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1).drop("__rn"),
+                dedup_exact(batch_df, keys, [F.col(order_col).desc()]),
                 epoch=epoch_id, app=app,
             )
         else:
             vt.merge(batch_df, keys=keys, order_col=order_col,
                      epoch=epoch_id, app=app)
 
-    return (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(stream, process_batch, checkpoint_dir)
 
 
 def replay_quarantine(spark: SparkSession, feed: FeedConfig,
@@ -532,8 +467,8 @@ def replay_quarantine(spark: SparkSession, feed: FeedConfig,
     The curated output is localCheckpoint'ed BEFORE its writes (two
     sinks, one execution). The still-failing rows are never only in
     volatile storage: they are written DURABLY to a side directory
-    first, and only then swapped into the quarantine path with the
-    same two-rename protocol `compact_table` uses -- a crash anywhere
+    first, and only then swapped into the quarantine path by
+    `sinks.warehouse.swap_into_place` -- a crash anywhere
     leaves either the old quarantine table or the new one (plus a
     recoverable ``__prereplay`` copy) on disk, never a truncated
     table backed by nothing but executor-local checkpoint blocks.
@@ -577,20 +512,10 @@ def replay_quarantine(spark: SparkSession, feed: FeedConfig,
     # read in this very run). Partitioned like every other quarantine
     # write so the table keeps ONE layout (mixing flat files with
     # _run_id= dirs would break partition discovery).
-    tmp = quar_path + "__replaying"
-    old = quar_path + "__prereplay"
-    write_run_partition(still_failing, tmp, run_id)
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(quar_path).getFileSystem(conf)
-    hp = lambda s: jvm.org.apache.hadoop.fs.Path(s)  # noqa: E731
-    fs.delete(hp(old), True)
-    if not fs.rename(hp(quar_path), hp(old)):
-        raise IOError(f"replay_quarantine: could not move {quar_path} aside")
-    if not fs.rename(hp(tmp), hp(quar_path)):
-        fs.rename(hp(old), hp(quar_path))  # roll back
-        raise IOError(f"replay_quarantine: could not move {tmp} into place")
-    fs.delete(hp(old), True)
+    write_run_partition(still_failing, quar_path + "__replaying", run_id)
+    fs, hp = hadoop_fs(spark, quar_path)
+    swap_into_place(fs, hp, hp.suffix("__replaying"),
+                    hp.suffix("__prereplay"), "replay_quarantine")
 
     validation.unpersist()
     # counts were observed on the writes above: rows_loaded on the
@@ -614,10 +539,7 @@ def _list_landing_files(spark: SparkSession, landing_dir: str,
                         suffix: str = ".csv") -> list[tuple[str, int, int]]:
     """(path, size, mtime_ms) for every data file under the landing
     prefix, via the Hadoop FS API (works on object stores too)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(landing_dir)
-    fs = root.getFileSystem(conf)
+    fs, root = hadoop_fs(spark, landing_dir)
     if not fs.exists(root):
         return []
     out = []
@@ -659,9 +581,7 @@ def ingest_new_files(spark: SparkSession, feed: FeedConfig,
     files = _list_landing_files(spark, landing_dir)
     if not files:
         return None
-    jvm = spark.sparkContext._jvm
-    lp = jvm.org.apache.hadoop.fs.Path(ledger_path)
-    fs = lp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, lp = hadoop_fs(spark, ledger_path)
     listing = local_frame(spark, files,
                           "path string, size long, mtime_ms long")
     seen: set[tuple[str, int, int]] = set()

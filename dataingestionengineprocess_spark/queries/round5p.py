@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..objectstore import hadoop_fs
 from . import register
 
 _RL_CAP = 4
@@ -129,9 +130,7 @@ def stream_rate_limit_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         if batch.isEmpty():
             return
         sess = batch.sparkSession
-        jvm = sess.sparkContext._jvm
-        sp = jvm.org.apache.hadoop.fs.Path(state_path)
-        fs = sp.getFileSystem(sess.sparkContext._jsc.hadoopConfiguration())
+        fs, sp = hadoop_fs(sess, state_path)
         ranked = batch.select(
             "user_id", "event_id",
             F.row_number().over(
@@ -165,7 +164,7 @@ def stream_rate_limit_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # swap: read-back-and-overwrite races with the ongoing read in
         # the same batch, so publish via the staged .next directory
-        nxt = jvm.org.apache.hadoop.fs.Path(state_path + ".next")
+        nxt = sp.suffix(".next")
         if fs.exists(sp):
             fs.delete(sp, True)
         fs.rename(nxt, sp)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..objectstore import hadoop_fs
 from ..streaming.analytics import (
     read_events_stream,
     run_to_table,
@@ -707,9 +708,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bought a whole cluster round-trip to save nothing.
         batch = batch_df.localCheckpoint(eager=False)
         sess = batch_df.sparkSession
-        jvm = sess.sparkContext._jvm
-        sp = jvm.org.apache.hadoop.fs.Path(seen_path)
-        fs = sp.getFileSystem(sess.sparkContext._jsc.hadoopConfiguration())
+        fs, sp = hadoop_fs(sess, seen_path)
         if fs.exists(sp):
             corpus = sess.read.parquet(seen_path)
             decisions = incremental_jaccard_admission(

@@ -47,7 +47,9 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..objectstore import hadoop_fs
 from ..session import local_frame
+from .warehouse import keep_latest_merge
 
 _VDIR = "_v"
 _WIDTH = 10  # zero-padded => lexicographic order == numeric order
@@ -90,11 +92,8 @@ class VersionedTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        jvm = spark.sparkContext._jvm
-        self._jvm = jvm
-        self._hp = jvm.org.apache.hadoop.fs.Path
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        self._fs = self._hp(path).getFileSystem(conf)
+        self._fs, _ = hadoop_fs(spark, path)
+        self._hp = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
 
     # -- fs helpers ---------------------------------------------------------
 
@@ -369,45 +368,14 @@ class VersionedTable:
             if last is not None and epoch <= last:
                 return {"skipped": True, "epoch": epoch,
                         "last_epoch": last}
-        from pyspark.sql import Observation
-        from pyspark.sql.window import Window
-
         cur = self.current_version()
         if cur is None:
             raise FileNotFoundError(f"nothing to merge into at {self.path}")
-        existing = self.read(cur)
-
-        merged = (
-            existing.withColumn("__src", F.lit(0))
-            .unionByName(updates.withColumn("__src", F.lit(1)))
-        )
-        in_obs = Observation("vmerge_inputs")
-        merged = merged.observe(
-            in_obs,
-            F.sum(F.when(F.col("__src") == 0, 1).otherwise(0))
-            .alias("rows_before"),
-            F.sum(F.when(F.col("__src") == 1, 1).otherwise(0))
-            .alias("rows_updated"),
-        )
-        w = Window.partitionBy(*keys).orderBy(
-            F.col(order_col).desc(), F.col("__src").desc()
-        )
-        out_obs = Observation("vmerge_output")
-        survivors = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__src")
-            .observe(out_obs, F.count(F.lit(1)).alias("rows_after"))
+        survivors, stats = keep_latest_merge(
+            self.read(cur), updates, keys, order_col
         )
         new = self.publish(survivors, epoch=epoch, app=app)
-        inputs = in_obs.get
-        return {
-            "from_version": cur,
-            "to_version": new,
-            "rows_before": int(inputs["rows_before"] or 0),
-            "rows_updated": int(inputs["rows_updated"] or 0),
-            "rows_after": int(out_obs.get["rows_after"]),
-        }
+        return {"from_version": cur, "to_version": new, **stats()}
 
     def delete(self, predicate, keys_df: DataFrame | None = None,
                keys: list[str] | None = None) -> dict:

@@ -30,6 +30,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..objectstore import hadoop_fs
+from ..operators.dedup import dedup_exact
 from ..session import local_frame
 
 
@@ -189,10 +191,7 @@ def _dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(total bytes, data file count) for a table directory, via the
     Hadoop FileSystem API (works for any supported scheme, not just
     local paths)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    fs, p = hadoop_fs(spark, path)
     total, files = 0, 0
     it = fs.listFiles(p, True)
     while it.hasNext():
@@ -203,6 +202,26 @@ def _dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
         total += st.getLen()
         files += 1
     return total, files
+
+
+def swap_into_place(fs, table, staged, aside, op: str) -> None:
+    """Replace the directory ``table`` by the fully written ``staged``
+    with two renames: ``table`` moves to ``aside`` (a stale ``aside``
+    from an earlier crash is deleted first), ``staged`` moves in, and
+    ``aside`` is deleted. If the second rename fails, ``table`` moves
+    back from ``aside`` before the IOError. ``fs`` and the paths come
+    from `objectstore.hadoop_fs`; ``op`` prefixes the error messages.
+
+    NOT atomic: between the renames ``table`` does not exist, so the
+    callers assume one writer and no concurrent readers. A crash
+    between them leaves the data intact under ``aside``."""
+    fs.delete(aside, True)
+    if not fs.rename(table, aside):
+        raise IOError(f"{op}: could not move {table} aside")
+    if not fs.rename(staged, table):
+        fs.rename(aside, table)  # roll back
+        raise IOError(f"{op}: could not move {staged} into place")
+    fs.delete(aside, True)
 
 
 def compact_table(spark: SparkSession, warehouse_dir: str, table: str,
@@ -237,23 +256,12 @@ def compact_table(spark: SparkSession, warehouse_dir: str, table: str,
     total, before = _dir_stats(spark, path)
     n_files = max(1, math.ceil(total / target_file_bytes))
 
-    tmp = path + "__compacting"
-    old = path + "__precompact"
     spark.read.parquet(path).repartition(n_files).write.mode(
         "overwrite"
-    ).parquet(tmp)
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    hp = lambda s: jvm.org.apache.hadoop.fs.Path(s)  # noqa: E731
-    fs.delete(hp(old), True)
-    if not fs.rename(hp(path), hp(old)):
-        raise IOError(f"compact_table: could not move {path} aside")
-    if not fs.rename(hp(tmp), hp(path)):
-        fs.rename(hp(old), hp(path))  # roll back
-        raise IOError(f"compact_table: could not move {tmp} into place")
-    fs.delete(hp(old), True)
+    ).parquet(path + "__compacting")
+    fs, hp = hadoop_fs(spark, path)
+    swap_into_place(fs, hp, hp.suffix("__compacting"),
+                    hp.suffix("__precompact"), "compact_table")
 
     _, after = _dir_stats(spark, path)
     return {"files_before": before, "files_after": after, "bytes": total}
@@ -283,56 +291,58 @@ def merge_upsert(spark: SparkSession, warehouse_dir: str, table: str,
     along on the single rewrite action via ``observe()`` (A8 policy:
     metrics never cost an extra scan).
     """
-    from pyspark.sql import Observation
-    from pyspark.sql.window import Window
-
     path = os.path.join(warehouse_dir, table)
-    existing = spark.read.parquet(path)
+    survivors, stats = keep_latest_merge(
+        spark.read.parquet(path), updates, keys, order_col
+    )
+    survivors.write.mode("overwrite").parquet(path + "__merging")
+    fs, hp = hadoop_fs(spark, path)
+    swap_into_place(fs, hp, hp.suffix("__merging"), hp.suffix("__premerge"),
+                    "merge_upsert")
+    return stats()
+
+
+def keep_latest_merge(existing: DataFrame, updates: DataFrame,
+                      keys: list[str], order_col: str):
+    """The keep-latest MERGE core of `merge_upsert` and
+    `sinks.versioned.VersionedTable.merge`: ``existing`` union
+    ``updates``, one survivor per key with the greatest ``order_col``,
+    ties broken toward the update. Returns ``(survivors, stats)``: the
+    caller writes ``survivors`` once, then ``stats()`` gives
+    {rows_before, rows_updated, rows_after}, observed on that write
+    (A8 policy: metrics never cost an extra scan)."""
+    from pyspark.sql import Observation
 
     # __src: updates (1) beat existing (0) at equal order_col values.
+    in_obs = Observation("merge_inputs")
     merged = (
         existing.withColumn("__src", F.lit(0))
         .unionByName(updates.withColumn("__src", F.lit(1)))
-    )
-    in_obs = Observation("merge_inputs")
-    merged = merged.observe(
-        in_obs,
-        F.sum(F.when(F.col("__src") == 0, 1).otherwise(0)).alias("rows_before"),
-        F.sum(F.when(F.col("__src") == 1, 1).otherwise(0)).alias("rows_updated"),
-    )
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(order_col).desc(), F.col("__src").desc()
+        .observe(
+            in_obs,
+            F.sum(F.when(F.col("__src") == 0, 1).otherwise(0))
+            .alias("rows_before"),
+            F.sum(F.when(F.col("__src") == 1, 1).otherwise(0))
+            .alias("rows_updated"),
+        )
     )
     out_obs = Observation("merge_output")
     survivors = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
+        dedup_exact(merged, keys,
+                    [F.col(order_col).desc(), F.col("__src").desc()])
+        .drop("__src")
         .observe(out_obs, F.count(F.lit(1)).alias("rows_after"))
     )
 
-    tmp = path + "__merging"
-    old = path + "__premerge"
-    survivors.write.mode("overwrite").parquet(tmp)
+    def stats() -> dict:
+        inputs = in_obs.get
+        return {
+            "rows_before": int(inputs["rows_before"] or 0),
+            "rows_updated": int(inputs["rows_updated"] or 0),
+            "rows_after": int(out_obs.get["rows_after"]),
+        }
 
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    hp = lambda s: jvm.org.apache.hadoop.fs.Path(s)  # noqa: E731
-    fs.delete(hp(old), True)
-    if not fs.rename(hp(path), hp(old)):
-        raise IOError(f"merge_upsert: could not move {path} aside")
-    if not fs.rename(hp(tmp), hp(path)):
-        fs.rename(hp(old), hp(path))
-        raise IOError(f"merge_upsert: could not move {tmp} into place")
-    fs.delete(hp(old), True)
-
-    inputs = in_obs.get  # already complete: the write above ran the plan
-    return {
-        "rows_before": int(inputs["rows_before"] or 0),
-        "rows_updated": int(inputs["rows_updated"] or 0),
-        "rows_after": int(out_obs.get["rows_after"]),
-    }
+    return survivors, stats
 
 
 def expire_runs(spark: SparkSession, warehouse_dir: str, table: str,
@@ -363,28 +373,20 @@ def expire_runs(spark: SparkSession, warehouse_dir: str, table: str,
     """
     if order not in ("name", "mtime"):
         raise ValueError(f"order must be 'name' or 'mtime', got {order!r}")
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(os.path.join(warehouse_dir, table))
-    fs = root.getFileSystem(conf)
+    fs, root = hadoop_fs(spark, os.path.join(warehouse_dir, table))
     prefix = f"{partition_col}="
-    keyed = (
-        (
-            (st.getPath().getName(),)
-            if order == "name"
-            else (st.getModificationTime(), st.getPath().getName())
-        )
+    parts = {
+        st.getPath().getName(): st
         for st in fs.listStatus(root)
         if st.isDirectory() and st.getPath().getName().startswith(prefix)
-    )
-    parts = [key[-1] for key in sorted(keyed)]
-    to_drop = parts[:-keep_last] if keep_last > 0 else parts
+    }
+    names = sorted(parts, key=lambda n: (
+        n if order == "name" else (parts[n].getModificationTime(), n)
+    ))
+    to_drop = names[:-keep_last] if keep_last > 0 else names
     for name in to_drop:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(os.path.join(warehouse_dir, table, name)),
-            True,
-        )
-    return {"kept": len(parts) - len(to_drop), "dropped": len(to_drop)}
+        fs.delete(parts[name].getPath(), True)
+    return {"kept": len(names) - len(to_drop), "dropped": len(to_drop)}
 
 
 def zorder_write(df: DataFrame, warehouse_dir: str, table: str,

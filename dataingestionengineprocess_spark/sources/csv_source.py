@@ -42,6 +42,51 @@ class CsvBatch:
             self.source.unpersist()
 
 
+def with_corrupt_col(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the nullable string CORRUPT_COL a PERMISSIVE
+    parse fills with the raw text of each row that fails it."""
+    return T.StructType(
+        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
+    )
+
+
+def csv_reader(reader, schema: T.StructType, header: bool = True,
+               mode: str = "PERMISSIVE",
+               timestamp_format: str | None = None):
+    """``reader`` (``spark.read`` or ``spark.readStream``) set up for a
+    feed's CSV: the explicit schema, ``mode``'s malformed-row policy
+    with parse failures kept in CORRUPT_COL when the schema declares
+    it (the option is inert otherwise), and the feed's timestamp
+    format. Batch and streaming ingest parse through this one chain,
+    so a feed option cannot reach one of them only."""
+    reader = (
+        reader.schema(schema)
+        .option("header", header)
+        .option("mode", mode)
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+    )
+    if timestamp_format:
+        reader = reader.option("timestampFormat", timestamp_format)
+    return reader
+
+
+def split_corrupt_records(parsed: DataFrame,
+                          source_file_col: str = "_source_file") -> CsvBatch:
+    """Split a PERMISSIVE parse (its schema ends in CORRUPT_COL) into
+    clean rows and rejects, each carrying the originating file.
+
+    The file name is stamped BEFORE the cache: ``input_file_name()``
+    evaluated over the cached rows returns ''. The cache itself is the
+    PERMISSIVE quirk -- corrupt-record access needs materialized parse
+    results -- and keeps the split to one scan."""
+    df = parsed.withColumn(source_file_col, F.input_file_name()).cache()
+    clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+    rejects = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
+        F.col(CORRUPT_COL).alias("raw_record"), F.col(source_file_col)
+    )
+    return CsvBatch(clean=clean, rejects=rejects, source=df)
+
+
 def read_csv_feed(spark: SparkSession, path: str | list[str],
                   schema: T.StructType,
                   header: bool = True, timestamp_format: str | None = None,
@@ -66,39 +111,25 @@ def read_csv_feed(spark: SparkSession, path: str | list[str],
         raise ValueError(f"unknown CSV mode {mode!r}")
     # A re-dropped file reuses its path: invalidate any cached plan /
     # file listing for these paths, or the new read silently serves the
-    # PREVIOUS drop's cached rows (the .cache() below registers by
-    # path-keyed plan in the session CacheManager).
+    # PREVIOUS drop's cached rows (the PERMISSIVE split's cache
+    # registers by path-keyed plan in the session CacheManager).
     for p in (path if isinstance(path, list) else [path]):
         spark.catalog.refreshByPath(p)
-    full_schema = schema
-    if mode == "PERMISSIVE":
-        full_schema = T.StructType(
-            list(schema.fields)
-            + [T.StructField(CORRUPT_COL, T.StringType(), True)]
-        )
-    reader = (
-        spark.read.schema(full_schema)
-        .option("header", header)
-        .option("mode", mode)
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+    permissive = mode == "PERMISSIVE"
+    df = csv_reader(
+        spark.read, with_corrupt_col(schema) if permissive else schema,
+        header, mode, timestamp_format,
+    ).csv(path)
+    if permissive:
+        return split_corrupt_records(df, source_file_col)
+    empty_rejects = local_frame(spark, [], T.StructType([
+        T.StructField("raw_record", T.StringType()),
+        T.StructField(source_file_col, T.StringType()),
+    ]))
+    return CsvBatch(
+        clean=df.withColumn(source_file_col, F.input_file_name()),
+        rejects=empty_rejects,
     )
-    if timestamp_format:
-        reader = reader.option("timestampFormat", timestamp_format)
-    df = reader.csv(path).withColumn(source_file_col, F.input_file_name())
-    if mode != "PERMISSIVE":
-        empty_rejects = local_frame(spark, [], T.StructType([
-            T.StructField("raw_record", T.StringType()),
-            T.StructField(source_file_col, T.StringType()),
-        ]))
-        return CsvBatch(clean=df, rejects=empty_rejects)
-    # PERMISSIVE quirk: corrupt-record access requires materialized
-    # parse results; cache keeps the split single-scan semantics.
-    df = df.cache()
-    clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    rejects = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-        F.col(CORRUPT_COL).alias("raw_record"), F.col(source_file_col)
-    )
-    return CsvBatch(clean=clean, rejects=rejects, source=df)
 
 
 def read_csv_feed_by_name(spark: SparkSession, path: str,

@@ -12,10 +12,14 @@ deliveries.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .csv_source import CORRUPT_COL, CsvBatch
+from .csv_source import (
+    CORRUPT_COL,
+    CsvBatch,
+    split_corrupt_records,
+    with_corrupt_col,
+)
 
 
 def read_json_feed(spark: SparkSession, path: str, schema: T.StructType,
@@ -25,19 +29,10 @@ def read_json_feed(spark: SparkSession, path: str, schema: T.StructType,
     # a re-dropped file reuses its path: invalidate any cached plan
     # for it or the read below serves the PREVIOUS drop's cached rows
     spark.catalog.refreshByPath(path)
-    full_schema = T.StructType(
-        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
-    )
-    df = (
-        spark.read.schema(full_schema)
+    parsed = (
+        spark.read.schema(with_corrupt_col(schema))
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
-        .withColumn(source_file_col, F.input_file_name())
-        .cache()
     )
-    clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    rejects = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-        F.col(CORRUPT_COL).alias("raw_record"), F.col(source_file_col)
-    )
-    return CsvBatch(clean=clean, rejects=rejects, source=df)
+    return split_corrupt_records(parsed, source_file_col)

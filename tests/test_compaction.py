@@ -5,11 +5,14 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from dataingestionengineprocess_spark.objectstore import hadoop_fs
 from dataingestionengineprocess_spark.sinks.warehouse import (
     _dir_stats,
     compact_table,
+    swap_into_place,
 )
 
 
@@ -30,6 +33,34 @@ def test_compact_reduces_file_count_and_preserves_rows(spark, tmp_path):
     assert got.agg(F.sum("v")).first()[0] == df.agg(F.sum("v")).first()[0]
     # No leftover side dirs from the swap.
     assert sorted(p for p in os.listdir(wh)) == ["t"]
+
+
+def test_swap_rolls_back_when_the_new_copy_cannot_move_in(spark, tmp_path):
+    """`swap_into_place` over a filesystem whose second rename fails:
+    IOError, and the original table is back at its path."""
+    table, staged = tmp_path / "t", tmp_path / "t__new"
+    for d, text in ((table, "old"), (staged, "new")):
+        d.mkdir()
+        (d / "part-0").write_text(text)
+    fs, hp = hadoop_fs(spark, str(table))
+
+    class SecondRenameFails:
+        renames = 0
+
+        def delete(self, path, recursive):
+            return fs.delete(path, recursive)
+
+        def rename(self, src, dst):
+            self.renames += 1
+            return self.renames != 2 and fs.rename(src, dst)
+
+    with pytest.raises(IOError, match="^compact_table: could not move .* "
+                                      "into place"):
+        swap_into_place(SecondRenameFails(), hp, hp.suffix("__new"),
+                        hp.suffix("__old"), "compact_table")
+    assert (table / "part-0").read_text() == "old"
+    assert (staged / "part-0").read_text() == "new"
+    assert sorted(os.listdir(tmp_path)) == ["t", "t__new"]
 
 
 def test_compact_respects_target_size(spark, tmp_path):

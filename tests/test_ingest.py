@@ -581,3 +581,97 @@ def test_control_plane_tables_read_across_old_and_new_writers(spark, landing,
     assert sorted((os.path.basename(r.path), r.run_id)
                   for r in ledger.collect()) == [
         ("a.csv", "run-old"), ("b.csv", status.run_id)]
+
+
+HEADER = GOOD_CSV.splitlines(keepends=True)[0]
+TS_FORMAT_CSV = HEADER + (
+    "1,alice,10.5,OPEN,01/02/2024 10:00\n"
+    "2,bob,20.0,CLOSED,02/02/2024 11:30\n"
+)
+
+
+def _ingest(spark, entry, feed, landing, sinks, checkpoint_dir):
+    """Ingest every file under ``landing`` as ONE run through ``entry``
+    ("batch" or "stream"); return the run's (read, loaded, rejected,
+    quarantined) counts."""
+    if entry == "batch":
+        s = ingest_batch(spark, feed, sorted(map(str, landing.iterdir())),
+                         sinks)
+        return (s.rows_read, s.rows_loaded, s.rows_rejected,
+                s.rows_quarantined)
+    ingest_stream(spark, feed, str(landing), sinks,
+                  checkpoint_dir).awaitTermination(120)
+    [r] = read_status(spark, sinks.warehouse_dir).collect()
+    return (r.rows_read, r.rows_loaded, r.rows_rejected, r.rows_quarantined)
+
+
+@pytest.mark.parametrize("drops, ts_format, counts", [
+    ({"a.csv": GOOD_CSV, "b.csv": BAD_ROWS_CSV}, None, (8, 3, 2, 2)),
+    # a timestamp the reader cannot parse would reject its row
+    ({"a.csv": TS_FORMAT_CSV}, "dd/MM/yyyy HH:mm", (2, 2, 0, 0)),
+], ids=["defects", "timestamp-format"])
+def test_batch_and_stream_runs_agree(spark, landing, tmp_path, drops,
+                                     ts_format, counts):
+    """The same drops give the same counts and curated rows through
+    `ingest_batch` and `ingest_stream`, the feed's timestamp format
+    included: both paths parse with one reader chain and finish with
+    one run tail."""
+    feed = _feed(spark)
+    feed.timestamp_format = ts_format
+    for name, text in drops.items():
+        (landing / name).write_text(text)
+    out = {}
+    for entry in ("batch", "stream"):
+        sinks = SinkConfig(warehouse_dir=str(tmp_path / entry / "wh"),
+                           oltp_dir=str(tmp_path / entry / "oltp"))
+        got = _ingest(spark, entry, feed, landing, sinks,
+                      str(tmp_path / entry / "ckpt"))
+        curated = spark.read.parquet(
+            os.path.join(sinks.warehouse_dir, feed.name)
+        ).drop("_run_id", "_source_file")
+        out[entry] = got, sorted(
+            tuple(r) for r in curated.select(sorted(curated.columns)).collect()
+        )
+    assert out["batch"] == out["stream"]
+    assert out["batch"][0] == counts
+
+
+@pytest.mark.parametrize("entry", ["batch", "stream"])
+@pytest.mark.parametrize("text, counts", [
+    (HEADER, (0, 0, 0, 0)),
+    (HEADER + "x,alice,1.0,OPEN,2024-01-01 10:00:00\n"
+     "7,bob,zz,OPEN,2024-01-01 10:00:00\n", (2, 0, 2, 0)),
+    (HEADER + "7,alice,-1.0,OPEN,2024-01-01 10:00:00\n"
+     "8,bob,5.0,BOGUS,2024-01-01 10:00:00\n", (2, 0, 0, 2)),
+    (HEADER + "x,alice,1.0,OPEN,2024-01-01 10:00:00\n"
+     "8,bob,5.0,BOGUS,2024-01-01 10:00:00\n", (2, 0, 1, 1)),
+], ids=["header-only", "all-malformed", "all-quarantined",
+        "malformed-and-quarantined"])
+def test_runs_with_an_empty_curated_result_report_their_counts(
+        spark, landing, sinks, tmp_path, entry, text, counts):
+    """A drop with no surviving row completes with true counts under
+    the engine's default confs: AQE prunes a provably empty lineage,
+    observations included, so the run tail observes over caches. The
+    run releases every cache it made."""
+    spark.catalog.clearCache()
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    (landing / "drop.csv").write_text(text)
+    assert _ingest(spark, entry, _feed(spark), landing, sinks,
+                   str(tmp_path / "ckpt")) == counts
+    assert jcm.isEmpty()
+
+
+@pytest.mark.parametrize("entry", ["batch", "stream"])
+def test_failed_run_releases_its_caches(spark, landing, tmp_path, entry):
+    """A run that fails after the warehouse write landed (no OLTP
+    target configured: `write_oltp` raises) leaves the session cache
+    manager as it found it."""
+    spark.catalog.clearCache()
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    (landing / "drop1.csv").write_text(GOOD_CSV)
+    sinks = SinkConfig(warehouse_dir=str(tmp_path / "wh"))
+    with pytest.raises(Exception, match="jdbc_url or oltp_dir"):
+        _ingest(spark, entry, _feed(spark), landing, sinks,
+                str(tmp_path / "ckpt"))
+    assert os.path.exists(os.path.join(sinks.warehouse_dir, "orders_feed"))
+    assert jcm.isEmpty()

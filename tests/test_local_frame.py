@@ -2,8 +2,9 @@
 
 Round-trip properties the control-plane writers (`_runs`, the file
 ledger, `_stream_progress`) rely on -- the result schema IS the DDL's
-StructType and the collected rows ARE the input -- plus a source
-check that keeps list-built frames off the per-run paths.
+StructType and the collected rows ARE the input -- plus source
+checks that keep list-built frames off the per-run paths and give
+Hadoop FileSystem handles and keep-latest windows one home each.
 """
 
 from __future__ import annotations
@@ -64,22 +65,50 @@ def test_rejects_rows_of_the_wrong_width(spark):
         local_frame(spark, [("a", 1), ("b",)], "s string, l long")
 
 
+PKG = (pathlib.Path(__file__).resolve().parent.parent
+       / "dataingestionengineprocess_spark")
+
+
+def _lines_with(needle: str, files) -> list[str]:
+    """``file:line`` of every line in ``files`` that contains ``needle``."""
+    return [
+        f"{f.relative_to(PKG)}:{n}"
+        for f in sorted(files)
+        for n, line in enumerate(f.read_text().splitlines(), 1)
+        if needle in line
+    ]
+
+
 def test_no_list_built_frames_in_the_package():
     """The package builds driver-known frames through `local_frame`
     only: a `createDataFrame(` call anywhere but `session.py` (where
     `local_frame` itself lives) would put a Python-worker job back on
     the path that builds it -- an ingest run, an operator's centroid
     or offset table, a certificate's result rows."""
-    pkg = (pathlib.Path(__file__).resolve().parent.parent
-           / "dataingestionengineprocess_spark")
-    offenders = [
-        f"{f.relative_to(pkg)}:{n}"
-        for f in sorted(pkg.rglob("*.py"))
-        if f != pkg / "session.py"
-        for n, line in enumerate(f.read_text().splitlines(), 1)
-        if "createDataFrame(" in line
-    ]
+    offenders = _lines_with(
+        "createDataFrame(",
+        (f for f in PKG.rglob("*.py") if f != PKG / "session.py"),
+    )
     assert not offenders, offenders
+
+
+def test_filesystem_handles_and_keep_latest_windows_have_one_home():
+    """Every Hadoop FileSystem handle comes from `objectstore.hadoop_fs`
+    (one line in the package calls ``getFileSystem(``), and the ingest
+    core and sinks keep latest rows through `operators.dedup.dedup_exact`
+    and the shared merge core rather than hand-written windows."""
+    import inspect
+
+    from dataingestionengineprocess_spark.objectstore import hadoop_fs
+
+    calls = _lines_with("getFileSystem(", PKG.rglob("*.py"))
+    assert len(calls) == 1 and calls[0].startswith("objectstore.py:"), calls
+    assert "getFileSystem(" in inspect.getsource(hadoop_fs)
+    windows = _lines_with(
+        "row_number().over",
+        [PKG / "pipeline.py", *(PKG / "sinks").rglob("*.py")],
+    )
+    assert not windows, windows
 
 
 #: Per-row aggregates over a whole vector: evaluated inside a
