@@ -1,11 +1,11 @@
 """Quantization-based embedding operators: semantic dedup (SemDeDup)
 and product-quantization ANN (ADC + exact re-rank).
 
-Both build on the same primitive the IVF path already proved out
-(`similarity.kmeans_centroids`): a coarse k-means fit whose centroids
-ride inside the plan as literals, so cluster assignment is a MAP-ONLY
-codegen expression -- the corpus is never shuffled just to learn its
-partition.
+Both build on the same primitive the IVF path already proved out: a
+quantizer fit on a bounded sample (`similarity._fit_centroids` for
+SemDeDup, `_fit_books` here for PQ) whose centroids ride inside the
+plan as literals, so assignment is a MAP-ONLY codegen expression --
+the corpus is never shuffled just to learn its partition.
 
 Published shapes, re-expressed Spark-first:
 
@@ -41,14 +41,15 @@ from ..functions.vectors import as_double, cosine, dot
 from .skew import spread_input
 from .similarity import (
     _centroid_score_structs,
-    kmeans_centroids,
-    kmeans_centroids_local,
+    _fit_centroids,
+    portable_init_sample,
+    sample_vectors_pandas,
     vector_dim,
 )
 from ..session import local_frame
 
 __all__ = [
-    "semantic_dedup", "semantic_dedup_multi", "pq_topk", "pq_codebooks",
+    "semantic_dedup", "semantic_dedup_multi", "pq_topk",
     "pq_codebooks_local", "build_pq_index", "pq_search_index",
 ]
 
@@ -132,9 +133,7 @@ def _greedy_scan(pdf, mat, threshold: float):
 
 def semantic_dedup(corpus: DataFrame, threshold: float = 0.9,
                    n_clusters: int = 8, id_col: str = "vec_id",
-                   vec_col: str = "embedding", kmeans_iter: int = 3,
-                   sample_mod: int | None = None,
-                   train: str = "local",
+                   vec_col: str = "embedding", train: str = "local",
                    max_cluster: int | None = 200_000) -> DataFrame:
     """SemDeDup-style near-duplicate pruning over an embedding column.
 
@@ -150,8 +149,10 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.9,
     broken by id so the output is deterministic.
 
     Scale design:
-    - The quantizer is a shared k-means fit (literal
-      centroids, map-only assignment -- no shuffle to cluster).
+    - The quantizer is the ``train`` fit `similarity._fit_centroids`
+      resolves (``"local"`` k-means or the ``"portable"``
+      oracle-replayable init), with literal centroids and map-only
+      assignment -- no shuffle to cluster.
       ``n_clusters`` should grow with the corpus so the expected
       cluster size stays bounded (the paper uses ~n/10k clusters);
       the pairwise term is then k x (n/k)^2 = n^2/k, linear in n for
@@ -174,8 +175,7 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.9,
       change.
     """
     assigned, group_keys = _semantic_assigned(
-        corpus, n_clusters, id_col, vec_col, kmeans_iter, sample_mod,
-        train, max_cluster)
+        corpus, n_clusters, id_col, vec_col, train, max_cluster)
 
     def prune(pdf):
         return _greedy_prune(pdf, threshold)
@@ -187,9 +187,7 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.9,
 
 def semantic_dedup_multi(corpus: DataFrame, thresholds,
                          n_clusters: int = 8, id_col: str = "vec_id",
-                         vec_col: str = "embedding", kmeans_iter: int = 3,
-                         sample_mod: int | None = None,
-                         train: str = "local",
+                         vec_col: str = "embedding", train: str = "local",
                          max_cluster: int | None = 200_000) -> DataFrame:
     """`semantic_dedup` for SEVERAL thresholds in ONE pass: one
     quantizer fit, one corpus scan + assignment, one groupBy +
@@ -206,8 +204,7 @@ def semantic_dedup_multi(corpus: DataFrame, thresholds,
     if not ts or len(set(ts)) != len(ts):
         raise ValueError("thresholds must be non-empty and distinct")
     assigned, group_keys = _semantic_assigned(
-        corpus, n_clusters, id_col, vec_col, kmeans_iter, sample_mod,
-        train, max_cluster)
+        corpus, n_clusters, id_col, vec_col, train, max_cluster)
 
     import pandas as pd
 
@@ -229,52 +226,14 @@ def semantic_dedup_multi(corpus: DataFrame, thresholds,
 
 
 def _semantic_assigned(corpus: DataFrame, n_clusters: int, id_col: str,
-                       vec_col: str, kmeans_iter: int,
-                       sample_mod: int | None, train: str,
+                       vec_col: str, train: str,
                        max_cluster: int | None):
     """Shared front half of `semantic_dedup` / `semantic_dedup_multi`:
     quantizer fit, map-only cluster assignment with the
     farthest-first ordering key, and the max_cluster salt-split.
     Returns ``(assigned, group_keys)``."""
     corpus = spread_input(corpus)
-
-    if train == "local":
-        if sample_mod is not None:
-            raise ValueError(
-                "sample_mod tunes the DISTRIBUTED trainer; the local "
-                "path is already sample-bounded (train_rows). Pass "
-                "train='distributed' to use it."
-            )
-        # kmeans_iter likewise tunes the distributed trainer (its
-        # per-iteration cost is a Spark job); the local fit iterates
-        # to its own cheap default.
-        cent = kmeans_centroids_local(
-            corpus, n_clusters, id_col=id_col, vec_col=vec_col,
-        )
-        cvecs = [list(r["carr"]) for r in
-                 sorted(cent.collect(), key=lambda r: r["clabel"])]
-    elif train == "portable":
-        # Engine-portable centroids: the n_clusters corpus vectors in
-        # (md5(id), id) order -- the ONE shared init rule
-        # (similarity.portable_init_sample), so a DuckDB oracle can
-        # replay the cluster assignment bit-exactly (same rule the
-        # portable IVF/PQ twins already hash-check).
-        from .similarity import portable_init_sample
-
-        cvecs = portable_init_sample(corpus, n_clusters, id_col, vec_col)
-    elif train == "distributed":
-        cent = kmeans_centroids(
-            corpus, n_clusters, id_col=id_col, vec_col=vec_col,
-            max_iter=kmeans_iter, sample_mod=sample_mod,
-        )
-        cvecs = [list(r["carr"]) for r in
-                 sorted(cent.collect(), key=lambda r: r["clabel"])]
-    else:
-        # same guard as build_pq_index: a typo'd mode must raise, not
-        # silently fall through to an engine-specific trainer under an
-        # oracle-backed caller
-        raise ValueError(f"unknown train mode {train!r}")
-
+    cvecs = _fit_centroids(corpus, n_clusters, id_col, vec_col, train)
     best = F.array_max(_centroid_score_structs(as_double(vec_col), cvecs))
     assigned = corpus.select(
         F.col(id_col).cast("long").alias("vec_id"),
@@ -356,27 +315,6 @@ def _pq_codes(v: Column, cells: Column, m: int, dsub: int) -> Column:
     return F.transform(F.sequence(F.lit(0), F.lit(m - 1)), code_for)
 
 
-def _portable_books(corpus: DataFrame, m: int, ks: int,
-                    id_col: str, vec_col: str) -> list[list[list[float]]]:
-    """Init-only engine-portable codebooks: cell (j, c) = subspace-j
-    segment of the c-th vector by (md5(id), id) order (see
-    `similarity.portable_init_sample` -- ONE sampling rule for every
-    portable quantizer). Shared by `pq_topk(train='portable')` and
-    `build_pq_index(train='portable')` so the direct and persisted
-    search paths can never train differently."""
-    from .similarity import portable_init_sample
-
-    sample = portable_init_sample(corpus, ks, id_col, vec_col)
-    dim = len(sample[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    return [
-        [v[j * dsub:(j + 1) * dsub] for v in sample]
-        for j in range(m)
-    ]
-
-
 def _check_caller_books(books: list[list[list[float]]], m: int, ks: int,
                         corpus: DataFrame, vec_col: str) -> None:
     """Reject caller-trained codebooks that are not m x ks cells of
@@ -398,29 +336,35 @@ def _check_caller_books(books: list[list[list[float]]], m: int, ks: int,
         )
 
 
+#: Bounded-sample codebook fit (`pq_codebooks_local`): Lloyd's rounds
+#: per subspace, the sample's hash seed, and the sample size.
+_PQ_ITERS = 10
+_PQ_SEED = 7
+_PQ_TRAIN_ROWS = 65536
+
+
 def pq_codebooks_local(corpus: DataFrame, m: int = 8, ks: int = 16,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       max_iter: int = 10, seed: int = 7,
-                       train_rows: int = 65536) -> list[list[list[float]]]:
-    """Train the m per-subspace codebooks on a bounded driver-side
-    sample (vectorized numpy Lloyd's). Returns the same
-    ``codebooks[j][c]`` shape as `pq_codebooks`.
+                       id_col: str = "vec_id",
+                       vec_col: str = "embedding") -> list[list[list[float]]]:
+    """Train the m per-subspace codebooks (ks centroids each) with L2
+    Lloyd's iterations on a bounded driver-side sample (vectorized
+    numpy). Returns ``codebooks[j][c] -> list[float]`` of length
+    dim/m.
 
     This is the production shape for quantizer TRAINING, as distinct
     from search: codebooks have m x ks x dsub parameters (a few KB) and
     converge from ~10^5 vectors no matter how large the corpus is, so
     training is a bounded-sample problem -- one deterministic
-    hash-ordered ``limit(train_rows)`` collect, then millisecond numpy
-    iterations, instead of a Spark job per Lloyd's step. Everything
-    corpus-sized (encoding, ADC scoring, re-rank) stays distributed in
-    `pq_topk`. Use `pq_codebooks` when even the training sample must
-    not be collected.
+    hash-ordered sample collect (the smallest xxhash64(id, seed)), then
+    millisecond numpy iterations, instead of a Spark job per Lloyd's
+    step. Init is the first ks sample rows; empty cells keep their
+    previous centroid. Everything corpus-sized (encoding, ADC scoring,
+    re-rank) stays distributed in `pq_topk`.
     """
     import numpy as np
 
-    from .similarity import sample_vectors_pandas
-
-    pdf = sample_vectors_pandas(corpus, id_col, vec_col, train_rows, seed)
+    pdf = sample_vectors_pandas(corpus, id_col, vec_col,
+                                _PQ_TRAIN_ROWS, _PQ_SEED)
     if len(pdf) < ks:
         raise ValueError(f"corpus has fewer than ks={ks} vectors")
     mat = np.array(pdf["v"].tolist())    # (n, dim)
@@ -433,8 +377,8 @@ def pq_codebooks_local(corpus: DataFrame, m: int = 8, ks: int = 16,
     books: list[list[list[float]]] = []
     for j in range(m):
         x = sub[:, j, :]                      # (n, dsub)
-        cents = x[:ks].copy()                 # same init rule: first ks
-        for _ in range(max_iter):
+        cents = x[:ks].copy()
+        for _ in range(_PQ_ITERS):
             d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
             for c in range(ks):
@@ -445,93 +389,43 @@ def pq_codebooks_local(corpus: DataFrame, m: int = 8, ks: int = 16,
     return books
 
 
-def pq_codebooks(corpus: DataFrame, m: int = 8, ks: int = 16,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 max_iter: int = 3, seed: int = 7,
-                 sample_mod: int | None = None) -> list[list[list[float]]]:
-    """Train the m per-subspace codebooks (ks centroids each) with L2
-    Lloyd's iterations. Returns ``codebooks[j][c] -> list[float]`` of
-    length dim/m.
+def _fit_books(corpus: DataFrame, m: int, ks: int, id_col: str,
+               vec_col: str, train: str) -> list[list[list[float]]]:
+    """The m x ks PQ codebooks from the trainer ``train`` names -- the
+    one place `pq_topk` and `build_pq_index` resolve it, so the direct
+    and persisted search paths can never train differently:
 
-    All m subspace fits advance together in ONE job per iteration:
-    the assignment pass posexplodes each vector into its m (subspace,
-    code, subvector) triples map-side, and a single
-    groupBy(subspace, code) recomputes every codebook cell -- the
-    shuffle payload is m x ks x (dsub+1) doubles per partition, not
-    the corpus. (m sequential single-subspace fits would scan the
-    cache m x max_iter times; this scans it max_iter times.)
+    - ``"local"``: `pq_codebooks_local`, the deployable fit;
+    - ``"portable"``: cell (j, c) = subspace-j segment of the corpus
+      vector with the c-th smallest (md5(id-as-string), id)
+      (`similarity.portable_init_sample`, the ONE init rule of every
+      portable quantizer) -- zero Lloyd's iterations, reproducible in
+      plain SQL, so the DuckDB oracle replays the whole PQ pipeline
+      (encode, ADC, re-rank). k-means training only tightens the
+      cells; it does not change the algorithm.
 
-    Init mirrors `kmeans_centroids`: a seeded xxhash64 top-ks sample
-    per subspace, deterministic across runs. Empty cells keep their
-    previous centroid.
-    """
-    vecs = corpus.select(F.col(id_col).alias("id"),
-                         as_double(vec_col).alias("v"))
-    if sample_mod and sample_mod > 1:
-        vecs = vecs.filter(F.pmod(F.xxhash64("id"), F.lit(sample_mod)) == 0)
-    vecs = vecs.persist()
-    try:
-        first = vecs.select(F.size("v").alias("d")).limit(1).collect()
-        if not first:
-            raise ValueError("empty corpus")
-        dim = first[0]["d"]
-        if dim % m != 0:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        dsub = dim // m
-
-        init_rows = (
-            vecs.orderBy(F.xxhash64("id", F.lit(seed)), "id")
-            .limit(ks).collect()
+    Any other value raises: a misspelled mode must not silently train
+    differently under an oracle-backed caller."""
+    if train == "local":
+        return pq_codebooks_local(corpus, m, ks, id_col, vec_col)
+    if train != "portable":
+        raise ValueError(
+            f"unknown train mode {train!r}: expected 'local' or 'portable'"
         )
-        if len(init_rows) < ks:
-            raise ValueError(f"corpus has fewer than ks={ks} vectors")
-        books = [
-            [list(r.v[j * dsub:(j + 1) * dsub]) for r in init_rows]
-            for j in range(m)
-        ]
-
-        for _ in range(max_iter):
-            # one struct per subspace: its code + its subvector; the
-            # codes come from ONE nested-lambda expression over one
-            # codebook literal (see _pq_codes), zipped to the slices.
-            codes = _pq_codes(F.col("v"), _cells_lit(books), m, dsub)
-            parts = F.zip_with(
-                codes,
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda code, j: F.struct(
-                    j.alias("j"),
-                    code.alias("code"),
-                    F.slice("v", j * dsub + 1, dsub).alias("sv"),
-                ),
-            )
-            sums = (
-                vecs.select(F.explode(parts).alias("p"))
-                .select("p.j", "p.code", "p.sv")
-                .groupBy("j", "code")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    *[F.sum(F.col("sv")[i]).alias(f"s{i}")
-                      for i in range(dsub)],
-                )
-                .collect()
-            )
-            upd = {
-                (r["j"], r["code"]): [r[f"s{i}"] / r["n"] for i in range(dsub)]
-                for r in sums
-            }
-            books = [
-                [upd.get((j, c), books[j][c]) for c in range(ks)]
-                for j in range(m)
-            ]
-    finally:
-        vecs.unpersist()
-    return books
+    sample = portable_init_sample(corpus, ks, id_col, vec_col)
+    dim = len(sample[0])
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    dsub = dim // m
+    return [
+        [v[j * dsub:(j + 1) * dsub] for v in sample]
+        for j in range(m)
+    ]
 
 
 def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             m: int = 8, ks: int = 16, refine: int = 32,
             id_col: str = "vec_id", vec_col: str = "embedding",
-            max_iter: int = 3, sample_mod: int | None = None,
             train: str = "local",
             books: list[list[list[float]]] | None = None) -> DataFrame:
     """PQ approximate top-k: encode the corpus as m codes, score
@@ -553,10 +447,9 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
        true similarity. Approximation error only costs recall when a
        true neighbor falls outside the refine set.
 
-    ``train="local"`` (default) fits the codebooks on a bounded
-    driver-side sample (`pq_codebooks_local` -- one collect, numpy
-    Lloyd's); ``train="distributed"`` keeps every training step
-    relational (`pq_codebooks`). Like `ivf_topk`, CONSTRUCTING the
+    ``train`` names the codebook trainer (`_fit_books`: ``"local"``,
+    the default, fits on a bounded driver-side sample; ``"portable"``
+    is the oracle-replayable init). Like `ivf_topk`, CONSTRUCTING the
     plan trains the quantizer (eager driver work); the search half is
     lazy.
 
@@ -571,38 +464,12 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     operator.
     """
     raw, corpus = corpus, spread_input(corpus)
-    if books is not None:
-        # caller-trained model: skip the training collect, but never
-        # silently ignore a training knob or a mis-shaped model
-        if sample_mod is not None:
-            raise ValueError(
-                "sample_mod tunes training; caller-supplied books skip it"
-            )
-        _check_caller_books(books, m, ks, raw, vec_col)
-    elif train == "local":
-        if sample_mod is not None:
-            raise ValueError(
-                "sample_mod tunes the DISTRIBUTED trainer; the local "
-                "path is already sample-bounded (train_rows). Pass "
-                "train='distributed' to use it."
-            )
-        books = pq_codebooks_local(
-            corpus, m=m, ks=ks, id_col=id_col, vec_col=vec_col,
-        )
-    elif train == "portable":
-        # Engine-portable codebooks: cell (j, c) = subspace-j segment
-        # of the corpus vector with the c-th smallest
-        # (md5(id-as-string), id) -- init-only, zero Lloyd's
-        # iterations, reproducible in plain SQL. Exists so the whole
-        # PQ pipeline (encode, ADC, re-rank) can be replayed
-        # independently by the DuckDB oracle; k-means training only
-        # tightens the cells, it does not change the algorithm.
-        books = _portable_books(corpus, m, ks, id_col, vec_col)
+    if books is None:
+        books = _fit_books(corpus, m, ks, id_col, vec_col, train)
     else:
-        books = pq_codebooks(
-            corpus, m=m, ks=ks, id_col=id_col, vec_col=vec_col,
-            max_iter=max_iter, sample_mod=sample_mod,
-        )
+        # caller-trained model: skip the training collect, but never
+        # silently accept a mis-shaped model
+        _check_caller_books(books, m, ks, raw, vec_col)
     dsub = len(books[0][0])
     coded = corpus.select(
         F.col(id_col).cast("long").alias("neighbor_id"),
@@ -704,27 +571,15 @@ def build_pq_index(corpus: DataFrame, index_path: str, m: int = 8,
     from ..sinks.versioned import VersionedTable
 
     spark = corpus.sparkSession
-    if books is not None:
+    if books is None:
+        books = _fit_books(corpus, m, ks, id_col, vec_col, train)
+    else:
         # Caller-trained codebooks (same corpus, same m/ks/rule): the
         # build-then-compare workflows train ONCE and hand the model
         # to both the index build and the direct path -- one training
         # collect, bit-identical cells on both sides (training is
         # deterministic, so this equals retraining; see pq_topk).
         _check_caller_books(books, m, ks, raw, vec_col)
-    elif train == "portable":
-        books = _portable_books(corpus, m, ks, id_col, vec_col)
-    elif train == "local":
-        books = pq_codebooks_local(
-            corpus, m=m, ks=ks, id_col=id_col, vec_col=vec_col,
-        )
-    elif train == "distributed":
-        books = pq_codebooks(
-            corpus, m=m, ks=ks, id_col=id_col, vec_col=vec_col,
-        )
-    else:
-        # a typo here would otherwise SILENTLY train differently from
-        # the direct search path and break index-equals-direct
-        raise ValueError(f"unknown train mode {train!r}")
     dsub = len(books[0][0])
     coded = corpus.select(
         F.lit("code").alias("kind"),

@@ -265,17 +265,16 @@ def _centroid_score_structs(v: Column, cents: list[list[float]]) -> Column:
     literal (pre-L2-normalized on the driver) and a single two-arg
     ``transform`` lambda scores every centroid. One Literal node + one
     lambda keeps the expression tree a constant size regardless of
-    n_lists x dim -- per-iteration Catalyst analysis and codegen stay
-    trivial, where per-centroid inline expressions would force a fresh
-    multi-thousand-node plan (and a Janino recompile) every Lloyd's
-    step.
+    n_lists x dim, so Catalyst analysis and codegen stay trivial where
+    per-centroid inline expressions would build a multi-thousand-node
+    plan.
 
     ``score`` is dot(v, unit_centroid): proportional to cosine (the
     |v| divisor is constant across centroids), so struct ordering --
     compare ``score``, then ``nl`` -- realizes "highest cosine, ties
     to the LOWEST centroid index" for both ``array_max`` (argmax in
-    k-means assignment) and ``array_sort``+``reverse`` (top-nprobe in
-    IVF). ``nl`` stores the NEGATED index so that a tie on score
+    SemDeDup cluster assignment) and ``array_sort``+``reverse``
+    (top-nprobe in IVF). ``nl`` stores the NEGATED index so that a tie on score
     prefers the larger nl, i.e. the smaller index; callers recover the
     index as ``-nl``."""
     import math
@@ -290,96 +289,6 @@ def _centroid_score_structs(v: Column, cents: list[list[float]]) -> Column:
             dot(v, cu).alias("score"), (-i).alias("nl")
         ),
     )
-
-
-def kmeans_centroids(corpus: DataFrame, n_clusters: int,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     max_iter: int = 5, seed: int = 42,
-                     sample_mod: int | None = None) -> DataFrame:
-    """Coarse quantizer for IVF: spherical k-means (cosine Lloyd's
-    iterations), fully relational per step. Returns (clabel, carr)
-    with clabel in [0, n_clusters) -- the same shape `ivf_topk` needs,
-    usable on UNLABELED corpora (real embedding tables have no label).
-
-    Scale design:
-    - Init is a deterministic hash-sample: the n_clusters rows with the
-      smallest xxhash64(id, seed) -- a seeded uniform draw that needs
-      only a top-k (TakeOrdered), no shuffle of the corpus.
-    - The training vectors are cached ONCE (persist) and every
-      iteration reads the cache, not the source scan.
-    - Each Lloyd's iteration is a single map-only pass + one tiny agg:
-      centroids are inlined as literal arrays (k x dim doubles live in
-      the plan, `_centroid_score_structs`), so assignment is an
-      `array_max` over per-centroid cosines evaluated inside codegen --
-      no join, no shuffle of the vectors. The recompute is one
-      groupBy(clabel) with `dim` element sums + a count (map-side
-      partial agg; shuffle payload = k x (dim+1) doubles per
-      partition), and the division to means happens on the driver.
-      Per-iteration driver traffic is exactly k x dim doubles, the
-      same thing MLlib's KMeans collects per step.
-    - ``sample_mod``: train the quantizer on a deterministic 1/mod
-      hash-sample of the corpus (xxhash64(id) pmod mod == 0). At
-      100 TB you never Lloyd's-iterate the full table -- a quantizer
-      trained on ~1M sampled vectors partitions the rest just as well;
-      assignment of the FULL corpus happens once, in `ivf_topk`.
-    - Empty clusters keep their previous centroid (standard Lloyd's
-      fallback), so the quantizer always returns n_clusters lists.
-    """
-    vecs = corpus.select(F.col(id_col).alias("id"),
-                         as_double(vec_col).alias("v"))
-    if sample_mod and sample_mod > 1:
-        vecs = vecs.filter(
-            F.pmod(F.xxhash64("id"), F.lit(sample_mod)) == 0
-        )
-    vecs = vecs.persist()
-    spark = corpus.sparkSession
-
-    def centroid_df(cents: list[list[float]]) -> DataFrame:
-        return local_frame(
-            spark, [(j, c) for j, c in enumerate(cents)],
-            "clabel int, carr array<double>",
-        )
-
-    try:
-        init_rows = (
-            vecs.orderBy(F.xxhash64("id", F.lit(seed)), "id")
-            .limit(n_clusters)
-            .collect()
-        )
-        centroids = [list(r.v) for r in init_rows]
-        if len(centroids) < n_clusters:
-            raise ValueError(
-                f"corpus has fewer than n_clusters={n_clusters} vectors"
-            )
-        dim = len(centroids[0])
-
-        for _ in range(max_iter):
-            best = F.array_max(
-                _centroid_score_structs(F.col("v"), centroids)
-            )
-            sums = (
-                vecs.select(
-                    (-best["nl"]).cast("int").alias("clabel"), "v"
-                )
-                .groupBy("clabel")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    *[F.sum(F.col("v")[i]).alias(f"s{i}")
-                      for i in range(dim)],
-                )
-                .collect()
-            )
-            updated = {
-                r["clabel"]: [r[f"s{i}"] / r["n"] for i in range(dim)]
-                for r in sums
-            }
-            centroids = [
-                updated.get(j, centroids[j]) for j in range(n_clusters)
-            ]
-    finally:
-        vecs.unpersist()
-
-    return centroid_df(centroids)
 
 
 def portable_init_sample(corpus: DataFrame, n: int, id_col: str,
@@ -420,47 +329,76 @@ def sample_vectors_pandas(corpus: DataFrame, id_col: str, vec_col: str,
     )
 
 
+#: Bounded-sample k-means fit (`kmeans_centroids_local`): Lloyd's
+#: rounds, the sample's hash seed, and the sample size.
+_KMEANS_ITERS = 10
+_KMEANS_SEED = 42
+_KMEANS_TRAIN_ROWS = 65536
+
+
 def kmeans_centroids_local(corpus: DataFrame, n_clusters: int,
                            id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           max_iter: int = 10, seed: int = 42,
-                           train_rows: int = 65536) -> DataFrame:
-    """`kmeans_centroids` semantics (spherical Lloyd's, same
-    (clabel, carr) output shape) fit on a bounded driver-side sample
-    with vectorized numpy -- the FAISS-style training split: the
-    model is k x dim floats that converge from ~10^5 vectors no
-    matter the corpus size, so training collects ONE deterministic
-    hash-ordered sample and iterates in milliseconds instead of one
-    Spark job per Lloyd's step. Assignment of the full corpus stays
-    map-only in the caller (literal centroids), exactly as with the
-    relational fit. Same init rule (smallest xxhash64(id, seed)), so
-    results are deterministic across runs; they differ from the
-    relational fit only by float-summation order and sample bounds.
+                           vec_col: str = "embedding") -> list[list[float]]:
+    """Coarse quantizer for IVF and SemDeDup: spherical (cosine)
+    Lloyd's k-means fit on a bounded driver-side sample with
+    vectorized numpy. Returns the n_clusters centroids in label order
+    (centroid j is list j).
+
+    This is the FAISS-style training split: the model is k x dim
+    floats that converge from ~10^5 vectors no matter the corpus size,
+    so training collects ONE deterministic hash-ordered sample (the
+    smallest xxhash64(id, seed)) and iterates in milliseconds instead
+    of one Spark job per Lloyd's step. At 100 TB the quantizer is
+    trained on this bounded sample; assignment of the full corpus
+    stays map-only in the caller (literal centroids). Init is the
+    first n_clusters sample rows, so fits are deterministic across
+    runs. Empty clusters keep their previous centroid (standard
+    Lloyd's fallback).
     """
     import numpy as np
 
-    pdf = sample_vectors_pandas(corpus, id_col, vec_col, train_rows, seed)
+    pdf = sample_vectors_pandas(corpus, id_col, vec_col,
+                                _KMEANS_TRAIN_ROWS, _KMEANS_SEED)
     if len(pdf) < n_clusters:
         raise ValueError(
             f"corpus has fewer than n_clusters={n_clusters} vectors"
         )
     x = np.array(pdf["v"].tolist())            # (n, dim)
     cents = x[:n_clusters].copy()
-    for _ in range(max_iter):
+    for _ in range(_KMEANS_ITERS):
         units = cents / np.maximum(
             np.linalg.norm(cents, axis=1, keepdims=True), 1e-12
         )
         # argmax cosine, ties to the lowest centroid index (argmax
-        # returns the first max, matching the relational tie-break)
+        # returns the first max, matching `_centroid_score_structs`)
         assign = (x @ units.T).argmax(axis=1)
         for c in range(n_clusters):
             mask = assign == c
             if mask.any():
                 cents[c] = x[mask].mean(axis=0)
-    spark = corpus.sparkSession
-    return local_frame(
-        spark, [(j, [float(v) for v in c]) for j, c in enumerate(cents)],
-        "clabel int, carr array<double>",
+    return [[float(v) for v in c] for c in cents]
+
+
+def _fit_centroids(corpus: DataFrame, n: int, id_col: str, vec_col: str,
+                   train: str) -> list[list[float]]:
+    """The n coarse-quantizer centroids, in label order, from the
+    trainer ``train`` names -- the one place `ivf_topk` and
+    `semantic_dedup` resolve it:
+
+    - ``"local"``: `kmeans_centroids_local`, the deployable fit;
+    - ``"portable"``: `portable_init_sample`, zero Lloyd's iterations.
+      Still a legitimate quantizer (k-means only improves list
+      balance, not correctness), and one a DuckDB oracle replays
+      bit-exactly, so the whole pipeline behind it is hash-checkable.
+
+    Any other value raises: a misspelled mode must not silently train
+    differently under an oracle-backed caller."""
+    if train == "local":
+        return kmeans_centroids_local(corpus, n, id_col, vec_col)
+    if train == "portable":
+        return portable_init_sample(corpus, n, id_col, vec_col)
+    raise ValueError(
+        f"unknown train mode {train!r}: expected 'local' or 'portable'"
     )
 
 
@@ -490,25 +428,25 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
              nprobe: int = 2, id_col: str = "vec_id",
              vec_col: str = "embedding",
              label_col: str | None = None,
-             n_lists: int = 8, kmeans_iter: int = 5,
-             kmeans_sample_mod: int | None = None,
-             train: str = "distributed") -> DataFrame:
+             n_lists: int = 8, train: str = "local") -> DataFrame:
     """IVF-style approximate top-k: inverted-file partition by nearest
     centroid, search only the `nprobe` closest lists per query.
 
     The coarse quantizer: by default (``label_col=None``) the inverted
-    lists come from a REAL k-means fit (`kmeans_centroids`, spherical
-    Lloyd's, ``n_lists`` clusters) -- real embedding corpora are
-    unlabeled. Passing ``label_col`` instead derives one centroid per
-    existing label value (useful when a clustering already exists or
-    for exactness tests against a known partition).
+    lists come from ``n_lists`` centroids fit by the trainer ``train``
+    names (`_fit_centroids`: ``"local"`` k-means or the ``"portable"``
+    oracle-replayable init) -- real embedding corpora are unlabeled.
+    Passing ``label_col`` instead derives one centroid per existing
+    label value (useful when a clustering already exists or for
+    exactness tests against a known partition).
 
     The 100 TB shape: centroids are tiny (broadcast everywhere),
     corpus vectors carry their list id as a partition key, and a query
     touches nprobe/n_lists of the data instead of all of it. Recall
     loss comes only from neighbors whose list the query didn't probe;
-    raise nprobe to trade compute for recall. Train the quantizer on a
-    hash-sample (``kmeans_sample_mod``) when the corpus is large.
+    raise nprobe to trade compute for recall. The local trainer fits a
+    bounded hash-ordered sample, so the model and its driver state
+    stay fixed-size however large the corpus grows.
 
     Assignment strategy: when n_lists x dim fits the inline budget the
     centroids are embedded as plan literals and every vector learns its
@@ -521,61 +459,42 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     Returns (query_id, neighbor_id, cos_sim, rank).
 
     NOTE: like an MLlib ``fit``, CONSTRUCTING this plan trains the
-    coarse quantizer (k-means jobs / centroid collect run eagerly);
-    only the probe/search half is lazy. Plan-only consumers should
-    expect driver jobs at build time.
+    coarse quantizer (the training sample / centroid collect runs
+    eagerly); only the probe/search half is lazy. Plan-only consumers
+    should expect driver jobs at build time.
     """
     corpus = spread_input(corpus)
+    spark = corpus.sparkSession
+    cent = None
     if label_col is not None:
         cent = _centroid_vectors(corpus, vec_col, label_col)
-    elif train == "portable":
-        # Engine-portable quantizer: centroid j = the corpus vector
-        # with the j-th smallest (md5(id-as-string), id) -- a seeded
-        # uniform draw both engines can reproduce exactly (hex strings
-        # compare identically everywhere), with ZERO Lloyd's
-        # iterations. Still a legitimate IVF (k-means only improves
-        # list balance, not correctness); this mode exists so the
-        # FULL IVF pipeline -- assignment, probing, re-rank -- is
-        # independently replayable by the DuckDB oracle.
-        cent = local_frame(
-            corpus.sparkSession, [(j, v) for j, v in enumerate(
-                portable_init_sample(corpus, n_lists, id_col, vec_col))],
-            "clabel int, carr array<double>",
+        # (label value, vector) sorted by label -- index j stands in
+        # for the label in tie-breaks (ascending label == ascending j).
+        cent_rows = sorted(
+            ((r["clabel"], list(r["carr"])) for r in cent.collect()),
+            key=lambda t: t[0],
         )
-    elif train == "local":
-        # Bounded driver-side fit (see kmeans_centroids_local): the
-        # deployable default when quantizer-training Spark jobs are
-        # not worth their fixed cost. Distributed stays the default
-        # here for back-compat and as the never-collect exemplar.
-        cent = kmeans_centroids_local(
-            corpus, n_lists, id_col=id_col, vec_col=vec_col,
-        )
+        labels = [t[0] for t in cent_rows]
+        cvecs = [t[1] for t in cent_rows]
+        label_type = cent.schema["clabel"].dataType.simpleString()
     else:
-        cent = kmeans_centroids(
-            corpus, n_lists, id_col=id_col, vec_col=vec_col,
-            max_iter=kmeans_iter, sample_mod=kmeans_sample_mod,
-        )
-
-    # (label value, vector) sorted by label -- index j stands in for
-    # the label in tie-breaks (ascending label == ascending j).
-    cent_rows = sorted(
-        ((r["clabel"], list(r["carr"])) for r in cent.collect()),
-        key=lambda t: t[0],
-    )
-    spark = corpus.sparkSession
-    if not cent_rows:
+        cvecs = _fit_centroids(corpus, n_lists, id_col, vec_col, train)
+        labels, label_type = list(range(len(cvecs))), "int"
+    if not cvecs:
         # empty corpus -> no lists -> no neighbors (schema-stable)
         return local_frame(
             spark, [],
             "query_id long, neighbor_id long, cos_sim double, rank long",
         )
-    labels = [t[0] for t in cent_rows]
-    cvecs = [t[1] for t in cent_rows]
     inline = len(cvecs) * len(cvecs[0]) <= _INLINE_CENTROID_BUDGET
-    label_df = F.broadcast(local_frame(
-        spark, list(enumerate(labels)),
-        f"__j bigint, clabel {cent.schema['clabel'].dataType.simpleString()}",
-    ))
+    if inline:
+        label_df = F.broadcast(local_frame(
+            spark, list(enumerate(labels)),
+            f"__j bigint, clabel {label_type}",
+        ))
+    elif cent is None:
+        cent = local_frame(spark, list(enumerate(cvecs)),
+                           "clabel int, carr array<double>")
 
     def assign(df: DataFrame, prefix: str, n: int) -> DataFrame:
         """Top-n centroid labels per vector (ties -> lowest label)."""
@@ -762,9 +681,10 @@ def kmeans_portable_fit(corpus: DataFrame, n_clusters: int = 8,
                         vec_col: str = "embedding",
                         scale: int = 1_000_000) -> DataFrame:
     """Distributed Lloyd's k-means whose every step is engine-portable
-    and therefore hash-checkable against a SQL replica — the missing
-    third trainer next to `kmeans_centroids` (deployable, float sums)
-    and `kmeans_centroids_local` (driver-sample numpy fit).
+    and therefore hash-checkable against a SQL replica. It backs the
+    `ml_kmeans_portable` certificate (every intermediate of a
+    relational fit replayed in SQL); the ANN/SemDeDup quantizers train
+    with `_fit_centroids` instead.
 
     Portability comes from two rules:
     - **Init** is the shared `portable_init_sample` order
@@ -788,10 +708,10 @@ def kmeans_portable_fit(corpus: DataFrame, n_clusters: int = 8,
     Scale: per iteration = one map-only assignment pass + one
     groupBy(clabel) whose shuffle payload is k x (dim+1) longs per
     map partition (map-side partial agg), and k x dim ints of driver
-    state — identical profile to `kmeans_centroids`. Bound: the int64
-    dimension sums overflow past ~2^53/scale ≈ 9e9 unit-normed
-    members per cluster at scale=1e6; for a bigger corpus fit on a
-    hash-sample (`sample_mod` idiom) or lower `scale` — the quantizer
+    state. Bound: the int64 dimension sums overflow past ~2^53/scale
+    ≈ 9e9 unit-normed members per cluster at scale=1e6; for a bigger
+    corpus fit on a bounded hash-ordered sample (as
+    `kmeans_centroids_local` does) or lower `scale` — the quantizer
     does not need more than ~1e6 training points regardless of corpus
     size.
 

@@ -359,25 +359,46 @@ def upsert_stream(spark: SparkSession, schema: T.StructType, src_dir: str,
     """
     path = os.path.join(warehouse_dir, table)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
+    def merge(clean: DataFrame, epoch_id: int) -> None:
+        if clean.isEmpty():
             return
         fs, hp = hadoop_fs(spark, path)
         if fs.exists(hp):
-            merge_upsert(spark, warehouse_dir, table, batch_df,
+            merge_upsert(spark, warehouse_dir, table, clean,
                          keys=keys, order_col=order_col)
         else:
             # First batch bootstraps the table (dedup within the batch
             # so a key delivered twice in one file still keeps latest).
             dedup_exact(
-                batch_df, keys, [F.col(order_col).desc()]
+                clean, keys, [F.col(order_col).desc()]
             ).write.parquet(path)
 
     return _drain(
-        _read_csv_stream(spark, schema, src_dir,
+        _read_csv_stream(spark, with_corrupt_col(schema), src_dir,
                          max_files_per_trigger=max_files_per_trigger),
-        process_batch, checkpoint_dir,
+        _merge_clean_rows(merge, path + "_rejects"), checkpoint_dir,
     )
+
+
+def _merge_clean_rows(merge, rejects_path: str):
+    """foreachBatch body shared by the CSV upsert streams: split the
+    micro-batch's PERMISSIVE parse, write its malformed rows (raw line
+    + source file) as the epoch's ``stream-<epoch>`` partition of
+    ``rejects_path``, and hand ``merge(clean, epoch_id)`` only the
+    parsed rows. Without the split a bad key would merge as a key-NULL
+    row and a bad value as a partial-null row. The split's cache is
+    released on every exit."""
+
+    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        batch = split_corrupt_records(batch_df)
+        try:
+            write_run_partition(batch.rejects, rejects_path,
+                                f"stream-{epoch_id:012d}")
+            merge(batch.clean.drop("_source_file"), epoch_id)
+        finally:
+            batch.unpersist()
+
+    return process_batch
 
 
 def checkpoint_app_id(checkpoint_dir: str) -> str:
@@ -415,28 +436,44 @@ def upsert_stream_versioned(spark: SparkSession, schema: T.StructType,
     normally (keep-latest semantics make reprocessing safe).
     Concurrent readers stay on their pinned snapshot throughout (no
     merge window where the table path is missing, unlike the
-    plain-parquet `upsert_stream`)."""
-    return upsert_stream_into_versioned(
-        _read_csv_stream(spark, schema, src_dir,
+    plain-parquet `upsert_stream`). Malformed rows go to
+    ``<table_path>_rejects`` as in `upsert_stream`."""
+    merge = _versioned_merge(spark, table_path, keys, order_col,
+                             checkpoint_dir)
+    return _drain(
+        _read_csv_stream(spark, with_corrupt_col(schema), src_dir,
                          max_files_per_trigger=max_files_per_trigger),
-        table_path, keys, order_col, checkpoint_dir,
+        _merge_clean_rows(merge, table_path + "_rejects"), checkpoint_dir,
     )
 
 
 def upsert_stream_into_versioned(stream: DataFrame, table_path: str,
                                  keys: list[str], order_col: str,
                                  checkpoint_dir: str):
-    """Core of `upsert_stream_versioned` for an already-built
-    streaming DataFrame: every micro-batch keep-latest-MERGEs into the
-    versioned table, stamped (checkpoint-derived app, epoch) for
-    exactly-once replay dedup."""
+    """`upsert_stream_versioned` for an already-built streaming
+    DataFrame (no CSV parse, so no rejects): every micro-batch
+    keep-latest-MERGEs into the versioned table, stamped
+    (checkpoint-derived app, epoch) for exactly-once replay dedup."""
+    return _drain(
+        stream,
+        _versioned_merge(stream.sparkSession, table_path, keys, order_col,
+                         checkpoint_dir),
+        checkpoint_dir,
+    )
+
+
+def _versioned_merge(spark: SparkSession, table_path: str, keys: list[str],
+                     order_col: str, checkpoint_dir: str):
+    """``merge(batch_df, epoch_id)``: keep-latest-MERGE one micro-batch
+    into the versioned table as a new snapshot stamped
+    (checkpoint-derived app, epoch); an empty batch publishes
+    nothing."""
     from .sinks.versioned import VersionedTable
 
-    spark = stream.sparkSession
     vt = VersionedTable(spark, table_path)
     app = checkpoint_app_id(checkpoint_dir)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
+    def merge(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         if vt.current_version() is None:
@@ -449,7 +486,7 @@ def upsert_stream_into_versioned(stream: DataFrame, table_path: str,
             vt.merge(batch_df, keys=keys, order_col=order_col,
                      epoch=epoch_id, app=app)
 
-    return _drain(stream, process_batch, checkpoint_dir)
+    return merge
 
 
 def replay_quarantine(spark: SparkSession, feed: FeedConfig,

@@ -805,7 +805,6 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     multi = semantic_dedup_multi(
         emb, [_SEM_AUDIT_T_LOW, _SEM_AUDIT_T_HIGH], n_clusters=8,
-        kmeans_iter=3,
     ).localCheckpoint(eager=True)
     # slice with the SAME constants passed to the kernel (ADVICE r9)
     out45 = multi.filter(F.col("threshold") == _SEM_AUDIT_T_LOW)

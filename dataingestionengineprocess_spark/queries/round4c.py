@@ -27,10 +27,11 @@ from ..session import local_frame
 
 
 # ---------------------------------------------------------------------------
-# Distributed k-means under the hash gate. `kmeans_centroids` (the
-# deployable trainer) reduces float sums, whose shuffle order is
-# engine-specific -- that family stays rows-only + recall-tested. This
-# entry runs the SAME iteration structure with integer-exact cluster
+# Distributed k-means under the hash gate. A relational Lloyd's fit
+# over float sums depends on the engine's shuffle reduction order, so
+# it cannot be hash-checked; the deployable ANN/SemDeDup quantizers
+# fit a bounded sample on the driver and stay recall-tested. This
+# entry runs relational Lloyd's iterations with integer-exact cluster
 # sums (operators/similarity.kmeans_portable_fit), so two full Lloyd's
 # rounds -- init, assignment, mean recompute, reassignment, recompute
 # -- are replayed bit-for-bit by the DuckDB oracle. It is the

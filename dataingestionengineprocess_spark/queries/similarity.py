@@ -309,12 +309,9 @@ def knn_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     # Quantizer: bounded driver-side fit (the FAISS-style deployable
-    # default -- a k x dim model converges from a ~10^5-vector hash
+    # trainer -- a k x dim model converges from a ~10^5-vector hash
     # sample no matter the corpus size, so training never runs Spark
-    # jobs per Lloyd's round). The fully-distributed trainer
-    # (`kmeans_centroids`) remains available via train="distributed"
-    # and is exercised in pytest; recall is governed by nprobe either
-    # way.
+    # jobs per Lloyd's round); recall is governed by nprobe.
     found = ivf_topk(
         emb, queries, k=5, nprobe=2, n_lists=8, train="local",
     )

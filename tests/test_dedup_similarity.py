@@ -202,16 +202,35 @@ def test_ivf_ann_recall_at_5(spark, emb):
     assert recall >= 0.3, f"IVF recall@5 = {recall:.2f}"
 
 
-def test_ivf_full_probe_equals_bruteforce(spark, emb):
-    """Probing EVERY k-means list makes IVF exhaustive -- it must
-    equal brute force exactly (same ordering, same tie-breaks), with
-    no label column involved anywhere."""
+@pytest.mark.parametrize("train", ["local", "portable"])
+def test_ivf_full_probe_equals_bruteforce(spark, emb, train):
+    """Probing EVERY list makes IVF exhaustive -- it must equal brute
+    force exactly (same ordering, same tie-breaks), with no label
+    column involved anywhere, REGARDLESS of which trainer fit the
+    quantizer: the partition only decides what gets probed, never the
+    scores."""
     queries = emb.filter(F.col("vec_id") < 10)
     exact = brute_force_topk(emb, queries, k=5)
-    full = ivf_topk(emb, queries, k=5, nprobe=8, n_lists=8)
+    full = ivf_topk(emb, queries, k=5, nprobe=8, n_lists=8, train=train)
     assert sorted(map(tuple, exact.collect())) == sorted(
         map(tuple, full.collect())
     )
+
+
+@pytest.mark.parametrize("train", ["local", "portable"])
+def test_ivf_join_fallback_matches_inline(spark, emb, monkeypatch, train):
+    """Past the inline budget, list assignment falls back to a
+    broadcast join against a centroid frame; it must pick exactly the
+    lists the inline literal path picks."""
+    from dataingestionengineprocess_spark.operators import similarity
+
+    queries = emb.filter(F.col("vec_id") < 10)
+    inline = sorted(map(tuple, ivf_topk(
+        emb, queries, k=5, nprobe=2, n_lists=8, train=train).collect()))
+    monkeypatch.setattr(similarity, "_INLINE_CENTROID_BUDGET", 0)
+    joined = sorted(map(tuple, ivf_topk(
+        emb, queries, k=5, nprobe=2, n_lists=8, train=train).collect()))
+    assert joined == inline
 
 
 def test_ivf_labeled_full_probe_equals_bruteforce(spark, emb):
@@ -231,16 +250,16 @@ def test_kmeans_quantizer_properties(spark, emb):
     n_lists centroids of the right dimension, and the lists it induces
     are non-degenerate (no list swallows the corpus)."""
     from dataingestionengineprocess_spark.operators.similarity import (
-        kmeans_centroids,
+        kmeans_centroids_local,
     )
 
-    c1 = kmeans_centroids(emb, 8, max_iter=3)
-    c2 = kmeans_centroids(emb, 8, max_iter=3)
-    r1 = sorted((r.clabel, tuple(r.carr)) for r in c1.collect())
-    r2 = sorted((r.clabel, tuple(r.carr)) for r in c2.collect())
-    assert [l for l, _ in r1] == list(range(8))
-    assert all(len(c) == 64 for _, c in r1)
-    assert r1 == r2, "seeded quantizer must be deterministic"
+    cents = kmeans_centroids_local(emb, 8)
+    assert len(cents) == 8  # list j is label j: labels 0-7
+    assert all(len(c) == 64 for c in cents)
+    assert cents == kmeans_centroids_local(emb, 8), \
+        "seeded quantizer must be deterministic"
+    c1 = spark.createDataFrame(list(enumerate(cents)),
+                               "clabel int, carr array<double>")
 
     from dataingestionengineprocess_spark.functions.vectors import (
         as_double,
@@ -534,32 +553,31 @@ def test_pq_rejects_mis_shaped_caller_books(spark, emb, tmp_path):
     assert pq_topk(emb, queries, m=8, ks=16, books=books).count() > 0
 
 
-def test_pq_rejects_sample_mod_with_caller_books(spark, emb):
-    """``sample_mod`` tunes training, which caller books skip: passing
-    both is an error, not a silently ignored knob."""
+def _train_with(op, emb, tmp_path, train):
     from dataingestionengineprocess_spark.operators.quantize import (
-        pq_codebooks_local,
+        build_pq_index,
         pq_topk,
+        semantic_dedup,
     )
 
-    books = pq_codebooks_local(emb, m=8, ks=16)
-    with pytest.raises(ValueError, match="sample_mod"):
-        pq_topk(emb, emb.filter(F.col("vec_id") < 5), m=8, ks=16,
-                books=books, sample_mod=4)
+    return {
+        "ivf_topk": lambda: ivf_topk(emb, emb, train=train),
+        "semantic_dedup": lambda: semantic_dedup(emb, train=train),
+        "pq_topk": lambda: pq_topk(emb, emb, train=train),
+        "build_pq_index": lambda: build_pq_index(
+            emb, str(tmp_path / "idx"), train=train),
+    }[op]()
 
 
-def test_pq_codebooks_deterministic(spark, emb):
-    """Seeded init + relational Lloyd's => identical codebooks across
-    fits (required by the driver's repeated-run checks)."""
-    from dataingestionengineprocess_spark.operators.quantize import (
-        pq_codebooks,
-    )
-
-    b1 = pq_codebooks(emb, m=8, ks=16, max_iter=2)
-    b2 = pq_codebooks(emb, m=8, ks=16, max_iter=2)
-    assert b1 == b2
-    assert len(b1) == 8 and all(len(bj) == 16 for bj in b1)
-    assert all(len(c) == 8 for bj in b1 for c in bj)  # 64/8 dims
+@pytest.mark.parametrize("train", ["distributed", "locall"])
+@pytest.mark.parametrize(
+    "op", ["ivf_topk", "semantic_dedup", "pq_topk", "build_pq_index"])
+def test_unknown_train_mode_raises(spark, emb, tmp_path, op, train):
+    """``train`` accepts exactly "local" and "portable" on every
+    quantizer operator: a retired or misspelled mode raises instead of
+    silently fitting with some other trainer."""
+    with pytest.raises(ValueError, match="unknown train mode"):
+        _train_with(op, emb, tmp_path, train)
 
 
 # ---------------------------------------------------------------------------
@@ -587,7 +605,7 @@ def test_semantic_dedup_planted_neardups(spark):
     rows += [(1000 + i, dups[i].tolist()) for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    res = semantic_dedup(df, threshold=0.95, n_clusters=4, kmeans_iter=3)
+    res = semantic_dedup(df, threshold=0.95, n_clusters=4)
     out = res.collect()
     assert len(out) == 130  # one verdict per input vector
     kept = {r.vec_id for r in out if r.keep}
@@ -614,10 +632,10 @@ def test_semantic_dedup_kept_set_is_separated(spark, emb):
         cosine,
     )
 
-    res = semantic_dedup(emb, threshold=0.92, n_clusters=8, kmeans_iter=3)
+    res = semantic_dedup(emb, threshold=0.92, n_clusters=8)
     r1 = sorted(map(tuple, res.collect()))
     r2 = sorted(map(tuple, semantic_dedup(
-        emb, threshold=0.92, n_clusters=8, kmeans_iter=3).collect()))
+        emb, threshold=0.92, n_clusters=8).collect()))
     assert r1 == r2, "semantic dedup must be deterministic"
 
     kept = res.filter("keep").select("vec_id", "clabel")
@@ -657,14 +675,14 @@ def test_semantic_dedup_multi_slices_match_single(spark, emb):
     )
 
     ts = [_SEM_AUDIT_T_LOW, _SEM_AUDIT_T_HIGH]
-    multi = semantic_dedup_multi(emb, ts, n_clusters=8, kmeans_iter=3)
+    multi = semantic_dedup_multi(emb, ts, n_clusters=8)
     rows = multi.collect()
     n = emb.count()
     assert len(rows) == 2 * n  # one verdict per vector per threshold
 
     for t in ts:
         single = sorted(map(tuple, semantic_dedup(
-            emb, threshold=t, n_clusters=8, kmeans_iter=3).collect()))
+            emb, threshold=t, n_clusters=8).collect()))
         sliced = sorted(
             (r.vec_id, r.clabel, r.keep, r.rep_id, r.rep_sim)
             for r in rows if r.threshold == t
@@ -686,6 +704,7 @@ def test_pq_local_codebooks_deterministic(spark, emb):
     b2 = pq_codebooks_local(emb, m=8, ks=16)
     assert b1 == b2
     assert len(b1) == 8 and all(len(bj) == 16 for bj in b1)
+    assert all(len(c) == 8 for bj in b1 for c in bj)  # 64/8 dims
 
 
 def test_pq_persisted_index_matches_direct_search(spark, emb, tmp_path):
@@ -744,7 +763,7 @@ def test_semantic_dedup_oversized_cluster_salt_split(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     out = semantic_dedup(
-        df, threshold=0.95, n_clusters=2, kmeans_iter=2, max_cluster=30
+        df, threshold=0.95, n_clusters=2, max_cluster=30
     ).collect()
     assert len(out) == 120
     kept = [r for r in out if r.keep]
@@ -756,21 +775,9 @@ def test_semantic_dedup_oversized_cluster_salt_split(spark):
         assert r.rep_sim >= 0.95 and r.rep_id in kept_ids
     # un-capped, the same corpus collapses to ~1 representative
     full = semantic_dedup(
-        df, threshold=0.95, n_clusters=2, kmeans_iter=2, max_cluster=None
+        df, threshold=0.95, n_clusters=2, max_cluster=None
     ).collect()
     assert sum(1 for r in full if r.keep) <= len(kept)
-
-
-def test_ivf_local_training_full_probe_equals_bruteforce(spark, emb):
-    """Exhaustive probe must equal brute force REGARDLESS of which
-    trainer fit the quantizer -- the partition only decides what gets
-    probed, never the scores."""
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, queries, k=5)
-    full = ivf_topk(emb, queries, k=5, nprobe=8, n_lists=8, train="local")
-    assert sorted(map(tuple, exact.collect())) == sorted(
-        map(tuple, full.collect())
-    )
 
 
 def test_incremental_admission_semantics(spark):
