@@ -22,11 +22,11 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1-style pricing summary) on sf0.001.
 
     Resolved via ``all_queries()`` rather than a direct module import:
-    importing ``queries.relational`` here would register relational's
-    queries ahead of ``_load_all``'s deliberate ordering
-    (queries/__init__.py), which front-loads the not-yet-driver-verified
-    surface into the CORRECTNESS window — regardless of whether the
-    driver calls ``entry`` or ``queries`` first.
+    importing ``queries.tpch`` here would register its queries ahead of
+    ``_load_all``'s module order (queries/__init__.py), the tie-break
+    of the registry order that decides which queries fill the
+    CORRECTNESS window — regardless of whether the driver calls
+    ``entry`` or ``queries`` first.
     """
     return _registry.all_queries()["q1_pricing_summary"](spark, "/root/testdata/sf0.001")
 

@@ -230,7 +230,7 @@ def khop_bfs(edges: DataFrame, seeds: DataFrame, hops: int = 2,
     hop (localCheckpoint) so lineage stays flat and each frontier is
     computed exactly once; depth is bounded, so driver state is just
     the loop counter. Shared with `graph_khop_reachability`
-    (queries/round4s.py), whose DuckDB oracle unrolls the identical
+    (queries/graph.py), whose DuckDB oracle unrolls the identical
     frontier algebra as chained CTEs.
 
     Both per-hop joins PIN the shuffle-hash strategy (VERDICT r8 #2):

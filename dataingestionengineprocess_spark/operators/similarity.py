@@ -184,7 +184,7 @@ def lsh_knn_graph(corpus: DataFrame, k: int = 4,
                   n_bands: int = 8) -> DataFrame:
     """FULL approximate kNN graph: every corpus vector's top-k among
     its LSH band-mates -- the all-nodes layer-0 build behind the HNSW
-    layer certificate (queries/round6.knn_hnsw_layer_portable) and
+    layer certificate (queries/knn.knn_hnsw_layer_portable) and
     the graph-ANN / graph-dedup preprocessing shape.
 
     Same banded candidates as `lsh_topk`, but the corpus is BOTH

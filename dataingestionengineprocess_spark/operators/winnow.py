@@ -2,7 +2,7 @@
 SIGMOD'03) as a reusable operator.
 
 Selection contract (shared with the `text_winnowing_fingerprints`
-oracle, queries/round4q.py): character k-gram md5 hashes; every FULL
+oracle, queries/text.py): character k-gram md5 hashes; every FULL
 window of w consecutive hashes picks its minimum, rightmost
 occurrence on ties; picks dedupe to (doc, pos, fp). Docs with fewer
 than w grams (but >= 1) degrade to one window over all their grams,

@@ -182,7 +182,7 @@ def _finish_run(spark: SparkSession, feed: FeedConfig, sinks: SinkConfig,
     over the batch's clean rows, the four sink writes, the status row.
 
     Every sink write targets the run's own ``_run_id`` partition
-    (`write_run_partition` / dynamic overwrite), so a retried run --
+    (`write_run_partition`), so a retried run --
     same run_id after a mid-run crash, or a replayed foreachBatch
     epoch -- REPLACES its partitions in every table instead of
     appending a second copy.
@@ -209,14 +209,12 @@ def _finish_run(spark: SparkSession, feed: FeedConfig, sinks: SinkConfig,
         curated, _, validation = run_stages(feed, batch.clean)
         # One curated pipeline execution: the warehouse write populates
         # the cache, the OLTP write reuses the cached rows.
-        curated = curated.withColumn("_run_id", F.lit(run_id)).cache()
+        curated = curated.cache()
         write_warehouse(
             curated.observe(load_obs, F.count(F.lit(1)).alias("rows")),
-            sinks.warehouse_dir, feed.name,
-            partition_cols=["_run_id"], mode="overwrite",
+            sinks.warehouse_dir, feed.name, run_id=run_id,
         )
-        write_oltp(curated.drop("_run_id"), sinks, f"{feed.name}_oltp",
-                   run_id=run_id)
+        write_oltp(curated, sinks, f"{feed.name}_oltp", run_id=run_id)
         # Rejects/quarantine are separate branches of the cached scans;
         # their writes ARE the actions that produce their counts.
         # Quarantined rows are persisted, not just counted: silently
@@ -319,8 +317,8 @@ def ingest_stream(spark: SparkSession, feed: FeedConfig, src_dir: str,
         run_id = f"stream-{epoch_id:012d}"
         # Checkpoint replay across the id-format change: a batch first
         # written as unpadded "stream-<N>" would otherwise survive next
-        # to its padded replacement (dynamic overwrite only replaces
-        # the NEW partition name) and double the batch's rows. Hadoop
+        # to its padded replacement (a run write only replaces the
+        # NEW partition name) and double the batch's rows. Hadoop
         # FS API so the cleanup also works on object stores.
         if epoch_id < 10 ** 11:  # padded and unpadded names differ
             fs, legacy = hadoop_fs(spark, os.path.join(
@@ -527,10 +525,7 @@ def replay_quarantine(spark: SparkSession, feed: FeedConfig,
         src = src.drop("_run_id")
 
     curated, still_failing, validation = run_stages(feed, src)
-    curated = (
-        curated.withColumn("_run_id", F.lit(run_id))
-        .localCheckpoint(eager=True)
-    )
+    curated = curated.localCheckpoint(eager=True)
     load_obs = Observation(f"replay_loaded_{run_id}")
     curated = curated.observe(load_obs, F.count(F.lit(1)).alias("rows"))
     quar_obs = Observation(f"replay_quarantine_{run_id}")
@@ -540,10 +535,8 @@ def replay_quarantine(spark: SparkSession, feed: FeedConfig,
         quar_obs, F.count(F.lit(1)).alias("rows")
     )
 
-    write_warehouse(curated, sinks.warehouse_dir, feed.name,
-                    partition_cols=["_run_id"], mode="overwrite")
-    write_oltp(curated.drop("_run_id"), sinks, f"{feed.name}_oltp",
-               run_id=run_id)
+    write_warehouse(curated, sinks.warehouse_dir, feed.name, run_id=run_id)
+    write_oltp(curated, sinks, f"{feed.name}_oltp", run_id=run_id)
 
     # Durable side write, then swap (never overwrite the table being
     # read in this very run). Partitioned like every other quarantine

@@ -61,88 +61,13 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 
 def _load_all() -> None:
-    # Import side effect populates the registries.
-    #
-    # Module order here is only the WITHIN-GROUP tiebreak:
-    # ``all_queries`` re-orders the registry each call so that queries
-    # not yet covered by any on-disk driver artifact
-    # (CORRECTNESS_r*.json) come first -- the driver checks a bounded
-    # ~50-query window from the front, so successive rounds
-    # automatically tile the full surface without hand-rotating these
-    # imports. Highest-value unverified families stay first below so
-    # their relative priority holds within the unverified group.
-    from . import dedup  # noqa: F401
-    from . import similarity  # noqa: F401
-    from . import mlprep  # noqa: F401
-    from . import curation  # noqa: F401
-    from . import text  # noqa: F401
-    from . import scalars  # noqa: F401
-    from . import tpch_more  # noqa: F401
-    from . import tpch_rest  # noqa: F401
-    from . import analytics  # noqa: F401
-    from . import extensions  # noqa: F401
-    from . import multimodal  # noqa: F401
-    from . import udf  # noqa: F401
-    from . import relational  # noqa: F401
-    from . import windows  # noqa: F401
-    from . import streaming  # noqa: F401
-    # round-4+ additions import LAST: new unverified queries append to
-    # the BACK of the unverified tier, so a mid-round addition never
-    # displaces an already-pre-flighted entry out of the driver's
-    # ~50-query correctness window.
-    from . import round4  # noqa: F401
-    from . import round4b  # noqa: F401
-    from . import round4c  # noqa: F401
-    from . import round4d  # noqa: F401
-    from . import round4e  # noqa: F401
-    from . import round4f  # noqa: F401
-    from . import round4g  # noqa: F401
-    from . import round4h  # noqa: F401
-    from . import round4i  # noqa: F401
-    from . import round4j  # noqa: F401
-    from . import round4k  # noqa: F401
-    from . import round4l  # noqa: F401
-    from . import round4m  # noqa: F401
-    from . import round4n  # noqa: F401
-    from . import round4o  # noqa: F401
-    from . import round4p  # noqa: F401
-    from . import round4q  # noqa: F401
-    from . import round4r  # noqa: F401
-    from . import round4s  # noqa: F401
-    from . import round4t  # noqa: F401
-    from . import round4u  # noqa: F401
-    from . import round4v  # noqa: F401
-    from . import round4w  # noqa: F401
-    from . import round4x  # noqa: F401
-    from . import round4y  # noqa: F401
-    from . import round4z  # noqa: F401
-    from . import round5a  # noqa: F401
-    from . import round5b  # noqa: F401
-    from . import round5c  # noqa: F401
-    from . import round5d  # noqa: F401
-    from . import round5e  # noqa: F401
-    from . import round5f  # noqa: F401
-    from . import round5g  # noqa: F401
-    from . import round5h  # noqa: F401
-    from . import round5i  # noqa: F401
-    from . import round5j  # noqa: F401
-    from . import round5k  # noqa: F401
-    from . import round5l  # noqa: F401
-    from . import round5m  # noqa: F401
-    from . import round5n  # noqa: F401
-    from . import round5o  # noqa: F401
-    from . import round5p  # noqa: F401
-    from . import round5q  # noqa: F401
-    from . import round6  # noqa: F401
-    from . import round6b  # noqa: F401
-    from . import round6c  # noqa: F401
-    from . import round6d  # noqa: F401
-    from . import round6e  # noqa: F401
-    from . import round6f  # noqa: F401
-    from . import round6g  # noqa: F401
-    from . import round6h  # noqa: F401
-    from . import round6i  # noqa: F401
-    from . import round7  # noqa: F401
+    # Import side effect populates the registries: one module per query
+    # family, named by the registry-name prefix its queries share.
+    import importlib
+    import pkgutil
+
+    for mod in pkgutil.iter_modules(__path__):
+        importlib.import_module(f"{__name__}.{mod.name}")
 
 
 _LOADED = False
@@ -224,26 +149,14 @@ def all_queries() -> dict[str, QueryFn]:
     # unverified rows-only queries (weaker check, still evidence),
     # then everything already covered by a prior round's artifact —
     # the verified tier ordered STALEST EVIDENCE FIRST (ascending
-    # last-verified round, import order as the within-round tiebreak)
-    # so that once the unverified backlog is drained (round 8) the
-    # driver's window continuously re-verifies the oldest rows, which
-    # may have had their plans rewritten since their only check.
-    # Within the unverified tiers the import order above is preserved,
-    # except that judge-flagged priority names (hardest semantics,
-    # most value from driver-side evidence) pin to the very front of
-    # their tier until a driver artifact covers them.
-    priority = ("stream_rate_limit_gate", "stream_tws_user_stats",
-                "ml_gbdt_stumps_portable", "knn_hnsw_layer_portable",
-                "ml_als_halfstep_portable")
-
-    def tier_sort(names: list[str]) -> list[str]:
-        return ([n for n in priority if n in names]
-                + [n for n in names if n not in priority])
-
-    ordered = tier_sort(
-        [n for n in QUERIES if n not in _VERIFIED and n in ORACLES])
-    ordered += tier_sort(
-        [n for n in QUERIES if n not in _VERIFIED and n not in ORACLES])
+    # last-verified round, registration order as the within-round
+    # tiebreak) so that once the unverified backlog is drained (round
+    # 8) the driver's window continuously re-verifies the oldest rows,
+    # which may have had their plans rewritten since their only check.
+    # Registration order is alphabetical by module, then definition
+    # order within the module.
+    ordered = [n for n in QUERIES if n not in _VERIFIED and n in ORACLES]
+    ordered += [n for n in QUERIES if n not in _VERIFIED and n not in ORACLES]
     import_rank = {n: i for i, n in enumerate(QUERIES)}
     ordered += sorted(
         (n for n in QUERIES if n in _VERIFIED),

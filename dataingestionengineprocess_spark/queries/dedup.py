@@ -1,4 +1,4 @@
-"""Dedup query surface over ``documents`` / ``embeddings``.
+"""Dedup query surface (``dedup_``) over ``documents`` / ``embeddings``.
 
 SURVEY.md §2.2 P3 [C]: exact, MinHash+LSH, SimHash, n-gram Jaccard,
 embedding-cosine near-dup. Exact/Jaccard/cosine variants carry full
@@ -6,36 +6,28 @@ DuckDB oracles. The LSH/SimHash defaults use engine-specific hashes
 (xxhash64) and get the driver's rows-only check plus pytest recall
 assertions; their `_portable` twins swap in md5-derived hash families
 and are hash-checked end to end by full SQL replica oracles.
+
+The pair-set certificate kernels and oracle templates shared by the
+LSH-style queries of other families (knn, multimodal) live here.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F, SparkSession
 
-from ..catalog import load
-from ..functions.text import fingerprint
+from ..catalog import load, scratch_dir
+from ..functions.exact import snap6 as _snap6
+from ..functions.vectors import as_double, norm_side, quantized_cosine
 from ..operators.dedup import (
-    dedup_exact_text,
-    minhash_neardup_pairs,
-    ngram_jaccard_pairs,
-    prefix_filter_jaccard_pairs,
-    simhash_neardup_pairs,
+    containment_pairs, dedup_exact_text, minhash_neardup_pairs,
+    ngram_jaccard_pairs, prefix_filter_jaccard_pairs, simhash_neardup_pairs,
 )
-from ..functions.vectors import (
-    as_double,
-    cosine,
-    norm_side,
-    quantized_cosine,
-)
-from . import register
 from ..session import local_frame
+from . import register
+from .quality import classifier_score, classifier_score_sql
 
-# ---------------------------------------------------------------------------
-# Exact dedup via content fingerprint (deterministic keep-smallest-id).
-# ---------------------------------------------------------------------------
 
 _EXACT_ORACLE = """
 SELECT doc_id, lang, source, fp
@@ -55,10 +47,6 @@ def dedup_exact_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return dedup_exact_text(docs).select("doc_id", "lang", "source", "fp")
 
-
-# ---------------------------------------------------------------------------
-# Exact n-gram Jaccard near-dup pairs (the oracle for the LSH variants).
-# ---------------------------------------------------------------------------
 
 _JACCARD_ORACLE = """
 WITH sh AS (
@@ -87,11 +75,6 @@ WHERE round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 4) >= 0.6
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(docs, n=3, threshold=0.6)
-
-
-# ---------------------------------------------------------------------------
-# MinHash + banded LSH near-dup candidates (rows-only: xxhash64-based).
-# ---------------------------------------------------------------------------
 
 
 @register("dedup_minhash_lsh")
@@ -186,13 +169,9 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-# ---------------------------------------------------------------------------
-# SimHash near-dup pairs (rows-only: xxhash64-based).
-# ---------------------------------------------------------------------------
-
-
 #: token-list source for the standard document SimHash oracle
 _DOC_TOKENS_SQL = "SELECT doc_id, string_split(text, ' ') AS t FROM documents"
+
 
 #: the shingle certificates' audit stratum, ``id_a % _STRATUM_MOD == 0``
 #: on both engines (`shingle_certificate_oracle` interpolates it)
@@ -458,8 +437,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      recall_floor_tenths=5)
 
 
-
-
 def _simhash_portable_oracle(max_hamming: int = 3,
                              tokens_sql: str = _DOC_TOKENS_SQL) -> str:
     """Full DuckDB replica of the portable SimHash pipeline: the
@@ -541,13 +518,6 @@ def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-# ---------------------------------------------------------------------------
-# Embedding-cosine near-dup: exact all-pairs within label partitions.
-# Label partitioning is the practical trick: a 100 TB corpus is never
-# all-pairs'd globally; it's bucketed (here by label, in production by
-# an IVF/LSH bucket) and pairs are checked within buckets.
-# ---------------------------------------------------------------------------
-
 _EMB_NEARDUP_ORACLE = """
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        round(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
@@ -591,13 +561,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Near-dup CLUSTERING: close the Jaccard pair graph into components and
-# pick one canonical doc per cluster (operators/components.py). The
-# DuckDB oracle closes the same graph with a recursive CTE -- exact
-# parity for a genuinely iterative distributed algorithm.
-# ---------------------------------------------------------------------------
-
 #: Shared oracle prefix: the near-dup cluster definition (shingles ->
 #: exact-jaccard pairs -> recursive closure -> min-id component). ONE
 #: copy, referenced by every oracle that needs the clusters -- the
@@ -640,6 +603,7 @@ comp AS (
 )
 """
 
+
 _CLUSTER_ORACLE = "WITH RECURSIVE " + NEARDUP_COMPONENTS_CTE + """
 SELECT doc_id, component_id,
        count(*) OVER (PARTITION BY component_id) AS cluster_size,
@@ -666,26 +630,10 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Prefix-filtered exact Jaccard: SAME answer as dedup_ngram_jaccard
-# (so it shares that query's oracle), produced from a candidate space
-# bounded by rare-prefix collisions instead of every shared shingle.
-# ---------------------------------------------------------------------------
-
-
 @register("dedup_prefix_filter_jaccard", oracle=_JACCARD_ORACLE)
 def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return prefix_filter_jaccard_pairs(docs, n=3, threshold=0.6)
-
-
-# ---------------------------------------------------------------------------
-# Semantic dedup (SemDeDup, arXiv:2303.09540): k-means the embedding
-# space, prune near-duplicates within clusters only. Rows-only check
-# (the k-means fit is engine-specific); soundness and recall against
-# the exact cosine operator are asserted in
-# tests/test_dedup_similarity.py.
-# ---------------------------------------------------------------------------
 
 
 # Facts are anchored to engine-independent isolation counts computed
@@ -702,6 +650,8 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the isolation audit stratum, ``vec_id % _SEM_AUDIT_MOD == 0`` on both
 #: engines (the oracle below interpolates it)
 _SEM_AUDIT_MOD = 5
+
+
 _SEMANTIC_CERT_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, embedding FROM embeddings
@@ -745,6 +695,8 @@ ORDER BY item
 #: threshold literals (ADVICE r9 -- the values round-trip bit-exactly
 #: through pandas/Arrow because they are the SAME Python doubles).
 _SEM_AUDIT_T_LOW = 0.45
+
+
 _SEM_AUDIT_T_HIGH = 0.92
 
 
@@ -868,15 +820,6 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, rows, "item string, fact long, ok boolean").orderBy("item")
 
 
-# ---------------------------------------------------------------------------
-# Capstone: the deduplicated corpus itself. Chains the whole near-dup
-# pipeline -- PPJoin candidate pairs -> connected components ->
-# canonical member per cluster -> anti-join the drops out of the
-# corpus. The oracle recomputes everything from scratch (exact
-# Jaccard pairs + recursive-CTE components), so the full chain is
-# hash-checked end to end, not just its stages.
-# ---------------------------------------------------------------------------
-
 _CANONICAL_CORPUS_ORACLE = "WITH RECURSIVE " + NEARDUP_COMPONENTS_CTE + """
 SELECT d.doc_id, d.lang, d.source, d.n_chars
 FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
@@ -913,13 +856,6 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(drops), "doc_id", "left_anti"
     ).select("doc_id", "lang", "source", "n_chars")
 
-
-# ---------------------------------------------------------------------------
-# Incremental admission: dedup a NEW batch against the EXISTING corpus
-# (the daily-crawl shape -- cost scales with the batch, not corpus^2).
-# The batch split is deterministic (doc_id % 8 == 7 plays "today's
-# crawl"), so the whole admit/reject decision is exactly oracled.
-# ---------------------------------------------------------------------------
 
 _INCREMENTAL_ORACLE = """
 WITH sh AS (
@@ -973,3 +909,556 @@ def dedup_incremental_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_jaccard_admission(
         corpus, new_batch, n=3, threshold=0.6
     )
+
+
+_CONTAIN_ORACLE = """
+WITH sh AS (
+  SELECT doc_id AS id,
+         unnest(list_distinct([array_to_string(t[i:i+2], ' ')
+                               for i in range(1, len(t) - 1)])) AS s
+  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
+  WHERE len(t) >= 3
+),
+sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
+inter AS (
+  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
+  FROM sh a JOIN sh b ON a.s = b.s AND a.id < b.id
+  GROUP BY a.id, b.id
+)
+SELECT id_a, id_b,
+       round(n_inter / least(sa.n_sh, sb.n_sh), 4) AS containment
+FROM inter
+JOIN sizes sa ON sa.id = id_a
+JOIN sizes sb ON sb.id = id_b
+WHERE round(n_inter / least(sa.n_sh, sb.n_sh), 4) >= 0.8
+"""
+
+
+# ``dedup_containment_pairs``: asymmetric containment near-dup
+# (catches subset duplication Jaccard misses).
+@register("dedup_containment_pairs", oracle=_CONTAIN_ORACLE)
+def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load(spark, sf_dir, "documents")
+    return containment_pairs(docs, n=3, threshold=0.8)
+
+
+def _canonical_quality_oracle() -> str:
+
+    score = classifier_score_sql("string_split(text, ' ')")
+    return "WITH RECURSIVE " + NEARDUP_COMPONENTS_CTE + f""",
+scored AS (
+  SELECT d.doc_id, coalesce(c.component_id, d.doc_id) AS component,
+         round({score}, 6) AS score
+  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
+)
+SELECT component, cluster_size, doc_id AS keep_doc_id, best_score FROM (
+  SELECT component, doc_id,
+         CAST(count(*) OVER w AS BIGINT) AS cluster_size,
+         max(score) OVER w AS best_score,
+         row_number() OVER (PARTITION BY component
+                            ORDER BY score DESC, doc_id) AS rn
+  FROM scored
+  WINDOW w AS (PARTITION BY component)
+) WHERE rn = 1
+"""
+
+
+@register("dedup_canonical_by_quality", oracle=_canonical_quality_oracle())
+def dedup_canonical_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.components import connected_components
+    from ..operators.dedup import prefix_filter_jaccard_pairs
+
+    docs = load(spark, sf_dir, "documents")
+    pairs = prefix_filter_jaccard_pairs(docs, n=3, threshold=0.6)
+    cc = connected_components(pairs, "id_a", "id_b")
+    scored = (
+        docs.join(cc, docs.doc_id == cc.node, "left")
+        .select(
+            "doc_id",
+            F.coalesce("component", "doc_id").alias("component"),
+            F.round(classifier_score("text"), 6).alias("score"),
+        )
+    )
+    return (
+        scored.groupBy("component")
+        .agg(
+            F.count("*").alias("cluster_size"),
+            F.max_by(
+                "doc_id",
+                F.array(F.col("score"), (-F.col("doc_id")).cast("double")),
+            ).alias("keep_doc_id"),
+            F.max("score").alias("best_score"),
+        )
+    )
+
+
+#: shared between the Spark call site and the oracle f-string (the
+#: _DSIR_B pattern) -- a drifting literal would make DuckDB's list
+#: indexing silently NULL-truncate past the real dimension instead of
+#: erroring
+_SEMDEDUP_K = 8
+
+
+_SEMDEDUP_DIM = 64
+
+
+_SEMDEDUP_PORTABLE_ORACLE = f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+samp AS (
+  SELECT vec_id, v,
+         row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
+             - 1 AS j
+  FROM e QUALIFY j < {_SEMDEDUP_K}
+),
+cent AS (
+  SELECT j, v AS cv,
+         sqrt(list_sum([v[i] * v[i]
+                        for i in range(1, {_SEMDEDUP_DIM + 1})])) AS nrm
+  FROM samp
+),
+assign AS (
+  SELECT e.vec_id, c.j,
+         list_sum([e.v[i] * (c.cv[i] / c.nrm)
+                   for i in range(1, {_SEMDEDUP_DIM + 1})]) AS score
+  FROM e, cent c
+),
+best AS (
+  SELECT vec_id, j AS clabel FROM (
+    SELECT vec_id, j, row_number() OVER (PARTITION BY vec_id
+                                         ORDER BY score DESC, j) AS rn
+    FROM assign
+  ) WHERE rn = 1
+)
+SELECT CAST(clabel AS INT) AS clabel,
+       CAST(count(*) AS BIGINT) AS n_vectors,
+       TRUE AS drops_sound,
+       TRUE AS kept_sample_diverse
+FROM best GROUP BY clabel ORDER BY clabel
+"""
+
+
+@register("dedup_semantic_portable", oracle=_SEMDEDUP_PORTABLE_ORACLE)
+def dedup_semantic_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    from ..functions.vectors import as_double, dot, l2_norm
+    from ..operators.quantize import semantic_dedup
+
+    threshold, eps = 0.92, 1e-9
+    emb = load(spark, sf_dir, "embeddings")
+    dim = len(emb.select("embedding").first()[0])
+    if dim != _SEMDEDUP_DIM:
+        raise ValueError(
+            f"embeddings have dim {dim}; oracle is built for "
+            f"{_SEMDEDUP_DIM} -- update _SEMDEDUP_DIM"
+        )
+    res = semantic_dedup(
+        emb, threshold=threshold, n_clusters=_SEMDEDUP_K, train="portable"
+    ).localCheckpoint(eager=True)
+    # Norms ride each vector ONCE (the norm_side idiom): the two
+    # pairwise certificate scans below would otherwise re-fold both
+    # operand norms per PAIR -- 3x the aggregate-lambda work of the
+    # dot product alone (r10 profile: the cert joins, not the
+    # operator, dominated this query). dot/(na*nb) is the same fold,
+    # same sqrt, same division order as cosine(), so every compared
+    # double is bit-identical.
+    vecs = emb.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        as_double("embedding").alias("v"),
+    ).withColumn("n", l2_norm(F.col("v")))
+
+    kept = res.filter("keep")
+    drops = (
+        res.filter(~F.col("keep"))
+        .select("vec_id", "clabel", "rep_id")
+        .join(vecs, "vec_id")
+        .join(
+            kept.select(F.col("vec_id").alias("rep_id"),
+                        F.col("clabel").alias("rep_clabel")),
+            "rep_id", "left",
+        )
+        .join(vecs.select(F.col("vec_id").alias("rep_id"),
+                          F.col("v").alias("rep_v"),
+                          F.col("n").alias("rep_n")),
+              "rep_id", "left")
+    )
+    drop_cert = drops.groupBy("clabel").agg(
+        F.min(
+            F.col("rep_clabel").isNotNull()
+            & (F.col("rep_clabel") == F.col("clabel"))
+            & (dot(F.col("v"), F.col("rep_v"))
+               / (F.col("n") * F.col("rep_n")) >= threshold - eps)
+        ).alias("drops_sound")
+    )
+
+    capped = (
+        kept.withColumn(
+            "rn", F.row_number().over(
+                Window.partitionBy("clabel").orderBy("vec_id"))
+        )
+        .filter(F.col("rn") <= 300)
+        .join(vecs, "vec_id")
+        .select("clabel", "rn", "v", "n")
+    )
+    pairs = capped.alias("a").join(
+        capped.alias("b"),
+        (F.col("a.clabel") == F.col("b.clabel"))
+        & (F.col("a.rn") < F.col("b.rn")),
+    )
+    diverse_cert = pairs.groupBy(F.col("a.clabel").alias("clabel")).agg(
+        F.min(
+            dot(F.col("a.v"), F.col("b.v"))
+            / (F.col("a.n") * F.col("b.n")) < threshold + eps
+        ).alias("kept_sample_diverse")
+    )
+
+    return (
+        res.groupBy("clabel").agg(F.count("*").alias("n_vectors"))
+        .join(drop_cert, "clabel", "left")
+        .join(diverse_cert, "clabel", "left")
+        .select(
+            "clabel", "n_vectors",
+            F.coalesce("drops_sound", F.lit(True)).alias("drops_sound"),
+            F.coalesce("kept_sample_diverse", F.lit(True))
+            .alias("kept_sample_diverse"),
+        )
+        .orderBy("clabel")
+    )
+
+
+@register("dedup_admission_persisted_index", oracle=_INCREMENTAL_ORACLE)
+def dedup_admission_persisted_index(spark: SparkSession,
+                                    sf_dir: str) -> DataFrame:
+    from ..operators.dedup import (
+        build_shingle_index,
+        incremental_jaccard_admission,
+    )
+    from ..sinks.versioned import VersionedTable
+
+    docs = load(spark, sf_dir, "documents")
+    new_batch = docs.filter(F.col("doc_id") % 8 == 7)
+    corpus = docs.filter(F.col("doc_id") % 8 != 7)
+
+    vt = VersionedTable(spark, scratch_dir("shingle_index", sf_dir))
+    vt.publish(build_shingle_index(corpus, n=3))
+    return incremental_jaccard_admission(
+        None, new_batch, corpus_index=vt.read(), n=3, threshold=0.6,
+    )
+
+
+_URL_STYLES = 4
+
+
+def _url_sql() -> str:
+    """DuckDB twin of the fixture URL synthesis + canonicalization."""
+    return f"""
+WITH raw AS (
+  SELECT doc_id,
+         doc_id % 100 AS page,
+         CAST(floor(doc_id / 100) AS BIGINT) % {_URL_STYLES} AS style
+  FROM documents
+),
+urls AS (
+  SELECT doc_id, page,
+         CASE style
+           WHEN 0 THEN 'http://site' || CAST(page AS VARCHAR)
+                       || '.example.com/p?a=1&b=2'
+           WHEN 1 THEN 'HTTP://SITE' || CAST(page AS VARCHAR)
+                       || '.Example.COM/p?b=2&a=1'
+           WHEN 2 THEN 'http://site' || CAST(page AS VARCHAR)
+                       || '.example.com:80/p?a=1&b=2&utm_source=news'
+           ELSE 'http://site' || CAST(page AS VARCHAR)
+                || '.example.com/p?b=2&a=1#frag'
+         END AS url
+  FROM raw
+),
+canon AS (
+  SELECT doc_id, url,
+         lower(regexp_extract(url, '^([A-Za-z]+)://([^/:?#]+)', 1)) || '://'
+         || lower(regexp_extract(url, '^([A-Za-z]+)://([^/:?#]+)', 2))
+         || regexp_extract(url, '^[A-Za-z]+://[^/:?#]+(:[0-9]+)?([^?#]*)',
+                           2)
+         || CASE WHEN array_to_string(list_sort(list_filter(
+                    string_split(regexp_extract(url, '\\?([^#]*)', 1), '&'),
+                    p -> NOT starts_with(p, 'utm_') AND p <> '')), '&') = ''
+                 THEN ''
+                 ELSE '?' || array_to_string(list_sort(list_filter(
+                    string_split(regexp_extract(url, '\\?([^#]*)', 1), '&'),
+                    p -> NOT starts_with(p, 'utm_') AND p <> '')), '&')
+            END AS curl
+  FROM urls
+)
+SELECT curl AS canonical_url,
+       CAST(count(*) AS BIGINT) AS n_variants,
+       CAST(min(doc_id) AS BIGINT) AS keeper_doc
+FROM canon
+GROUP BY curl
+HAVING count(*) > 1
+ORDER BY canonical_url
+"""
+
+
+@register("dedup_url_canonical", oracle=_url_sql())
+def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canonicalize four surface URL spellings per page and dedup on
+    the canonical form (keep-lowest-doc_id groups with > 1 variant)."""
+    docs = load(spark, sf_dir, "documents")
+    page = (F.col("doc_id") % 100).alias("page")
+    style = (F.floor(F.col("doc_id") / 100) % _URL_STYLES)
+    p = F.col("page").cast("string")
+    url = (
+        F.when(style == 0, F.concat(F.lit("http://site"), p,
+                                    F.lit(".example.com/p?a=1&b=2")))
+        .when(style == 1, F.concat(F.lit("HTTP://SITE"), p,
+                                   F.lit(".Example.COM/p?b=2&a=1")))
+        .when(style == 2, F.concat(
+            F.lit("http://site"), p,
+            F.lit(".example.com:80/p?a=1&b=2&utm_source=news")))
+        .otherwise(F.concat(F.lit("http://site"), p,
+                            F.lit(".example.com/p?b=2&a=1#frag")))
+    )
+    u = F.col("url")
+    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z]+)://([^/:?#]+)", 1))
+    host = F.lower(F.regexp_extract(u, r"^([A-Za-z]+)://([^/:?#]+)", 2))
+    path = F.regexp_extract(u, r"^[A-Za-z]+://[^/:?#]+(:[0-9]+)?([^?#]*)",
+                            2)
+    qsorted = F.array_join(
+        F.array_sort(F.filter(
+            F.split(F.regexp_extract(u, r"\?([^#]*)", 1), "&"),
+            lambda x: (~x.startswith("utm_")) & (x != ""))), "&")
+    curl = F.concat(
+        scheme, F.lit("://"), host, path,
+        F.when(qsorted == "", F.lit(""))
+        .otherwise(F.concat(F.lit("?"), qsorted)),
+    )
+    return (
+        docs.select("doc_id", page).select("doc_id", "page",
+                                           url.alias("url"))
+        .select("doc_id", curl.alias("canonical_url"))
+        .groupBy("canonical_url")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_variants"),
+             F.min("doc_id").cast("long").alias("keeper_doc"))
+        .filter(F.col("n_variants") > 1)
+        .orderBy("canonical_url")
+    )
+
+
+def _recall_eval_oracle() -> str:
+
+    return f"""
+WITH pred AS (SELECT id_a, id_b FROM ({_minhash_portable_oracle()})),
+truth AS (SELECT id_a, id_b FROM ({_JACCARD_ORACLE})),
+tp AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_tp
+  FROM pred p JOIN truth t ON t.id_a = p.id_a AND t.id_b = p.id_b
+),
+np AS (SELECT CAST(count(*) AS BIGINT) AS n_pred FROM pred),
+nt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
+SELECT np.n_pred, nt.n_truth, tp.n_tp,
+       floor(CAST(tp.n_tp AS DOUBLE) / nullif(np.n_pred, 0) * 1e6 + 0.5)
+         / 1e6 AS precision_s,
+       floor(CAST(tp.n_tp AS DOUBLE) / nullif(nt.n_truth, 0) * 1e6 + 0.5)
+         / 1e6 AS recall_s
+FROM np CROSS JOIN nt CROSS JOIN tp
+"""
+
+
+@register("dedup_minhash_recall_eval", oracle=_recall_eval_oracle())
+def dedup_minhash_recall_eval(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """Precision/recall of portable banded-MinHash candidates against
+    exact trigram-Jaccard ground truth, hash-checked end to end."""
+    from ..operators.dedup import minhash_neardup_pairs, ngram_jaccard_pairs
+
+    docs = load(spark, sf_dir, "documents")
+    pred = minhash_neardup_pairs(
+        docs, num_hashes=32, bands=16, est_threshold=0.5,
+        repartition_to=spark.sparkContext.defaultParallelism,
+        hash_fn="portable", est_round=None,
+    ).select("id_a", "id_b")
+    truth = ngram_jaccard_pairs(docs, n=3, threshold=0.6) \
+        .select("id_a", "id_b")
+    np_ = pred.agg(F.count(F.lit(1)).cast("long").alias("n_pred"))
+    nt = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
+    tp = pred.join(truth, ["id_a", "id_b"]).agg(
+        F.count(F.lit(1)).cast("long").alias("n_tp"))
+    return (
+        np_.crossJoin(nt).crossJoin(tp)
+        .select(
+            "n_pred", "n_truth", "n_tp",
+            _snap6(F.col("n_tp").cast("double")
+                   / F.nullif(F.col("n_pred"), F.lit(0)))
+            .alias("precision_s"),
+            _snap6(F.col("n_tp").cast("double")
+                   / F.nullif(F.col("n_truth"), F.lit(0)))
+            .alias("recall_s"),
+        )
+    )
+
+
+_SAVINGS_ORACLE = """
+WITH fps AS (
+  SELECT doc_id, source, length(text) AS chars,
+         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+  FROM documents
+),
+keep AS (SELECT fp, min(doc_id) AS keep_id FROM fps GROUP BY fp)
+SELECT f.source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(CASE WHEN f.doc_id = k.keep_id THEN 0 ELSE 1 END)
+            AS BIGINT) AS n_dupes,
+       CAST(sum(f.chars) AS BIGINT) AS chars_total,
+       CAST(sum(CASE WHEN f.doc_id = k.keep_id THEN 0 ELSE f.chars END)
+            AS BIGINT) AS chars_saved,
+       floor(CAST(sum(CASE WHEN f.doc_id = k.keep_id
+                           THEN 0 ELSE f.chars END) AS DOUBLE)
+             / nullif(sum(f.chars), 0) * 1e6 + 0.5) / 1e6
+         AS saved_share_s
+FROM fps f JOIN keep k ON k.fp = f.fp
+GROUP BY f.source
+ORDER BY f.source
+"""
+
+
+@register("dedup_savings_report", oracle=_SAVINGS_ORACLE)
+def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source exact-duplicate counts and characters saved by the
+    canonical-keep policy, saved share snapped into the hash."""
+    from ..functions.text import fingerprint
+
+    fps = load(spark, sf_dir, "documents").select(
+        "doc_id", "source", F.length("text").alias("chars"),
+        fingerprint("text").alias("fp"),
+    )
+    keep = fps.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
+    dup_chars = F.sum(
+        F.when(F.col("doc_id") == F.col("keep_id"), 0)
+        .otherwise(F.col("chars")))
+    return (
+        fps.join(keep, "fp")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(F.when(F.col("doc_id") == F.col("keep_id"), 0)
+                  .otherwise(1)).cast("long").alias("n_dupes"),
+            F.sum("chars").cast("long").alias("chars_total"),
+            dup_chars.cast("long").alias("chars_saved"),
+            _snap6(dup_chars.cast("double")
+                   / F.nullif(F.sum("chars"), F.lit(0)))
+            .alias("saved_share_s"),
+        )
+        .orderBy("source")
+    )
+
+
+def _transitivity_oracle() -> str:
+
+    return f"""
+WITH pairs AS (SELECT id_a, id_b FROM ({_minhash_portable_oracle()})),
+adj AS (
+  SELECT id_a AS u, id_b AS v FROM pairs
+  UNION ALL
+  SELECT id_b AS u, id_a AS v FROM pairs
+),
+paths AS (
+  SELECT least(a.v, b.v) AS u, a.u AS mid, greatest(a.v, b.v) AS w
+  FROM adj a JOIN adj b ON b.u = a.u AND a.v < b.v
+),
+closed AS (
+  SELECT p.u, p.mid, p.w,
+         CASE WHEN e.id_a IS NULL THEN 0 ELSE 1 END AS ok
+  FROM paths p LEFT JOIN pairs e ON e.id_a = p.u AND e.id_b = p.w
+)
+SELECT (SELECT CAST(count(*) AS BIGINT) FROM pairs) AS n_edges,
+       CAST(count(*) AS BIGINT) AS n_two_paths,
+       CAST(sum(ok) AS BIGINT) AS n_closed,
+       floor(CAST(sum(ok) AS DOUBLE) / nullif(count(*), 0) * 1e6 + 0.5)
+         / 1e6 AS closure_rate_s
+FROM closed
+"""
+
+
+@register("dedup_transitivity_audit", oracle=_transitivity_oracle())
+def dedup_transitivity_audit(spark: SparkSession,
+                             sf_dir: str) -> DataFrame:
+    """Triangle-closure rate of the portable MinHash candidate graph
+    -- the chain-link warning before components collapse clusters."""
+    from ..operators.dedup import minhash_neardup_pairs
+
+    pairs = minhash_neardup_pairs(
+        load(spark, sf_dir, "documents"), num_hashes=32, bands=16,
+        est_threshold=0.5,
+        repartition_to=spark.sparkContext.defaultParallelism,
+        hash_fn="portable", est_round=None,
+    ).select("id_a", "id_b").localCheckpoint(eager=True)
+    adj = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")) \
+        .unionByName(pairs.select(F.col("id_b").alias("u"),
+                                  F.col("id_a").alias("v")))
+    a = adj.select(F.col("u").alias("mid"), F.col("v").alias("x"))
+    b = adj.select(F.col("u").alias("mid2"), F.col("v").alias("y"))
+    paths = (
+        a.join(b, (a.mid == b.mid2) & (F.col("x") < F.col("y")))
+        .select(F.least("x", "y").alias("u"), "mid",
+                F.greatest("x", "y").alias("w"))
+    )
+    closed = paths.join(
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("w"),
+                     F.lit(1).alias("ok")),
+        ["u", "w"], "left",
+    ).select(F.coalesce("ok", F.lit(0)).alias("ok"))
+    n_edges = pairs.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
+    return (
+        closed.agg(
+            F.count(F.lit(1)).cast("long").alias("n_two_paths"),
+            F.sum("ok").cast("long").alias("n_closed"),
+            _snap6(F.sum("ok").cast("double")
+                   / F.nullif(F.count(F.lit(1)), F.lit(0)))
+            .alias("closure_rate_s"),
+        )
+        .crossJoin(F.broadcast(n_edges))
+        .select("n_edges", "n_two_paths", "n_closed", "closure_rate_s")
+    )
+
+
+_MINHASH_CERT_ORACLE = shingle_certificate_oracle(
+    _DOC_TOKENS_SQL, 7, "exact_pairs_j070_present", 9, "estimates_k_over_32")
+
+
+@register("dedup_minhash_lsh_certificate", oracle=_MINHASH_CERT_ORACLE)
+def dedup_minhash_lsh_certificate(spark: SparkSession,
+                                  sf_dir: str) -> DataFrame:
+    """Audit the xxhash64 MinHash-LSH default against the exact
+    integer-Jaccard pair universe: canonical/unique output, every
+    estimate an exact k/32 at or above the 0.5 threshold, and >=90%
+    recall of the exact J>=0.7 pairs on the ``id_a % 3 == 0`` audit
+    stratum (the filter pushes below the shingle self-join, so the
+    exact side is a bounded audit at any scale)."""
+    from ..operators.dedup import minhash_neardup_pairs
+
+    docs = load(spark, sf_dir, "documents")
+
+    # exact stratum universe J >= 0.7 via the shared scaffold (ONE
+    # source with the SimHash/pHash kernel). The discarded _sh/_sizes
+    # do NOT orphan the scaffold's shingle checkpoint: sh feeds three
+    # consumers inside the helper itself (self-join left/right +
+    # sizes), so the materialization pays for itself here too (ADVICE
+    # r9).
+    _sh, _sizes, exact = exact_jaccard_stratum(docs, "text", tenths=7)
+    # est_round=None: unrounded estimates are exact multiples of 1/32
+    # (the portable twin's convention), so the k/32 invariant is an
+    # equality, not a tolerance.
+    lsh = minhash_neardup_pairs(
+        docs, num_hashes=32, bands=16, est_threshold=0.5,
+        repartition_to=spark.sparkContext.defaultParallelism,
+        est_round=None,
+    )
+    k32 = F.col("est_jaccard") * 32
+    est_ok = ((F.abs(k32 - F.round(k32, 0)) == 0)
+              & (F.col("est_jaccard") >= 0.5))
+    # an empty pair set passes vacuously (non-emptiness is gated by
+    # exact_pairs_j070_present -- an audit sample where LSH
+    # legitimately finds nothing must not flag the k/32 invariant)
+    return pair_certificate_facts(
+        spark, exact, lsh, "exact_pairs_j070_present", 9,
+        "estimates_k_over_32",
+        lambda found: found.agg(F.sum(F.when(est_ok, 0).otherwise(1))))

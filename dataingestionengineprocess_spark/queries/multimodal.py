@@ -1,4 +1,4 @@
-"""Multimodal-column surface: opaque binary payloads with typed
+"""Multimodal-column surface (``multimodal_``): opaque binary payloads with typed
 metadata, decode/feature-extract via Arrow-batched mapInPandas.
 
 SURVEY.md mandate [C]: image/audio/video as `binary` columns. The
@@ -18,16 +18,12 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F, SparkSession
 
 from ..catalog import load
+from ..functions.exact import snap6 as _snap6
 from . import register
 
-# ---------------------------------------------------------------------------
-# Binary metadata: size, content hash, magic-byte prefix -- the typed
-# metadata columns a media table carries next to its payload.
-# ---------------------------------------------------------------------------
 
 _BINMETA_ORACLE = """
 SELECT doc_id,
@@ -53,11 +49,6 @@ def multimodal_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Frame sampling: treat the payload as a fixed-stride media container
-# and fan out one row per sampled frame -- pure built-ins, exact oracle.
-# ---------------------------------------------------------------------------
-
 _FRAMES_ORACLE = """
 SELECT doc_id, unnest(range(0, octet_length(encode(text)) // 256)) AS frame_idx,
        unnest(range(0, octet_length(encode(text)) // 256)) * 256 AS byte_offset
@@ -78,21 +69,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("byte_offset", F.col("frame_idx") * 256)
     )
-
-
-# ---------------------------------------------------------------------------
-# Real image decode via mapInPandas.
-#
-# Payloads are REAL binary PGM (P5) images, synthesized JVM-side:
-# width/height derive from doc_id, pixel bytes are the document's
-# utf-8 bytes repeated cyclically to fill width*height (fixture text
-# is pure printable ASCII, so char length == byte length and the
-# oracle can reconstruct every byte with ascii(substring(...))).
-# The decoder is a real parser: it reads dimensions from the P5
-# header (NOT from doc_id) and means the pixel buffer with numpy --
-# swap the synthesis step for `spark.read.format("binaryFile")` and
-# the same kernel decodes real camera files.
-# ---------------------------------------------------------------------------
 
 
 def _pgm_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,25 +215,12 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Real image resize: binary in -> binary out through mapInPandas --
-# the transform-shaped media op (vs. decode's feature-extraction
-# shape). Decodes each PGM, nearest-neighbor resamples the pixel grid
-# to a fixed 8x8 thumbnail, and re-encodes a valid P5 payload.
-#
-# FULL sha256 oracle: every thumbnail byte is reconstructible in SQL.
-# The source pixel at linear index i is text[i % len] (the synthesis
-# rule), and the nearest-neighbor sample takes source (row, col) =
-# (r*h//8, c*w//8), so thumbnail char k (0..63) is
-#   text[ ((k//8 * h // 8) * w + (k%8 * w // 8)) % len ]
-# -- the oracle rebuilds header + 64 sampled chars and sha256s the
-# identical byte string, hash-checking decode, resample grid, AND
-# re-encode. pytest additionally verifies the output re-decodes to
-# 8x8 with a true grid sample of the source.
-# ---------------------------------------------------------------------------
-
 _THUMB = 8
+
+
 _THUMB_HEADER = f"P5\n{_THUMB} {_THUMB}\n255\n".encode()
+
+
 _TARGET_BYTES = len(_THUMB_HEADER) + _THUMB * _THUMB
 
 
@@ -335,19 +298,6 @@ def multimodal_resize_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-
-
-# ---------------------------------------------------------------------------
-# Perceptual-hash near-dup over binary payloads: the image-dedup shape.
-# A real deployment computes pHash/aHash per image inside the decode
-# UDF; this container has no image codecs, so the DETERMINISTIC STUB
-# hashes fixed-size payload blocks instead (same locality property:
-# payloads differing in a few blocks land within a small hamming
-# distance). Everything downstream of the hash -- the 64-bit signature,
-# the 4x16-bit pigeonhole chunk join, the hamming verification -- is
-# the production plan: candidates meet in one shuffle on chunk value,
-# never an all-pairs comparison.
-# ---------------------------------------------------------------------------
 
 
 def _payload_blocks(docs: DataFrame) -> DataFrame:
@@ -432,20 +382,6 @@ def multimodal_phash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         repartition_to=spark.sparkContext.defaultParallelism,
         hash_fn="portable",
     ).orderBy("id_a", "id_b")
-
-
-# ---------------------------------------------------------------------------
-# Real audio decode via mapInPandas: the third modality (image = PGM
-# decode/resize above, video = frame sampling, audio = here).
-#
-# Payloads are REAL RIFF/WAVE files (PCM16 mono 8 kHz), synthesized
-# JVM-side: sample i = (ascii(text[i mod len]) - 77) * 256, so the
-# fixture text IS the waveform and the DuckDB oracle can reconstruct
-# every sample. The kernel is a real container parser: it walks RIFF
-# chunks, reads the format from the fmt chunk (NOT from the synthesis
-# rule), and computes waveform features with numpy -- point the same
-# kernel at `binaryFile`-loaded studio WAVs and it just works.
-# ---------------------------------------------------------------------------
 
 
 def _le_hex(expr: str, n_bytes: int) -> str:
@@ -591,22 +527,6 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-
-
-# ---------------------------------------------------------------------------
-# Real video decode via mapInPandas: the modality triad completed with
-# a true container walk (image = PGM above, audio = WAV above, video =
-# here). Payloads are REAL YUV4MPEG2 (y4m) streams, mono colorspace
-# (one luma plane per frame -- mpv/ffmpeg-playable), synthesized
-# JVM-side: frame f's pixels are the document's bytes cyclically
-# shifted by 7*f, and the SECOND HALF of the frames switch to
-# upper(text) -- a genuine "scene change" whose luma step the decoder
-# must find. The kernel is a real parser: it reads W/H/C from the
-# stream header and walks FRAME markers (never the synthesis rule);
-# temporal downsampling (even frames) and the scene-cut detector run
-# on exact integer luma sums, so the DuckDB oracle reproduces every
-# value from the text alone.
-# ---------------------------------------------------------------------------
 
 
 def _y4m_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,27 +679,6 @@ def multimodal_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Real audio resample: WAV in -> WAV out through mapInPandas (the
-# transform-shaped audio op next to the feature-extraction decode
-# above, mirroring image decode/resize). Decodes the 8 kHz PCM16
-# payload, decimates by 2 with pairwise integer averaging
-# (floor((s0+s1)/2) -- the simplest anti-aliased downsample), and
-# re-encodes a VALID 4 kHz RIFF/WAVE file. The oracle's average uses
-# explicit floor((a+b)/2.0) to match the kernel's np.floor_divide by
-# CONSTRUCTION rather than by luck: DuckDB's integer `//` truncates
-# toward zero, which only agrees with floor here because synthesized
-# pair sums are multiples of 256 (always even) -- floor() keeps the
-# oracle correct if the synthesis rule ever produces an odd negative
-# sum (exact float division is safe: sums are bounded by 2^17).
-# FULL oracle: every output
-# byte derives from the text synthesis rule, so DuckDB rebuilds the
-# entire resampled container (header + little-endian samples) as a
-# hex string and sha256-compares it (DuckDB's sha256 is
-# VARCHAR-only, so both engines hash the lowercase-hex encoding --
-# hex is injective, the certificate is equally strong).
-# ---------------------------------------------------------------------------
-
 _RESAMPLE_AUDIO_ORACLE = """
 WITH m AS (
   SELECT doc_id, text, 64 + doc_id % 128 AS n, length(text) AS len
@@ -879,26 +778,6 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Per-image pixel histogram statistics -- the screening pass an image
-# curation pipeline runs before any model sees a byte (flat/blank
-# frames, low-dynamic-range captures, single-color padding). The
-# kernel REALLY decodes each PGM (shared _decode_pgm parser) and
-# reduces the pixel array to integers only: 4 brightness-quartile bin
-# counts, distinct-value count, and the modal pixel value (ties to
-# the lowest value -- np.argmax's first-index rule, mirrored by the
-# oracle's (count desc, value asc) rank). The fixture pixels are the
-# document's text bytes tiled to w*h, so DuckDB reproduces every
-# count from character frequencies: per 1-based char position i,
-# multiplicity = reps+1 if i <= rem else reps (reps = n_pixels //
-# len, rem = n_pixels % len). Integer-exact end to end.
-#
-# Scale: mapInPandas decode is embarrassingly parallel (one Arrow
-# batch of binaries per task, no shuffle); the histogram reduce
-# happens inside the kernel, so the exchanged rows are 8 integers per
-# image regardless of resolution.
-# ---------------------------------------------------------------------------
-
 _PIXHIST_ORACLE = """
 WITH m AS (
   SELECT doc_id, text,
@@ -976,6 +855,114 @@ def multimodal_pixel_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="doc_id long, bin0 long, bin1 long, bin2 long, "
                    "bin3 long, n_distinct_vals long, modal_val long, "
                    "modal_n long",
+        )
+        .orderBy("doc_id")
+    )
+
+
+_SILENCE_T = 6400  # |sample| below this is silence (chars within 25
+
+
+_SILENCE_ORACLE = f"""
+WITH m AS (
+  SELECT doc_id, text, 64 + doc_id % 128 AS n, length(text) AS len
+  FROM documents
+),
+v AS (
+  SELECT doc_id, n,
+         list_transform(range(0, n),
+                        i -> (ascii(substring(text, (i % len) + 1, 1))
+                              - 77) * 256) AS s
+  FROM m
+),
+x AS (
+  SELECT doc_id, n, unnest(range(0, n)) AS idx, s FROM v
+),
+f AS (
+  SELECT doc_id, n, idx,
+         CASE WHEN abs(s[idx + 1]) < {_SILENCE_T} THEN 1 ELSE 0 END
+           AS silent
+  FROM x
+),
+runs AS (
+  SELECT doc_id, n, idx, silent,
+         CASE WHEN silent = 1 AND coalesce(lag(silent) OVER (
+              PARTITION BY doc_id ORDER BY idx), 0) = 0
+              THEN 1 ELSE 0 END AS run_start
+  FROM f
+),
+islands AS (
+  SELECT doc_id, count(*) AS run_len
+  FROM (
+    SELECT doc_id, idx,
+           idx - row_number() OVER (PARTITION BY doc_id ORDER BY idx)
+             AS grp
+    FROM runs WHERE silent = 1
+  ) GROUP BY doc_id, grp
+),
+agg AS (
+  SELECT r.doc_id, max(r.n) AS n,
+         CAST(sum(r.silent) AS BIGINT) AS n_silent,
+         CAST(sum(r.run_start) AS BIGINT) AS n_segments
+  FROM runs r GROUP BY r.doc_id
+)
+SELECT a.doc_id,
+       CAST(a.n AS BIGINT) AS n_samples,
+       a.n_silent, a.n_segments,
+       CAST(coalesce((SELECT max(run_len) FROM islands i
+                      WHERE i.doc_id = a.doc_id), 0) AS BIGINT)
+         AS longest_run,
+       floor(CAST(a.n_silent AS DOUBLE) / a.n * 1e6 + 0.5) / 1e6
+         AS silence_ratio_s
+FROM agg a
+ORDER BY a.doc_id
+"""
+
+
+@register("multimodal_audio_silence", oracle=_SILENCE_ORACLE)
+def multimodal_audio_silence(spark: SparkSession,
+                             sf_dir: str) -> DataFrame:
+    """Silent-segment stats per REAL decoded WAV payload: segment
+    count, longest run, snapped silence ratio."""
+    import pandas as pd
+
+
+    wavs = _wav_payloads(spark, sf_dir)
+
+    def seg_batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import numpy as np
+
+        for pdf in it:
+            out = {"doc_id": pdf["doc_id"], "n_samples": [],
+                   "n_silent": [], "n_segments": [], "longest_run": []}
+            for p in pdf["payload"]:
+                _rate, _bits, s = _decode_wav(bytes(p))
+                silent = (np.abs(s) < _SILENCE_T).astype(np.int8)
+                out["n_samples"].append(len(s))
+                out["n_silent"].append(int(silent.sum()))
+                if silent.any():
+                    # run-length over the 0/1 mask via change points
+                    d = np.diff(np.concatenate(([0], silent, [0])))
+                    starts = np.flatnonzero(d == 1)
+                    ends = np.flatnonzero(d == -1)
+                    out["n_segments"].append(len(starts))
+                    out["longest_run"].append(int((ends - starts).max()))
+                else:
+                    out["n_segments"].append(0)
+                    out["longest_run"].append(0)
+            yield pd.DataFrame(out)
+
+    return (
+        wavs.mapInPandas(
+            seg_batches,
+            schema="doc_id long, n_samples long, n_silent long, "
+                   "n_segments long, longest_run long",
+        )
+        .select(
+            "doc_id", "n_samples", "n_silent", "n_segments",
+            "longest_run",
+            _snap6(F.col("n_silent").cast("double") / F.col("n_samples"))
+            .alias("silence_ratio_s"),
         )
         .orderBy("doc_id")
     )

@@ -1,111 +1,31 @@
-"""Text-analysis query surface over ``documents``.
+"""Text-analysis query surface (``text_``) over ``documents``.
 
 SURVEY.md §2.7 [C]: token counting, quality scoring, language ID,
-document fingerprinting, TF-IDF. All JVM-side built-ins; the TF-IDF
-is fully relational (explode -> agg -> join) rather than MLlib, so it
-has an exact SQL oracle and scales as ordinary shuffles.
+document fingerprinting, TF-IDF and BM25 retrieval, BPE training and
+encoding, n-gram language models and vocabulary statistics. All
+JVM-side built-ins; TF-IDF-style statistics are fully relational
+(explode -> agg -> join) rather than MLlib, so they have exact SQL
+oracles and scale as ordinary shuffles.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
-from pyspark.sql import functions as F
+from pyspark.sql import (
+    DataFrame, functions as F, SparkSession, Window, Window as W,
+)
 
 from ..catalog import load
+from ..functions.exact import q6, q6 as _q6, snap6, snap6 as _snap6
 from ..functions.text import (
-    md5_bucket,
-    LANG_MARKERS,
-    STOPWORDS,
-    avg_token_len,
-    fingerprint,
-    lang_id,
-    quality_score,
-    token_count,
-    tokens,
+    avg_token_len, fingerprint, lang_id, quality_score, shingles, STOPWORDS,
+    token_count, tokens,
 )
-from . import register
+from ..operators.skew import spread_input
 from ..session import local_frame
+from . import register
+from .curation import repetition_stats
+from .quality import _LEXICON_VALUES, classifier_score, classifier_score_sql
 
-_SW_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
-
-# ---------------------------------------------------------------------------
-# Token statistics.
-# ---------------------------------------------------------------------------
-
-_TOKEN_ORACLE = f"""
-SELECT doc_id, lang,
-       len(string_split(text, ' '))                        AS n_tokens,
-       len(list_distinct(string_split(text, ' ')))         AS n_distinct,
-       round(list_sum(list_transform(string_split(text, ' '),
-                                     t -> CAST(len(t) AS DOUBLE)))
-             / len(string_split(text, ' ')), 6)            AS avg_tok_len,
-       CAST(len(list_filter(string_split(text, ' '),
-                            t -> t IN ({_SW_SQL}))) AS BIGINT) AS n_stopwords,
-       CAST(length(text) AS BIGINT)                        AS n_chars_actual
-FROM documents
-"""
-
-
-@register("text_token_stats", oracle=_TOKEN_ORACLE)
-def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = tokens("text")
-    return (
-        load(spark, sf_dir, "documents")
-        .select(
-            "doc_id", "lang",
-            token_count("text").alias("n_tokens"),
-            F.size(F.array_distinct(toks)).cast("long").alias("n_distinct"),
-            F.round(avg_token_len("text"), 6).alias("avg_tok_len"),
-            F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-            .cast("long").alias("n_stopwords"),
-            F.length("text").cast("long").alias("n_chars_actual"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Quality scoring (deterministic formula, see functions.text).
-# ---------------------------------------------------------------------------
-
-_QUALITY_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, lang, source,
-         len(string_split(text, ' ')) AS n,
-         len(list_filter(string_split(text, ' '), t -> t IN ({_SW_SQL})))
-             / len(string_split(text, ' ')) AS sw,
-         list_sum(list_transform(string_split(text, ' '),
-                                 t -> CAST(len(t) AS DOUBLE)))
-             / len(string_split(text, ' ')) AS alen
-  FROM documents
-)
-SELECT doc_id, lang, source,
-       round(0.4 * least(n / 50.0, 1.0)
-             + 0.3 * (1.0 - abs(sw - 0.10) / 0.9)
-             + 0.3 * (1.0 - least(abs(alen - 5.0) / 5.0, 1.0)), 6) AS quality
-FROM t
-"""
-
-
-@register("text_quality_score", oracle=_QUALITY_ORACLE)
-def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "documents")
-        .select(
-            "doc_id", "lang", "source",
-            F.round(quality_score("text"), 6).alias("quality"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Language-ID heuristic: argmax of marker-lexicon hits, 'und' on zero.
-# Oracle generated from the SAME lexicon dict so they cannot drift.
-# ---------------------------------------------------------------------------
-
-_LEXICON_VALUES = ", ".join(
-    "('{}', [{}])".format(code, ", ".join(f"'{w}'" for w in words))
-    for code, words in sorted(LANG_MARKERS.items())
-)
 
 _LANGID_ORACLE = f"""
 WITH t AS (
@@ -137,10 +57,6 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Content fingerprint (md5 of normalized text; exact in both engines).
-# ---------------------------------------------------------------------------
-
 _FP_ORACLE = """
 SELECT doc_id,
        md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
@@ -157,16 +73,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", fp.alias("fp"), F.substring(fp, 1, 8).alias("fp_prefix"))
     )
 
-
-# ---------------------------------------------------------------------------
-# Rolling-hash fingerprint -- ORACLE-BACKED audit (VERDICT r7 #5): the
-# fingerprint VALUES are engine-native (xxhash64 token hashes), but the
-# property that makes the hash useful -- equal texts <=> equal
-# fingerprints over the whole corpus -- is engine-independent: both
-# engines agree on the distinct-text count, and the Spark side checks
-# the fingerprint map is a bijection onto it (the sf0.1 fixture has 8
-# duplicated texts, so the <= direction has real bite).
-# ---------------------------------------------------------------------------
 
 _ROLLING_HASH_CERT_ORACLE = """
 WITH f AS (
@@ -217,11 +123,6 @@ def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, rows, "item string, fact long, ok boolean").orderBy("item")
 
 
-# ---------------------------------------------------------------------------
-# Relational TF-IDF: top-3 terms per document.
-# idf = ln((N + 1) / (df + 1)) + 1 over raw term counts.
-# ---------------------------------------------------------------------------
-
 _TFIDF_ORACLE = """
 WITH term AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
@@ -267,85 +168,6 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# End-to-end corpus curation: the LLM-training-data pipeline composed as
-# ONE declarative plan -- quality gate -> exact dedup (keep smallest id
-# per content fingerprint) -> per-(lang, source) corpus stats. Catalyst
-# fuses the score/filter into the scan projection; the only shuffles are
-# the dedup window partition and the final (tiny) group-by.
-# Filter boundaries compare ROUNDED quality so both engines make
-# identical keep/drop decisions at the threshold.
-# ---------------------------------------------------------------------------
-
-_CURATION_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, lang, source, text,
-         len(string_split(text, ' ')) AS n,
-         len(list_filter(string_split(text, ' '), t -> t IN ({_SW_SQL})))
-             / len(string_split(text, ' ')) AS sw,
-         list_sum(list_transform(string_split(text, ' '),
-                                 t -> CAST(len(t) AS DOUBLE)))
-             / len(string_split(text, ' ')) AS alen
-  FROM documents
-),
-scored AS (
-  SELECT doc_id, lang, source, text, CAST(n AS BIGINT) AS n_tokens,
-         round(0.4 * least(n / 50.0, 1.0)
-               + 0.3 * (1.0 - abs(sw - 0.10) / 0.9)
-               + 0.3 * (1.0 - least(abs(alen - 5.0) / 5.0, 1.0)), 6) AS quality
-  FROM t
-),
-deduped AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-    ORDER BY doc_id) AS rn
-  FROM scored
-  WHERE quality >= 0.5 AND n_tokens >= 10
-)
-SELECT lang, source,
-       count(*) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-       round(avg(quality), 4) AS avg_quality
-FROM deduped
-WHERE rn = 1
-GROUP BY lang, source
-ORDER BY lang, source
-"""
-
-
-@register("text_corpus_curation", oracle=_CURATION_ORACLE)
-def text_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    scored = (
-        load(spark, sf_dir, "documents")
-        .select(
-            "doc_id", "lang", "source", "text",
-            token_count("text").alias("n_tokens"),
-            F.round(quality_score("text"), 6).alias("quality"),
-        )
-        .filter((F.col("quality") >= 0.5) & (F.col("n_tokens") >= 10))
-    )
-    w = Window.partitionBy(fingerprint("text")).orderBy("doc_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy("lang", "source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.round(F.avg("quality"), 4).alias("avg_quality"),
-        )
-        .orderBy("lang", "source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Token-length histogram: fixed-width buckets over per-doc token counts
-# -- the corpus length profile every data-mix decision starts from.
-# Single scan, two-phase agg on a low-cardinality bucket key.
-# ---------------------------------------------------------------------------
-
 _LENGTH_HIST_ORACLE = """
 SELECT CAST(floor(len(string_split(text, ' ')) / 25) * 25 AS BIGINT) AS bucket_lo,
        count(*) AS n_docs,
@@ -367,95 +189,6 @@ def text_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("bucket_lo")
     )
 
-
-# ---------------------------------------------------------------------------
-# Deterministic stratified corpus sampling (operators/sampling.py):
-# downsample the dominant strata, keep the rare ones whole. The
-# sampled SET depends on the engine hash (xxhash64), but the sampling
-# CONTRACT is engine-independent and now ORACLE-BACKED (VERDICT r7
-# #5): per-stratum universe sizes and target rates are hash-checked
-# facts, default-rate strata must be kept EXACTLY whole, and hashed
-# strata must land within +-0.15 of their target rate (measured max
-# deviation 0.12, de at sf0.001 -- the hash is a pure function, so
-# the realized rates are fixed properties of the fixture).
-# ---------------------------------------------------------------------------
-
-_STRAT_SAMPLE_FRACTIONS = {"en": 0.25, "de": 0.5, "fr": 0.5, "es": 0.5}
-
-_STRAT_SAMPLE_CERT_ORACLE = """
-SELECT lang,
-       CAST(count(*) AS BIGINT) AS n_total,
-       CAST(CASE lang WHEN 'en' THEN 0.25 WHEN 'de' THEN 0.5
-                      WHEN 'fr' THEN 0.5 WHEN 'es' THEN 0.5
-                      ELSE 1.0 END AS DOUBLE) AS target_rate,
-       TRUE AS ok
-FROM documents GROUP BY lang ORDER BY lang NULLS FIRST
-"""
-# NULLS FIRST matches Spark's ascending-sort NULL placement: a fixture
-# generation with a NULL-lang stratum (real per the null-safe join
-# below) would otherwise hash-mismatch on row order alone -- the same
-# engine-default trap ADVICE r5 documented for grouped_percent_cume.
-
-
-@register("sample_stratified_corpus", oracle=_STRAT_SAMPLE_CERT_ORACLE)
-def sample_stratified_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language stratified sample via xxhash64 bucket filter --
-    the deployable scan-speed sampler, audited as a certificate: one
-    row per stratum with its (engine-independent) universe size and
-    target rate, plus a rate-tolerance boolean -- exact equality for
-    keep-whole strata, +-0.15 absolute for hashed ones.
-    `sample_md5_stratified` hash-checks the same policy keyed on md5
-    row-for-row; the sampled-row surface stays available via
-    `stratified_hash_sample`."""
-    from ..operators.sampling import stratified_hash_sample
-
-    docs = load(spark, sf_dir, "documents")
-    sampled = stratified_hash_sample(
-        docs, "lang", _STRAT_SAMPLE_FRACTIONS,
-        key_cols=["doc_id"], default_fraction=1.0,
-    )
-    totals = docs.groupBy("lang").agg(F.count("*").alias("n_total"))
-    # null-safe join: a NULL-lang stratum groups on both sides but a
-    # plain equi-join would never match it, reporting n_sampled = 0
-    # for rows the default_fraction=1.0 policy actually kept
-    counts = (
-        sampled.groupBy(F.col("lang").alias("s_lang"))
-        .agg(F.count("*").alias("n_sampled"))
-    )
-    target = F.coalesce(
-        *[F.when(F.col("lang") == s, F.lit(f))
-          for s, f in sorted(_STRAT_SAMPLE_FRACTIONS.items())],
-        F.lit(1.0),
-    )
-    return (
-        totals.join(counts,
-                    F.col("lang").eqNullSafe(F.col("s_lang")), "left")
-        .drop("s_lang")
-        .withColumn("n_sampled", F.coalesce(F.col("n_sampled"), F.lit(0)))
-        .withColumn("target_rate", target)
-        .select(
-            "lang",
-            "n_total",
-            "target_rate",
-            F.when(F.col("target_rate") == 1.0,
-                   F.col("n_sampled") == F.col("n_total"))
-            .otherwise(
-                F.abs(F.col("n_sampled") / F.col("n_total")
-                      - F.col("target_rate")) <= 0.15)
-            .alias("ok"),
-        )
-        .orderBy("lang")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Bigram-fluency score: mean corpus frequency of a document's bigrams --
-# the cheap n-gram-LM proxy for "does this text look like the corpus"
-# used in pretraining-data quality gates. Two shuffles total (bigram
-# count, per-doc re-agg); the frequency join is a plain equi-join AQE
-# can skew-split if boilerplate bigrams dominate. Integer sums keep the
-# oracle comparison exact; the final double division is bit-identical.
-# ---------------------------------------------------------------------------
 
 _BIGRAM_FLUENCY_ORACLE = """
 WITH bg AS (
@@ -506,16 +239,8 @@ def text_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# BPE-ish subword token estimate (SURVEY.md §2.7 [C]: "token counting
-# (whitespace + a BPE-ish regex)"). Real BPE needs a merges table; the
-# standard estimator segments text into regex pieces the way BPE
-# pre-tokenizers do. The piece classes (vowel runs / non-vowel runs)
-# are DISJOINT, so the decomposition is unambiguous and identical
-# under Java regex (Spark) and RE2 (DuckDB) match orders.
-# ---------------------------------------------------------------------------
-
 _PIECE_RE = "[aeiou]+|[^aeiou ]+"
+
 
 _BPE_ORACLE = f"""
 SELECT doc_id,
@@ -546,30 +271,6 @@ def text_bpe_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.length("text") / F.size(pieces), 4)
         .alias("chars_per_piece"),
     )
-
-
-# ---------------------------------------------------------------------------
-# BPE train/encode certificates (VERDICT r9 #4: the last two rows-only
-# registry entries, converted IN PLACE to oracle-backed certificates
-# following the round-8 recipe). The merge LOOP is not replayable in
-# one SQL statement, but its first TWO rounds are: DuckDB recomputes
-# the round-0 weighted pair argmax, APPLIES that merge to every word's
-# symbol sequence with a recursive left-to-right fold (the exact
-# non-overlapping greedy rewrite of `operators/bpe._merge_expr`), and
-# recomputes the round-1 argmax -- so the certificate pins the
-# counting, the tie-break AND the rewrite semantics on real data,
-# strictly more than `text_bpe_train_certificate`'s first-merge-only
-# replay. Trainer-vs-pure-Python equality for the FULL chain remains
-# pytest-pinned (tests/test_round4.py / test_curation.py).
-# Oracle notes: no '--' comments in oracle strings (register()
-# collapses SQL onto one line); the fold CTE is recursive, each step
-# advances one input position for EVERY word in parallel (depth = max
-# word length + 1, ~9 on the fixtures) and a word leaves the
-# recursion when i = len(s) + 1 (rows at smaller i are intermediate
-# states the final SELECT filters out). An empty merge-1 CTE empties
-# the fold's base term, so no-merge corpora yield NULL second-merge
-# fields and ok=FALSE on BOTH engines symmetrically.
-# ---------------------------------------------------------------------------
 
 
 def _bpe_fold_cte(src_seq: str, src_merge: str, out: str) -> str:
@@ -623,6 +324,7 @@ p2 AS (
 m2 AS (SELECT l, r, c FROM p2 WHERE c >= 2 ORDER BY c DESC, l, r LIMIT 1)
 """
 
+
 _BPE_TRAIN_CERT_ORACLE = "WITH RECURSIVE " + _BPE_TWO_MERGE_CTES + """,
 np0 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM p1 WHERE c >= 2)
 SELECT 'chain_wellformed' AS item, CAST(NULL AS VARCHAR) AS left_sym,
@@ -662,7 +364,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = bpe_train_merges(docs, num_merges=24).orderBy("rank").collect()
 
     # base symbol universe: every character of every non-empty token
-    # (same derivation as text_bpe_train_certificate, round4.py)
+    # (same derivation as text_bpe_train_certificate)
     words = (
         docs.select(F.explode(tokens("text")).alias("w"))
         .filter(F.col("w") != "")
@@ -722,6 +424,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: rises so the replayed slice stays a fixed budget (the oracle below
 #: hardcodes the default, like every other certificate stratum).
 _BPE_SAMPLE_MOD = 10
+
 
 _BPE_ENCODE_CERT_ORACLE = ("WITH RECURSIVE " + _BPE_TWO_MERGE_CTES + ","
                            + _bpe_fold_cte("seq1", "m2", "seq2")) + f""",
@@ -828,14 +531,6 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, rows, "item string, fact long, ok boolean").orderBy("item")
 
 
-# ---------------------------------------------------------------------------
-# Exact heavy-hitter tokens via the two-pass Misra-Gries shape: bounded-
-# memory per-partition sketches nominate candidates, an exact recount
-# over the candidate-filtered stream keeps the true >= phi*N items --
-# output is exact (oracle-checkable) while the full token domain never
-# shuffles (operators/heavyhitters.py).
-# ---------------------------------------------------------------------------
-
 _HH_ORACLE = """
 WITH toks AS (
   SELECT unnest(string_split(text, ' ')) AS item FROM documents
@@ -857,50 +552,6 @@ def text_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(F.explode(tokens("text")).alias("token"))
     return heavy_hitters(toks, "token", phi=0.005)
 
-
-# ---------------------------------------------------------------------------
-# Portable-hash deterministic stratified sample: the same downsampling
-# policy as `sample_stratified_corpus`, keyed on md5 instead of
-# xxhash64 -- md5 exists in BOTH engines, so the sampled doc SET
-# itself is exactly oracled (not just its per-stratum counts). The
-# engine's production sampler stays xxhash64 (faster, codegen'd);
-# this query proves the membership rule end to end.
-# ---------------------------------------------------------------------------
-
-_MD5_SAMPLE_ORACLE = """
-WITH b AS (
-  SELECT doc_id, lang,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6)
-              AS BIGINT) % 1000 AS bucket
-  FROM documents
-)
-SELECT doc_id, lang, bucket
-FROM b
-WHERE bucket < CASE lang WHEN 'en' THEN 250 ELSE 500 END
-"""
-
-
-@register("sample_md5_stratified", oracle=_MD5_SAMPLE_ORACLE)
-def sample_md5_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    bucket = md5_bucket(F.col("doc_id").cast("string"), 1000)
-    cut = F.when(F.col("lang") == "en", 250).otherwise(500)
-    return (
-        docs.select("doc_id", "lang", bucket.alias("bucket"))
-        .filter(F.col("bucket") < cut)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Tokenizer fertility by language: subword pieces per whitespace word,
-# the number a multilingual curation run watches per language (a lang
-# whose fertility is 2x the corpus mean is paying double its token
-# budget for the same text). Ratio of two EXACT integer sums, so the
-# only float op is one division -- floor-rounded identically in both
-# engines (FIXTURES.md round-trip rule).
-# Scale: one map-side-partial groupBy over the scan; output is
-# #languages rows.
-# ---------------------------------------------------------------------------
 
 _FERTILITY_ORACLE = f"""
 SELECT lang,
@@ -934,20 +585,6 @@ def text_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-# ---------------------------------------------------------------------------
-# Unigram-LM document scoring: avg log-probability of a document's
-# tokens under the corpus's own unigram distribution -- the cheapest
-# perplexity-style quality signal (gibberish and off-distribution
-# boilerplate score far below fluent text). The per-doc sum of logs is
-# float-order-SENSITIVE, so it is folded in DOCUMENT ORDER on both
-# sides: Spark sorts the per-doc (pos, logp) structs and left-folds;
-# DuckDB list_sum's an ORDER BY pos list -- bit-identical
-# accumulation, then one floor-rounded division.
-# Scale: vocab is Zipf-bounded (broadcast), the corpus-side join is
-# map-side; the one wide stage is the per-doc aggregate keyed by the
-# uniform doc_id.
-# ---------------------------------------------------------------------------
 
 _UNIGRAM_LOGPROB_ORACLE = """
 WITH tok AS (
@@ -1000,16 +637,6 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Portable rolling-hash fingerprint: the same polynomial fold as
-# `text_rolling_hash` with the per-token hash drawn from md5 hex (5
-# hex digits < 2^20) instead of xxhash64, so the WHOLE fold is pure
-# portable integer arithmetic and the DuckDB oracle replays it with
-# list_reduce. Per-step modulus keeps acc*31 inside int64 on both
-# engines (ANSI-safe); pytest keeps asserting the equal-text <=>
-# equal-fingerprint property on the xxhash default.
-# ---------------------------------------------------------------------------
-
 _ROLLING_PORTABLE_ORACLE = f"""
 SELECT doc_id,
        list_reduce(
@@ -1038,4 +665,1585 @@ def text_rolling_hash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents")
         .select("doc_id", rolling.alias("rolling_fp"))
         .orderBy("doc_id")
+    )
+
+
+_SW_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
+
+
+_TOKEN_ORACLE = f"""
+SELECT doc_id, lang,
+       len(string_split(text, ' '))                        AS n_tokens,
+       len(list_distinct(string_split(text, ' ')))         AS n_distinct,
+       round(list_sum(list_transform(string_split(text, ' '),
+                                     t -> CAST(len(t) AS DOUBLE)))
+             / len(string_split(text, ' ')), 6)            AS avg_tok_len,
+       CAST(len(list_filter(string_split(text, ' '),
+                            t -> t IN ({_SW_SQL}))) AS BIGINT) AS n_stopwords,
+       CAST(length(text) AS BIGINT)                        AS n_chars_actual
+FROM documents
+"""
+
+
+@register("text_token_stats", oracle=_TOKEN_ORACLE)
+def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    toks = tokens("text")
+    return (
+        load(spark, sf_dir, "documents")
+        .select(
+            "doc_id", "lang",
+            token_count("text").alias("n_tokens"),
+            F.size(F.array_distinct(toks)).cast("long").alias("n_distinct"),
+            F.round(avg_token_len("text"), 6).alias("avg_tok_len"),
+            F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
+            .cast("long").alias("n_stopwords"),
+            F.length("text").cast("long").alias("n_chars_actual"),
+        )
+    )
+
+
+_QUALITY_ORACLE = f"""
+WITH t AS (
+  SELECT doc_id, lang, source,
+         len(string_split(text, ' ')) AS n,
+         len(list_filter(string_split(text, ' '), t -> t IN ({_SW_SQL})))
+             / len(string_split(text, ' ')) AS sw,
+         list_sum(list_transform(string_split(text, ' '),
+                                 t -> CAST(len(t) AS DOUBLE)))
+             / len(string_split(text, ' ')) AS alen
+  FROM documents
+)
+SELECT doc_id, lang, source,
+       round(0.4 * least(n / 50.0, 1.0)
+             + 0.3 * (1.0 - abs(sw - 0.10) / 0.9)
+             + 0.3 * (1.0 - least(abs(alen - 5.0) / 5.0, 1.0)), 6) AS quality
+FROM t
+"""
+
+
+@register("text_quality_score", oracle=_QUALITY_ORACLE)
+def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        load(spark, sf_dir, "documents")
+        .select(
+            "doc_id", "lang", "source",
+            F.round(quality_score("text"), 6).alias("quality"),
+        )
+    )
+
+
+_CURATION_ORACLE = f"""
+WITH t AS (
+  SELECT doc_id, lang, source, text,
+         len(string_split(text, ' ')) AS n,
+         len(list_filter(string_split(text, ' '), t -> t IN ({_SW_SQL})))
+             / len(string_split(text, ' ')) AS sw,
+         list_sum(list_transform(string_split(text, ' '),
+                                 t -> CAST(len(t) AS DOUBLE)))
+             / len(string_split(text, ' ')) AS alen
+  FROM documents
+),
+scored AS (
+  SELECT doc_id, lang, source, text, CAST(n AS BIGINT) AS n_tokens,
+         round(0.4 * least(n / 50.0, 1.0)
+               + 0.3 * (1.0 - abs(sw - 0.10) / 0.9)
+               + 0.3 * (1.0 - least(abs(alen - 5.0) / 5.0, 1.0)), 6) AS quality
+  FROM t
+),
+deduped AS (
+  SELECT *, row_number() OVER (
+    PARTITION BY md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
+    ORDER BY doc_id) AS rn
+  FROM scored
+  WHERE quality >= 0.5 AND n_tokens >= 10
+)
+SELECT lang, source,
+       count(*) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+       round(avg(quality), 4) AS avg_quality
+FROM deduped
+WHERE rn = 1
+GROUP BY lang, source
+ORDER BY lang, source
+"""
+
+
+@register("text_corpus_curation", oracle=_CURATION_ORACLE)
+def text_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.window import Window
+
+    scored = (
+        load(spark, sf_dir, "documents")
+        .select(
+            "doc_id", "lang", "source", "text",
+            token_count("text").alias("n_tokens"),
+            F.round(quality_score("text"), 6).alias("quality"),
+        )
+        .filter((F.col("quality") >= 0.5) & (F.col("n_tokens") >= 10))
+    )
+    w = Window.partitionBy(fingerprint("text")).orderBy("doc_id")
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .groupBy("lang", "source")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_tokens").alias("total_tokens"),
+            F.round(F.avg("quality"), 4).alias("avg_quality"),
+        )
+        .orderBy("lang", "source")
+    )
+
+
+_CLS_SCORE = classifier_score_sql("toks")
+
+
+_CLS_ORACLE = f"""
+WITH t AS (
+  SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents
+)
+SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tokens,
+       round({_CLS_SCORE}, 6) AS score,
+       ({_CLS_SCORE} >= 0.5) AS keep
+FROM t WHERE len(toks) >= 1
+"""
+
+
+# ``text_classifier_score``: fastText-shaped linear classifier
+# INFERENCE over hashed token buckets -- the quality/domain gate every
+# web-scale corpus pass runs. Map-only: zero shuffles.
+@register("text_classifier_score", oracle=_CLS_ORACLE)
+def text_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    toks = tokens("text")
+    score = classifier_score("text")
+    return (
+        load(spark, sf_dir, "documents")
+        .filter(F.size(toks) >= 1)
+        .select(
+            "doc_id", "lang",
+            F.size(toks).cast("long").alias("n_tokens"),
+            F.round(score, 6).alias("score"),
+            (score >= 0.5).alias("keep"),
+        )
+    )
+
+
+_PMI_ORACLE = """
+WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
+uni AS (SELECT unnest(t) AS w FROM toks),
+ucnt AS (SELECT w, count(*) AS c FROM uni GROUP BY w),
+utot AS (SELECT count(*) AS n_uni FROM uni),
+big AS (
+  SELECT unnest([t[i] || ' ' || t[i + 1] for i in range(1, len(t))]) AS bg
+  FROM toks WHERE len(t) >= 2
+),
+bcnt AS (SELECT bg, count(*) AS c_xy FROM big GROUP BY bg),
+btot AS (SELECT count(*) AS n_big FROM big)
+SELECT w1, w2, c_xy, pmi FROM (
+  SELECT split_part(bg, ' ', 1) AS w1, split_part(bg, ' ', 2) AS w2,
+         CAST(c_xy AS BIGINT) AS c_xy,
+         round(ln(c_xy) + 2 * ln(n_uni) - ln(n_big) - ln(u1.c) - ln(u2.c), 6)
+             AS pmi
+  FROM bcnt CROSS JOIN utot CROSS JOIN btot
+  JOIN ucnt u1 ON u1.w = split_part(bg, ' ', 1)
+  JOIN ucnt u2 ON u2.w = split_part(bg, ' ', 2)
+  WHERE c_xy >= 5
+)
+ORDER BY pmi DESC, w1, w2 LIMIT 50
+"""
+
+
+# ``text_pmi_bigrams``: pointwise mutual information collocations --
+# the classic association-mining pass over a tokenized corpus.
+@register("text_pmi_bigrams", oracle=_PMI_ORACLE)
+def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load(spark, sf_dir, "documents").select(tokens("text").alias("t"))
+    uni = docs.select(F.explode("t").alias("w"))
+    ucnt = uni.groupBy("w").agg(F.count("*").alias("c"))
+    utot = uni.agg(F.count("*").alias("n_uni"))
+    bigrams = (
+        docs.filter(F.size("t") >= 2)
+        .select(
+            F.explode(F.expr(
+                "transform(slice(t, 1, size(t) - 1),"
+                " (x, i) -> struct(x AS w1, t[i + 1] AS w2))"
+            )).alias("bg")
+        )
+        .select("bg.w1", "bg.w2")
+    )
+    bcnt = bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c_xy"))
+    btot = bigrams.agg(F.count("*").alias("n_big"))
+    pmi = F.round(
+        F.log("c_xy") + 2 * F.log("n_uni") - F.log("n_big")
+        - F.log("c1") - F.log("c2"),
+        6,
+    )
+    return (
+        bcnt.filter(F.col("c_xy") >= 5)
+        .join(ucnt.select(F.col("w").alias("w1"), F.col("c").alias("c1")), "w1")
+        .join(ucnt.select(F.col("w").alias("w2"), F.col("c").alias("c2")), "w2")
+        .crossJoin(F.broadcast(utot))
+        .crossJoin(F.broadcast(btot))
+        .select("w1", "w2", "c_xy", pmi.alias("pmi"))
+        .orderBy(F.desc("pmi"), "w1", "w2")
+        .limit(50)
+    )
+
+
+_ENTROPY_ORACLE = """
+WITH tok AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
+),
+counts AS (
+  SELECT doc_id, t, CAST(count(*) AS BIGINT) AS c
+  FROM tok GROUP BY doc_id, t
+)
+SELECT doc_id,
+       CAST(sum(c) AS BIGINT) AS n_tokens,
+       CAST(count(*) AS BIGINT) AS n_distinct,
+       round(ln(CAST(sum(c) AS DOUBLE))
+             - sum(c * ln(CAST(c AS DOUBLE))) / sum(c), 4) AS token_entropy
+FROM counts
+GROUP BY doc_id
+"""
+
+
+@register("text_token_entropy", oracle=_ENTROPY_ORACLE)
+def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load(spark, sf_dir, "documents")
+    counts = (
+        d.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
+        .groupBy("doc_id", "t")
+        .agg(F.count("*").alias("c"))
+    )
+    n = F.sum("c")
+    return counts.groupBy("doc_id").agg(
+        n.alias("n_tokens"),
+        F.count("*").alias("n_distinct"),
+        F.round(
+            F.log(n.cast("double"))
+            - F.sum(F.col("c") * F.log(F.col("c").cast("double"))) / n,
+            4,
+        ).alias("token_entropy"),
+    )
+
+
+_REPETITION_ORACLE = """
+WITH toks AS (
+  SELECT doc_id, string_split(text, ' ') AS t FROM documents
+),
+grams AS (
+  SELECT doc_id, 2 AS n,
+         unnest(list_transform(range(1, len(t)),
+                               i -> t[i] || ' ' || t[i + 1])) AS g
+  FROM toks WHERE len(t) >= 2
+  UNION ALL
+  SELECT doc_id, 3 AS n,
+         unnest(list_transform(range(1, len(t) - 1),
+                               i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]))
+  FROM toks WHERE len(t) >= 3
+),
+cnt AS (
+  SELECT doc_id, n, g, count(*) AS c FROM grams GROUP BY 1, 2, 3
+),
+per_doc AS (
+  SELECT doc_id,
+         max(CASE WHEN n = 2 THEN c END) AS top2,
+         sum(CASE WHEN n = 2 THEN c END) AS tot2,
+         sum(CASE WHEN n = 3 AND c > 1 THEN c ELSE 0 END) AS dup3,
+         sum(CASE WHEN n = 3 THEN c END) AS tot3
+  FROM cnt GROUP BY doc_id
+)
+SELECT doc_id,
+       floor(top2 * 1e6 / tot2 + 0.5) / 1e6 AS top2_frac,
+       floor(dup3 * 1e6 / tot3 + 0.5) / 1e6 AS dup3_frac,
+       (top2 * 12 <= tot2 AND dup3 * 10 <= tot3) AS keep
+FROM per_doc
+WHERE tot2 IS NOT NULL AND tot3 IS NOT NULL
+ORDER BY doc_id
+"""
+
+
+@register("text_repetition_filters", oracle=_REPETITION_ORACLE)
+def text_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document repetition gates. The keep rule (top 2-gram <= 1/12
+    of 2-gram mass AND duplicated-3-gram mass <= 1/10) uses exact
+    integer comparisons (c * k <= total) so the boolean never rides a
+    float; the reported fractions round via the floor(x*1e6+0.5)
+    portable rule (FIXTURES.md)."""
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    per_doc = repetition_stats(docs)
+    return (
+        per_doc
+        .filter(F.col("tot2").isNotNull() & F.col("tot3").isNotNull())
+        .select(
+            "doc_id",
+            (F.floor(F.col("top2") * 1e6 / F.col("tot2") + 0.5) / 1e6)
+            .alias("top2_frac"),
+            (F.floor(F.col("dup3") * 1e6 / F.col("tot3") + 0.5) / 1e6)
+            .alias("dup3_frac"),
+            ((F.col("top2") * 12 <= F.col("tot2"))
+             & (F.col("dup3") * 10 <= F.col("tot3"))).alias("keep"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+_BPE_CERT_ORACLE = """
+WITH words AS (
+  SELECT w, count(*) AS freq FROM (
+    SELECT unnest(string_split(text, ' ')) AS w FROM documents
+  ) WHERE w <> '' GROUP BY w
+),
+chars AS (
+  SELECT freq,
+         list_transform(range(1, length(w) + 1),
+                        i -> substring(w, CAST(i AS INT), 1)) AS s
+  FROM words
+),
+pairs AS (
+  SELECT s[i] AS l, s[i + 1] AS r, sum(freq) AS c
+  FROM (SELECT freq, s, unnest(range(1, len(s))) AS i FROM chars)
+  GROUP BY 1, 2
+),
+first AS (
+  SELECT l, r, c FROM pairs WHERE c >= 2 ORDER BY c DESC, l, r LIMIT 1
+)
+SELECT 'first_merge' AS item, f.l AS left_sym, f.r AS right_sym,
+       CAST(f.c AS BIGINT) AS pair_freq, f.l IS NOT NULL AS ok
+FROM (SELECT 1) LEFT JOIN first f ON TRUE
+UNION ALL
+SELECT 'well_formed_chain', NULL, NULL, NULL,
+       EXISTS (SELECT 1 FROM first)
+ORDER BY item
+"""
+
+
+@register("text_bpe_train_certificate", oracle=_BPE_CERT_ORACLE)
+def text_bpe_train_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.text import tokens
+    from ..operators.bpe import bpe_train_merges
+
+    docs = load(spark, sf_dir, "documents")
+    merges = (
+        bpe_train_merges(docs, num_merges=16).orderBy("rank").collect()
+    )
+    # the trainer's base symbol set: every character of every
+    # non-empty whitespace token (same tokenization as the trainer)
+    known = {
+        r["ch"]
+        for r in (
+            docs.select(F.explode(tokens("text")).alias("w"))
+            .filter(F.col("w") != "")
+            .select(F.explode(F.split("w", "")).alias("ch"))
+            .filter(F.col("ch") != "")
+            .distinct()
+            .collect()
+        )
+    }
+    well_formed = bool(merges)
+    for i, m in enumerate(merges):
+        well_formed &= (
+            m["rank"] == i
+            and m["left"] in known
+            and m["right"] in known
+            and m["merged"] == m["left"] + m["right"]
+            and m["pair_freq"] >= 2
+        )
+        known.add(m["merged"])
+
+    f = merges[0] if merges else None
+    rows = [
+        ("first_merge",
+         f["left"] if f else None,
+         f["right"] if f else None,
+         int(f["pair_freq"]) if f else None,
+         f is not None),
+        ("well_formed_chain", None, None, None, well_formed),
+    ]
+    return local_frame(
+        spark, rows,
+        "item string, left_sym string, right_sym string, "
+        "pair_freq long, ok boolean",
+    ).orderBy("item")
+
+
+_BIGRAM_LM_ORACLE = """
+WITH toks AS (
+  SELECT doc_id, string_split(text, ' ') AS t FROM documents
+),
+tok1 AS (SELECT doc_id, unnest(t) AS tok FROM toks),
+c1 AS (SELECT tok, count(*) AS c FROM tok1 GROUP BY 1),
+n AS (SELECT count(*) AS n FROM tok1),
+bg AS (
+  SELECT doc_id,
+         unnest(list_transform(range(1, len(t)),
+                i -> struct_pack(pos := i, prev := t[i], cur := t[i + 1])))
+           AS s
+  FROM toks WHERE len(t) >= 2
+),
+c2 AS (
+  SELECT s.prev AS prev, s.cur AS cur, count(*) AS c FROM bg GROUP BY 1, 2
+),
+scored AS (
+  SELECT b.doc_id, b.s.pos AS pos,
+         floor(ln(0.7 * c2.c / c1p.c + 0.3 * c1c.c / n.n) * 1e6 + 0.5) / 1e6
+           AS logp
+  FROM bg b
+  JOIN c2 ON c2.prev = b.s.prev AND c2.cur = b.s.cur
+  JOIN c1 c1p ON c1p.tok = b.s.prev
+  JOIN c1 c1c ON c1c.tok = b.s.cur
+  CROSS JOIN n
+)
+SELECT doc_id, count(*) AS n_bigrams,
+       floor(list_reduce(list_prepend(0.0, list(logp ORDER BY pos)),
+                         (a, x) -> a + x)
+             / count(*) * 1e4 + 0.5) / 1e4 AS avg_logp
+FROM scored GROUP BY doc_id
+"""
+
+
+@register("text_bigram_lm_logprob", oracle=_BIGRAM_LM_ORACLE)
+def text_bigram_lm_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    ts = tokens("text")
+    all_toks = docs.select("doc_id", ts.alias("t"))
+    # Unigram counts and the total come from the FULL corpus (the
+    # oracle's tok1 CTE is unfiltered); only the bigram build excludes
+    # sub-2-token documents — the split matters on edge corpora.
+    tok1 = all_toks.select("doc_id", F.explode("t").alias("tok"))
+    toks = all_toks.filter(F.size("t") >= 2)
+    c1 = tok1.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
+    n = tok1.agg(F.count(F.lit(1)).cast("double").alias("n"))
+    bg = toks.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), F.size("t") - 1),
+                lambda i: F.struct(
+                    i.alias("pos"),
+                    F.element_at("t", i).alias("prev"),
+                    F.element_at("t", i + 1).alias("cur"),
+                ),
+            )
+        ).alias("s"),
+    ).select("doc_id", "s.pos", "s.prev", "s.cur")
+    c2 = bg.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c2"))
+    c1p = c1.select(F.col("tok").alias("prev"), F.col("c").alias("c1p"))
+    c1c = c1.select(F.col("tok").alias("cur"), F.col("c").alias("c1c"))
+    scored = (
+        bg.join(F.broadcast(c2), ["prev", "cur"])
+        .join(F.broadcast(c1p), "prev")
+        .join(F.broadcast(c1c), "cur")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "doc_id", "pos",
+            (F.floor(
+                F.log(F.lit(0.7) * F.col("c2") / F.col("c1p")
+                      + F.lit(0.3) * F.col("c1c") / F.col("n")) * 1e6
+                + F.lit(0.5)) / 1e6).alias("logp"),
+        )
+    )
+    ordered_sum = F.aggregate(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "logp"))),
+            lambda s: s.getField("logp"),
+        ),
+        F.lit(0.0), lambda a, x: a + x,
+    )
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_bigrams"),
+        (F.floor(ordered_sum / F.count(F.lit(1)) * 1e4 + F.lit(0.5)) / 1e4)
+        .alias("avg_logp"),
+    )
+
+
+_ZIPF_K = 200
+
+
+_ZIPF_ORACLE = f"""
+WITH vocab AS (
+  SELECT tok, CAST(count(*) AS BIGINT) AS c
+  FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
+  GROUP BY tok
+),
+ranked AS (
+  SELECT c, row_number() OVER (ORDER BY c DESC, tok) AS rank
+  FROM vocab
+),
+pts AS (
+  SELECT floor(ln(CAST(rank AS DOUBLE)) * 1e6 + 0.5) / 1e6 AS x,
+         floor(ln(CAST(c AS DOUBLE)) * 1e6 + 0.5) / 1e6 AS y
+  FROM ranked WHERE rank <= {_ZIPF_K}
+),
+sums AS (
+  SELECT CAST(count(*) AS BIGINT) AS k,
+         CAST(sum(CAST(floor(x * 1e6 + 0.5) AS BIGINT)) AS BIGINT) AS sx,
+         CAST(sum(CAST(floor(y * 1e6 + 0.5) AS BIGINT)) AS BIGINT) AS sy,
+         CAST(sum(CAST(floor(x * y * 1e6 + 0.5) AS BIGINT)) AS BIGINT) AS sxy,
+         CAST(sum(CAST(floor(x * x * 1e6 + 0.5) AS BIGINT)) AS BIGINT) AS sxx
+  FROM pts
+),
+fit AS (
+  SELECT k, sx, sy,
+         floor((CAST(k * sxy AS DOUBLE) / 1e6
+                - (CAST(sx AS DOUBLE) / 1e6) * (CAST(sy AS DOUBLE) / 1e6))
+               / (CAST(k * sxx AS DOUBLE) / 1e6
+                  - (CAST(sx AS DOUBLE) / 1e6) * (CAST(sx AS DOUBLE) / 1e6))
+               * 1e6 + 0.5) / 1e6 AS slope_s
+  FROM sums
+)
+SELECT k, slope_s,
+       floor((CAST(sy AS DOUBLE) / 1e6 / k
+              - slope_s * (CAST(sx AS DOUBLE) / 1e6 / k))
+             * 1e6 + 0.5) / 1e6 AS intercept_s
+FROM fit
+"""
+
+
+@register("text_zipf_slope", oracle=_ZIPF_ORACLE)
+def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OLS Zipf slope + intercept over the top-200 vocabulary,
+    integer-quantized OLS sums, snapped closed forms."""
+    docs = load(spark, sf_dir, "documents")
+    vocab = (
+        spread_input(docs)
+        .select(F.explode(tokens("text")).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+    ranked = vocab.withColumn(
+        "rank", F.row_number().over(W.orderBy(F.desc("c"), "tok"))
+    ).filter(F.col("rank") <= _ZIPF_K)
+    pts = ranked.select(
+        _snap6(F.log(F.col("rank").cast("double"))).alias("x"),
+        _snap6(F.log(F.col("c").cast("double"))).alias("y"),
+    )
+    sums = pts.agg(
+        F.count(F.lit(1)).cast("long").alias("k"),
+        F.sum(_q6(F.col("x"))).cast("long").alias("sx"),
+        F.sum(_q6(F.col("y"))).cast("long").alias("sy"),
+        F.sum(_q6(F.col("x") * F.col("y"))).cast("long").alias("sxy"),
+        F.sum(_q6(F.col("x") * F.col("x"))).cast("long").alias("sxx"),
+    )
+    k = F.col("k")
+    sx = F.col("sx").cast("double") / 1e6
+    sy = F.col("sy").cast("double") / 1e6
+    sxy = (k * F.col("sxy")).cast("double") / 1e6
+    sxx = (k * F.col("sxx")).cast("double") / 1e6
+    slope_s = _snap6((sxy - sx * sy) / (sxx - sx * sx))
+    return sums.select(
+        "k",
+        slope_s.alias("slope_s"),
+        _snap6(sy / k - slope_s * (sx / k)).alias("intercept_s"),
+    )
+
+
+_KL_ORACLE = """
+WITH st AS (
+  SELECT source, tok, CAST(count(*) AS BIGINT) AS c_st
+  FROM (SELECT source, unnest(string_split(text, ' ')) AS tok
+        FROM documents)
+  GROUP BY source, tok
+),
+vocab AS (SELECT tok, CAST(sum(c_st) AS BIGINT) AS c_t FROM st GROUP BY tok),
+per_src AS (SELECT source, CAST(sum(c_st) AS BIGINT) AS t_s FROM st
+            GROUP BY source),
+tot AS (SELECT CAST(sum(c_st) AS BIGINT) AS t FROM st),
+terms AS (
+  SELECT st.source,
+         CAST(floor(
+           (CAST(st.c_st AS DOUBLE) / ps.t_s)
+           * ln((CAST(st.c_st AS DOUBLE) / ps.t_s)
+                / (CAST(v.c_t AS DOUBLE) / tot.t))
+           * 1e6 + 0.5) AS BIGINT) AS term_q
+  FROM st
+  JOIN vocab v USING (tok)
+  JOIN per_src ps USING (source), tot
+)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_terms,
+       floor(CAST(sum(term_q) AS DOUBLE) + 0.5) / 1e6 AS kl_s
+FROM terms
+GROUP BY source
+ORDER BY source
+"""
+
+
+@register("text_kl_source_divergence", oracle=_KL_ORACLE)
+def text_kl_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KL(source unigram || corpus unigram) per source, from exact
+    counts and quantized per-term contributions."""
+    docs = load(spark, sf_dir, "documents")
+    # the (source, token) count table is consumed FOUR times (terms,
+    # vocab, per-source totals, corpus total): checkpoint it so the
+    # corpus is exploded exactly once. Size is |sources| x |vocab| --
+    # Zipf-bounded, and distributed (localCheckpoint stores partitions
+    # on executors, nothing driver-side).
+    st = (
+        spread_input(docs)
+        .select("source", F.explode(tokens("text")).alias("tok"))
+        .groupBy("source", "tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("c_st"))
+        .localCheckpoint(eager=True)
+    )
+    vocab = st.groupBy("tok").agg(F.sum("c_st").cast("long").alias("c_t"))
+    per_src = st.groupBy("source").agg(
+        F.sum("c_st").cast("long").alias("t_s"))
+    tot = st.agg(F.sum("c_st").cast("long").alias("t"))
+    p = F.col("c_st").cast("double") / F.col("t_s")
+    q = F.col("c_t").cast("double") / F.col("t")
+    terms = (
+        st.join(vocab, "tok")
+        .join(F.broadcast(per_src), "source")
+        .crossJoin(F.broadcast(tot))
+        .select("source", _q6(p * F.log(p / q)).alias("term_q"))
+    )
+    return (
+        terms.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_terms"),
+            (F.floor(F.sum("term_q").cast("double") + F.lit(0.5)) / 1e6)
+            .alias("kl_s"),
+        )
+        .orderBy("source")
+    )
+
+
+_OVERLAP_ORACLE = """
+WITH sg AS (
+  SELECT DISTINCT source,
+         unnest(list_distinct([array_to_string(t[i:i+2], ' ')
+                               for i in range(1, len(t) - 1)])) AS g
+  FROM (SELECT source, string_split(text, ' ') AS t FROM documents)
+  WHERE len(t) >= 3
+),
+sizes AS (SELECT source, CAST(count(*) AS BIGINT) AS n_g FROM sg
+          GROUP BY source),
+inter AS (
+  SELECT a.source AS src_a, b.source AS src_b,
+         CAST(count(*) AS BIGINT) AS n_common
+  FROM sg a JOIN sg b ON a.g = b.g AND a.source < b.source
+  GROUP BY 1, 2
+)
+SELECT i.src_a, i.src_b, i.n_common,
+       floor(CAST(i.n_common AS DOUBLE)
+             / (sa.n_g + sb.n_g - i.n_common) * 1e6 + 0.5) / 1e6
+         AS jaccard_s,
+       floor(CAST(i.n_common AS DOUBLE) / least(sa.n_g, sb.n_g)
+             * 1e6 + 0.5) / 1e6 AS containment_s
+FROM inter i
+JOIN sizes sa ON sa.source = i.src_a
+JOIN sizes sb ON sb.source = i.src_b
+ORDER BY src_a, src_b
+"""
+
+
+@register("text_source_ngram_overlap", oracle=_OVERLAP_ORACLE)
+def text_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise source 3-gram Jaccard + smaller-side containment --
+    the cross-source contamination matrix."""
+    docs = load(spark, sf_dir, "documents")
+    # Checkpoint the distinct gram set: a/b self-join sides and both
+    # size lookups would otherwise each re-run the shingle explode +
+    # distinct (4 corpus scans; one suffices).
+    sg = (
+        spread_input(docs)
+        .select("source", F.explode(shingles("text", 3)).alias("g"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    sizes = sg.groupBy("source").agg(F.count(F.lit(1)).cast("long")
+                                     .alias("n_g"))
+    a = sg.alias("a")
+    b = sg.alias("b")
+    inter = (
+        a.join(b, (F.col("a.g") == F.col("b.g"))
+               & (F.col("a.source") < F.col("b.source")))
+        .groupBy(F.col("a.source").alias("src_a"),
+                 F.col("b.source").alias("src_b"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
+    )
+    sa = sizes.select(F.col("source").alias("src_a"),
+                      F.col("n_g").alias("n_a"))
+    sb = sizes.select(F.col("source").alias("src_b"),
+                      F.col("n_g").alias("n_b"))
+    return (
+        inter.join(F.broadcast(sa), "src_a")
+        .join(F.broadcast(sb), "src_b")
+        .select(
+            "src_a", "src_b", "n_common",
+            _snap6(F.col("n_common").cast("double")
+                   / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
+            .alias("jaccard_s"),
+            _snap6(F.col("n_common").cast("double")
+                   / F.least("n_a", "n_b")).alias("containment_s"),
+        )
+        .orderBy("src_a", "src_b")
+    )
+
+
+_ALPHA = 0.01
+
+
+_DISTINCT_ORACLE = f"""
+WITH st AS (
+  SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents
+),
+cnt AS (
+  SELECT source, tok, CAST(count(*) AS BIGINT) AS y_st FROM st
+  WHERE tok <> '' GROUP BY 1, 2
+),
+vocab AS (
+  SELECT tok, CAST(sum(y_st) AS BIGINT) AS y_t,
+         row_number() OVER (ORDER BY sum(y_st) DESC, tok) AS rnk
+  FROM cnt GROUP BY tok
+),
+top_v AS (SELECT tok, y_t FROM vocab WHERE rnk <= 200),
+src_n AS (SELECT source, CAST(sum(y_st) AS BIGINT) AS n_s FROM cnt
+          GROUP BY source),
+tot AS (SELECT CAST(sum(y_t) AS BIGINT) AS n,
+               CAST(count(*) AS BIGINT) AS v FROM vocab),
+z AS (
+  SELECT c.source, c.tok, c.y_st, tv.y_t,
+         floor((ln((c.y_st + {_ALPHA})
+                   / (sn.n_s + {_ALPHA} * tot.v - c.y_st - {_ALPHA}))
+                - ln((tv.y_t - c.y_st + {_ALPHA})
+                     / (tot.n - sn.n_s + {_ALPHA} * tot.v
+                        - (tv.y_t - c.y_st) - {_ALPHA})))
+               / sqrt(1.0 / (c.y_st + {_ALPHA})
+                      + 1.0 / (tv.y_t - c.y_st + {_ALPHA}))
+               * 1e6 + 0.5) / 1e6 AS z_s
+  FROM cnt c JOIN top_v tv ON c.tok = tv.tok
+  JOIN src_n sn ON sn.source = c.source, tot
+)
+SELECT source, tok, y_st, y_t, z_s FROM (
+  SELECT *, row_number() OVER (PARTITION BY source
+                               ORDER BY z_s DESC, tok) AS r
+  FROM z
+) WHERE r <= 3
+ORDER BY source, z_s DESC, tok
+"""
+
+
+@register("text_distinctive_terms", oracle=_DISTINCT_ORACLE)
+def text_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 source-distinctive tokens by Dirichlet-smoothed log-odds
+    z-score over the global top-200 vocabulary."""
+    docs = load(spark, sf_dir, "documents")
+    cnt = (
+        spread_input(docs)
+        .select("source", F.explode(tokens("text")).alias("tok"))
+        .filter(F.col("tok") != "")
+        .groupBy("source", "tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("y_st"))
+        .localCheckpoint(eager=True)  # vocab cut + marginals + z reuse
+    )
+    vocab = cnt.groupBy("tok").agg(F.sum("y_st").cast("long").alias("y_t"))
+    wv = W.orderBy(F.col("y_t").desc(), "tok")
+    top_v = (vocab.withColumn("rnk", F.row_number().over(wv))
+             .filter(F.col("rnk") <= 200).drop("rnk"))
+    src_n = cnt.groupBy("source").agg(
+        F.sum("y_st").cast("long").alias("n_s"))
+    tot = vocab.agg(F.sum("y_t").cast("long").alias("n"),
+                    F.count(F.lit(1)).cast("long").alias("v"))
+    a = F.lit(_ALPHA)
+    y_st = F.col("y_st").cast("double")
+    y_rest = F.col("y_t") - F.col("y_st")
+    delta = (
+        F.log((y_st + a) / (F.col("n_s") + a * F.col("v") - y_st - a))
+        - F.log((y_rest + a)
+                / (F.col("n") - F.col("n_s") + a * F.col("v")
+                   - y_rest - a))
+    )
+    var = 1.0 / (y_st + a) + 1.0 / (y_rest + a)
+    z = (
+        cnt.join(F.broadcast(top_v), "tok")
+        .join(F.broadcast(src_n), "source")
+        .crossJoin(F.broadcast(tot))
+        .select("source", "tok", "y_st", "y_t",
+                _snap6(delta / F.sqrt(var)).alias("z_s"))
+    )
+    wr = W.partitionBy("source").orderBy(F.col("z_s").desc(), "tok")
+    return (
+        z.withColumn("r", F.row_number().over(wr))
+        .filter(F.col("r") <= 3)
+        .drop("r")
+        .orderBy("source", F.col("z_s").desc(), "tok")
+    )
+
+
+_MOJIBAKE_PATS = {
+    "repl": "\\x{FFFD}",
+    "latin1": "[\\x{C3}\\x{C2}\\x{E2}]",
+    "ctrl": "[\\x{01}-\\x{08}\\x{0B}\\x{0C}\\x{0E}-\\x{1F}]",
+    "nonascii": "[^\\x{00}-\\x{7F}]",
+}
+
+
+def _moji_count(col, pat: str):
+    return (F.length(col)
+            - F.length(F.regexp_replace(col, pat, ""))).cast("long")
+
+
+_MOJIBAKE_ORACLE = """
+WITH per_doc AS (
+  SELECT source,
+         CAST(length(text) AS BIGINT) AS n_chars,
+         CAST(length(text) - length(regexp_replace(text, '\\x{FFFD}', '',
+                                                   'g')) AS BIGINT)
+           AS n_repl,
+         CAST(length(text) - length(regexp_replace(text,
+              '[\\x{C3}\\x{C2}\\x{E2}]', '', 'g')) AS BIGINT) AS n_latin1,
+         CAST(length(text) - length(regexp_replace(text,
+              '[\\x{01}-\\x{08}\\x{0B}\\x{0C}\\x{0E}-\\x{1F}]', '', 'g'))
+           AS BIGINT) AS n_ctrl,
+         CAST(length(text) - length(regexp_replace(text,
+              '[^\\x{00}-\\x{7F}]', '', 'g')) AS BIGINT) AS n_nonascii
+  FROM documents
+)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_repl) AS BIGINT) AS repl_chars,
+       CAST(sum(n_latin1) AS BIGINT) AS latin1_chars,
+       CAST(sum(n_ctrl) AS BIGINT) AS ctrl_chars,
+       floor(CAST(sum(n_nonascii) AS DOUBLE) / nullif(sum(n_chars), 0)
+             * 1e6 + 0.5) / 1e6 AS nonascii_ratio_s,
+       CAST(sum(CASE WHEN n_repl + n_latin1 + n_ctrl > 0 THEN 1 ELSE 0
+                END) AS BIGINT) AS suspect_docs
+FROM per_doc
+GROUP BY source
+ORDER BY source
+"""
+
+
+@register("text_mojibake_screen", oracle=_MOJIBAKE_ORACLE)
+def text_mojibake_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source encoding-corruption rates: replacement chars,
+    Latin-1 mojibake leads, C0 controls, non-ASCII ratio."""
+    docs = load(spark, sf_dir, "documents")
+    t = F.col("text")
+    per_doc = docs.select(
+        "source",
+        F.length(t).cast("long").alias("n_chars"),
+        _moji_count(t, _MOJIBAKE_PATS["repl"]).alias("n_repl"),
+        _moji_count(t, _MOJIBAKE_PATS["latin1"]).alias("n_latin1"),
+        _moji_count(t, _MOJIBAKE_PATS["ctrl"]).alias("n_ctrl"),
+        _moji_count(t, _MOJIBAKE_PATS["nonascii"]).alias("n_nonascii"),
+    )
+    return (
+        per_doc.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_repl").cast("long").alias("repl_chars"),
+            F.sum("n_latin1").cast("long").alias("latin1_chars"),
+            F.sum("n_ctrl").cast("long").alias("ctrl_chars"),
+            _snap6(F.sum("n_nonascii").cast("double")
+                   / F.nullif(F.sum("n_chars"), F.lit(0)))
+            .alias("nonascii_ratio_s"),
+            F.sum(F.when(F.col("n_repl") + F.col("n_latin1")
+                         + F.col("n_ctrl") > 0, 1).otherwise(0))
+            .cast("long").alias("suspect_docs"),
+        )
+        .orderBy("source")
+    )
+
+
+_K = 8
+
+
+_W = 8
+
+
+_WINNOW_ORACLE = f"""
+WITH grams AS (
+  SELECT doc_id,
+         CAST(i AS BIGINT) AS pos,
+         CAST('0x' || substr(md5(substring(text, CAST(i AS INTEGER),
+                                           {_K})), 1, 8) AS BIGINT) AS h
+  FROM documents,
+       unnest(range(1, greatest(length(text) - {_K} + 2, 1))) AS t(i)
+  WHERE length(text) >= {_K}
+),
+bounds AS (
+  SELECT doc_id, max(pos) AS max_pos FROM grams GROUP BY doc_id
+),
+starts AS (
+  SELECT g.doc_id, g.pos AS s_pos,
+         min(g.h) OVER (PARTITION BY g.doc_id ORDER BY g.pos
+                        ROWS BETWEEN CURRENT ROW
+                        AND {_W - 1} FOLLOWING) AS wmin
+  FROM grams g
+),
+full_starts AS (
+  SELECT s.doc_id, s.s_pos, s.wmin
+  FROM starts s JOIN bounds b ON s.doc_id = b.doc_id
+  WHERE s.s_pos <= greatest(b.max_pos - {_W} + 1, 1)
+),
+picked AS (
+  SELECT s.doc_id, s.s_pos, max(g.pos) AS pos, s.wmin AS fp
+  FROM full_starts s
+  JOIN grams g
+    ON g.doc_id = s.doc_id AND g.h = s.wmin
+   AND g.pos BETWEEN s.s_pos AND s.s_pos + {_W} - 1
+  GROUP BY s.doc_id, s.s_pos, s.wmin
+)
+SELECT DISTINCT doc_id, pos, fp
+FROM picked
+ORDER BY doc_id, pos
+"""
+
+
+@register("text_winnowing_fingerprints", oracle=_WINNOW_ORACLE)
+def text_winnowing_fingerprints(spark: SparkSession,
+                                sf_dir: str) -> DataFrame:
+    """MOSS winnowing: rightmost-min of each w-window of character
+    k-gram hashes, deduplicated -- positional near-dup fingerprints
+    with the shared-substring detection guarantee. Core shared with
+    operators/winnow.py (scale-probed at 1x/2x/4x)."""
+    from ..operators.winnow import winnow_fingerprints
+
+    docs = load(spark, sf_dir, "documents")
+    return (winnow_fingerprints(docs, k=_K, w=_W)
+            .orderBy("doc_id", "pos"))
+
+
+_FLESCH_ORACLE = """
+WITH sig AS (
+  SELECT doc_id,
+         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
+         CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
+              AS BIGINT) AS n_sentences,
+         CAST(greatest(
+             len(regexp_extract_all(lower(text), '[aeiouy]+')),
+             len(string_split(text, ' '))) AS BIGINT) AS n_syllables
+  FROM documents
+),
+scored AS (
+  SELECT doc_id, n_words, n_sentences, n_syllables,
+         floor((206.835
+                - 1.015 * (floor(CAST(n_words AS DOUBLE) / n_sentences
+                                 * 1e6 + 0.5) / 1e6)
+                - 84.6 * (floor(CAST(n_syllables AS DOUBLE) / n_words
+                                * 1e6 + 0.5) / 1e6)) * 1e6 + 0.5) / 1e6
+           AS flesch_s
+  FROM sig WHERE n_words > 0
+)
+SELECT doc_id, n_words, n_sentences, n_syllables, flesch_s,
+       CASE WHEN flesch_s >= 70 THEN 'easy'
+            WHEN flesch_s >= 50 THEN 'standard'
+            WHEN flesch_s >= 30 THEN 'difficult'
+            ELSE 'very_difficult' END AS band
+FROM scored
+ORDER BY doc_id
+"""
+
+
+@register("text_readability_flesch", oracle=_FLESCH_ORACLE)
+def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flesch reading ease + difficulty band from regexp-countable
+    word/sentence/syllable signals, snapped arithmetic."""
+    docs = load(spark, sf_dir, "documents")
+    n_words = F.size(tokens("text")).cast("long")
+    n_sent = F.greatest(
+        F.regexp_count("text", F.lit(r"[.!?]+")), F.lit(1)).cast("long")
+    n_syll = F.greatest(
+        F.regexp_count(F.lower("text"), F.lit(r"[aeiouy]+")),
+        F.size(tokens("text"))).cast("long")
+    sig = docs.select(
+        "doc_id", n_words.alias("n_words"), n_sent.alias("n_sentences"),
+        n_syll.alias("n_syllables"),
+    ).where(F.col("n_words") > 0)
+    flesch = _snap6(
+        F.lit(206.835)
+        - 1.015 * _snap6(F.col("n_words").cast("double")
+                         / F.col("n_sentences"))
+        - 84.6 * _snap6(F.col("n_syllables").cast("double")
+                        / F.col("n_words")))
+    scored = sig.withColumn("flesch_s", flesch)
+    band = (
+        F.when(F.col("flesch_s") >= 70, "easy")
+        .when(F.col("flesch_s") >= 50, "standard")
+        .when(F.col("flesch_s") >= 30, "difficult")
+        .otherwise("very_difficult")
+    )
+    return scored.withColumn("band", band).orderBy("doc_id")
+
+
+_POSTINGS_ORACLE = """
+WITH posting AS (
+  SELECT d.doc_id,
+         list_extract(string_split(d.text, ' '), CAST(i AS INTEGER))
+           AS term,
+         CAST(i AS BIGINT) AS pos
+  FROM documents d,
+       unnest(range(1, len(string_split(d.text, ' ')) + 1)) AS t(i)
+),
+term_stats AS (
+  SELECT term,
+         CAST(count(DISTINCT doc_id) AS BIGINT) AS df,
+         CAST(count(*) AS BIGINT) AS tf_total,
+         md5(string_agg(doc_id || ':' || pos, ','
+                        ORDER BY doc_id, pos)) AS postings_md5
+  FROM posting GROUP BY term
+)
+SELECT term, df, tf_total, postings_md5
+FROM term_stats
+ORDER BY df DESC, term
+LIMIT 100
+"""
+
+
+@register("text_inverted_postings", oracle=_POSTINGS_ORACLE)
+def text_inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Term -> (df, tf, md5 of the position-ordered postings list),
+    top-100 terms by document frequency."""
+    from ..operators.skew import spread_input
+
+    # spread: single-file source, one partition would serialize the
+    # token posexplode + md5 postings digest onto one core
+    docs = spread_input(load(spark, sf_dir, "documents"))
+    posting = docs.select(
+        "doc_id", F.posexplode(tokens("text")).alias("pos0", "term")
+    ).select("doc_id", "term",
+             (F.col("pos0") + 1).cast("long").alias("pos"))
+    digest = F.md5(
+        F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("doc_id", "pos"))),
+                lambda s: F.concat_ws(
+                    ":", s.getField("doc_id").cast("string"),
+                    s.getField("pos").cast("string")),
+            ),
+            ",",
+        ).cast("binary")
+    )
+    stats = posting.groupBy("term").agg(
+        F.countDistinct("doc_id").cast("long").alias("df"),
+        F.count(F.lit(1)).cast("long").alias("tf_total"),
+        digest.alias("postings_md5"),
+    )
+    return (
+        stats.orderBy(F.col("df").desc(), "term").limit(100)
+    )
+
+
+_HEAPS_CKPTS = 10
+
+
+_HEAPS_ORACLE = f"""
+WITH ranked AS (
+  SELECT doc_id, text,
+         CAST(row_number() OVER (
+             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
+           AS BIGINT) AS r
+  FROM documents
+),
+nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ranked),
+tok AS (
+  SELECT unnest(string_split(text, ' ')) AS w, r FROM ranked
+),
+firstr AS (SELECT w, CAST(min(r) AS BIGINT) AS fr FROM tok GROUP BY w),
+toks_cum AS (
+  SELECT r, CAST(sum(cnt) OVER (ORDER BY r
+       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+       AS tok_cum
+  FROM (SELECT r, CAST(len(string_split(text, ' ')) AS BIGINT) AS cnt
+        FROM ranked)
+),
+axis AS (
+  SELECT CAST(i.i AS BIGINT) AS ck,
+         CAST(greatest((i.i * nn.n) // {_HEAPS_CKPTS}, 1) AS BIGINT)
+           AS n_docs
+  FROM (SELECT unnest(range(1, {_HEAPS_CKPTS + 1})) AS i) i
+  CROSS JOIN nn
+),
+pts AS (
+  SELECT a.ck, a.n_docs,
+         (SELECT tok_cum FROM toks_cum t WHERE t.r = a.n_docs)
+           AS n_tokens,
+         (SELECT CAST(count(*) AS BIGINT) FROM firstr f
+          WHERE f.fr <= a.n_docs) AS vocab
+  FROM axis a
+),
+lg AS (
+  SELECT ck, n_docs, n_tokens, vocab,
+         CAST(floor(ln(n_tokens) * 1e6 + 0.5) AS BIGINT) AS lxq,
+         CAST(floor(ln(vocab) * 1e6 + 0.5) AS BIGINT) AS lyq
+  FROM pts
+),
+fit AS (
+  SELECT CAST(count(*) AS BIGINT) AS m,
+         CAST(sum(lxq) AS BIGINT) AS sx, CAST(sum(lyq) AS BIGINT) AS sy,
+         CAST(sum(lxq * lyq) AS BIGINT) AS sxy,
+         CAST(sum(lxq * lxq) AS BIGINT) AS sxx
+  FROM lg
+)
+SELECT g.ck, g.n_docs, g.n_tokens, g.vocab,
+       floor(CAST(f.m * f.sxy - f.sx * f.sy AS DOUBLE)
+             / nullif(CAST(f.m * f.sxx - f.sx * f.sx AS DOUBLE), 0)
+             * 1e6 + 0.5) / 1e6 AS beta_s
+FROM lg g CROSS JOIN fit f
+ORDER BY g.ck
+"""
+
+
+@register("text_vocab_growth_heaps", oracle=_HEAPS_ORACLE)
+def text_vocab_growth_heaps(spark: SparkSession,
+                            sf_dir: str) -> DataFrame:
+    """Heaps-law vocabulary growth over ten md5-ordered corpus
+    prefixes, beta from snapped ln/ln OLS."""
+    from ..functions.text import tokens
+    from ..operators.ranking import global_rank
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    coin = F.md5(F.col("doc_id").cast("string").cast("binary"))
+    ranked = global_rank(
+        docs.select("doc_id", "text", coin.alias("coin")),
+        ["coin", "doc_id"], rank_col="r",
+    ).select("doc_id", "text", "r").localCheckpoint(eager=True)
+    nn = ranked.agg(F.count(F.lit(1)).cast("long").alias("n"))
+    tok = ranked.select(F.explode(tokens("text")).alias("w"), "r")
+    firstr = tok.groupBy("w").agg(F.min("r").cast("long").alias("fr"))
+    tok_counts = ranked.select(
+        "r", F.size(tokens("text")).cast("long").alias("cnt"))
+    axis = (
+        spark.range(1, _HEAPS_CKPTS + 1)
+        .select(F.col("id").cast("long").alias("ck"))
+        .crossJoin(F.broadcast(nn))
+        .select("ck", F.greatest(
+            F.expr(f"(ck * n) div {_HEAPS_CKPTS}"), F.lit(1))
+            .cast("long").alias("n_docs"))
+    )
+    # broadcast 10-row axis against the bounded-side tables: one
+    # range join each for cumulative tokens and vocabulary
+    n_tokens = (
+        tok_counts.crossJoin(F.broadcast(axis))
+        .where(F.col("r") <= F.col("n_docs"))
+        .groupBy("ck", "n_docs")
+        .agg(F.sum("cnt").cast("long").alias("n_tokens"))
+    )
+    vocab = (
+        firstr.crossJoin(F.broadcast(axis))
+        .where(F.col("fr") <= F.col("n_docs"))
+        .groupBy("ck")
+        .agg(F.count(F.lit(1)).cast("long").alias("vocab"))
+    )
+    # ln pairs quantized to INTEGERS before any sum: sums of snapped
+    # doubles are addition-order-dependent across engines/partitions
+    lg = (
+        n_tokens.join(vocab, "ck")
+        .select(
+            "ck", "n_docs", "n_tokens", "vocab",
+            F.floor(F.log("n_tokens") * 1e6 + 0.5).cast("long")
+            .alias("lxq"),
+            F.floor(F.log("vocab") * 1e6 + 0.5).cast("long")
+            .alias("lyq"),
+        )
+        .localCheckpoint(eager=True)  # 10 rows, feeds fit + output
+    )
+    fit = lg.agg(
+        F.count(F.lit(1)).cast("long").alias("m"),
+        F.sum("lxq").cast("long").alias("sx"),
+        F.sum("lyq").cast("long").alias("sy"),
+        F.sum(F.col("lxq") * F.col("lyq")).cast("long").alias("sxy"),
+        F.sum(F.col("lxq") * F.col("lxq")).cast("long").alias("sxx"),
+    )
+    beta = _snap6(
+        (F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy"))
+        .cast("double")
+        / F.nullif(
+            (F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx"))
+            .cast("double"), F.lit(0.0)))
+    return (
+        lg.crossJoin(F.broadcast(fit))
+        .select("ck", "n_docs", "n_tokens", "vocab",
+                beta.alias("beta_s"))
+        .orderBy("ck")
+    )
+
+
+# code-signal characters; the class stays inside ASCII so both
+# engines' regex engines agree byte-for-byte
+_SYM_RE = r"[{}\[\]();=_<>]"
+
+
+_BRACE_RE = r"[{}\[\]]"
+
+
+def _code_oracle() -> str:
+    # counts via length-difference (portable across engines; DuckDB's
+    # regexp_extract_all lengths would work too, this is simpler)
+    sym = ("length(text) - length(regexp_replace(text,"
+           " '[{}\\[\\]();=_<>]', '', 'g'))")
+    brace = ("length(text) - length(regexp_replace(text,"
+             " '[{}\\[\\]]', '', 'g'))")
+    lines = "len(string_split(text, chr(10)))"
+    indented = ("len(list_filter(string_split(text, chr(10)),"
+                " l -> l LIKE ' %' OR l LIKE chr(9) || '%'))")
+    return f"""
+WITH d AS (
+  SELECT doc_id, lang, source,
+         CAST(length(text) AS BIGINT) AS n_chars,
+         CAST({sym} AS BIGINT) AS n_sym,
+         CAST({brace} AS BIGINT) AS n_brace,
+         CAST({lines} AS BIGINT) AS n_lines,
+         CAST({indented} AS BIGINT) AS n_indented
+  FROM documents
+),
+flagged AS (
+  SELECT *,
+         CAST(CASE WHEN (n_sym * 50 >= n_chars AND n_brace >= 2)
+                     OR (n_indented * 5 >= n_lines AND n_lines >= 3)
+              THEN 1 ELSE 0 END AS BIGINT) AS is_code
+  FROM d
+)
+SELECT lang, source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(is_code) AS BIGINT) AS n_code,
+       CAST(sum(n_sym) AS BIGINT) AS n_sym,
+       floor(CAST(sum(n_sym) AS DOUBLE) / nullif(sum(n_chars), 0)
+             * 1e6 + 0.5) / 1e6 AS sym_share_s,
+       floor(CAST(sum(n_indented) AS DOUBLE) / nullif(sum(n_lines), 0)
+             * 1e6 + 0.5) / 1e6 AS indent_share_s
+FROM flagged
+GROUP BY lang, source
+ORDER BY lang, source
+"""
+
+
+@register("text_code_screen", oracle=_code_oracle())
+def text_code_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Code-vs-prose routing stats per (lang, source): exact symbol /
+    brace / indent counts and the in-hash is_code verdict tally."""
+    docs = load(spark, sf_dir, "documents")
+    text = F.col("text")
+    sym = (F.length(text)
+           - F.length(F.regexp_replace(text, _SYM_RE, ""))).cast("long")
+    brace = (F.length(text)
+             - F.length(F.regexp_replace(text, _BRACE_RE, ""))
+             ).cast("long")
+    lines = F.split(text, "\n")
+    n_lines = F.size(lines).cast("long")
+    n_indented = F.size(F.filter(
+        lines, lambda l: l.startswith(" ") | l.startswith("\t"))
+    ).cast("long")
+    d = docs.select(
+        "lang", "source",
+        F.length(text).cast("long").alias("n_chars"),
+        sym.alias("n_sym"), brace.alias("n_brace"),
+        n_lines.alias("n_lines"), n_indented.alias("n_indented"),
+    )
+    is_code = F.when(
+        ((F.col("n_sym") * 50 >= F.col("n_chars"))
+         & (F.col("n_brace") >= 2))
+        | ((F.col("n_indented") * 5 >= F.col("n_lines"))
+           & (F.col("n_lines") >= 3)),
+        1).otherwise(0).cast("long")
+    return (
+        d.withColumn("is_code", is_code)
+        .groupBy("lang", "source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("is_code").cast("long").alias("n_code"),
+            F.sum("n_sym").cast("long").alias("n_sym"),
+            _snap6(F.sum("n_sym").cast("double")
+                   / F.nullif(F.sum("n_chars"), F.lit(0)))
+            .alias("sym_share_s"),
+            _snap6(F.sum("n_indented").cast("double")
+                   / F.nullif(F.sum("n_lines"), F.lit(0)))
+            .alias("indent_share_s"),
+        )
+        .orderBy("lang", "source")
+    )
+
+
+_TERMS = ("vector", "hash", "merge")
+
+
+_TERMS_SQL = ", ".join(f"'{t}'" for t in _TERMS)
+
+
+_BM25_ORACLE = f"""
+WITH dlens AS (
+  SELECT doc_id, CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS dl
+  FROM documents
+),
+toks AS (
+  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+  FROM documents
+),
+tf AS (
+  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
+  FROM toks WHERE tok IN ({_TERMS_SQL}) GROUP BY doc_id, tok
+),
+dfreq AS (
+  SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS dfq
+  FROM toks WHERE tok IN ({_TERMS_SQL}) GROUP BY tok
+),
+tot AS (
+  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS sumdl
+  FROM dlens
+),
+idf AS (
+  SELECT tok, dfq,
+         floor(ln((t.n - dfq + 0.5) / (dfq + 0.5) + 1.0) * 1e6 + 0.5)
+           / 1e6 AS idf_s
+  FROM dfreq CROSS JOIN tot t
+),
+term AS (
+  SELECT tf.doc_id,
+         CAST(floor(i.idf_s * (tf.tf * 2.2
+                / (tf.tf + 1.2 * (1.0 - 0.75
+                     + 0.75 * d.dl / (CAST(t.sumdl AS DOUBLE) / t.n))))
+                * 1e6 + 0.5) AS BIGINT) AS term_q
+  FROM tf
+  JOIN idf i ON i.tok = tf.tok
+  JOIN dlens d ON d.doc_id = tf.doc_id
+  CROSS JOIN tot t
+),
+scored AS (
+  SELECT doc_id, CAST(sum(term_q) AS BIGINT) AS score_q
+  FROM term GROUP BY doc_id
+)
+SELECT s.doc_id, d.dl AS n_tokens, s.score_q / 1e6 AS bm25_s
+FROM scored s JOIN dlens d ON d.doc_id = s.doc_id
+ORDER BY s.score_q DESC, s.doc_id
+LIMIT 20
+"""
+
+
+@register("text_bm25_retrieval", oracle=_BM25_ORACLE)
+def text_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Okapi BM25 top-20 for a fixed 3-term query, int64-quantized
+    term scores for an order-independent per-doc reduce."""
+    docs = load(spark, sf_dir, "documents")
+    toks = F.split(F.lower(F.col("text")), " ")
+    dlens = docs.select("doc_id", F.size(toks).cast("long").alias("dl"))
+    exploded = docs.select("doc_id", F.explode(toks).alias("tok")) \
+        .where(F.col("tok").isin(*_TERMS))
+    tf = exploded.groupBy("doc_id", "tok").agg(
+        F.count(F.lit(1)).cast("long").alias("tf"))
+    dfreq = exploded.groupBy("tok").agg(
+        F.countDistinct("doc_id").cast("long").alias("dfq"))
+    tot = dlens.agg(F.count(F.lit(1)).cast("long").alias("n"),
+                    F.sum("dl").cast("long").alias("sumdl"))
+    idf = dfreq.crossJoin(F.broadcast(tot)).select(
+        "tok",
+        _snap6(F.log((F.col("n") - F.col("dfq") + 0.5)
+                     / (F.col("dfq") + 0.5) + 1.0)).alias("idf_s"))
+    avgdl = F.col("sumdl").cast("double") / F.col("n")
+    w = (F.col("tf") * 2.2
+         / (F.col("tf") + 1.2 * (1.0 - 0.75 + 0.75 * F.col("dl") / avgdl)))
+    term = (
+        tf.join(F.broadcast(idf), "tok")
+        .join(dlens, "doc_id")
+        .crossJoin(F.broadcast(tot))
+        .select("doc_id",
+                F.floor(F.col("idf_s") * w * 1e6 + 0.5).cast("long")
+                .alias("term_q"))
+    )
+    scored = term.groupBy("doc_id").agg(
+        F.sum("term_q").cast("long").alias("score_q"))
+    return (
+        scored.join(dlens, "doc_id")
+        .orderBy(F.desc("score_q"), "doc_id")
+        .limit(20)
+        .select("doc_id", F.col("dl").alias("n_tokens"),
+                (F.col("score_q") / 1e6).alias("bm25_s"))
+    )
+
+
+_RRF_TERMS = ("vector", "hash", "merge")
+
+
+_RRF_K = 60
+
+
+_RRF_ORACLE = f"""
+WITH lex AS (
+  SELECT doc_id, CAST(count(*) AS BIGINT) AS sc
+  FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+        FROM documents)
+  WHERE tok IN ({", ".join(f"'{t}'" for t in _RRF_TERMS)})
+  GROUP BY doc_id
+),
+lex_r AS (
+  SELECT doc_id,
+         row_number() OVER (ORDER BY sc DESC, doc_id) AS r_lex
+  FROM lex
+),
+q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
+dense AS (
+  SELECT vec_id AS doc_id,
+         CAST(floor(list_dot_product(embedding::DOUBLE[], qv)
+              / (sqrt(list_dot_product(embedding::DOUBLE[],
+                                       embedding::DOUBLE[]))
+                 * sqrt(list_dot_product(qv, qv))) * 1e6 + 0.5)
+           AS BIGINT) AS cosq
+  FROM embeddings CROSS JOIN q WHERE vec_id <> 0
+),
+dense_r AS (
+  SELECT doc_id,
+         row_number() OVER (ORDER BY cosq DESC, doc_id) AS r_dense
+  FROM dense
+),
+fused AS (
+  SELECT COALESCE(l.doc_id, d.doc_id) AS doc_id,
+         CAST(l.r_lex AS BIGINT) AS r_lex,
+         CAST(d.r_dense AS BIGINT) AS r_dense,
+         floor((COALESCE(1.0 / ({_RRF_K} + l.r_lex), 0.0)
+                + COALESCE(1.0 / ({_RRF_K} + d.r_dense), 0.0))
+               * 1e6 + 0.5) / 1e6 AS rrf_s
+  FROM lex_r l FULL OUTER JOIN dense_r d ON d.doc_id = l.doc_id
+)
+SELECT doc_id, r_lex, r_dense, rrf_s
+FROM fused ORDER BY rrf_s DESC, doc_id LIMIT 20
+"""
+
+
+@register("text_rrf_hybrid_retrieval", oracle=_RRF_ORACLE)
+def text_rrf_hybrid_retrieval(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """RRF hybrid retrieval: 1/(60+r) fused lexical + dense ranks,
+    top-20. Both rank lists distributed via global_rank."""
+    from ..functions.vectors import as_double, cosine
+    from ..operators.ranking import global_rank
+
+    docs = load(spark, sf_dir, "documents")
+    emb = load(spark, sf_dir, "embeddings")
+    lex = (
+        docs.select("doc_id",
+                    F.explode(F.split(F.lower(F.col("text")), " "))
+                    .alias("tok"))
+        .where(F.col("tok").isin(*_RRF_TERMS))
+        .groupBy("doc_id").agg(F.count(F.lit(1)).alias("sc"))
+    )
+    lex_r = global_rank(
+        lex.withColumn("nsc", -F.col("sc")), ["nsc", "doc_id"], "r_lex"
+    ).select("doc_id", "r_lex")
+    qv = emb.where(F.col("vec_id") == 0) \
+        .select(as_double("embedding").alias("qv"))
+    dense = (
+        emb.where(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(qv))
+        .select(F.col("vec_id").alias("doc_id"),
+                q6(cosine(as_double("embedding"), F.col("qv")))
+                .alias("cosq"))
+    )
+    dense_r = global_rank(
+        dense.withColumn("ncosq", -F.col("cosq")), ["ncosq", "doc_id"],
+        "r_dense",
+    ).select("doc_id", "r_dense")
+    fused = (
+        lex_r.join(dense_r, "doc_id", "full_outer")
+        .select(
+            "doc_id", "r_lex", "r_dense",
+            snap6(
+                F.coalesce(1.0 / (_RRF_K + F.col("r_lex")), F.lit(0.0))
+                + F.coalesce(1.0 / (_RRF_K + F.col("r_dense")),
+                             F.lit(0.0))
+            ).alias("rrf_s"))
+    )
+    return fused.orderBy(F.desc("rrf_s"), "doc_id").limit(20)
+
+
+_RAKE_TOPK = 20
+
+
+_STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
+
+
+_RAKE_ORACLE = f"""
+WITH tok AS (
+  SELECT doc_id, t.tok, t.pos,
+         CASE WHEN t.tok IN ({_STOP_SQL}) THEN 1 ELSE 0 END AS stop
+  FROM documents,
+       LATERAL (SELECT unnest(string_split(lower(text), ' ')) AS tok,
+                       generate_subscripts(string_split(lower(text), ' '), 1)
+                         AS pos) t
+),
+marked AS (
+  SELECT doc_id, tok, pos,
+         sum(stop) OVER (PARTITION BY doc_id ORDER BY pos) AS phrase_id
+  FROM tok
+),
+words AS (
+  SELECT doc_id, tok, pos, phrase_id FROM marked
+  WHERE tok NOT IN ({_STOP_SQL}) AND tok <> ''
+),
+plen AS (
+  SELECT doc_id, phrase_id, CAST(count(*) AS BIGINT) AS n_words
+  FROM words GROUP BY doc_id, phrase_id
+),
+wstat AS (
+  SELECT w.tok,
+         CAST(count(*) AS BIGINT) AS freq,
+         CAST(sum(p.n_words) AS BIGINT) AS deg
+  FROM words w JOIN plen p
+    ON p.doc_id = w.doc_id AND p.phrase_id = w.phrase_id
+  GROUP BY w.tok
+),
+wscore AS (SELECT tok, (deg * 1000000) // freq AS wq FROM wstat),
+phrase AS (
+  SELECT w.doc_id, w.phrase_id,
+         string_agg(w.tok, ' ' ORDER BY w.pos) AS phrase,
+         CAST(count(*) AS BIGINT) AS n_words,
+         CAST(sum(s.wq) AS BIGINT) AS score_q
+  FROM words w JOIN wscore s ON s.tok = w.tok
+  GROUP BY w.doc_id, w.phrase_id
+)
+SELECT phrase, CAST(max(n_words) AS BIGINT) AS n_words,
+       CAST(count(*) AS BIGINT) AS n_occurrences,
+       max(score_q) / 1e6 AS score_s
+FROM phrase
+GROUP BY phrase
+ORDER BY score_s DESC, phrase LIMIT {_RAKE_TOPK}
+"""
+
+
+@register("text_rake_keywords", oracle=_RAKE_ORACLE)
+def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RAKE top-20 keyword phrases: stopword-split candidate runs,
+    degree/frequency word scores in integer division."""
+    docs = load(spark, sf_dir, "documents")
+    tok = docs.select(
+        "doc_id",
+        F.posexplode(F.split(F.lower(F.col("text")), " "))
+        .alias("pos", "tok"))
+    tok = tok.withColumn(
+        "stop", F.when(F.col("tok").isin(*STOPWORDS), 1).otherwise(0))
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    marked = tok.withColumn("phrase_id", F.sum("stop").over(w))
+    words = marked.where((F.col("stop") == 0) & (F.col("tok") != "")) \
+        .select("doc_id", "tok", "pos", "phrase_id") \
+        .localCheckpoint(eager=True)  # feeds plen, wstat, phrase agg
+    plen = words.groupBy("doc_id", "phrase_id") \
+        .agg(F.count(F.lit(1)).cast("long").alias("n_words"))
+    wstat = (
+        words.join(plen, ["doc_id", "phrase_id"])
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("freq"),
+             F.sum("n_words").cast("long").alias("deg"))
+    )
+    wscore = wstat.select(
+        "tok", F.expr("(deg * 1000000) div freq").alias("wq"))
+    phrase = (
+        words.join(wscore, "tok")
+        .groupBy("doc_id", "phrase_id")
+        .agg(F.concat_ws(
+                " ",
+                F.expr("transform(array_sort(collect_list("
+                       "struct(pos, tok))), x -> x.tok)")).alias("phrase"),
+             F.count(F.lit(1)).cast("long").alias("n_words"),
+             F.sum("wq").cast("long").alias("score_q"))
+    )
+    return (
+        phrase.groupBy("phrase")
+        .agg(F.max("n_words").cast("long").alias("n_words"),
+             F.count(F.lit(1)).cast("long").alias("n_occurrences"),
+             (F.max("score_q") / 1e6).alias("score_s"))
+        .orderBy(F.desc("score_s"), "phrase")
+        .limit(_RAKE_TOPK)
     )

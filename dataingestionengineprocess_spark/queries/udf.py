@@ -1,8 +1,8 @@
-"""Python UDF surface (SURVEY.md §2.9): every custom-code entry point
-the engine supports, each demonstrated on a fixture table with an
-exact DuckDB oracle where the semantics are SQL-expressible.
+"""Python UDF surface (``udf_``, ``udtf_``; SURVEY.md §2.9): every custom-code
+entry point the engine supports, each demonstrated on a fixture table
+with an exact DuckDB oracle where the semantics are SQL-expressible.
 
-All four shapes are Arrow-batched (session.ENGINE_CONFS enables
+All shapes are Arrow-batched (session.ENGINE_CONFS enables
 ``spark.sql.execution.arrow.pyspark.enabled``); none is a
 row-at-a-time Python UDF. At 100 TB the cost model is: one Arrow
 serialization round-trip per batch, pandas/numpy vector math inside —
@@ -17,6 +17,7 @@ similarity queries).
 | grouped-map | ``groupBy().applyInPandas`` | udf_grouped_zscore |
 | grouped-agg UDAF | ``pandas_udf`` GROUPED_AGG | udf_grouped_agg_weighted_price |
 | UDTF (row fan-out) | ``mapInPandas`` yielding >1 row/input | udf_tokenize_fanout |
+| Python UDTF | ``spark.udtf`` table function | udtf_bigram_top50 |
 """
 
 from __future__ import annotations
@@ -25,20 +26,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F, SparkSession
 from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load
 from . import register
 
-# ---------------------------------------------------------------------------
-# Vectorized scalar: cosine similarity of every embedding against one
-# probe vector, computed with numpy inside a pandas_udf. The built-in
-# higher-order-function cosine (functions/vectors.py) is the hot-path
-# variant; this one exists to pin down the pandas_udf contract
-# (array<float> arrives as a Series of np.ndarray).
-# ---------------------------------------------------------------------------
 
 _VCOS_ORACLE = """
 WITH probe AS (
@@ -74,15 +67,6 @@ def udf_vectorized_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.round(cos_to_probe("embedding"), 4).alias("cos_sim")
     )
 
-
-# ---------------------------------------------------------------------------
-# Grouped-map: per-nation z-score of customer account balance. The
-# canonical applyInPandas shape — each group arrives as one pandas
-# DataFrame, the function returns a same-or-different-shaped frame.
-# Scale note: group count (25 nations) bounds parallelism and each
-# whole group must fit in one executor's memory — correct tool for
-# per-entity model scoring, wrong tool for skewed billion-row keys.
-# ---------------------------------------------------------------------------
 
 # floor-based rounding on BOTH sides: the z-score is an arbitrary
 # double quotient, where numpy's Series.round (half-to-even), Spark's
@@ -121,13 +105,6 @@ def udf_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Grouped-agg UDAF: quantity-weighted mean price per return flag via a
-# GROUPED_AGG pandas_udf — the custom-aggregate entry point. Spark
-# runs it per group post-shuffle (no partial aggregation, unlike
-# built-in aggregates — another reason built-ins win in hot paths).
-# ---------------------------------------------------------------------------
-
 _WAVG_ORACLE = """
 SELECT l_returnflag,
        round(sum(l_extendedprice * l_quantity) / sum(l_quantity), 2)
@@ -152,16 +129,6 @@ def udf_grouped_agg_weighted_price(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
 
-
-# ---------------------------------------------------------------------------
-# UDTF shape: one input row fans out to N output rows (tokenization)
-# via mapInPandas — the Arrow-batched replacement for a generator UDTF.
-# The same result is expressible with explode(split(...)) (and the
-# oracle does exactly that in DuckDB); the point here is the row-count
-# -changing Python contract, which generalizes to fan-outs built-ins
-# can't express (parsers, decoders, frame samplers — see
-# queries/multimodal.py).
-# ---------------------------------------------------------------------------
 
 _TOKENIZE_ORACLE = """
 WITH s AS (SELECT doc_id, string_split(text, ' ') AS parts FROM documents)
@@ -194,15 +161,6 @@ def udf_tokenize_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(fanout, "doc_id long, pos long, token string")
     )
 
-
-# ---------------------------------------------------------------------------
-# Native Python UDTF (Spark 4): a declared table function usable in a
-# SQL LATERAL join -- the first-class form of the fan-out contract
-# (mapInPandas above is the Arrow-batch form). The UDTF emits bigrams
-# per document; the query aggregates them into a deterministic top-50.
-# On a cluster the lateral fan-out runs inside the scan stage (no extra
-# shuffle before the aggregate's partial phase).
-# ---------------------------------------------------------------------------
 
 _BIGRAM_ORACLE = """
 SELECT bigram, count(*) AS n
@@ -243,14 +201,6 @@ def udtf_bigram_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
 
-
-# ---------------------------------------------------------------------------
-# mapInArrow: the zero-copy end of the Python surface. No pandas
-# conversion at all -- Arrow record batches in, Arrow record batches
-# out -- which for pure-numeric kernels (norms here) removes the last
-# serialization layer pandas_udf still pays. The oracle recomputes the
-# same norm from the raw embeddings in SQL.
-# ---------------------------------------------------------------------------
 
 _ARROW_NORM_ORACLE = """
 SELECT vec_id,

@@ -15,9 +15,11 @@ completion-status metric to CloudWatch (:147-148). Spark-native:
   CloudWatch completion signal as a queryable table (S8), one row per
   ingest run with rows read/loaded/rejected and wall-clock.
 
-Idempotency: warehouse writes go to a per-run partition via dynamic
-partition overwrite, so re-processing a re-dropped file replaces that
-run's partition instead of duplicating it.
+Idempotency: every per-run write targets the run's own
+``_run_id=<id>`` partition directory (`write_run_partition`), so
+re-processing a re-dropped file replaces that run's partition instead
+of duplicating it, and an empty run still leaves a readable 0-row
+partition.
 """
 
 from __future__ import annotations
@@ -50,8 +52,14 @@ def write_warehouse(df: DataFrame, warehouse_dir: str, table: str,
                     partition_cols: list[str] | None = None,
                     mode: str = "append",
                     bloom_filter_cols: list[str] | None = None,
-                    file_format: str = "parquet") -> str:
+                    file_format: str = "parquet",
+                    run_id: str | None = None) -> str:
     """Bulk-load curated rows into the warehouse layout (S6).
+
+    ``run_id`` makes the load IDEMPOTENT per run, exactly like
+    `write_oltp`: the rows replace the table's ``_run_id=<id>``
+    partition (`write_run_partition`), and the other layout arguments
+    do not apply.
 
     ``bloom_filter_cols`` writes a per-column bloom filter:
     point-lookup predicates on high-cardinality non-sort columns
@@ -67,12 +75,12 @@ def write_warehouse(df: DataFrame, warehouse_dir: str, table: str,
     if file_format not in ("parquet", "orc"):
         raise ValueError(f"unsupported warehouse format {file_format!r}")
     path = os.path.join(warehouse_dir, table)
+    if run_id is not None:
+        write_run_partition(df, path, run_id)
+        return path
     writer = df.write.mode(mode)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-        if mode == "overwrite":
-            # replace only the partitions present in df, not the table
-            writer = writer.option("partitionOverwriteMode", "dynamic")
     if file_format == "orc" and bloom_filter_cols:
         writer = writer.option(
             "orc.bloom.filter.columns", ",".join(bloom_filter_cols)
@@ -91,9 +99,9 @@ def write_oltp(df: DataFrame, cfg: SinkConfig, table: str,
     MERGE executed by the DB -- Spark ships the staged rows.
 
     ``run_id`` makes the parquet stand-in IDEMPOTENT per run: rows
-    land under a ``_run_id=<id>`` partition replaced via dynamic
-    overwrite, so a crashed-and-retried batch (foreachBatch epoch
-    replay, ingest_batch rerun) rewrites its own partition instead of
+    land under a ``_run_id=<id>`` partition (`write_run_partition`),
+    so a crashed-and-retried batch (foreachBatch epoch replay,
+    ingest_batch rerun) rewrites its own partition instead of
     appending a duplicate copy. Readers see the extra ``_run_id``
     lineage column. The JDBC path cannot get this from a plain
     append -- exactly-once against a real DB goes through the staged

@@ -1,6 +1,6 @@
 """JSON-lines landing-zone source (SURVEY.md §2.1 S4 as a file
 source; `from_json` over embedded columns is the in-row variant, see
-queries/scalars.py).
+queries/scalar.py).
 
 Same contract as the CSV source: explicit schema (no inference pass),
 PERMISSIVE parse with `_corrupt_record` routing, lineage column.

@@ -240,7 +240,7 @@ def stateful_user_stats_tws(events: DataFrame) -> DataFrame:
     protocol. This container has no protobuf, so the operator is
     plan-constructable but not runnable here; tests skip accordingly.
     The REGISTERED, oracle-gated TWS query is
-    ``queries/round6.stream_tws_user_stats``: it runs this API where
+    ``queries/stream.stream_tws_user_stats``: it runs this API where
     protobuf exists and the identical shared fold through
     applyInPandasWithState otherwise.
     """

@@ -24,9 +24,7 @@ from dataingestionengineprocess_spark.queries.dedup import (
     pair_certificate_facts,
     simhash_certificate_facts,
 )
-from dataingestionengineprocess_spark.queries.similarity import (
-    ann_certificate_facts,
-)
+from dataingestionengineprocess_spark.queries.knn import ann_certificate_facts
 
 
 def _docs(spark, rows):

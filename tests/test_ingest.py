@@ -661,6 +661,33 @@ def test_runs_with_an_empty_curated_result_report_their_counts(
     assert jcm.isEmpty()
 
 
+def test_header_only_first_run_leaves_a_readable_warehouse_table(
+        spark, landing, sinks):
+    """A first run with no rows still materializes the warehouse table
+    as a readable 0-row run partition carrying the curated schema."""
+    (landing / "drop.csv").write_text(HEADER)
+    ingest_batch(spark, _feed(spark), str(landing / "drop.csv"), sinks,
+                 run_id="r1")
+    wh = spark.read.parquet(os.path.join(sinks.warehouse_dir, "orders_feed"))
+    assert wh.count() == 0
+    assert {"order_id", "region", "_run_id"} <= set(wh.columns)
+
+
+def test_empty_rerun_replaces_the_run_in_both_sinks(spark, landing, sinks):
+    """Rerunning a run on an empty drop replaces that run's rows in the
+    warehouse exactly as in the OLTP table, so the two sinks agree."""
+    feed = _feed(spark)
+    (landing / "one.csv").write_text(
+        HEADER + "1,alice,10.5,OPEN,2024-01-01 10:00:00\n")
+    (landing / "empty.csv").write_text(HEADER)
+    ingest_batch(spark, feed, str(landing / "one.csv"), sinks, run_id="r2")
+    ingest_batch(spark, feed, str(landing / "empty.csv"), sinks, run_id="r2")
+    for table in (os.path.join(sinks.warehouse_dir, "orders_feed"),
+                  os.path.join(sinks.oltp_dir, "orders_feed_oltp")):
+        rows = spark.read.parquet(table).filter(F.col("_run_id") == "r2")
+        assert rows.count() == 0, table
+
+
 @pytest.mark.parametrize("entry", ["batch", "stream"])
 def test_failed_run_releases_its_caches(spark, landing, tmp_path, entry):
     """A run that fails after the warehouse write landed (no OLTP

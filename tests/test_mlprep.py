@@ -87,7 +87,7 @@ def test_interval_overlap_negative_coordinates(spark):
 
 
 def test_classifier_score_is_deterministic_and_bounded(spark):
-    from dataingestionengineprocess_spark.queries.mlprep import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_classifier_score,
     )
 
@@ -134,7 +134,9 @@ def test_classifier_score_composes_as_quality_rule(spark):
     from dataingestionengineprocess_spark.operators.quality import (
         Rule, not_null, validate,
     )
-    from dataingestionengineprocess_spark.queries.mlprep import classifier_score
+    from dataingestionengineprocess_spark.queries.quality import (
+        classifier_score,
+    )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     score = classifier_score("text")

@@ -134,7 +134,9 @@ def test_wav_payloads_decode_with_stdlib(spark):
     import io
     import wave
 
-    from dataingestionengineprocess_spark.queries.multimodal import _wav_payloads
+    from dataingestionengineprocess_spark.queries.multimodal import (
+        _wav_payloads,
+    )
 
     rows = _wav_payloads(spark, "/root/testdata/sf0.001").limit(5).collect()
     assert rows

@@ -294,7 +294,7 @@ def test_calibration_rank_has_no_single_partition_row_window(spark, sf_dir, qs):
     # the rank window lives in the pre-checkpoint frame (the query
     # proper pins it with localCheckpoint, which replans it as a
     # LogicalRDD scan) -- prove the shape on the exposed builder
-    from dataingestionengineprocess_spark.queries.mlprep import (
+    from dataingestionengineprocess_spark.queries.quality import (
         _calibration_ranked,
     )
 

@@ -57,12 +57,8 @@ def test_dbscan_neighbor_join_is_equi_on_cells(spark, sf_dir, qs):
     Tested on the pre-checkpoint frame (the full query consumes the
     checkpointed RDD, which hides the join from its executed plan)."""
     from dataingestionengineprocess_spark.catalog import load
-    from dataingestionengineprocess_spark.queries.round4k import (
-        md5_points,
-    )
-    from dataingestionengineprocess_spark.queries.round6e import (
-        eps_neighbor_pairs,
-    )
+    from dataingestionengineprocess_spark.queries.join import md5_points
+    from dataingestionengineprocess_spark.queries.ml import eps_neighbor_pairs
 
     pts = md5_points(load(spark, sf_dir, "customer"),
                      "c_custkey", "cx", "cy")
@@ -170,7 +166,7 @@ def test_holt_recursion_reads_materialized_day_table(spark, sf_dir, qs):
     # the FileScan assertions on the PRE-drain plan: a future edit
     # that joins a file-backed table inside the loop body must fail
     # here, not ride invisibly behind the checkpoint.
-    from dataingestionengineprocess_spark.queries.round6g import (
+    from dataingestionengineprocess_spark.queries.events import (
         _HOLT_SPARK_BODY,
     )
 

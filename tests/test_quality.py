@@ -116,7 +116,7 @@ def test_schema_drift_duplicate_column_names(spark):
 def test_triangle_count_zero_on_triangle_free_graph(spark, tmp_path):
     """sum over an empty wedge set must coalesce to 0, not NULL (the
     oracle counts 0)."""
-    from dataingestionengineprocess_spark.queries.analytics import (
+    from dataingestionengineprocess_spark.queries.graph import (
         graph_triangle_count,
     )
 

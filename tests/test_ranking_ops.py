@@ -3,6 +3,8 @@ prefix sum) and the round-5a queries built on them."""
 
 from __future__ import annotations
 
+from fixture_tables import write_documents, write_embeddings
+
 
 def test_global_rank_matches_single_partition_rank(spark):
     from pyspark.sql import functions as F
@@ -38,26 +40,11 @@ def test_distributed_prefix_sum_exact(spark):
         assert out[k] == acc
 
 
-def _embeddings(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    return str(tmp_path)
-
-
-def _documents(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
 def test_quantile_normalize_equalizes_sources(spark, tmp_path):
     # Source a: scores 1..4; source b: 101..104 (a shifted scale).
     # After normalization both sources map to the SAME pooled quantile
     # values -> identical per-source moments.
-    from dataingestionengineprocess_spark.queries.round5a import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_quantile_normalize,
     )
 
@@ -68,8 +55,8 @@ def test_quantile_normalize_equalizes_sources(spark, tmp_path):
     for i, v in enumerate([101.0, 102.0, 103.0, 104.0]):
         emb.append((10 + i, [v, 0.0], 0))
         docs.append((10 + i, "t", "en", "b", 1))
-    sf = _embeddings(spark, tmp_path, emb)
-    _documents(spark, tmp_path, docs)
+    sf = write_embeddings(spark, tmp_path, emb)
+    write_documents(spark, tmp_path, docs)
     out = {r["source"]: r
            for r in ml_quantile_normalize(spark, sf).collect()}
     a, b = out["a"], out["b"]
@@ -82,11 +69,9 @@ def test_quantile_normalize_equalizes_sources(spark, tmp_path):
 def test_mann_whitney_hand_case_with_ties(spark, tmp_path):
     # x = {1, 2}, y = {2, 3}: ranks 1, 2.5, 2.5, 4 -> R1 = 3.5,
     # U1 = 0.5, tie sum (c^3 - c) = 6, z = -1.5 / sqrt(1.5).
-    from dataingestionengineprocess_spark.queries.round5a import (
-        stat_mann_whitney,
-    )
+    from dataingestionengineprocess_spark.queries.stat import stat_mann_whitney
 
-    sf = _embeddings(spark, tmp_path, [
+    sf = write_embeddings(spark, tmp_path, [
         (0, [1.0, 0.0], 0), (1, [2.0, 0.0], 0),
         (2, [2.0, 0.0], 1), (3, [3.0, 0.0], 1),
     ])
@@ -97,11 +82,9 @@ def test_mann_whitney_hand_case_with_ties(spark, tmp_path):
 
 def test_mann_whitney_all_one_group_null_z(spark, tmp_path):
     # Degenerate: every row in group x -> n2 = 0, variance 0, z NULL.
-    from dataingestionengineprocess_spark.queries.round5a import (
-        stat_mann_whitney,
-    )
+    from dataingestionengineprocess_spark.queries.stat import stat_mann_whitney
 
-    sf = _embeddings(spark, tmp_path, [
+    sf = write_embeddings(spark, tmp_path, [
         (0, [1.0, 0.0], 0), (1, [2.0, 0.0], 0),
     ])
     r = stat_mann_whitney(spark, sf).collect()[0]

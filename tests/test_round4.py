@@ -16,8 +16,9 @@ from dataingestionengineprocess_spark.queries import all_queries
 def test_jdbc_roundtrip_read_is_partitioned(spark, sf_dir):
     """The readback must fan out over numPartitions JDBC range
     queries, not funnel through one connection."""
-    from dataingestionengineprocess_spark.queries.round4 import (
-        _DERBY_DRIVER, _derby_url,
+    from dataingestionengineprocess_spark.queries.source import (
+        _DERBY_DRIVER,
+        _derby_url,
     )
     from dataingestionengineprocess_spark.sources.jdbc import (
         JdbcConfig, read_jdbc,

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from dataingestionengineprocess_spark.catalog import table_path
 from dataingestionengineprocess_spark.queries import all_queries
-from dataingestionengineprocess_spark.queries.round4b import (
+from dataingestionengineprocess_spark.queries.stream import (
     _WM_DELAY,
     _stage_late_epochs,
 )

@@ -105,7 +105,7 @@ def test_kmeans_portable_raises_on_tiny_corpus(spark):
 
 
 def test_length_buckets_clamp_and_account(spark):
-    from dataingestionengineprocess_spark.queries.round4c import (
+    from dataingestionengineprocess_spark.queries.curation import (
         _BUCKETS,
         curation_length_buckets,
     )
@@ -127,7 +127,7 @@ def test_orc_roundtrip_preserves_rows(spark):
     docs = load(spark, SF_SMOKE, "documents")
     # the query itself is oracle-checked; here prove row identity of
     # the staged dataset, not just the rollup
-    from dataingestionengineprocess_spark.queries.round4c import (
+    from dataingestionengineprocess_spark.queries.source import (
         source_orc_roundtrip,
     )
 
@@ -143,7 +143,7 @@ def test_orc_roundtrip_preserves_rows(spark):
 
 def test_text_lines_roundtrip_parses_every_line(spark):
     from dataingestionengineprocess_spark.catalog import scratch_path
-    from dataingestionengineprocess_spark.queries.round4c import (
+    from dataingestionengineprocess_spark.queries.source import (
         source_text_lines,
     )
 
@@ -279,7 +279,7 @@ def test_asof_nearest_matches_pandas_merge_asof(spark):
 
 
 def test_rolling_distinct_bounded_by_type_totals(spark):
-    from dataingestionengineprocess_spark.queries.round4c import (
+    from dataingestionengineprocess_spark.queries.window import (
         window_rolling_distinct_users,
     )
 
@@ -299,7 +299,7 @@ def test_rolling_distinct_null_type_and_null_ts_kept(spark):
     import duckdb
     import pandas as pd
 
-    from dataingestionengineprocess_spark.queries.round4c import (
+    from dataingestionengineprocess_spark.queries.window import (
         banded_rolling_distinct,
     )
 
@@ -333,7 +333,7 @@ def test_rolling_distinct_null_type_and_null_ts_kept(spark):
 
 
 def test_rfm_scores_are_quartiles(spark):
-    from dataingestionengineprocess_spark.queries.round4c import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_rfm_segments,
     )
 
@@ -356,9 +356,7 @@ def test_rfm_scores_are_quartiles(spark):
 def test_logreg_learns_separable_direction(spark):
     import math
 
-    from dataingestionengineprocess_spark.queries.round4c import (
-        ml_logreg_portable,
-    )
+    from dataingestionengineprocess_spark.queries.ml import ml_logreg_portable
 
     rows = {r.term: r for r in ml_logreg_portable(spark, SF_SMOKE).collect()}
     assert set(rows) == {"bias", "x_chars", "x_tokens"}

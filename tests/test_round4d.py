@@ -23,7 +23,7 @@ def test_incremental_mv_retracts_emptied_group(spark, tmp_path):
     # A (priority, month) group whose every base order has key % 7 == 0
     # is fully deleted by the CDC batch: the refresh must RETRACT the
     # row (not emit n_orders=0), while a sibling group survives.
-    from dataingestionengineprocess_spark.queries.round4d import (
+    from dataingestionengineprocess_spark.queries.warehouse import (
         warehouse_incremental_mv,
     )
 
@@ -49,7 +49,7 @@ def test_incremental_mv_retracts_emptied_group(spark, tmp_path):
 
 def test_incremental_mv_update_is_delete_plus_insert(spark, tmp_path):
     # An update never changes n_orders, only the cents sum.
-    from dataingestionengineprocess_spark.queries.round4d import (
+    from dataingestionengineprocess_spark.queries.warehouse import (
         warehouse_incremental_mv,
     )
 
@@ -68,7 +68,7 @@ def test_token_budget_selects_density_prefix(spark, tmp_path):
     # 3 docs, budget = 30% of 20 tokens = 6: only the densest doc
     # (4 tokens, all distinct) fits; the 2nd-densest would push the
     # running total past the budget AND the budget counts its tokens.
-    from dataingestionengineprocess_spark.queries.round4d import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_token_budget_select,
     )
 
@@ -106,7 +106,7 @@ def test_retraction_mv_drain_is_versioned_and_idempotent(spark):
     import os
 
     from dataingestionengineprocess_spark.catalog import scratch_path
-    from dataingestionengineprocess_spark.queries.round4d import (
+    from dataingestionengineprocess_spark.queries.stream import (
         stream_retraction_mv,
     )
     from dataingestionengineprocess_spark.sinks.versioned import (

@@ -10,20 +10,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import functions as F
-
-
-def _write(spark, tmp_path, table, rows, schema):
-    df = spark.createDataFrame(rows, schema)
-    df.write.mode("overwrite").parquet(str(tmp_path / f"{table}.parquet"))
-    return str(tmp_path)
-
-
-def _docs(spark, tmp_path, rows):
-    return _write(
-        spark, tmp_path, "documents", rows,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
+from fixture_tables import write_documents, write_events, write_table
 
 
 # --- Bradley-Terry ---------------------------------------------------------
@@ -36,7 +23,7 @@ def test_bradley_terry_zero_win_source_stays_finite(spark, tmp_path):
     # finite (p_i + p_j > 0), so the solve yields clean numbers --
     # B's normalized share (~5e-7) legitimately snaps to 0.0 at the
     # 1e-6 grid while A takes the whole mass.
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_bradley_terry_portable,
     )
 
@@ -44,7 +31,7 @@ def test_bradley_terry_zero_win_source_stays_finite(spark, tmp_path):
     for i in range(0, 8, 2):
         rows.append((i, f"u{i} v{i} w{i}", "en", "srcA", 10))
         rows.append((i + 1, "rep rep rep", "en", "srcB", 11))
-    sf = _docs(spark, tmp_path, rows)
+    sf = write_documents(spark, tmp_path, rows)
     out = {r["source"]: r for r in ml_bradley_terry_portable(spark, sf).collect()}
     assert out["srcB"]["wins"] == 0 and out["srcB"]["games"] == 7
     assert out["srcA"]["wins"] == 7
@@ -56,11 +43,11 @@ def test_bradley_terry_zero_win_source_stays_finite(spark, tmp_path):
 def test_bradley_terry_tie_goes_to_lexicographically_smaller(spark, tmp_path):
     # Equal distinct-token ratios: the deterministic tiebreak awards
     # the pair to the lexicographically smaller source name.
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_bradley_terry_portable,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "a b c", "en", "zeta", 5),
         (1, "d e f", "en", "alpha", 5),
     ])
@@ -74,11 +61,11 @@ def test_bradley_terry_skips_same_source_and_id_gaps(spark, tmp_path):
     # survives, so s3 never appears in the ratings at all. (F.split
     # tokenizes "" to [""], so an empty doc still carries q = 1.0 --
     # same in both engines -- and ties break lexicographically.)
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_bradley_terry_portable,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "a b", "en", "s1", 3),
         (1, "c d", "en", "s1", 3),
         (2, "", "en", "s2", 0),
@@ -99,12 +86,12 @@ def _md5_bucket(s: str, mod: int) -> int:
 def test_fleiss_votes_replay_the_md5_coin(spark, tmp_path):
     # Hand-replay the three annotator coins for each doc and check the
     # majority label + unanimity split matches the query exactly.
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.ml import (
         label_fleiss_consolidation,
     )
 
     rows = [(i, "t", "en" if i % 3 else "de", "s", 1) for i in range(40)]
-    sf = _docs(spark, tmp_path, rows)
+    sf = write_documents(spark, tmp_path, rows)
 
     exp_counts: dict[str, int] = {"en": 0, "other": 0}
     exp_unanimous: dict[str, int] = {"en": 0, "other": 0}
@@ -131,7 +118,7 @@ def test_fleiss_votes_replay_the_md5_coin(spark, tmp_path):
 
 
 def _emb(spark, tmp_path, rows):
-    return _write(
+    return write_table(
         spark, tmp_path, "embeddings", rows,
         "vec_id long, embedding array<float>, label int",
     )
@@ -140,7 +127,7 @@ def _emb(spark, tmp_path, rows):
 def test_decontaminate_flags_identical_vector(spark, tmp_path):
     # An eval vector bit-identical to a train vector scores cosine 1.0
     # and must be flagged; an orthogonal eval vector must not be.
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_semantic_decontaminate,
     )
 
@@ -159,7 +146,7 @@ def test_decontaminate_flags_identical_vector(spark, tmp_path):
 
 
 def test_decontaminate_nearest_tie_breaks_on_train_id(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_semantic_decontaminate,
     )
 
@@ -178,13 +165,13 @@ def test_decontaminate_nearest_tie_breaks_on_train_id(spark, tmp_path):
 def test_poisson_weights_replay_md5_cdf(spark, tmp_path):
     # Recompute replicate 0's effective count + weighted sum in Python
     # from the same md5 coin and exact CDF thresholds.
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.stat import (
         _POIS_CDF_1E6,
         stat_poisson_bootstrap,
     )
 
     rows = [(i, "t", "en", "s", 7 + i) for i in range(50)]
-    sf = _docs(spark, tmp_path, rows)
+    sf = write_documents(spark, tmp_path, rows)
 
     def w(doc_id: int, rep: int) -> int:
         u = _md5_bucket(f"{doc_id}:{rep}", 1_000_000)
@@ -209,7 +196,7 @@ def test_poisson_weights_replay_md5_cdf(spark, tmp_path):
 def test_k_anonymity_counts_exact_boundary(spark, tmp_path):
     # A class of exactly k=5 is NOT small (strict <); a singleton and
     # a 4-class are. rows_at_risk sums class members, not classes.
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.gov import (
         gov_k_anonymity_audit,
     )
 
@@ -219,7 +206,7 @@ def test_k_anonymity_counts_exact_boundary(spark, tmp_path):
         for _ in range(n):
             rows.append((ck, f"c{ck}", 1, bal, "SEG"))
             ck += 1
-    sf = _write(
+    sf = write_table(
         spark, tmp_path, "customer", rows,
         "c_custkey long, c_name string, c_nationkey int, "
         "c_acctbal double, c_mktsegment string",
@@ -235,11 +222,11 @@ def test_k_anonymity_counts_exact_boundary(spark, tmp_path):
 def test_k_anonymity_negative_balance_bands_floor_down(spark, tmp_path):
     # floor(-0.5/1000) = -1: negative balances band below zero rather
     # than truncating toward it (no accidental merge with [0,1000)).
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.gov import (
         gov_k_anonymity_audit,
     )
 
-    sf = _write(
+    sf = write_table(
         spark, tmp_path, "customer",
         [(1, "a", 1, -0.5, "S"), (2, "b", 1, 0.5, "S")],
         "c_custkey long, c_name string, c_nationkey int, "
@@ -252,22 +239,12 @@ def test_k_anonymity_negative_balance_bands_floor_down(spark, tmp_path):
 # --- Last-touch attribution --------------------------------------------------
 
 
-def _events(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
 def test_attribution_purchase_first_is_direct(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_attribution_last_touch,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-01 09:00:00", 1, "purchase", 10.0, "{}"),
         (2, "2024-01-01 10:00:00", 1, "click", 0.0, "{}"),
         (3, "2024-01-01 11:00:00", 1, "purchase", 20.0, "{}"),
@@ -282,11 +259,11 @@ def test_attribution_purchase_first_is_direct(spark, tmp_path):
 def test_attribution_skips_intervening_purchases(spark, tmp_path):
     # Two back-to-back purchases after one view: BOTH credit 'view'
     # (a purchase is never a channel for the next purchase).
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_attribution_last_touch,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-01 09:00:00", 1, "view", 0.0, "{}"),
         (2, "2024-01-01 10:00:00", 1, "purchase", 5.0, "{}"),
         (3, "2024-01-01 11:00:00", 1, "purchase", 7.0, "{}"),
@@ -300,11 +277,11 @@ def test_attribution_skips_intervening_purchases(spark, tmp_path):
 def test_attribution_same_ts_ordered_by_event_id(spark, tmp_path):
     # Equal timestamps: event_id is the deterministic within-ts order,
     # so the click (smaller id) precedes the purchase.
-    from dataingestionengineprocess_spark.queries.round4e import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_attribution_last_touch,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-01 09:00:00", 1, "click", 0.0, "{}"),
         (2, "2024-01-01 09:00:00", 1, "purchase", 3.0, "{}"),
     ])

@@ -10,26 +10,7 @@ from __future__ import annotations
 
 import math
 
-
-def _docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents, write_events
 
 
 # --- exact AUC ---------------------------------------------------------------
@@ -37,9 +18,9 @@ def _events(spark, tmp_path, rows):
 
 def test_auc_perfect_separation_is_one(spark, tmp_path):
     # Every 'en' doc longer than every non-'en' doc -> AUC = 1.
-    from dataingestionengineprocess_spark.queries.round4f import ml_auc_exact
+    from dataingestionengineprocess_spark.queries.ml import ml_auc_exact
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "t", "en", "s", 100), (1, "t", "en", "s", 90),
         (2, "t", "de", "s", 10), (3, "t", "fr", "s", 20),
     ])
@@ -49,17 +30,17 @@ def test_auc_perfect_separation_is_one(spark, tmp_path):
 
 
 def test_auc_reversed_is_zero_and_ties_half(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4f import ml_auc_exact
+    from dataingestionengineprocess_spark.queries.ml import ml_auc_exact
 
     # reversed: every positive below every negative
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "t", "en", "s", 1), (1, "t", "de", "s", 2),
     ])
     r = ml_auc_exact(spark, sf).collect()[0]
     assert r["auc_s"] == 0.0 and r["gini_s"] == -1.0
 
     # all scores identical: AUC = 1/2 by the tie half-credit
-    sf2 = _docs(spark, tmp_path, [
+    sf2 = write_documents(spark, tmp_path, [
         (0, "t", "en", "s", 7), (1, "t", "de", "s", 7),
         (2, "t", "en", "s", 7), (3, "t", "es", "s", 7),
     ])
@@ -72,9 +53,9 @@ def test_auc_mixed_matches_hand_count(spark, tmp_path):
     # lost = (1<2)x2 = 2, no ties -> AUC = 2/4 = 0.5... make it
     # asymmetric: pos {3, 2}, neg {2, 1}: wins = 3>2, 3>1, 2>1 = 3,
     # tie = (2, 2) = 0.5 -> AUC = 3.5/4 = 0.875.
-    from dataingestionengineprocess_spark.queries.round4f import ml_auc_exact
+    from dataingestionengineprocess_spark.queries.ml import ml_auc_exact
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "t", "en", "s", 3), (1, "t", "en", "s", 2),
         (2, "t", "de", "s", 2), (3, "t", "de", "s", 1),
     ])
@@ -89,11 +70,11 @@ def test_confusion_counts_und_and_misses(spark, tmp_path):
     # 'the fast' -> en (hit), 'data table' -> es, 'xyz' -> und.
     # Truth: doc0 en (tp for en), doc1 en (predicted es: fn for en,
     # fp for es), doc2 de (predicted und: fn for de, fp for und).
-    from dataingestionengineprocess_spark.queries.round4f import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_langid_confusion,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "the fast", "en", "s", 8),
         (1, "data table", "en", "s", 10),
         (2, "xyz qqq", "de", "s", 7),
@@ -126,10 +107,10 @@ def _snap6(x: float) -> float:
 def test_zipf_slope_matches_hand_ols(spark, tmp_path):
     # Corpus: 'a'x8 'b'x4 'c'x2 'd'x1 -> ranks 1..4. Replicate the
     # quantized OLS in Python and compare exactly.
-    from dataingestionengineprocess_spark.queries.round4f import text_zipf_slope
+    from dataingestionengineprocess_spark.queries.text import text_zipf_slope
 
     text = " ".join(["a"] * 8 + ["b"] * 4 + ["c"] * 2 + ["d"])
-    sf = _docs(spark, tmp_path, [(0, text, "en", "s", len(text))])
+    sf = write_documents(spark, tmp_path, [(0, text, "en", "s", len(text))])
     r = text_zipf_slope(spark, sf).collect()[0]
     assert r["k"] == 4
 
@@ -154,11 +135,11 @@ def test_zipf_slope_matches_hand_ols(spark, tmp_path):
 
 
 def test_kl_identical_sources_are_zero(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4f import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_kl_source_divergence,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "a a b", "en", "s1", 5),
         (1, "a a b", "en", "s2", 5),
     ])
@@ -170,11 +151,11 @@ def test_kl_identical_sources_are_zero(spark, tmp_path):
 def test_kl_disjoint_vocab_matches_hand_value(spark, tmp_path):
     # s1 = all 'a', s2 = all 'b', equal sizes: P_s1(a)=1, Q(a)=1/2 ->
     # KL = ln 2 for both (after the per-term quantization).
-    from dataingestionengineprocess_spark.queries.round4f import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_kl_source_divergence,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "a a a a", "en", "s1", 7),
         (1, "b b b b", "en", "s2", 7),
     ])
@@ -189,11 +170,11 @@ def test_kl_disjoint_vocab_matches_hand_value(spark, tmp_path):
 
 def test_grpo_degenerate_groups_emit_zero(spark, tmp_path):
     # Singleton group and constant-reward group both z = 0.0.
-    from dataingestionengineprocess_spark.queries.round4f import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_reward_group_normalize,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-01 09:00:00", 1, "purchase", 5.0, "{}"),
         (2, "2024-01-01 09:00:00", 2, "purchase", 3.0, "{}"),
         (3, "2024-01-01 10:00:00", 2, "purchase", 3.0, "{}"),
@@ -205,11 +186,11 @@ def test_grpo_degenerate_groups_emit_zero(spark, tmp_path):
 
 def test_grpo_two_event_group_is_plus_minus_one(spark, tmp_path):
     # Population std of {a, b} is |a-b|/2 -> z = +-1 exactly.
-    from dataingestionengineprocess_spark.queries.round4f import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_reward_group_normalize,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-01 09:00:00", 7, "purchase", 10.0, "{}"),
         (2, "2024-01-01 10:00:00", 7, "purchase", 20.0, "{}"),
     ])
@@ -222,11 +203,11 @@ def test_grpo_two_event_group_is_plus_minus_one(spark, tmp_path):
 
 
 def test_ess_equal_weights_ratio_one(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4f import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_effective_sample_size,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (i, "t", "en", "s", 50) for i in range(8)
     ])
     r = ml_effective_sample_size(spark, sf).collect()[0]
@@ -236,11 +217,11 @@ def test_ess_equal_weights_ratio_one(spark, tmp_path):
 
 def test_ess_dominant_weight_collapses(spark, tmp_path):
     # One huge weight among near-zeros: ESS -> ~1, ratio ~ 1/n.
-    from dataingestionengineprocess_spark.queries.round4f import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_effective_sample_size,
     )
 
-    sf = _docs(spark, tmp_path,
+    sf = write_documents(spark, tmp_path,
                [(0, "t", "en", "s", 10000)]
                + [(i, "t", "en", "s", 1) for i in range(1, 10)])
     r = ml_effective_sample_size(spark, sf).collect()[0]

@@ -12,14 +12,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-
-def _docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents
 
 
 def _customer(spark, tmp_path, rows):
@@ -37,7 +30,7 @@ def _customer(spark, tmp_path, rows):
 def test_chi2_exact_independence_is_zero(spark, tmp_path):
     # Counts are an exact product table (margins multiply out), so
     # every observed cell equals its expectation: chi2 = 0, V = 0.
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.stat import (
         stat_chi2_independence,
     )
 
@@ -48,7 +41,7 @@ def test_chi2_exact_independence_is_zero(spark, tmp_path):
         for _ in range(n):
             rows.append((i, "t", lang, source, 10))
             i += 1
-    r = stat_chi2_independence(spark, _docs(spark, tmp_path, rows)).collect()[0]
+    r = stat_chi2_independence(spark, write_documents(spark, tmp_path, rows)).collect()[0]
     assert (r["n"], r["dof"]) == (6, 1)
     assert r["chi2_s"] == 0.0 and r["cramers_v_s"] == 0.0
 
@@ -56,13 +49,13 @@ def test_chi2_exact_independence_is_zero(spark, tmp_path):
 def test_chi2_perfect_association_v_is_one(spark, tmp_path):
     # Diagonal 2x2 table: each lang pinned to one source -> V = 1 and
     # chi2 = n.
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.stat import (
         stat_chi2_independence,
     )
 
     rows = [(0, "t", "en", "a", 1), (1, "t", "en", "a", 1),
             (2, "t", "de", "b", 1), (3, "t", "de", "b", 1)]
-    r = stat_chi2_independence(spark, _docs(spark, tmp_path, rows)).collect()[0]
+    r = stat_chi2_independence(spark, write_documents(spark, tmp_path, rows)).collect()[0]
     assert r["dof"] == 1
     assert r["chi2_s"] == 4.0 and r["cramers_v_s"] == 1.0
 
@@ -70,7 +63,7 @@ def test_chi2_perfect_association_v_is_one(spark, tmp_path):
 def test_chi2_matches_hand_computation(spark, tmp_path):
     # 2x2 observed [[3, 1], [1, 3]]: margins all 4, n = 8, every
     # expected cell = 2 -> chi2 = 4 * (1^2 / 2) = 2, V = sqrt(2/8).
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.stat import (
         stat_chi2_independence,
     )
 
@@ -80,7 +73,7 @@ def test_chi2_matches_hand_computation(spark, tmp_path):
         for _ in range(n):
             rows.append((i, "t", lang, source, 10))
             i += 1
-    r = stat_chi2_independence(spark, _docs(spark, tmp_path, rows)).collect()[0]
+    r = stat_chi2_independence(spark, write_documents(spark, tmp_path, rows)).collect()[0]
     assert r["chi2_s"] == 2.0
     assert abs(r["cramers_v_s"] - math.sqrt(0.25)) < 1e-6
 
@@ -91,7 +84,7 @@ def test_chi2_matches_hand_computation(spark, tmp_path):
 def test_mi_independent_bands_is_zero(spark, tmp_path):
     # n_chars band x lang forms a product table -> MI = 0, NMI = 0,
     # and the marginal entropies are the hand values ln 2.
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_mutual_information,
     )
 
@@ -100,7 +93,7 @@ def test_mi_independent_bands_is_zero(spark, tmp_path):
         for lang in ("en", "de"):
             rows.append((i, "t", lang, "s", band_chars))
             i += 1
-    r = ml_mutual_information(spark, _docs(spark, tmp_path, rows)).collect()[0]
+    r = ml_mutual_information(spark, write_documents(spark, tmp_path, rows)).collect()[0]
     assert r["n"] == 4
     assert r["mi_s"] == 0.0 and r["nmi_s"] == 0.0
     assert abs(r["h_band_s"] - math.log(2)) < 1e-6
@@ -110,13 +103,13 @@ def test_mi_independent_bands_is_zero(spark, tmp_path):
 def test_mi_deterministic_mapping_nmi_is_one(spark, tmp_path):
     # Lang fully determined by the band (and vice versa):
     # I = H_x = H_y -> NMI = 1.
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_mutual_information,
     )
 
     rows = [(0, "t", "en", "s", 50), (1, "t", "en", "s", 60),
             (2, "t", "de", "s", 150), (3, "t", "de", "s", 160)]
-    r = ml_mutual_information(spark, _docs(spark, tmp_path, rows)).collect()[0]
+    r = ml_mutual_information(spark, write_documents(spark, tmp_path, rows)).collect()[0]
     assert abs(r["mi_s"] - math.log(2)) < 1e-6
     assert r["nmi_s"] == 1.0
 
@@ -125,12 +118,12 @@ def test_mi_deterministic_mapping_nmi_is_one(spark, tmp_path):
 
 
 def test_overlap_identical_sources_full_jaccard(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_source_ngram_overlap,
     )
 
     text = "the quick brown fox jumps"
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, text, "en", "a", 10), (1, text, "en", "b", 10)])
     rows = text_source_ngram_overlap(spark, sf).collect()
     assert len(rows) == 1
@@ -141,11 +134,11 @@ def test_overlap_identical_sources_full_jaccard(spark, tmp_path):
 
 
 def test_overlap_disjoint_sources_emit_no_pair(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_source_ngram_overlap,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "alpha beta gamma delta", "en", "a", 10),
         (1, "one two three four", "en", "b", 10)])
     assert text_source_ngram_overlap(spark, sf).count() == 0
@@ -154,11 +147,11 @@ def test_overlap_disjoint_sources_emit_no_pair(spark, tmp_path):
 def test_overlap_nested_sources_containment_one(spark, tmp_path):
     # Source b's grams are a strict subset of a's: containment of the
     # smaller side = 1 while Jaccard < 1.
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_source_ngram_overlap,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "a b c d e f", "en", "big", 10),   # grams: abc bcd cde def
         (1, "a b c d", "en", "small", 10)])    # grams: abc bcd
     r = text_source_ngram_overlap(spark, sf).collect()[0]
@@ -168,11 +161,11 @@ def test_overlap_nested_sources_containment_one(spark, tmp_path):
 
 
 def test_overlap_short_docs_produce_no_grams(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_source_ngram_overlap,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "one two", "en", "a", 7), (1, "one two", "en", "b", 7)])
     assert text_source_ngram_overlap(spark, sf).count() == 0
 
@@ -183,7 +176,7 @@ def test_overlap_short_docs_produce_no_grams(spark, tmp_path):
 def test_ldiv_homogeneous_class_flagged(spark, tmp_path):
     # One class, every member shares the sensitive value: l = 1, all
     # rows at risk.
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.gov import (
         gov_l_diversity_audit,
     )
 
@@ -197,7 +190,7 @@ def test_ldiv_homogeneous_class_flagged(spark, tmp_path):
 
 def test_ldiv_diverse_class_clean(spark, tmp_path):
     # l = 2 meets the threshold: nothing at risk even though k = 2.
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.gov import (
         gov_l_diversity_audit,
     )
 
@@ -211,7 +204,7 @@ def test_ldiv_diverse_class_clean(spark, tmp_path):
 def test_ldiv_band_boundary_splits_classes(spark, tmp_path):
     # 999.99 and 1000.0 land in different balance bands -> two
     # classes of one row each, both homogeneous.
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.gov import (
         gov_l_diversity_audit,
     )
 
@@ -225,7 +218,7 @@ def test_ldiv_band_boundary_splits_classes(spark, tmp_path):
 def test_ldiv_negative_balance_bands(spark, tmp_path):
     # floor(-0.01 / 1000) = -1: negative balances get their own band
     # rather than folding into band 0.
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.gov import (
         gov_l_diversity_audit,
     )
 
@@ -252,11 +245,11 @@ def _laplace_noise(source: str, eps: float = 1.0) -> float:
 
 
 def test_dp_noise_matches_hand_replay(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.gov import (
         gov_dp_noisy_counts,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "t", "en", "web", 10), (1, "t", "en", "web", 10),
         (2, "t", "en", "books", 10)])
     rows = {r["source"]: r for r in gov_dp_noisy_counts(spark, sf).collect()}
@@ -270,11 +263,11 @@ def test_dp_noise_matches_hand_replay(spark, tmp_path):
 def test_dp_noise_is_deterministic_and_bounded(spark, tmp_path):
     # Same release twice -> identical noise; |noise| <= b * ln(5e5):
     # the mod-999999 coin keeps 1 - 2|u| >= 2e-6, so ln never sees 0.
-    from dataingestionengineprocess_spark.queries.round4g import (
+    from dataingestionengineprocess_spark.queries.gov import (
         gov_dp_noisy_counts,
     )
 
-    sf = _docs(spark, tmp_path,
+    sf = write_documents(spark, tmp_path,
                [(i, "t", "en", f"s{i % 5}", 10) for i in range(20)])
     a = sorted(gov_dp_noisy_counts(spark, sf).collect())
     b = sorted(gov_dp_noisy_counts(spark, sf).collect())

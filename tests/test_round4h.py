@@ -11,26 +11,7 @@ from __future__ import annotations
 
 import math
 
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
-def _docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents, write_events
 
 
 def _star(spark, tmp_path, customers, orders):
@@ -61,11 +42,11 @@ def test_km_hand_replayed_curve_with_censoring(spark, tmp_path):
     # Users: A dur 1 (death), B dur 2 (death), C dur 3 = max day
     # (censored). Steps: t=1 n=3 d=1 -> S=2/3; t=2 n=2 d=1 -> S=1/3;
     # t=3 n=1 d=0 c=1 -> S stays 1/3.
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_kaplan_meier,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (0, "2024-01-01 00:00:00", 1, "view", 0.0, ""),
         (1, "2024-01-02 00:00:00", 1, "view", 0.0, ""),
         (2, "2024-01-01 00:00:00", 2, "view", 0.0, ""),
@@ -88,11 +69,11 @@ def test_km_kill_step_pins_survival_to_zero(spark, tmp_path):
     # user with dur >= 3, so at t=3 d = n_risk = 1 and survival must
     # be EXACTLY 0 -- the kill flag, not exp(ln(0)). User B's single
     # event on the max day censors at dur 0 without a drop.
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_kaplan_meier,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (0, "2024-01-01 00:00:00", 1, "view", 0.0, ""),
         (1, "2024-01-04 00:00:00", 1, "view", 0.0, ""),
         (2, "2024-01-06 00:00:00", 2, "view", 0.0, ""),
@@ -105,11 +86,11 @@ def test_km_kill_step_pins_survival_to_zero(spark, tmp_path):
 
 
 def test_km_single_user_censored_survival_one(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_kaplan_meier,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (0, "2024-01-01 00:00:00", 1, "view", 0.0, ""),
         (1, "2024-01-03 00:00:00", 1, "view", 0.0, ""),
     ])
@@ -146,7 +127,7 @@ def _lineitem_part(spark, tmp_path, baskets):
 def test_basket_perfect_cooccurrence_lift(spark, tmp_path):
     # A and B always together in 2 of 4 orders: supp=1/2, conf=1,
     # lift = (1/2) / (1/2 * 1/2) = 2.
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.orders import (
         basket_brand_lift,
     )
 
@@ -162,7 +143,7 @@ def test_basket_perfect_cooccurrence_lift(spark, tmp_path):
 
 def test_basket_independent_brands_lift_one(spark, tmp_path):
     # A in every order, B in every order -> lift exactly 1.
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.orders import (
         basket_brand_lift,
     )
 
@@ -175,7 +156,7 @@ def test_basket_independent_brands_lift_one(spark, tmp_path):
 def test_basket_duplicate_lines_count_once(spark, tmp_path):
     # Two lineitems of the same brand in one order: the DISTINCT
     # basket build must count the (order, brand) membership once.
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.orders import (
         basket_brand_lift,
     )
 
@@ -189,7 +170,7 @@ def test_basket_duplicate_lines_count_once(spark, tmp_path):
 
 
 def test_gini_equal_revenues_zero(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.orders import (
         sales_gini_by_region,
     )
 
@@ -203,7 +184,7 @@ def test_gini_equal_revenues_zero(spark, tmp_path):
 
 def test_gini_max_concentration(spark, tmp_path):
     # One of n customers holds everything: G = (n-1)/n.
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.orders import (
         sales_gini_by_region,
     )
 
@@ -219,7 +200,7 @@ def test_gini_max_concentration(spark, tmp_path):
 def test_gini_zero_order_customers_included(spark, tmp_path):
     # The customer with no orders must appear as a zero, raising G
     # above the orders-only value.
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.orders import (
         sales_gini_by_region,
     )
 
@@ -233,7 +214,7 @@ def test_gini_zero_order_customers_included(spark, tmp_path):
 
 def test_gini_hand_value_two_unequal(spark, tmp_path):
     # cents 100 and 300: G = 2*(1*100+2*300)/(2*400) - 3/2 = 0.25.
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.orders import (
         sales_gini_by_region,
     )
 
@@ -250,12 +231,12 @@ def test_gini_hand_value_two_unequal(spark, tmp_path):
 def test_distinctive_terms_marker_word_tops(spark, tmp_path):
     # 'zebra' appears only in source a; shared filler dominates counts
     # but has no source signal, so the marker word must rank first.
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_distinctive_terms,
     )
 
     filler = "the and of to in " * 4
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, filler + "zebra zebra zebra", "en", "a", 10),
         (1, filler, "en", "b", 10),
         (2, filler, "en", "b", 10),
@@ -271,12 +252,12 @@ def test_distinctive_terms_symmetric_sources_tie(spark, tmp_path):
     # Identical corpora in both sources: every z pins to the same
     # value for a and b (mirror symmetry), and the shared-count terms
     # are not spuriously distinctive (|z| well below 1).
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_distinctive_terms,
     )
 
     text = "alpha beta gamma delta"
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, text, "en", "a", 10), (1, text, "en", "b", 10)])
     rows = text_distinctive_terms(spark, sf).collect()
     za = {r["tok"]: r["z_s"] for r in rows if r["source"] == "a"}
@@ -291,7 +272,7 @@ def test_distinctive_terms_symmetric_sources_tie(spark, tmp_path):
 def test_seasonal_flat_series_zero_indices(spark, tmp_path):
     # Constant daily counts over 14 days: every seasonal index 0,
     # trend = the constant on full-window days, residual 0.
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_seasonal_decompose,
     )
 
@@ -302,7 +283,7 @@ def test_seasonal_flat_series_zero_indices(spark, tmp_path):
             rows.append((eid, f"2024-01-{d + 1:02d} 12:00:00", k, "view",
                          0.0, ""))
             eid += 1
-    sf = _events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = {r["day_num"]: r for r in
            events_seasonal_decompose(spark, sf).collect()}
     assert len(out) == 14
@@ -318,7 +299,7 @@ def test_seasonal_weekly_spike_lands_on_its_dow(spark, tmp_path):
     # 14 days, 1 event/day except day 0 and day 7 (dow 0) with 8:
     # dow-0 mean = 8, grand = (12*1 + 2*8)/14 = 2 -> seasonal(dow 0)
     # = 6, seasonal(other) = 1 - 2 = -1.
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_seasonal_decompose,
     )
 
@@ -330,7 +311,7 @@ def test_seasonal_weekly_spike_lands_on_its_dow(spark, tmp_path):
             rows.append((eid, f"2024-01-{d + 1:02d} 12:00:00", k, "view",
                          0.0, ""))
             eid += 1
-    sf = _events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = {r["day_num"]: r for r in
            events_seasonal_decompose(spark, sf).collect()}
     assert out[0]["seasonal_s"] == 6.0

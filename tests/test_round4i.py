@@ -11,26 +11,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
-def _docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents, write_events
 
 
 def _arm(user_id: int) -> int:
@@ -54,7 +35,7 @@ def _users_for_arms(n_each: int):
 def test_ab_counts_and_rates_match_hand_assignment(spark, tmp_path):
     # 3 users per arm; in arm 0 one converts (purchase day 0), in arm
     # 1 all three convert -> rates 1/3 and 1.
-    from dataingestionengineprocess_spark.queries.round4i import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_ab_test_analysis,
     )
 
@@ -66,7 +47,7 @@ def test_ab_counts_and_rates_match_hand_assignment(spark, tmp_path):
     for uid in a0[:1] + a1:
         rows.append((eid, "2024-01-02 08:00:00", uid, "purchase", 1.0, ""))
         eid += 1
-    r = events_ab_test_analysis(spark, _events(spark, tmp_path, rows)
+    r = events_ab_test_analysis(spark, write_events(spark, tmp_path, rows)
                                 ).collect()[0]
     assert (r["n0"], r["c0"], r["n1"], r["c1"]) == (3, 1, 3, 3)
     assert abs(r["rate0_s"] - 1 / 3) < 2e-6
@@ -79,7 +60,7 @@ def test_ab_counts_and_rates_match_hand_assignment(spark, tmp_path):
 
 def test_ab_late_purchase_does_not_convert(spark, tmp_path):
     # Purchase 3 days after first activity misses the 2-day window.
-    from dataingestionengineprocess_spark.queries.round4i import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_ab_test_analysis,
     )
 
@@ -90,7 +71,7 @@ def test_ab_late_purchase_does_not_convert(spark, tmp_path):
         eid += 1
         rows.append((eid, "2024-01-04 08:00:00", uid, "purchase", 1.0, ""))
         eid += 1
-    r = events_ab_test_analysis(spark, _events(spark, tmp_path, rows)
+    r = events_ab_test_analysis(spark, write_events(spark, tmp_path, rows)
                                 ).collect()[0]
     assert (r["c0"], r["c1"]) == (0, 0)
     assert r["uplift_s"] is None  # p0 = 0: guarded, not a crash
@@ -99,7 +80,7 @@ def test_ab_late_purchase_does_not_convert(spark, tmp_path):
 
 def test_ab_wilson_matches_hand_formula(spark, tmp_path):
     # One arm with c=1/n=2: Wilson bounds from the textbook formula.
-    from dataingestionengineprocess_spark.queries.round4i import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_ab_test_analysis,
     )
 
@@ -111,7 +92,7 @@ def test_ab_wilson_matches_hand_formula(spark, tmp_path):
     for uid in (a0[0], a1[0]):
         rows.append((eid, "2024-01-01 12:00:00", uid, "purchase", 1.0, ""))
         eid += 1
-    r = events_ab_test_analysis(spark, _events(spark, tmp_path, rows)
+    r = events_ab_test_analysis(spark, write_events(spark, tmp_path, rows)
                                 ).collect()[0]
     z, p, n = 1.96, 0.5, 2
     half, rad = z * z / (2 * n), z * math.sqrt(
@@ -126,7 +107,7 @@ def test_ab_wilson_matches_hand_formula(spark, tmp_path):
 
 
 def test_cusum_flat_series_no_drift(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4i import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_cusum_changepoint,
     )
 
@@ -136,7 +117,7 @@ def test_cusum_flat_series_no_drift(spark, tmp_path):
             rows.append((eid, f"2024-01-{d + 1:02d} 12:00:00", k, "view",
                          0.0, ""))
             eid += 1
-    out = events_cusum_changepoint(spark, _events(spark, tmp_path, rows)
+    out = events_cusum_changepoint(spark, write_events(spark, tmp_path, rows)
                                    ).collect()
     assert all(r["cusum_s"] == 0.0 for r in out)
     assert all(r["stat_s"] is None for r in out)  # std = 0: guarded NULL
@@ -147,7 +128,7 @@ def test_cusum_flat_series_no_drift(spark, tmp_path):
 def test_cusum_level_shift_peaks_at_boundary(spark, tmp_path):
     # 2/day for days 0-4, then 6/day for days 5-9: mean 4, CUSUM
     # descends to -10 at day 4 then returns -> changepoint day 4.
-    from dataingestionengineprocess_spark.queries.round4i import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_cusum_changepoint,
     )
 
@@ -158,7 +139,7 @@ def test_cusum_level_shift_peaks_at_boundary(spark, tmp_path):
                          0.0, ""))
             eid += 1
     out = {r["day_num"]: r for r in
-           events_cusum_changepoint(spark, _events(spark, tmp_path, rows)
+           events_cusum_changepoint(spark, write_events(spark, tmp_path, rows)
                                     ).collect()}
     assert out[4]["cusum_s"] == -10.0
     assert out[9]["cusum_s"] == 0.0
@@ -172,11 +153,9 @@ def test_cusum_level_shift_peaks_at_boundary(spark, tmp_path):
 
 
 def test_auprc_perfect_separation_is_one(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4i import (
-        ml_auprc_exact,
-    )
+    from dataingestionengineprocess_spark.queries.ml import ml_auprc_exact
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "t", "en", "s", 100), (1, "t", "en", "s", 90),
         (2, "t", "de", "s", 10), (3, "t", "fr", "s", 20),
     ])
@@ -189,11 +168,9 @@ def test_auprc_perfect_separation_is_one(spark, tmp_path):
 def test_auprc_matches_sklearn_hand_case(spark, tmp_path):
     # scores desc: 4(pos) 3(neg) 2(pos) 1(neg):
     # AP = 1/2 * (1 + 2/3) = 0.833333 (step interpolation).
-    from dataingestionengineprocess_spark.queries.round4i import (
-        ml_auprc_exact,
-    )
+    from dataingestionengineprocess_spark.queries.ml import ml_auprc_exact
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "t", "en", "s", 4), (1, "t", "de", "s", 3),
         (2, "t", "en", "s", 2), (3, "t", "de", "s", 1),
     ])
@@ -204,11 +181,9 @@ def test_auprc_matches_sklearn_hand_case(spark, tmp_path):
 def test_auprc_tied_scores_share_group_precision(spark, tmp_path):
     # All rows one score group: AP = precision of the whole set =
     # the positive base rate.
-    from dataingestionengineprocess_spark.queries.round4i import (
-        ml_auprc_exact,
-    )
+    from dataingestionengineprocess_spark.queries.ml import ml_auprc_exact
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "t", "en", "s", 7), (1, "t", "de", "s", 7),
         (2, "t", "de", "s", 7), (3, "t", "de", "s", 7),
     ])
@@ -223,7 +198,7 @@ def test_ece_bins_and_gap_hand_case(spark, tmp_path):
     # Symmetric lengths around the mean with half the docs 'en':
     # z = +/-1 -> p = sigmoid(+/-1) ~ 0.731059 / 0.268941, bins 7 and
     # 2. In each bin accuracy is the planted label rate.
-    from dataingestionengineprocess_spark.queries.round4i import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_expected_calibration_error,
     )
 
@@ -231,7 +206,7 @@ def test_ece_bins_and_gap_hand_case(spark, tmp_path):
     for i in range(4):
         rows.append((i, "t", "en" if i < 2 else "de", "s", 200))
         rows.append((i + 4, "t", "en" if i < 2 else "de", "s", 100))
-    sf = _docs(spark, tmp_path, rows)
+    sf = write_documents(spark, tmp_path, rows)
     out = {r["bin"]: r for r in
            ml_expected_calibration_error(spark, sf).collect()}
     assert set(out) == {2, 7}
@@ -254,13 +229,13 @@ def test_ece_perfectly_calibrated_zero(spark, tmp_path):
     # rather than crashing is NOT the contract -- equal lengths are a
     # measure-zero fixture; assert the realistic case instead: ECE in
     # [0, 1] and bins partition the corpus.
-    from dataingestionengineprocess_spark.queries.round4i import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_expected_calibration_error,
     )
 
     rows = [(i, "t", "en" if i % 3 == 0 else "de", "s", 50 + 17 * i)
             for i in range(30)]
-    sf = _docs(spark, tmp_path, rows)
+    sf = write_documents(spark, tmp_path, rows)
     out = ml_expected_calibration_error(spark, sf).collect()
     assert sum(r["n_b"] for r in out) == 30
     assert all(0.0 <= r["conf_s"] <= 1.0 for r in out)

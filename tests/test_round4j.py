@@ -9,22 +9,13 @@ from __future__ import annotations
 
 import math
 
+from fixture_tables import write_documents, write_embeddings
+
 
 def _embeddings(spark, tmp_path, vecs):
-    rows = [(i, [float(x) for x in v], 0) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int")
-    df.write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    return str(tmp_path)
-
-
-def _docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+    return write_embeddings(
+        spark, tmp_path,
+        [(i, [float(x) for x in v], 0) for i, v in enumerate(vecs)])
 
 
 # --- PCA ---------------------------------------------------------------------
@@ -34,7 +25,7 @@ def test_pca_recovers_planted_direction(spark, tmp_path):
     # Variance lives on dim 0 only: vectors +/-t * e0 (+ tiny constant
     # elsewhere). The top component must align with e0 and explain
     # ~all the variance.
-    from dataingestionengineprocess_spark.queries.round4j import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_pca_power_portable,
     )
 
@@ -60,7 +51,7 @@ def test_pca_loadings_unit_norm_and_constant_stats(spark, tmp_path):
     # Generic anisotropic data: the loading vector is unit-norm (to
     # snap tolerance), lambda <= trace, and the stats columns are
     # constant across rows.
-    from dataingestionengineprocess_spark.queries.round4j import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_pca_power_portable,
     )
 
@@ -85,7 +76,7 @@ def test_pca_isotropic_two_dim_split(spark, tmp_path):
     # Equal variance planted on dims 0 and 1, none elsewhere:
     # explained ratio ~ 1/2 regardless of which direction the
     # iteration converges to.
-    from dataingestionengineprocess_spark.queries.round4j import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_pca_power_portable,
     )
 
@@ -104,11 +95,11 @@ def test_pca_isotropic_two_dim_split(spark, tmp_path):
 
 
 def test_mojibake_planted_artifacts_counted(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4j import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_mojibake_screen,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "clean ascii text", "en", "good", 16),
         (1, "bad � char � here", "en", "bad", 18),
         (2, "cafÃ© naÃ¯ve", "en", "bad", 10),
@@ -129,11 +120,11 @@ def test_mojibake_planted_artifacts_counted(spark, tmp_path):
 
 def test_mojibake_nonascii_ratio_exact(spark, tmp_path):
     # 2 non-ASCII of 10 chars -> ratio 0.2 exactly.
-    from dataingestionengineprocess_spark.queries.round4j import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_mojibake_screen,
     )
 
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "abcdéfghüj", "en", "s", 10)])
     r = text_mojibake_screen(spark, sf).collect()[0]
     assert r["nonascii_ratio_s"] == 0.2
@@ -144,11 +135,11 @@ def test_mojibake_nonascii_ratio_exact(spark, tmp_path):
 def test_mojibake_empty_text_guarded(spark, tmp_path):
     # A source whose only doc is empty: ratio NULL (0/0 guarded),
     # counts zero.
-    from dataingestionengineprocess_spark.queries.round4j import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_mojibake_screen,
     )
 
-    sf = _docs(spark, tmp_path, [(0, "", "en", "empty", 0)])
+    sf = write_documents(spark, tmp_path, [(0, "", "en", "empty", 0)])
     r = text_mojibake_screen(spark, sf).collect()[0]
     assert r["n_docs"] == 1 and r["repl_chars"] == 0
     assert r["nonascii_ratio_s"] is None
@@ -158,7 +149,7 @@ def test_pca_identical_embeddings_degenerate_guard(spark, tmp_path):
     # Zero covariance everywhere: the normalize guard keeps v0, the
     # eigenvalue is 0, and explained is NULL (trace 0) -- no
     # ZeroDivisionError.
-    from dataingestionengineprocess_spark.queries.round4j import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_pca_power_portable,
     )
 

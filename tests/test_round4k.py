@@ -11,17 +11,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_events
 
 
 def _points_fixture(spark, tmp_path, n_cust, n_supp):
@@ -49,8 +39,9 @@ def test_spatial_grid_matches_bruteforce(spark, tmp_path):
     # Replay the md5 coordinates in Python and brute-force the radius
     # join: the grid rewrite must return the same pair set (top-k by
     # distance) and the same total count.
-    from dataingestionengineprocess_spark.queries.round4k import (
-        _R, join_spatial_grid,
+    from dataingestionengineprocess_spark.queries.join import (
+        _R,
+        join_spatial_grid,
     )
 
     n_c, n_s = 120, 80
@@ -76,8 +67,9 @@ def test_spatial_grid_cell_boundary_pair_found(spark, tmp_path):
     # distance < R) must be found by the 3x3 probe -- the classic
     # off-by-one failure of grid joins. Search the md5 space for such
     # a pair among the fixture keys and assert it appears.
-    from dataingestionengineprocess_spark.queries.round4k import (
-        _R, join_spatial_grid,
+    from dataingestionengineprocess_spark.queries.join import (
+        _R,
+        join_spatial_grid,
     )
 
     n_c, n_s = 200, 120
@@ -99,7 +91,7 @@ def test_spatial_grid_cell_boundary_pair_found(spark, tmp_path):
     from dataingestionengineprocess_spark.operators.spatial import (
         grid_radius_pairs,
     )
-    from dataingestionengineprocess_spark.queries.round4k import md5_points
+    from dataingestionengineprocess_spark.queries.join import md5_points
 
     cust = md5_points(load(spark, sf, "customer"), "c_custkey", "cx", "cy")
     supp = md5_points(load(spark, sf, "supplier"), "s_suppkey", "sx", "sy")
@@ -116,7 +108,7 @@ def test_spatial_grid_cell_boundary_pair_found(spark, tmp_path):
 def test_rolling_median_hand_window(spark, tmp_path):
     # One type, 8 days with counts 1..7 then 9 on day 7: day 6 median
     # of (1..7) = 4; day 7 median of (2..7, 9) = 5; earlier days NULL.
-    from dataingestionengineprocess_spark.queries.round4k import (
+    from dataingestionengineprocess_spark.queries.window import (
         window_rolling_median,
     )
 
@@ -128,7 +120,7 @@ def test_rolling_median_hand_window(spark, tmp_path):
                          0.0, ""))
             eid += 1
     out = {r["day_num"]: r for r in
-           window_rolling_median(spark, _events(spark, tmp_path, rows)
+           window_rolling_median(spark, write_events(spark, tmp_path, rows)
                                  ).collect()}
     for d in range(6):
         assert out[d]["med7_s"] is None
@@ -139,7 +131,7 @@ def test_rolling_median_hand_window(spark, tmp_path):
 def test_rolling_median_per_type_partitions(spark, tmp_path):
     # Two types with different levels: each keeps its own median --
     # no cross-partition leakage.
-    from dataingestionengineprocess_spark.queries.round4k import (
+    from dataingestionengineprocess_spark.queries.window import (
         window_rolling_median,
     )
 
@@ -154,7 +146,7 @@ def test_rolling_median_per_type_partitions(spark, tmp_path):
                          0.0, ""))
             eid += 1
     out = {(r["event_type"], r["day_num"]): r for r in
-           window_rolling_median(spark, _events(spark, tmp_path, rows)
+           window_rolling_median(spark, write_events(spark, tmp_path, rows)
                                  ).collect()}
     assert out[("view", 6)]["med7_s"] == 2.0
     assert out[("click", 6)]["med7_s"] == 10.0
@@ -167,7 +159,7 @@ def test_markov_two_state_hand_solution(spark, tmp_path):
     # One user alternating a -> b -> a -> b ...: P = [[0,1],[1,0]],
     # pi stays uniform (0.5, 0.5) -- the exact fixed point survives
     # all six snapped steps.
-    from dataingestionengineprocess_spark.queries.round4k import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_markov_stationary,
     )
 
@@ -176,7 +168,7 @@ def test_markov_two_state_hand_solution(spark, tmp_path):
         rows.append((t, f"2024-01-01 00:0{t}:00", 1,
                      "a" if t % 2 == 0 else "b", 0.0, ""))
     out = {r["state"]: r for r in
-           events_markov_stationary(spark, _events(spark, tmp_path, rows)
+           events_markov_stationary(spark, write_events(spark, tmp_path, rows)
                                     ).collect()}
     assert out["a"]["stationary_s"] == 0.5
     assert out["b"]["stationary_s"] == 0.5
@@ -188,7 +180,7 @@ def test_markov_absorbing_state_self_loop(spark, tmp_path):
     # 'end' never transitions out: the densified matrix gives it a
     # self-loop, so mass flows in and stays -- its stationary weight
     # must dominate after six steps.
-    from dataingestionengineprocess_spark.queries.round4k import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_markov_stationary,
     )
 
@@ -200,7 +192,7 @@ def test_markov_absorbing_state_self_loop(spark, tmp_path):
         rows.append((eid, "2024-01-01 00:01:00", u, "end", 0.0, ""))
         eid += 1
     out = {r["state"]: r for r in
-           events_markov_stationary(spark, _events(spark, tmp_path, rows)
+           events_markov_stationary(spark, write_events(spark, tmp_path, rows)
                                     ).collect()}
     assert out["end"]["out_transitions"] == 0
     assert out["end"]["stationary_s"] > 0.9
@@ -210,7 +202,7 @@ def test_markov_absorbing_state_self_loop(spark, tmp_path):
 def test_markov_rows_sum_to_one_after_steps(spark, tmp_path):
     # Generic chain: the stationary vector keeps total mass ~1
     # (quantization drift bounded by steps * states * 1e-6).
-    from dataingestionengineprocess_spark.queries.round4k import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_markov_stationary,
     )
 
@@ -220,7 +212,7 @@ def test_markov_rows_sum_to_one_after_steps(spark, tmp_path):
         for t, s in enumerate(seq):
             rows.append((eid, f"2024-01-01 00:{t:02d}:00", u, s, 0.0, ""))
             eid += 1
-    out = events_markov_stationary(spark, _events(spark, tmp_path, rows)
+    out = events_markov_stationary(spark, write_events(spark, tmp_path, rows)
                                    ).collect()
     total = sum(r["stationary_s"] for r in out)
     assert abs(total - 1.0) < 6 * 3 * 1e-6 + 1e-9

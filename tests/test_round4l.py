@@ -6,26 +6,21 @@ isolation, cohort matrix hand values, and planted rule violations.
 
 from __future__ import annotations
 
+from fixture_tables import write_documents, write_table
+
 
 def _docs(spark, tmp_path, n):
-    rows = [(i, "t", "en", "s", 10) for i in range(n)]
-    df = spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+    return write_documents(
+        spark, tmp_path, [(i, "t", "en", "s", 10) for i in range(n)])
 
 
 def _orders(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        rows, "o_orderkey long, o_custkey long, o_totalprice double, "
-              "o_orderdate string",
-    ).withColumn("o_orderdate", F.to_date("o_orderdate"))
-    df.write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
-    return str(tmp_path)
+    return write_table(
+        spark, tmp_path, "orders", rows,
+        "o_orderkey long, o_custkey long, o_totalprice double, "
+        "o_orderdate string",
+        dates=["o_orderdate"],
+    )
 
 
 # --- URL canonicalization ----------------------------------------------------
@@ -34,7 +29,7 @@ def _orders(spark, tmp_path, rows):
 def test_url_four_styles_collapse_to_one(spark, tmp_path):
     # doc_ids 0, 100, 200, 300 are the four spellings of page 0: all
     # must collapse to one canonical URL with 4 variants, keeper 0.
-    from dataingestionengineprocess_spark.queries.round4l import (
+    from dataingestionengineprocess_spark.queries.dedup import (
         dedup_url_canonical,
     )
 
@@ -49,7 +44,7 @@ def test_url_four_styles_collapse_to_one(spark, tmp_path):
 def test_url_singletons_not_reported(spark, tmp_path):
     # Only style-0 spellings exist (doc_id < 100): no group exceeds
     # one variant, so the dedup report is empty.
-    from dataingestionengineprocess_spark.queries.round4l import (
+    from dataingestionengineprocess_spark.queries.dedup import (
         dedup_url_canonical,
     )
 
@@ -60,7 +55,7 @@ def test_url_singletons_not_reported(spark, tmp_path):
 def test_url_canonical_form_details(spark, tmp_path):
     # The canonical string itself: lower scheme+host, :80 stripped,
     # params sorted, utm_ dropped, fragment gone.
-    from dataingestionengineprocess_spark.queries.round4l import (
+    from dataingestionengineprocess_spark.queries.dedup import (
         dedup_url_canonical,
     )
 
@@ -80,7 +75,7 @@ def test_url_canonical_form_details(spark, tmp_path):
 def test_cohort_ltv_hand_matrix(spark, tmp_path):
     # Two customers acquired in Jan (orders 10 + 20), one of them
     # orders 30 more in Feb; one customer acquired in Feb (40).
-    from dataingestionengineprocess_spark.queries.round4l import (
+    from dataingestionengineprocess_spark.queries.orders import (
         orders_cohort_ltv,
     )
 
@@ -104,7 +99,7 @@ def test_cohort_ltv_hand_matrix(spark, tmp_path):
 
 
 def test_cohort_ltv_cumulative_monotone(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4l import (
+    from dataingestionengineprocess_spark.queries.orders import (
         orders_cohort_ltv,
     )
 
@@ -145,7 +140,7 @@ def test_rules_planted_violations_counted(spark, tmp_path):
     # Four lines: one clean, one shipped before its order, one with a
     # negative quantity AND an out-of-range discount, one with
     # negative tax.
-    from dataingestionengineprocess_spark.queries.round4l import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_cross_field_rules,
     )
 
@@ -174,7 +169,7 @@ def test_rules_planted_violations_counted(spark, tmp_path):
 
 
 def test_rules_clean_data_all_zero(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4l import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_cross_field_rules,
     )
 

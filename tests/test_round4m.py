@@ -10,14 +10,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-
-def _docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents
 
 
 def _star(spark, tmp_path, custkeys, orders, lineitems):
@@ -41,7 +34,7 @@ def _star(spark, tmp_path, custkeys, orders, lineitems):
 def test_csv_every_style_survives_byte_exact(spark, tmp_path):
     # 16 customers = two of each style; replay the synthesis in
     # Python and check counts/lengths/checksums per style.
-    from dataingestionengineprocess_spark.queries.round4m import (
+    from dataingestionengineprocess_spark.queries.source import (
         source_csv_roundtrip_edgecases,
     )
 
@@ -85,9 +78,7 @@ def _doomed(k: int) -> bool:
 def test_erasure_cascade_hand_replayed(spark, tmp_path):
     # Find one doomed and two safe keys by replaying the coin; give
     # the doomed customer 2 orders x 2 lines, the safe ones 1 x 1.
-    from dataingestionengineprocess_spark.queries.round4m import (
-        gov_erasure_impact,
-    )
+    from dataingestionengineprocess_spark.queries.gov import gov_erasure_impact
 
     doomed = [k for k in range(200) if _doomed(k)][:1]
     safe = [k for k in range(200) if not _doomed(k)][:2]
@@ -105,9 +96,7 @@ def test_erasure_cascade_hand_replayed(spark, tmp_path):
 
 
 def test_erasure_no_doomed_rows_all_zero(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4m import (
-        gov_erasure_impact,
-    )
+    from dataingestionengineprocess_spark.queries.gov import gov_erasure_impact
 
     safe = [k for k in range(200) if not _doomed(k)][:3]
     sf = _star(spark, tmp_path, safe,
@@ -124,12 +113,12 @@ def test_erasure_no_doomed_rows_all_zero(spark, tmp_path):
 def test_dataset_card_hand_corpus(spark, tmp_path):
     # 4 docs: one exact dup pair, one short doc, two langs 3:1, one
     # source -> every metric hand-checkable.
-    from dataingestionengineprocess_spark.queries.round4m import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_dataset_card,
     )
 
     long_text = "w " * 30 + "end"   # 63 chars, 31 tokens
-    sf = _docs(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, long_text, "en", "s", 63),
         (1, long_text, "en", "s", 63),      # exact dup
         (2, "short doc", "en", "s", 9),     # < 50 chars

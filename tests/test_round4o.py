@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import hashlib
 
+from fixture_tables import write_documents
+
 
 def _li(spark, tmp_path, rows):
     df = spark.createDataFrame(
@@ -18,22 +20,13 @@ def _li(spark, tmp_path, rows):
     return str(tmp_path)
 
 
-def _docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
 # --- weighted median ---------------------------------------------------------
 
 
 def test_weighted_median_weight_dominates(spark, tmp_path):
     # Values 1.00 (weight 9) and 100.00 (weight 1): the weighted
     # median is 1.00 even though the unweighted midpoint is higher.
-    from dataingestionengineprocess_spark.queries.round4o import (
+    from dataingestionengineprocess_spark.queries.agg import (
         agg_weighted_median,
     )
 
@@ -50,7 +43,7 @@ def test_weighted_median_weight_dominates(spark, tmp_path):
 def test_weighted_median_exact_boundary_crossing(spark, tmp_path):
     # Weights 1, 1: cumulative 1 of 2 meets cw*2 >= tw exactly at the
     # FIRST value (inclusive definition).
-    from dataingestionengineprocess_spark.queries.round4o import (
+    from dataingestionengineprocess_spark.queries.agg import (
         agg_weighted_median,
     )
 
@@ -61,7 +54,7 @@ def test_weighted_median_exact_boundary_crossing(spark, tmp_path):
 
 
 def test_weighted_median_per_group_isolation(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4o import (
+    from dataingestionengineprocess_spark.queries.agg import (
         agg_weighted_median,
     )
 
@@ -91,13 +84,13 @@ def _cuts(doc_id: int, n: int):
 def test_fim_reassembles_to_original_bytes(spark, tmp_path):
     # Replay the md5 cuts in Python, split fim_text on the sentinels,
     # and reassemble prefix + middle + suffix == original.
-    from dataingestionengineprocess_spark.queries.round4o import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_fim_transform,
     )
 
     texts = ["the quick brown fox jumps over the lazy dog",
              "abcdefghijklmnop", "short", "exactly six!"]
-    sf = _docs(spark, tmp_path,
+    sf = write_documents(spark, tmp_path,
                [(i, t, "en", "s", len(t)) for i, t in enumerate(texts)])
     out = {r["doc_id"]: r for r in
            curation_fim_transform(spark, sf).collect()}
@@ -123,12 +116,12 @@ def test_fim_reassembles_to_original_bytes(spark, tmp_path):
 def test_fim_spans_always_nonempty(spark, tmp_path):
     # Every applied split must keep all three spans non-empty for any
     # length >= 6 (the 1 + coin % third construction).
-    from dataingestionengineprocess_spark.queries.round4o import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_fim_transform,
     )
 
     rows = [(i, "x" * (6 + i), "en", "s", 6 + i) for i in range(40)]
-    sf = _docs(spark, tmp_path, rows)
+    sf = write_documents(spark, tmp_path, rows)
     for r in curation_fim_transform(spark, sf).collect():
         assert r["fim_applied"] == 1
         assert r["len_prefix"] >= 1
@@ -140,7 +133,7 @@ def test_fim_spans_always_nonempty(spark, tmp_path):
 def test_weighted_p90_moves_with_weight_split(spark, tmp_path):
     # Weights 8 + 2: cw = 8 < 9 at the first value, so p90 crosses
     # into the second value while the median stays at the first.
-    from dataingestionengineprocess_spark.queries.round4o import (
+    from dataingestionengineprocess_spark.queries.agg import (
         agg_weighted_median,
     )
 

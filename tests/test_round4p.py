@@ -6,17 +6,7 @@ hand-tracked backlog with a never-shipped order.
 
 from __future__ import annotations
 
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_events
 
 
 def _orders_li(spark, tmp_path, orders, lines):
@@ -40,7 +30,7 @@ def test_bot_metronome_flagged_human_not(spark, tmp_path):
     # User 1: 30 events exactly 1 s apart, one action type ->
     # rate 60/min, gap std 0: all three flags. User 2: 10 events at
     # irregular multi-minute gaps, 3 types -> no flags.
-    from dataingestionengineprocess_spark.queries.round4p import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_bot_user_screen,
     )
 
@@ -55,7 +45,7 @@ def test_bot_metronome_flagged_human_not(spark, tmp_path):
                      ["view", "click", "purchase"][i % 3], 0.0, ""))
         eid += 1
     out = {r["user_id"]: r for r in
-           quality_bot_user_screen(spark, _events(spark, tmp_path, rows)
+           quality_bot_user_screen(spark, write_events(spark, tmp_path, rows)
                                    ).collect()}
     bot, human = out[1], out[2]
     assert bot["gap_std_sec_s"] == 0.0
@@ -70,12 +60,12 @@ def test_bot_metronome_flagged_human_not(spark, tmp_path):
 def test_bot_single_event_user_null_std(spark, tmp_path):
     # One event: no gaps -> NULL std, rate over the 1-second floor,
     # no flags.
-    from dataingestionengineprocess_spark.queries.round4p import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_bot_user_screen,
     )
 
     rows = [(0, "2024-01-01 00:00:00", 1, "view", 0.0, "")]
-    r = quality_bot_user_screen(spark, _events(spark, tmp_path, rows)
+    r = quality_bot_user_screen(spark, write_events(spark, tmp_path, rows)
                                 ).collect()[0]
     assert r["n_events"] == 1
     assert r["gap_std_sec_s"] is None
@@ -87,14 +77,14 @@ def test_bot_day_scale_gaps_no_overflow(spark, tmp_path):
     # Multi-day gaps square past int64: the decimal accumulation must
     # return the exact std (2 gaps of 10 and 20 days -> pop std of
     # {864000, 1728000} s = 432000 s).
-    from dataingestionengineprocess_spark.queries.round4p import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_bot_user_screen,
     )
 
     rows = [(0, "2024-01-01 00:00:00", 1, "view", 0.0, ""),
             (1, "2024-01-11 00:00:00", 1, "view", 0.0, ""),
             (2, "2024-01-31 00:00:00", 1, "view", 0.0, "")]
-    r = quality_bot_user_screen(spark, _events(spark, tmp_path, rows)
+    r = quality_bot_user_screen(spark, write_events(spark, tmp_path, rows)
                                 ).collect()[0]
     assert r["gap_std_sec_s"] == 432000.0
 
@@ -105,7 +95,7 @@ def test_bot_day_scale_gaps_no_overflow(spark, tmp_path):
 def test_backlog_hand_tracked_flows(spark, tmp_path):
     # Day 0: orders 1, 2 placed. Day 1: order 3 placed; order 1 fully
     # ships. Day 2: order 2's last line ships. Order 3 never ships.
-    from dataingestionengineprocess_spark.queries.round4p import (
+    from dataingestionengineprocess_spark.queries.orders import (
         orders_backlog_timeseries,
     )
 
@@ -126,7 +116,7 @@ def test_backlog_hand_tracked_flows(spark, tmp_path):
 def test_backlog_partial_shipment_keeps_order_open(spark, tmp_path):
     # An order ships one of two lines: it stays in the backlog until
     # the LAST line's ship date.
-    from dataingestionengineprocess_spark.queries.round4p import (
+    from dataingestionengineprocess_spark.queries.orders import (
         orders_backlog_timeseries,
     )
 

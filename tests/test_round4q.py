@@ -6,25 +6,7 @@ shared-substring guarantee and hand-tracks island arithmetic.
 
 from __future__ import annotations
 
-
-def _docs(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents, write_events
 
 
 # --- winnowing ---------------------------------------------------------------
@@ -35,7 +17,7 @@ def test_winnow_shared_substring_guarantee(spark, tmp_path):
     # (= 15 here) yields at least one SHARED fingerprint (same hash,
     # possibly different positions). Embed one in otherwise-different
     # docs.
-    from dataingestionengineprocess_spark.queries.round4q import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_winnowing_fingerprints,
     )
 
@@ -45,7 +27,7 @@ def test_winnow_shared_substring_guarantee(spark, tmp_path):
         (2, "zzzzzz " + shared + " qqqq", "en", "s", 0),
     ]
     fps = text_winnowing_fingerprints(
-        spark, _docs(spark, tmp_path, rows)).collect()
+        spark, write_documents(spark, tmp_path, rows)).collect()
     f1 = {r["fp"] for r in fps if r["doc_id"] == 1}
     f2 = {r["fp"] for r in fps if r["doc_id"] == 2}
     assert f1 & f2, "shared 25-char substring must share a fingerprint"
@@ -55,7 +37,7 @@ def test_winnow_short_doc_and_sub_k_doc(spark, tmp_path):
     # A doc of >= k (8) chars but fewer than w grams still emits at
     # least one fingerprint (degraded single window); a doc shorter
     # than k emits none.
-    from dataingestionengineprocess_spark.queries.round4q import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_winnowing_fingerprints,
     )
 
@@ -64,7 +46,7 @@ def test_winnow_short_doc_and_sub_k_doc(spark, tmp_path):
         (2, "short", "en", "s", 0),        # 5 chars < k -> nothing
     ]
     fps = text_winnowing_fingerprints(
-        spark, _docs(spark, tmp_path, rows)).collect()
+        spark, write_documents(spark, tmp_path, rows)).collect()
     by_doc = {}
     for r in fps:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -76,14 +58,14 @@ def test_winnow_positions_in_bounds_and_density(spark, tmp_path):
     # Fingerprint positions stay within [1, len-k+1]; selection
     # density is bounded by the number of full windows (<= one pick
     # per window start).
-    from dataingestionengineprocess_spark.queries.round4q import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_winnowing_fingerprints,
     )
 
     text = "abcdefgh" * 8  # 64 chars, 57 grams
     rows = [(1, text, "en", "s", 0)]
     fps = text_winnowing_fingerprints(
-        spark, _docs(spark, tmp_path, rows)).collect()
+        spark, write_documents(spark, tmp_path, rows)).collect()
     assert fps
     for r in fps:
         assert 1 <= r["pos"] <= len(text) - 8 + 1
@@ -97,7 +79,7 @@ def test_islands_hand_tracked(spark, tmp_path):
     # User 1 active on day_nums {0,1,2, 6,7, 19} (anchor 2024-01-01):
     # 3 islands, longest 3 starting day 0, 6 active days. Two events
     # on one day must not double-count.
-    from dataingestionengineprocess_spark.queries.round4q import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_activity_islands,
     )
 
@@ -106,7 +88,7 @@ def test_islands_hand_tracked(spark, tmp_path):
     rows = [(i, f"{d} 12:00:00", 1, "view", 0.0, "")
             for i, d in enumerate(days)]
     r = events_activity_islands(
-        spark, _events(spark, tmp_path, rows)).collect()[0]
+        spark, write_events(spark, tmp_path, rows)).collect()[0]
     assert (r["n_active_days"], r["n_islands"], r["longest_len"],
             r["longest_start_day"]) == (6, 3, 3, 0)
 
@@ -114,7 +96,7 @@ def test_islands_hand_tracked(spark, tmp_path):
 def test_islands_tie_breaks_earliest_start(spark, tmp_path):
     # Two islands of equal length 2 -> longest_start_day is the
     # EARLIER start.
-    from dataingestionengineprocess_spark.queries.round4q import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_activity_islands,
     )
 
@@ -122,6 +104,6 @@ def test_islands_tie_breaks_earliest_start(spark, tmp_path):
     rows = [(i, f"{d} 00:30:00", 7, "view", 0.0, "")
             for i, d in enumerate(days)]
     r = events_activity_islands(
-        spark, _events(spark, tmp_path, rows)).collect()[0]
+        spark, write_events(spark, tmp_path, rows)).collect()[0]
     assert r["n_islands"] == 2 and r["longest_len"] == 2
     assert r["longest_start_day"] == 31  # 2024-02-01

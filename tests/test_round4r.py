@@ -43,7 +43,7 @@ def test_skyline_dominance_and_ties(spark, tmp_path):
     # is dominated (20 is bigger AND cheaper); a second part tied at
     # (10, 5.00) is also frontier; size 10 @ 6.00 is dominated by the
     # same-size cheaper one via the per-size min prune.
-    from dataingestionengineprocess_spark.queries.round4r import (
+    from dataingestionengineprocess_spark.queries.orders import (
         part_pareto_skyline,
     )
 
@@ -60,7 +60,7 @@ def test_skyline_dominance_and_ties(spark, tmp_path):
 
 def test_skyline_equal_price_larger_size_dominates(spark, tmp_path):
     # Same price, bigger size dominates: only the size-30 part stays.
-    from dataingestionengineprocess_spark.queries.round4r import (
+    from dataingestionengineprocess_spark.queries.orders import (
         part_pareto_skyline,
     )
 
@@ -75,9 +75,7 @@ def test_skyline_equal_price_larger_size_dominates(spark, tmp_path):
 def test_trimmed_mean_drops_extremes(spark, tmp_path):
     # 10 rows, one group: trimming drops exactly the min and max
     # (floor(10/10) = 1 each side); mean of the middle 8 is exact.
-    from dataingestionengineprocess_spark.queries.round4r import (
-        agg_trimmed_mean,
-    )
+    from dataingestionengineprocess_spark.queries.agg import agg_trimmed_mean
 
     vals = [1.00, 2.00, 3.00, 4.00, 5.00, 6.00, 7.00, 8.00, 9.00, 100.00]
     rows = [(i, 1, 1, i, 1.0, v, 0.0, 0.0, "A", "O", "2024-01-01")
@@ -98,9 +96,7 @@ def test_trimmed_mean_drops_extremes(spark, tmp_path):
 
 def test_trimmed_mean_small_group_keeps_all(spark, tmp_path):
     # n = 9 -> floor(9/10) = 0: nothing trimmed, plain mean.
-    from dataingestionengineprocess_spark.queries.round4r import (
-        agg_trimmed_mean,
-    )
+    from dataingestionengineprocess_spark.queries.agg import agg_trimmed_mean
     from pyspark.sql import functions as F
 
     rows = [(i, 1, 1, i, 1.0, float(i + 1), 0.0, 0.0, "A", "O",
@@ -123,7 +119,7 @@ def test_trimmed_mean_small_group_keeps_all(spark, tmp_path):
 def test_theil_zero_for_equal_and_single(spark, tmp_path):
     # Nation ALPHA: two customers with identical spend -> T = 0.
     # Nation BETA: one customer -> T = 0 (r = 1, ln 1 = 0).
-    from dataingestionengineprocess_spark.queries.round4r import (
+    from dataingestionengineprocess_spark.queries.agg import (
         agg_theil_inequality,
     )
 
@@ -142,7 +138,7 @@ def test_theil_zero_for_equal_and_single(spark, tmp_path):
 def test_theil_positive_and_bounded_for_skew(spark, tmp_path):
     # One customer holds ~all spend of a 2-customer nation: T must be
     # positive and below ln(n) = ln(2).
-    from dataingestionengineprocess_spark.queries.round4r import (
+    from dataingestionengineprocess_spark.queries.agg import (
         agg_theil_inequality,
     )
 

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import hashlib
 
+from fixture_tables import write_documents
+
 
 def _graph(spark, tmp_path, parts, lines):
     from pyspark.sql import functions as F
@@ -23,14 +25,6 @@ def _graph(spark, tmp_path, parts, lines):
     return str(tmp_path)
 
 
-def _docs(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
 # --- k-hop BFS ---------------------------------------------------------------
 
 
@@ -38,7 +32,7 @@ def test_khop_path_graph_exact_distances(spark, tmp_path):
     # Brand 'AAA' = part 1 (seed). Orders: {1,2}, {2,3}, {3,4} build a
     # path 1-2-3-4; part 5 is isolated. 2-hop BFS: 1->0, 2->1, 3->2,
     # 4 and 5 unreached.
-    from dataingestionengineprocess_spark.queries.round4s import (
+    from dataingestionengineprocess_spark.queries.graph import (
         graph_khop_reachability,
     )
 
@@ -53,7 +47,7 @@ def test_khop_path_graph_exact_distances(spark, tmp_path):
 def test_khop_cycle_keeps_min_distance(spark, tmp_path):
     # Triangle 1-2-3 with seed 1: 2 and 3 are both 1 hop (the 2-hop
     # path must not re-label them), so no node gets dist 2.
-    from dataingestionengineprocess_spark.queries.round4s import (
+    from dataingestionengineprocess_spark.queries.graph import (
         graph_khop_reachability,
     )
 
@@ -71,14 +65,14 @@ def test_khop_cycle_keeps_min_distance(spark, tmp_path):
 def test_flesch_floors_and_bands(spark, tmp_path):
     # Doc 1: no sentence punctuation -> n_sentences floored to 1.
     # Doc 2: vowel-free words -> syllables floored to n_words.
-    from dataingestionengineprocess_spark.queries.round4s import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_readability_flesch,
     )
 
     rows = [(1, "the cat sat", "en", "s", 0),
             (2, "zzz bzz tsk", "en", "s", 0)]
     out = {r["doc_id"]: r for r in text_readability_flesch(
-        spark, _docs(spark, tmp_path, rows)).collect()}
+        spark, write_documents(spark, tmp_path, rows)).collect()}
     assert out[1]["n_sentences"] == 1
     assert out[1]["n_words"] == 3
     assert out[2]["n_syllables"] == 3  # floored to word count
@@ -91,7 +85,7 @@ def test_flesch_floors_and_bands(spark, tmp_path):
 def test_flesch_dense_sentence_band_shift(spark, tmp_path):
     # Long polysyllabic single sentence lands in a harder band than a
     # staccato doc of the same words split into many sentences.
-    from dataingestionengineprocess_spark.queries.round4s import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_readability_flesch,
     )
 
@@ -99,7 +93,7 @@ def test_flesch_dense_sentence_band_shift(spark, tmp_path):
     easy = ". ".join(["cat"] * 30) + "."
     rows = [(1, hard, "en", "s", 0), (2, easy, "en", "s", 0)]
     out = {r["doc_id"]: r for r in text_readability_flesch(
-        spark, _docs(spark, tmp_path, rows)).collect()}
+        spark, write_documents(spark, tmp_path, rows)).collect()}
     assert out[1]["flesch_s"] < out[2]["flesch_s"]
     assert out[1]["band"] == "very_difficult"
 
@@ -110,14 +104,14 @@ def test_flesch_dense_sentence_band_shift(spark, tmp_path):
 def test_postings_digest_matches_hashlib(spark, tmp_path):
     # Hand-recompute the md5 of the ordered 'doc:pos' string for a
     # term appearing in two docs at known 1-based positions.
-    from dataingestionengineprocess_spark.queries.round4s import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_inverted_postings,
     )
 
     rows = [(1, "alpha beta alpha", "en", "s", 0),
             (2, "beta alpha", "en", "s", 0)]
     out = {r["term"]: r for r in text_inverted_postings(
-        spark, _docs(spark, tmp_path, rows)).collect()}
+        spark, write_documents(spark, tmp_path, rows)).collect()}
     a = out["alpha"]
     assert (a["df"], a["tf_total"]) == (2, 3)
     expect = hashlib.md5(b"1:1,1:3,2:2").hexdigest()
@@ -129,12 +123,12 @@ def test_postings_digest_matches_hashlib(spark, tmp_path):
 
 def test_postings_topk_orders_by_df_then_term(spark, tmp_path):
     # df tie between 'x' and 'y' -> lexicographic order decides.
-    from dataingestionengineprocess_spark.queries.round4s import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_inverted_postings,
     )
 
     rows = [(1, "x y common", "en", "s", 0),
             (2, "y x common", "en", "s", 0),
             (3, "common", "en", "s", 0)]
-    out = text_inverted_postings(spark, _docs(spark, tmp_path, rows)).collect()
+    out = text_inverted_postings(spark, write_documents(spark, tmp_path, rows)).collect()
     assert [r["term"] for r in out] == ["common", "x", "y"]

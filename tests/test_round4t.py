@@ -6,6 +6,8 @@ AM >= GM >= HM chain, and hand-tracks a confusion table.
 
 from __future__ import annotations
 
+from fixture_tables import write_embeddings, write_lineitem
+
 
 def _suppliers(spark, tmp_path, rows):
     spark.createDataFrame(
@@ -16,25 +18,10 @@ def _suppliers(spark, tmp_path, rows):
 
 
 def _lineitem(spark, tmp_path, prices):
-    from pyspark.sql import functions as F
-
-    rows = [(i, 1, 1, i, 1.0, p, 0.0, 0.0, "A", "O", "2024-01-01")
-            for i, p in enumerate(prices)]
-    spark.createDataFrame(
-        rows, "l_orderkey long, l_partkey long, l_suppkey long, "
-              "l_linenumber int, l_quantity double, "
-              "l_extendedprice double, l_discount double, l_tax double, "
-              "l_returnflag string, l_linestatus string, l_shipdate string",
-    ).withColumn("l_shipdate", F.to_timestamp("l_shipdate")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
-    return str(tmp_path)
-
-
-def _embeddings(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    return str(tmp_path)
+    return write_lineitem(
+        spark, tmp_path,
+        [(i, 1, 1, i, 1.0, p, 0.0, 0.0, "A", "O", "2024-01-01")
+         for i, p in enumerate(prices)])
 
 
 # --- XML source --------------------------------------------------------------
@@ -43,7 +30,7 @@ def _embeddings(spark, tmp_path, rows):
 def test_xml_roundtrip_hostile_names(spark, tmp_path):
     # Names with XML metacharacters and unicode must survive the
     # writer's escaping byte-for-byte (length check + exact cents).
-    from dataingestionengineprocess_spark.queries.round4t import (
+    from dataingestionengineprocess_spark.queries.source import (
         source_xml_roundtrip,
     )
 
@@ -64,7 +51,7 @@ def test_xml_roundtrip_hostile_names(spark, tmp_path):
 def test_pyth_means_chain_and_equality(spark, tmp_path):
     # Distinct values: AM > GM > HM strictly. All-equal values:
     # the three means coincide at the common value.
-    from dataingestionengineprocess_spark.queries.round4t import (
+    from dataingestionengineprocess_spark.queries.agg import (
         agg_pythagorean_means,
     )
 
@@ -87,13 +74,13 @@ def test_pyth_means_chain_and_equality(spark, tmp_path):
 def test_prf_hand_confusion(spark, tmp_path):
     # Scores 0.3/0.1/-0.2 with labels 0/1/0 (positive = label 0).
     # At thr 0.0: tp=1 (0.3), fp=1 (0.1), fn=1 (-0.2), tn=0.
-    from dataingestionengineprocess_spark.queries.round4t import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_threshold_sweep_prf,
     )
 
     rows = [(1, [0.3, 0.0], 0), (2, [0.1, 0.0], 1), (3, [-0.2, 0.0], 0)]
     out = {r["thr"]: r for r in ml_threshold_sweep_prf(
-        spark, _embeddings(spark, tmp_path, rows)).collect()}
+        spark, write_embeddings(spark, tmp_path, rows)).collect()}
     r0 = out[0.0]
     assert (r0["tp"], r0["fp"], r0["fn"], r0["tn"]) == (1, 1, 1, 0)
     assert r0["precision_s"] == 0.5
@@ -104,13 +91,13 @@ def test_prf_hand_confusion(spark, tmp_path):
 def test_prf_degenerate_no_predictions_null_precision(spark, tmp_path):
     # All scores below the top threshold: tp + fp = 0 there ->
     # precision is NULL (nullif), recall 0, f1 0.
-    from dataingestionengineprocess_spark.queries.round4t import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_threshold_sweep_prf,
     )
 
     rows = [(1, [-0.9, 0.0], 0), (2, [-0.8, 0.0], 1)]
     out = {r["thr"]: r for r in ml_threshold_sweep_prf(
-        spark, _embeddings(spark, tmp_path, rows)).collect()}
+        spark, write_embeddings(spark, tmp_path, rows)).collect()}
     top = out[0.4]
     assert (top["tp"], top["fp"]) == (0, 0)
     assert top["precision_s"] is None

@@ -6,38 +6,7 @@ boundaries, and the quota-sum invariant.
 
 from __future__ import annotations
 
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
-def _lineitem(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows, "l_orderkey long, l_partkey long, l_suppkey long, "
-              "l_linenumber int, l_quantity double, "
-              "l_extendedprice double, l_discount double, l_tax double, "
-              "l_returnflag string, l_linestatus string, l_shipdate string",
-    ).withColumn("l_shipdate", F.to_timestamp("l_shipdate")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
-    return str(tmp_path)
-
-
-def _docs(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents, write_events, write_lineitem
 
 
 # --- time to convert ---------------------------------------------------------
@@ -47,7 +16,7 @@ def test_ttc_hand_lags_and_nonconverter(spark, tmp_path):
     # User 1: signup 00:00, purchase 00:10 -> 600 s. User 2: signup
     # only. User 3: purchase BEFORE signup -> not a conversion.
     # Cohort week 0: 3 users, 1 converted, median = p90 = 600.
-    from dataingestionengineprocess_spark.queries.round4u import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_time_to_convert,
     )
 
@@ -59,7 +28,7 @@ def test_ttc_hand_lags_and_nonconverter(spark, tmp_path):
         (4, "2024-01-03 09:00:00", 3, "signup", 0.0, ""),
     ]
     r = events_time_to_convert(
-        spark, _events(spark, tmp_path, rows)).collect()
+        spark, write_events(spark, tmp_path, rows)).collect()
     assert len(r) == 1
     row = r[0]
     assert (row["week"], row["n_users"], row["n_converted"]) == (0, 3, 1)
@@ -70,7 +39,7 @@ def test_ttc_hand_lags_and_nonconverter(spark, tmp_path):
 def test_ttc_median_even_count_inclusive_crossing(spark, tmp_path):
     # Two converters with lags 100 and 300: ceil(2*0.5)=1 -> median
     # is the FIRST crossing value (100), p90 rank ceil(1.8)=2 -> 300.
-    from dataingestionengineprocess_spark.queries.round4u import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_time_to_convert,
     )
 
@@ -81,7 +50,7 @@ def test_ttc_median_even_count_inclusive_crossing(spark, tmp_path):
         (3, "2024-01-01 00:05:00", 2, "purchase", 0.0, ""),
     ]
     row = events_time_to_convert(
-        spark, _events(spark, tmp_path, rows)).collect()[0]
+        spark, write_events(spark, tmp_path, rows)).collect()[0]
     assert row["median_lag_sec"] == 100
     assert row["p90_lag_sec"] == 300
 
@@ -92,7 +61,7 @@ def test_ttc_median_even_count_inclusive_crossing(spark, tmp_path):
 def test_abc_boundaries_exact(spark, tmp_path):
     # Revenues 80/15/5 (no discount): part 1 cum 80% -> A (<= 80
     # inclusive), part 2 cum 95% -> B (inclusive), part 3 -> C.
-    from dataingestionengineprocess_spark.queries.round4u import (
+    from dataingestionengineprocess_spark.queries.orders import (
         orders_abc_classes,
     )
 
@@ -100,7 +69,7 @@ def test_abc_boundaries_exact(spark, tmp_path):
             (2, 2, 1, 1, 1.0, 15.0, 0.0, 0.0, "A", "O", "2024-01-01"),
             (3, 3, 1, 1, 1.0, 5.0, 0.0, 0.0, "A", "O", "2024-01-01")]
     out = {r["abc"]: r for r in orders_abc_classes(
-        spark, _lineitem(spark, tmp_path, rows)).collect()}
+        spark, write_lineitem(spark, tmp_path, rows)).collect()}
     assert out["A"]["n_parts"] == 1 and out["A"]["revenue_cents"] == 8000
     assert out["B"]["n_parts"] == 1 and out["B"]["revenue_cents"] == 1500
     assert out["C"]["n_parts"] == 1 and out["C"]["revenue_cents"] == 500
@@ -112,12 +81,12 @@ def test_abc_single_part_is_a(spark, tmp_path):
     # <= 95 false -> C. The convention pins the FIRST part of a
     # degenerate one-part corpus as C -- assert it so the boundary
     # semantics stay deliberate.
-    from dataingestionengineprocess_spark.queries.round4u import (
+    from dataingestionengineprocess_spark.queries.orders import (
         orders_abc_classes,
     )
 
     rows = [(1, 1, 1, 1, 1.0, 42.0, 0.0, 0.0, "A", "O", "2024-01-01")]
-    out = orders_abc_classes(spark, _lineitem(spark, tmp_path, rows)).collect()
+    out = orders_abc_classes(spark, write_lineitem(spark, tmp_path, rows)).collect()
     assert len(out) == 1 and out[0]["abc"] == "C"
     assert out[0]["revenue_cents"] == 4200
 
@@ -129,7 +98,7 @@ def test_quota_sums_to_budget_and_remainder_ranking(spark, tmp_path):
     # Three strata 3/3/1 docs, K = 1000: ideal 428.57/428.57/142.86.
     # Floors 428+428+142 = 998, leftover 2 -> the two largest
     # remainders get +1.
-    from dataingestionengineprocess_spark.queries.round4u import (
+    from dataingestionengineprocess_spark.queries.agg import (
         agg_largest_remainder_quota,
     )
 
@@ -137,7 +106,7 @@ def test_quota_sums_to_budget_and_remainder_ranking(spark, tmp_path):
             + [(10 + i, "t", "en", "book", 1) for i in range(3)]
             + [(20, "t", "fr", "web", 1)])
     out = agg_largest_remainder_quota(
-        spark, _docs(spark, tmp_path, rows)).collect()
+        spark, write_documents(spark, tmp_path, rows)).collect()
     quotas = {(r["lang"], r["source"]): r["quota"] for r in out}
     assert sum(quotas.values()) == 1000
     # 3000/7 = 428 rem 4, 1000/7 = 142 rem 6: fr/web has the largest
@@ -152,7 +121,7 @@ def test_ttc_pre_anchor_signup_excluded(spark, tmp_path):
     # ADVICE r4: signups before the 2024-01-01 fixture anchor would
     # hit the truncate-vs-floor split on negative week indexes; the
     # query now excludes them from every cohort in both engines.
-    from dataingestionengineprocess_spark.queries.round4u import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_time_to_convert,
     )
 
@@ -163,7 +132,7 @@ def test_ttc_pre_anchor_signup_excluded(spark, tmp_path):
         (3, "2024-01-02 00:05:00", 2, "purchase", 0.0, ""),
     ]
     r = events_time_to_convert(
-        spark, _events(spark, tmp_path, rows)).collect()
+        spark, write_events(spark, tmp_path, rows)).collect()
     assert len(r) == 1  # only the anchored user-2 cohort
     row = r[0]
     assert (row["week"], row["n_users"], row["n_converted"]) == (0, 1, 1)

@@ -8,25 +8,7 @@ from __future__ import annotations
 
 import math
 
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
-def _docs(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents, write_events
 
 
 # --- Markov entropy ----------------------------------------------------------
@@ -35,7 +17,7 @@ def _docs(spark, tmp_path, rows):
 def test_entropy_deterministic_vs_uniform(spark, tmp_path):
     # From 'a' the chain always goes to 'b' (H = 0); from 'b' it
     # splits evenly between 'a' and 'c' (H = ln 2).
-    from dataingestionengineprocess_spark.queries.round4w import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_markov_entropy_rate,
     )
 
@@ -43,7 +25,7 @@ def test_entropy_deterministic_vs_uniform(spark, tmp_path):
     rows = [(i, f"2024-01-01 00:00:{i:02d}", 1, t, 0.0, "")
             for i, t in enumerate(chain)]
     out = {r["prev_type"]: r for r in events_markov_entropy_rate(
-        spark, _events(spark, tmp_path, rows)).collect()}
+        spark, write_events(spark, tmp_path, rows)).collect()}
     assert out["a"]["h_cond_s"] == 0.0
     assert abs(out["b"]["h_cond_s"] - math.log(2)) < 1e-5
     # mixture weights sum to 1 over prev states
@@ -52,14 +34,14 @@ def test_entropy_deterministic_vs_uniform(spark, tmp_path):
 
 def test_entropy_single_user_single_transition(spark, tmp_path):
     # One transition: H = 0, weight 1.
-    from dataingestionengineprocess_spark.queries.round4w import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_markov_entropy_rate,
     )
 
     rows = [(0, "2024-01-01 00:00:00", 1, "x", 0.0, ""),
             (1, "2024-01-01 00:00:01", 1, "y", 0.0, "")]
     out = events_markov_entropy_rate(
-        spark, _events(spark, tmp_path, rows)).collect()
+        spark, write_events(spark, tmp_path, rows)).collect()
     assert len(out) == 1
     assert out[0]["prev_type"] == "x"
     assert out[0]["h_cond_s"] == 0.0 and out[0]["p_prev_s"] == 1.0
@@ -71,7 +53,7 @@ def test_entropy_single_user_single_transition(spark, tmp_path):
 def test_quota_apply_caps_at_population(spark, tmp_path):
     # Tiny corpus (10 docs): K = 200 >> population, so every stratum
     # caps at n_docs and the digest covers ALL its ids.
-    from dataingestionengineprocess_spark.queries.round4w import (
+    from dataingestionengineprocess_spark.queries.sample import (
         sample_quota_apply,
     )
     import hashlib
@@ -79,7 +61,7 @@ def test_quota_apply_caps_at_population(spark, tmp_path):
     rows = ([(i, "t", "en", "web", 1) for i in range(7)]
             + [(10 + i, "t", "fr", "web", 1) for i in range(3)])
     out = {(r["lang"], r["source"]): r for r in sample_quota_apply(
-        spark, _docs(spark, tmp_path, rows)).collect()}
+        spark, write_documents(spark, tmp_path, rows)).collect()}
     en = out[("en", "web")]
     assert en["n_sampled"] == en["n_docs"] == 7
     expect = hashlib.md5(",".join(str(i) for i in range(7))
@@ -92,14 +74,14 @@ def test_quota_apply_caps_at_population(spark, tmp_path):
 def test_quota_apply_subsamples_large_stratum(spark, tmp_path):
     # 400 docs in one stratum, K = 200: exactly 200 sampled, and the
     # sampled set is the md5-rank prefix (re-derived here).
-    from dataingestionengineprocess_spark.queries.round4w import (
+    from dataingestionengineprocess_spark.queries.sample import (
         sample_quota_apply,
     )
     import hashlib
 
     rows = [(i, "t", "en", "web", 1) for i in range(400)]
     r = sample_quota_apply(
-        spark, _docs(spark, tmp_path, rows)).collect()[0]
+        spark, write_documents(spark, tmp_path, rows)).collect()[0]
     assert (r["n_docs"], r["quota"], r["n_sampled"]) == (400, 200, 200)
     ranked = sorted(range(400),
                     key=lambda i: (hashlib.md5(str(i).encode())
@@ -114,7 +96,7 @@ def test_quota_apply_subsamples_large_stratum(spark, tmp_path):
 
 
 def test_profile_counts_nulls_and_distincts(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4w import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_column_profile,
     )
     from pyspark.sql import functions as F

@@ -6,6 +6,8 @@ audit's REAL behavior is pinned here on planted holes).
 
 from __future__ import annotations
 
+from fixture_tables import write_events
+
 
 def _orders_keys(spark, tmp_path, keys):
     from pyspark.sql import functions as F
@@ -20,24 +22,12 @@ def _orders_keys(spark, tmp_path, keys):
     return str(tmp_path)
 
 
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
 # --- sequence gaps -----------------------------------------------------------
 
 
 def test_gaps_planted_holes(spark, tmp_path):
     # Keys 1,2,3, 7,8, 12: holes [4,6] (3 missing) and [9,11] (3).
-    from dataingestionengineprocess_spark.queries.round4x import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_id_sequence_gaps,
     )
 
@@ -50,7 +40,7 @@ def test_gaps_planted_holes(spark, tmp_path):
 
 def test_gaps_dense_sequence_empty(spark, tmp_path):
     # A dense key range (with duplicate rows on one key) has no gaps.
-    from dataingestionengineprocess_spark.queries.round4x import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_id_sequence_gaps,
     )
 
@@ -65,7 +55,7 @@ def test_gaps_dense_sequence_empty(spark, tmp_path):
 def test_kfold_user_never_straddles_folds(spark, tmp_path):
     # Recompute each user's fold independently and check the balance
     # sheet matches; totals conserve users and events.
-    from dataingestionengineprocess_spark.queries.round4x import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_group_kfold_assign,
     )
     import hashlib
@@ -78,7 +68,7 @@ def test_kfold_user_never_straddles_folds(spark, tmp_path):
                          "purchase" if j == 0 else "view", 0.0, ""))
             eid += 1
     out = ml_group_kfold_assign(
-        spark, _events(spark, tmp_path, rows)).collect()
+        spark, write_events(spark, tmp_path, rows)).collect()
     assert sum(r["n_users"] for r in out) == 40
     assert sum(r["n_events"] for r in out) == eid
     by_fold = {r["fold"]: r for r in out}
@@ -98,7 +88,7 @@ def test_fano_metronomic_zero_bursty_high(spark, tmp_path):
     # 'steady': exactly 2/day for 4 days -> var 0 -> fano 0.
     # 'bursty': 8 events on one day of the same 4-day span -> fano
     # (n*sum(y^2)-sum(y)^2)/(n*sum(y)) = (4*64-64)/(4*8) = 6.
-    from dataingestionengineprocess_spark.queries.round4x import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_fano_burstiness,
     )
 
@@ -113,7 +103,7 @@ def test_fano_metronomic_zero_bursty_high(spark, tmp_path):
                      "bursty", 0.0, ""))
         eid += 1
     out = {r["event_type"]: r for r in events_fano_burstiness(
-        spark, _events(spark, tmp_path, rows)).collect()}
+        spark, write_events(spark, tmp_path, rows)).collect()}
     assert out["steady"]["fano_s"] == 0.0
     assert out["steady"]["n_days"] == 4
     assert out["bursty"]["n_days"] == 4  # densified to the global span
@@ -125,7 +115,7 @@ def test_gaps_island_across_bucket_boundary_merges(spark, tmp_path):
     # per-bucket islands must merge into one, yielding NO gap. Then
     # keys {4090, 4094..4097, 4100} leave gap (4091..4093) before the
     # boundary-merged island and gap (4098..4099) after it.
-    from dataingestionengineprocess_spark.queries.round4x import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_id_sequence_gaps,
     )
 

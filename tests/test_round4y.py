@@ -5,6 +5,8 @@ test_oracle_parity.py; these pin the arithmetic on hand-built rows.
 
 from __future__ import annotations
 
+from fixture_tables import write_documents
+
 
 def _orders_lineitem(spark, tmp_path, orders, lines):
     from pyspark.sql import functions as F
@@ -27,14 +29,6 @@ def _orders_lineitem(spark, tmp_path, orders, lines):
     return str(tmp_path)
 
 
-def _documents(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
 # --- allocation --------------------------------------------------------------
 
 
@@ -43,7 +37,7 @@ def test_allocation_exact_with_remainder_topup(spark, tmp_path):
     # 33/33/33 cents, the 1-cent leftover goes to the lowest line
     # number (all remainders tie). Order 2: single line gets ALL of
     # the header total regardless of the line price.
-    from dataingestionengineprocess_spark.queries.round4y import (
+    from dataingestionengineprocess_spark.queries.orders import (
         orders_discount_allocation,
     )
 
@@ -68,7 +62,7 @@ def test_allocation_exact_with_remainder_topup(spark, tmp_path):
 def test_allocation_invariant_on_fixture(spark, sf_dir):
     # Every priority's allocated total equals its header total at
     # fixture scale -- the exactness invariant the query hashes.
-    from dataingestionengineprocess_spark.queries.round4y import (
+    from dataingestionengineprocess_spark.queries.orders import (
         orders_discount_allocation,
     )
 
@@ -82,7 +76,7 @@ def test_allocation_invariant_on_fixture(spark, sf_dir):
 def test_concurrency_peak_and_coverage(spark, tmp_path):
     # Supplier 1: intervals [d1,d3], [d2,d5], [d7,d8] (order date ->
     # ship date): peak 2 (days 2-3), covered 5 + 2 = 7 days, span 8.
-    from dataingestionengineprocess_spark.queries.round4y import (
+    from dataingestionengineprocess_spark.queries.orders import (
         supplier_shipment_concurrency,
     )
 
@@ -106,7 +100,7 @@ def test_concurrency_peak_and_coverage(spark, tmp_path):
 def test_concurrency_inverted_interval_normalized(spark, tmp_path):
     # Ship date BEFORE order date (the fixture's independent synthetic
     # dates): least/greatest keeps the row as a valid 2-day interval.
-    from dataingestionengineprocess_spark.queries.round4y import (
+    from dataingestionengineprocess_spark.queries.orders import (
         supplier_shipment_concurrency,
     )
 
@@ -127,7 +121,7 @@ def test_compaction_bins_by_start_offset(spark, tmp_path):
     # Strata sizes 30k/25k/20k/5k chars at cap 16k: start offsets
     # 0/30k/55k/75k -> bins 0/1/3/4. Oversized strata stay visible as
     # fill > 1 instead of being silently split.
-    from dataingestionengineprocess_spark.queries.round4y import (
+    from dataingestionengineprocess_spark.queries.warehouse import (
         warehouse_compaction_plan,
     )
 
@@ -137,7 +131,7 @@ def test_compaction_bins_by_start_offset(spark, tmp_path):
         rows.append((did, "x" * sz, lang, src, sz))
         did += 1
     out = warehouse_compaction_plan(
-        spark, _documents(spark, tmp_path, rows)).collect()
+        spark, write_documents(spark, tmp_path, rows)).collect()
     got = {r["bin"]: (r["n_parts"], r["bin_chars"]) for r in out}
     assert got == {0: (1, 30000), 1: (1, 25000), 3: (1, 20000),
                    4: (1, 5000)}
@@ -148,13 +142,13 @@ def test_compaction_bins_by_start_offset(spark, tmp_path):
 
 def test_compaction_packs_small_parts_together(spark, tmp_path):
     # Four 4k strata pack into ONE 16k bin by virtual concatenation.
-    from dataingestionengineprocess_spark.queries.round4y import (
+    from dataingestionengineprocess_spark.queries.warehouse import (
         warehouse_compaction_plan,
     )
 
     rows = [(i, "x" * 4000, "en", f"s{i}", 4000) for i in range(4)]
     out = warehouse_compaction_plan(
-        spark, _documents(spark, tmp_path, rows)).collect()
+        spark, write_documents(spark, tmp_path, rows)).collect()
     assert len(out) == 1
     assert (out[0]["bin"], out[0]["n_parts"], out[0]["bin_chars"]) == \
         (0, 4, 16000)

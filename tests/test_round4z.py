@@ -4,25 +4,7 @@ labels, MinHash recall eval). Oracle gate in test_oracle_parity.py.
 
 from __future__ import annotations
 
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
-def _documents(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents, write_events
 
 
 # --- session stats -----------------------------------------------------------
@@ -32,11 +14,11 @@ def test_session_stats_gap_split_and_bounce(spark, tmp_path):
     # User 1: events at 00:00 and 00:10 (one session, 600 s), then
     # 01:00 (gap 50 min > 30 -> new bounce session). User 2: single
     # event -> bounce. Day total: 3 sessions, 2 bounces.
-    from dataingestionengineprocess_spark.queries.round4z import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_session_stats,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-05 00:00:00", 1, "view", 0.0, ""),
         (2, "2024-01-05 00:10:00", 1, "view", 0.0, ""),
         (3, "2024-01-05 01:00:00", 1, "view", 0.0, ""),
@@ -53,11 +35,11 @@ def test_session_stats_gap_split_and_bounce(spark, tmp_path):
 
 def test_session_stats_exact_30min_gap_same_session(spark, tmp_path):
     # A gap of EXACTLY 30 minutes does not split (strict >).
-    from dataingestionengineprocess_spark.queries.round4z import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_session_stats,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-05 00:00:00", 1, "view", 0.0, ""),
         (2, "2024-01-05 00:30:00", 1, "view", 0.0, ""),
     ])
@@ -73,11 +55,9 @@ def test_churn_population_and_label_windows(spark, tmp_path):
     # obs + horizon activity -> retained. User 3: horizon only ->
     # EXCLUDED (never observed before cutoff). User 4: activity past
     # the horizon end (01-31) only -> still churned.
-    from dataingestionengineprocess_spark.queries.round4z import (
-        ml_churn_labels,
-    )
+    from dataingestionengineprocess_spark.queries.ml import ml_churn_labels
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-10 00:00:00", 1, "purchase", 1.0, ""),
         (2, "2024-01-15 00:00:00", 2, "view", 0.0, ""),
         (3, "2024-01-25 00:00:00", 2, "view", 0.0, ""),
@@ -98,7 +78,7 @@ def test_churn_population_and_label_windows(spark, tmp_path):
 
 
 def test_recall_eval_planted_dup_and_clean_corpus(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round4z import (
+    from dataingestionengineprocess_spark.queries.dedup import (
         dedup_minhash_recall_eval,
     )
 
@@ -112,12 +92,12 @@ def test_recall_eval_planted_dup_and_clean_corpus(spark, tmp_path):
     rows = [(0, base, "en", "a", len(base)), (1, near, "en", "a", len(near))]
     rows += [(i + 2, t, "en", "b", len(t)) for i, t in enumerate(fillers)]
     r = dedup_minhash_recall_eval(
-        spark, _documents(spark, tmp_path, rows)).collect()[0]
+        spark, write_documents(spark, tmp_path, rows)).collect()[0]
     assert (r["n_pred"], r["n_truth"], r["n_tp"]) == (1, 1, 1)
     assert (r["precision_s"], r["recall_s"]) == (1.0, 1.0)
 
     clean = [(i, t, "en", "b", len(t)) for i, t in enumerate(fillers)]
     r2 = dedup_minhash_recall_eval(
-        spark, _documents(spark, tmp_path, clean)).collect()[0]
+        spark, write_documents(spark, tmp_path, clean)).collect()[0]
     assert (r2["n_pred"], r2["n_truth"], r2["n_tp"]) == (0, 0, 0)
     assert r2["precision_s"] is None and r2["recall_s"] is None

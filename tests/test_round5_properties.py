@@ -64,7 +64,7 @@ def _islands_reference(keys):
                 min_size=1, max_size=60))
 @settings(**_SETTINGS)
 def test_sequence_islands_matches_sequential_scan(spark, keys):
-    from dataingestionengineprocess_spark.queries.round4x import (
+    from dataingestionengineprocess_spark.queries.quality import (
         sequence_islands,
     )
 
@@ -98,7 +98,7 @@ def _concurrency_reference(intervals):
 def test_concurrency_matches_bruteforce(spark, tmp_path_factory,
                                         intervals):
     from pyspark.sql import functions as F
-    from dataingestionengineprocess_spark.queries.round4y import (
+    from dataingestionengineprocess_spark.queries.orders import (
         supplier_shipment_concurrency,
     )
 

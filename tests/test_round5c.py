@@ -3,39 +3,19 @@ savings). Oracle gate in test_oracle_parity.py."""
 
 from __future__ import annotations
 
-
-def _orders(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows, "o_orderkey long, o_custkey long, o_orderstatus string, "
-              "o_totalprice double, o_orderdate string, "
-              "o_orderpriority string",
-    ).withColumn("o_orderdate", F.to_timestamp("o_orderdate")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
-    return str(tmp_path)
-
-
-def _documents(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents, write_orders
 
 
 def test_psi_identical_halves_zero(spark, tmp_path):
     # The same price profile in both halves -> every term 0, TOTAL 0.
-    from dataingestionengineprocess_spark.queries.round5c import (
-        ml_psi_drift,
-    )
+    from dataingestionengineprocess_spark.queries.ml import ml_psi_drift
 
     rows = []
     for i, price in enumerate([100.0, 100.0, 250000.0]):
         rows.append((i, 1, "O", price, "2024-01-05", "P"))
         rows.append((100 + i, 1, "O", price, "2024-01-25", "P"))
     out = {r["bucket"]: r
-           for r in ml_psi_drift(spark, _orders(spark, tmp_path, rows))
+           for r in ml_psi_drift(spark, write_orders(spark, tmp_path, rows))
            .collect()}
     assert out["TOTAL"]["psi_s"] == 0.0
     assert out["TOTAL"]["c1"] == out["TOTAL"]["c2"] == 3
@@ -44,15 +24,13 @@ def test_psi_identical_halves_zero(spark, tmp_path):
 
 def test_psi_shifted_distribution_positive(spark, tmp_path):
     # All mass in bucket 0 before, bucket 9 after -> large positive PSI.
-    from dataingestionengineprocess_spark.queries.round5c import (
-        ml_psi_drift,
-    )
+    from dataingestionengineprocess_spark.queries.ml import ml_psi_drift
 
     rows = [(i, 1, "O", 10.0, "2024-01-05", "P") for i in range(5)]
     rows += [(10 + i, 1, "O", 999999.0, "2024-01-25", "P")
              for i in range(5)]
     out = {r["bucket"]: r
-           for r in ml_psi_drift(spark, _orders(spark, tmp_path, rows))
+           for r in ml_psi_drift(spark, write_orders(spark, tmp_path, rows))
            .collect()}
     assert out["TOTAL"]["psi_s"] > 2.0
     assert out["9"]["c2"] == 5 and out["9"]["c1"] == 0
@@ -62,7 +40,7 @@ def test_fk_orphans_planted(spark, tmp_path):
     # A lineitem pointing at a missing order (and part/supplier), and
     # an order pointing at a missing customer, are counted as orphans.
     from pyspark.sql import functions as F
-    from dataingestionengineprocess_spark.queries.round5c import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_fk_orphans,
     )
 
@@ -115,7 +93,7 @@ def test_dedup_savings_cross_source_attribution(spark, tmp_path):
     # doc 0 (source a) is canonical (min id); its duplicate in source
     # b charges b's savings, not a's. Whitespace-variant text still
     # fingerprints as a duplicate.
-    from dataingestionengineprocess_spark.queries.round5c import (
+    from dataingestionengineprocess_spark.queries.dedup import (
         dedup_savings_report,
     )
 
@@ -126,7 +104,7 @@ def test_dedup_savings_cross_source_attribution(spark, tmp_path):
     ]
     out = {r["source"]: r
            for r in dedup_savings_report(
-               spark, _documents(spark, tmp_path, rows)).collect()}
+               spark, write_documents(spark, tmp_path, rows)).collect()}
     assert out["a"]["n_dupes"] == 0 and out["a"]["chars_saved"] == 0
     assert out["b"]["n_dupes"] == 1
     assert out["b"]["chars_saved"] == 13

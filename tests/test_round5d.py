@@ -7,42 +7,18 @@ from __future__ import annotations
 
 import math
 
-
-def _orders(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows, "o_orderkey long, o_custkey long, o_orderstatus string, "
-              "o_totalprice double, o_orderdate string, "
-              "o_orderpriority string",
-    ).withColumn("o_orderdate", F.to_timestamp("o_orderdate")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
-    return str(tmp_path)
-
-
-def _lineitem(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows, "l_orderkey long, l_partkey long, l_suppkey long, "
-              "l_linenumber int, l_quantity double, "
-              "l_extendedprice double, l_discount double, l_tax double, "
-              "l_returnflag string, l_linestatus string, "
-              "l_shipdate string",
-    ).withColumn("l_shipdate", F.to_timestamp("l_shipdate")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_lineitem, write_orders
 
 
 def test_duplicate_payment_planted_replay(spark, tmp_path):
     # Customer 1: the same 10.00 charge on the same day three times
     # (2 copies at stake) plus a same-amount charge on ANOTHER day
     # (not a dup). Customer 2: clean.
-    from dataingestionengineprocess_spark.queries.round5d import (
+    from dataingestionengineprocess_spark.queries.orders import (
         orders_duplicate_payment_screen,
     )
 
-    sf = _orders(spark, tmp_path, [
+    sf = write_orders(spark, tmp_path, [
         (1, 1, "O", 10.00, "2024-01-05", "P"),
         (2, 1, "O", 10.00, "2024-01-05", "P"),
         (3, 1, "O", 10.00, "2024-01-05", "P"),
@@ -59,9 +35,7 @@ def test_duplicate_payment_planted_replay(spark, tmp_path):
 def test_woe_iv_separating_category(spark, tmp_path):
     # Priority A orders never return; priority B orders always do.
     # WOE(A) > 0 > WOE(B); IV total positive; counts conserved.
-    from dataingestionengineprocess_spark.queries.round5d import (
-        ml_woe_iv_encoding,
-    )
+    from dataingestionengineprocess_spark.queries.ml import ml_woe_iv_encoding
 
     orows, lrows = [], []
     for i in range(4):
@@ -72,8 +46,8 @@ def test_woe_iv_separating_category(spark, tmp_path):
         orows.append((i, 1, "O", 1.0, "2024-01-05", "B"))
         lrows.append((i, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "R", "O",
                       "2024-01-06"))
-    sf = _orders(spark, tmp_path, orows)
-    _lineitem(spark, tmp_path, lrows)
+    sf = write_orders(spark, tmp_path, orows)
+    write_lineitem(spark, tmp_path, lrows)
     out = {r["o_orderpriority"]: r
            for r in ml_woe_iv_encoding(spark, sf).collect()}
     assert out["A"]["woe_s"] > 0 > out["B"]["woe_s"]
@@ -88,7 +62,7 @@ def test_woe_iv_separating_category(spark, tmp_path):
 def test_hhi_monopoly_and_duopoly(spark, tmp_path):
     # Nation 1: one supplier -> HHI 1.0. Nation 2: two equal
     # suppliers -> HHI 0.5, top share 0.5.
-    from dataingestionengineprocess_spark.queries.round5d import (
+    from dataingestionengineprocess_spark.queries.orders import (
         supplier_herfindahl_index,
     )
 
@@ -101,7 +75,7 @@ def test_hhi_monopoly_and_duopoly(spark, tmp_path):
         [(1, "s1", 1), (2, "s2", 2), (3, "s3", 2)],
         "s_suppkey long, s_name string, s_nationkey long",
     ).write.parquet(sf + "/supplier.parquet")
-    _lineitem(spark, tmp_path, [
+    write_lineitem(spark, tmp_path, [
         (1, 1, 1, 1, 1.0, 50.0, 0.0, 0.0, "N", "O", "2024-01-02"),
         (2, 1, 2, 1, 1.0, 30.0, 0.0, 0.0, "N", "O", "2024-01-02"),
         (3, 1, 3, 1, 1.0, 30.0, 0.0, 0.0, "N", "O", "2024-01-02"),

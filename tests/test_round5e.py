@@ -3,26 +3,13 @@ outlier screen). Oracle gate in test_oracle_parity.py."""
 
 from __future__ import annotations
 
-
-def _documents(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
-def _embeddings(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents, write_embeddings
 
 
 def test_oversample_exact_balance(spark, tmp_path):
     # en: 7 docs (majority), fr: 3, de: 2 -> every class lands on
     # exactly 7 copies; fr gets k=2 rem=1, de gets k=3 rem=1.
-    from dataingestionengineprocess_spark.queries.round5e import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_oversample_minority,
     )
 
@@ -35,7 +22,7 @@ def test_oversample_exact_balance(spark, tmp_path):
         rows.append((200 + i, "t", "de", "s", 1))
     out = {r["lang"]: r
            for r in curation_oversample_minority(
-               spark, _documents(spark, tmp_path, rows)).collect()}
+               spark, write_documents(spark, tmp_path, rows)).collect()}
     assert all(r["n_after"] == 7 for r in out.values())
     assert (out["fr"]["k_full"], out["fr"]["rem"]) == (2, 1)
     assert (out["de"]["k_full"], out["de"]["rem"]) == (3, 1)
@@ -46,13 +33,13 @@ def test_oversample_majority_unchanged_digest(spark, tmp_path):
     # A single-class corpus: k=1 rem=0 -> the expansion is the
     # identity and the digest equals the digest of 'id:1' tags.
     import hashlib
-    from dataingestionengineprocess_spark.queries.round5e import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_oversample_minority,
     )
 
     rows = [(i, "t", "en", "s", 1) for i in (3, 11, 200)]
     r = curation_oversample_minority(
-        spark, _documents(spark, tmp_path, rows)).collect()[0]
+        spark, write_documents(spark, tmp_path, rows)).collect()[0]
     expect = ",".join(f"{i:020d}:1" for i in sorted((3, 11, 200)))
     assert r["expansion_md5"] == hashlib.md5(expect.encode()).hexdigest()
     assert (r["n_before"], r["n_after"]) == (3, 3)
@@ -61,14 +48,14 @@ def test_oversample_majority_unchanged_digest(spark, tmp_path):
 def test_outlier_screen_flags_planted_vector(spark, tmp_path):
     # Nine tight vectors + one far-away vector in one label: the
     # planted one ranks first with a much larger distance.
-    from dataingestionengineprocess_spark.queries.round5e import (
+    from dataingestionengineprocess_spark.queries.embedding import (
         embedding_outlier_zscore,
     )
 
     rows = [(i, [0.0 + i * 0.001, 1.0], 0) for i in range(9)]
     rows.append((99, [50.0, 1.0], 0))
     out = embedding_outlier_zscore(
-        spark, _embeddings(spark, tmp_path, rows)).collect()
+        spark, write_embeddings(spark, tmp_path, rows)).collect()
     assert out[0]["vec_id"] == 99 and out[0]["rk"] == 1
     assert out[0]["m2_s"] > out[1]["m2_s"] * 3
 
@@ -76,13 +63,13 @@ def test_outlier_screen_flags_planted_vector(spark, tmp_path):
 def test_outlier_zero_variance_dim_ignored(spark, tmp_path):
     # dim 2 is constant (variance 0) -> contributes nothing; the
     # distances come from dim 1 alone and stay finite.
-    from dataingestionengineprocess_spark.queries.round5e import (
+    from dataingestionengineprocess_spark.queries.embedding import (
         embedding_outlier_zscore,
     )
 
     rows = [(i, [float(i), 7.0], 0) for i in range(4)]
     out = embedding_outlier_zscore(
-        spark, _embeddings(spark, tmp_path, rows)).collect()
+        spark, write_embeddings(spark, tmp_path, rows)).collect()
     assert len(out) == 4
     assert all(r["m2_s"] is not None for r in out)
     # symmetric series: extremes tie, interior points tie lower

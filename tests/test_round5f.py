@@ -4,17 +4,7 @@ hand-built journeys."""
 
 from __future__ import annotations
 
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_events
 
 
 def test_attribution_single_mandatory_channel(spark, tmp_path):
@@ -22,11 +12,11 @@ def test_attribution_single_mandatory_channel(spark, tmp_path):
     # u1 view->purchase, u2 view->purchase, u3 click (no purchase).
     # Removing view kills ALL conversion -> RE(view) = 1, share 1.
     # Removing click changes nothing -> RE(click) = 0, share 0.
-    from dataingestionengineprocess_spark.queries.round5f import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_markov_attribution,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-01 00:00:00", 1, "view", 0.0, ""),
         (2, "2024-01-01 00:01:00", 1, "purchase", 0.0, ""),
         (3, "2024-01-01 00:00:00", 2, "view", 0.0, ""),
@@ -51,11 +41,11 @@ def test_attribution_immediate_purchase_start_conv(spark, tmp_path):
     # A user whose FIRST event is the purchase contributes the
     # START -> CONV edge; with another user's view journey the model
     # still converges and view's removal only kills view's journey.
-    from dataingestionengineprocess_spark.queries.round5f import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_markov_attribution,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-01 00:00:00", 1, "purchase", 0.0, ""),
         (2, "2024-01-01 00:00:00", 2, "view", 0.0, ""),
         (3, "2024-01-01 00:01:00", 2, "purchase", 0.0, ""),
@@ -73,11 +63,11 @@ def test_attribution_immediate_purchase_start_conv(spark, tmp_path):
 def test_attribution_no_conversions_null_effects(spark, tmp_path):
     # No purchases at all: base P(conv) = 0 -> removal effects and
     # shares are NULL (no division blow-up in either engine).
-    from dataingestionengineprocess_spark.queries.round5f import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_markov_attribution,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-01 00:00:00", 1, "view", 0.0, ""),
         (2, "2024-01-01 00:01:00", 1, "click", 0.0, ""),
     ])

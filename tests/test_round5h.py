@@ -3,12 +3,7 @@ decomposition). Oracle gate in test_oracle_parity.py."""
 
 from __future__ import annotations
 
-
-def _embeddings(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_embeddings
 
 
 def _mk(score: float, positive: bool, vid: int):
@@ -19,7 +14,7 @@ def _mk(score: float, positive: bool, vid: int):
 def test_isotonic_monotone_output(spark, sf_dir):
     # The fitted sequence is non-decreasing in bin order on the
     # fixture -- the defining isotonic invariant.
-    from dataingestionengineprocess_spark.queries.round5h import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_isotonic_calibration,
     )
 
@@ -35,7 +30,7 @@ def test_isotonic_pools_violator(spark, tmp_path):
     # while the first stays 0. Scores chosen so sigmoid lands in
     # distinct bins: -3 -> ~0.047 (bin 0), 0 -> 0.5 (bin 10),
     # +3 -> ~0.953 (bin 19).
-    from dataingestionengineprocess_spark.queries.round5h import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_isotonic_calibration,
     )
 
@@ -48,14 +43,14 @@ def test_isotonic_pools_violator(spark, tmp_path):
     for _ in range(4):
         rows.append(_mk(3.0, False, vid)); vid += 1
     out = ml_isotonic_calibration(
-        spark, _embeddings(spark, tmp_path, rows)).collect()
+        spark, write_embeddings(spark, tmp_path, rows)).collect()
     assert [r["rate_s"] for r in out] == [0.0, 1.0, 0.0]
     assert [r["iso_s"] for r in out] == [0.0, 0.5, 0.5]
 
 
 def test_isotonic_identity_on_monotone_input(spark, tmp_path):
     # Already-monotone rates are returned unchanged.
-    from dataingestionengineprocess_spark.queries.round5h import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_isotonic_calibration,
     )
 
@@ -67,7 +62,7 @@ def test_isotonic_identity_on_monotone_input(spark, tmp_path):
     for _ in range(4):
         rows.append(_mk(3.0, True, vid)); vid += 1
     out = ml_isotonic_calibration(
-        spark, _embeddings(spark, tmp_path, rows)).collect()
+        spark, write_embeddings(spark, tmp_path, rows)).collect()
     assert [r["rate_s"] for r in out] == [0.0, 0.5, 1.0]
     assert [r["iso_s"] for r in out] == [0.0, 0.5, 1.0]
 
@@ -76,7 +71,7 @@ def test_brier_decomposition_identity(spark, sf_dir):
     # brier_raw = rel - res + unc + within-bin-variance; wbv >= 0 and
     # small, so the identity holds within the binning slack. All
     # components bounded sanely.
-    from dataingestionengineprocess_spark.queries.round5h import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_brier_decomposition,
     )
 
@@ -90,7 +85,7 @@ def test_brier_decomposition_identity(spark, sf_dir):
 def test_brier_perfect_forecaster_bins(spark, tmp_path):
     # Scores +-3 perfectly separate classes: raw Brier ~ sigmoid
     # residual^2, resolution ~ uncertainty, reliability small.
-    from dataingestionengineprocess_spark.queries.round5h import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_brier_decomposition,
     )
 
@@ -99,7 +94,7 @@ def test_brier_perfect_forecaster_bins(spark, tmp_path):
         rows.append(_mk(3.0, True, vid)); vid += 1
         rows.append(_mk(-3.0, False, vid)); vid += 1
     r = ml_brier_decomposition(
-        spark, _embeddings(spark, tmp_path, rows)).collect()[0]
+        spark, write_embeddings(spark, tmp_path, rows)).collect()[0]
     assert r["unc_s"] == 0.25
     assert r["res_s"] == 0.25          # bins match classes exactly
     assert abs(r["rel_s"] - 0.002249) < 1e-6  # (1 - sigmoid(3))^2

@@ -3,44 +3,17 @@ similarity histogram). Oracle gate in test_oracle_parity.py."""
 
 from __future__ import annotations
 
-
-def _embeddings(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    return str(tmp_path)
-
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
-def _documents(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents, write_embeddings, write_events
 
 
 def test_ks_perfect_separation(spark, tmp_path):
     # class 0 scores all below class-1 scores -> KS = 1 at the
     # largest class-0 value.
-    from dataingestionengineprocess_spark.queries.round5i import (
-        ml_ks_two_sample,
-    )
+    from dataingestionengineprocess_spark.queries.ml import ml_ks_two_sample
 
     rows = [(i, [float(i), 0.0], 0) for i in range(3)]          # 0,1,2
     rows += [(10 + i, [10.0 + i, 0.0], 1) for i in range(3)]    # 10..12
-    r = ml_ks_two_sample(spark, _embeddings(spark, tmp_path, rows)) \
+    r = ml_ks_two_sample(spark, write_embeddings(spark, tmp_path, rows)) \
         .collect()[0]
     assert (r["n1"], r["n2"]) == (3, 3)
     assert r["ks_s"] == 1.0
@@ -49,13 +22,11 @@ def test_ks_perfect_separation(spark, tmp_path):
 
 def test_ks_identical_distributions_zero(spark, tmp_path):
     # The same multiset in both classes -> KS = 0.
-    from dataingestionengineprocess_spark.queries.round5i import (
-        ml_ks_two_sample,
-    )
+    from dataingestionengineprocess_spark.queries.ml import ml_ks_two_sample
 
     rows = [(i, [float(i % 3), 0.0], 0) for i in range(3)]
     rows += [(10 + i, [float(i % 3), 0.0], 1) for i in range(3)]
-    r = ml_ks_two_sample(spark, _embeddings(spark, tmp_path, rows)) \
+    r = ml_ks_two_sample(spark, write_embeddings(spark, tmp_path, rows)) \
         .collect()[0]
     assert r["ks_s"] == 0.0
 
@@ -63,11 +34,11 @@ def test_ks_identical_distributions_zero(spark, tmp_path):
 def test_rfm_migration_hand_case(spark, tmp_path):
     # u1 buys in both periods, u2 only period 1 (-> NONE), u3 only
     # period 2 (<- NONE). Terciles of single-user periods are T1.
-    from dataingestionengineprocess_spark.queries.round5i import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_rfm_migration,
     )
 
-    sf = _events(spark, tmp_path, [
+    sf = write_events(spark, tmp_path, [
         (1, "2024-01-05 00:00:00", 1, "purchase", 10.0, ""),
         (2, "2024-01-20 00:00:00", 1, "purchase", 5.0, ""),
         (3, "2024-01-06 00:00:00", 2, "purchase", 3.0, ""),
@@ -87,7 +58,7 @@ def test_rfm_migration_hand_case(spark, tmp_path):
 def test_similarity_histogram_buckets(spark, tmp_path):
     # One exact-duplicate pair (j = 1.0 -> bucket 39) and one
     # moderate pair; disjoint fillers contribute nothing.
-    from dataingestionengineprocess_spark.queries.round5i import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_similarity_histogram,
     )
 
@@ -99,7 +70,7 @@ def test_similarity_histogram_buckets(spark, tmp_path):
     ]
     out = {r["bucket"]: r
            for r in curation_similarity_histogram(
-               spark, _documents(spark, tmp_path, rows)).collect()}
+               spark, write_documents(spark, tmp_path, rows)).collect()}
     assert set(out) == {39}
     assert out[39]["n_pairs"] == 1
     assert out[39]["j_min"] == out[39]["j_max"] == 1.0

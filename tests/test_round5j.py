@@ -3,37 +3,13 @@ index). Oracle gate in test_oracle_parity.py."""
 
 from __future__ import annotations
 
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
-def _lineitem(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows, "l_orderkey long, l_partkey long, l_suppkey long, "
-              "l_linenumber int, l_quantity double, "
-              "l_extendedprice double, l_discount double, l_tax double, "
-              "l_returnflag string, l_linestatus string, "
-              "l_shipdate string",
-    ).withColumn("l_shipdate", F.to_timestamp("l_shipdate")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_events, write_lineitem
 
 
 def test_snaive_perfect_weekly_pattern(spark, tmp_path):
     # A perfectly 7-periodic series: the lag-7 forecast is exact,
     # MAE = MAPE = 0 over the scored final week.
-    from dataingestionengineprocess_spark.queries.round5j import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_snaive_backtest,
     )
 
@@ -44,7 +20,7 @@ def test_snaive_perfect_weekly_pattern(spark, tmp_path):
                          0.0, ""))
             eid += 1
     out = events_snaive_backtest(
-        spark, _events(spark, tmp_path, rows)).collect()
+        spark, write_events(spark, tmp_path, rows)).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["n_days"], r["total_abs_err"]) == (7, 0)
@@ -54,7 +30,7 @@ def test_snaive_perfect_weekly_pattern(spark, tmp_path):
 def test_snaive_known_error(spark, tmp_path):
     # Week 1 count 2/day, week 2 count 3/day: every scored day errs
     # by 1 -> MAE 1, MAPE = 1/3 (actual 3).
-    from dataingestionengineprocess_spark.queries.round5j import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_snaive_backtest,
     )
 
@@ -70,7 +46,7 @@ def test_snaive_known_error(spark, tmp_path):
                          0.0, ""))
             eid += 1
     r = events_snaive_backtest(
-        spark, _events(spark, tmp_path, rows)).collect()[0]
+        spark, write_events(spark, tmp_path, rows)).collect()[0]
     assert (r["n_days"], r["total_abs_err"], r["mae_s"]) == (7, 7, 1.0)
     assert r["mape_s"] == 0.333333
 
@@ -79,11 +55,11 @@ def test_price_index_hand_case(spark, tmp_path):
     # Part 1: p1 = 1.00 q1 = 2; p2 = 2.00 q2 = 1.
     # Laspeyres = (200*2)/(100*2) = 2.0; Paasche = 200/100 = 2.0;
     # Fisher = 2.0. A part traded only in period 1 is excluded.
-    from dataingestionengineprocess_spark.queries.round5j import (
+    from dataingestionengineprocess_spark.queries.orders import (
         part_price_index,
     )
 
-    sf = _lineitem(spark, tmp_path, [
+    sf = write_lineitem(spark, tmp_path, [
         (1, 1, 1, 1, 2.0, 2.00, 0.0, 0.0, "N", "O", "2024-01-05"),
         (2, 1, 1, 1, 1.0, 2.00, 0.0, 0.0, "N", "O", "2024-01-20"),
         (3, 9, 1, 1, 1.0, 5.00, 0.0, 0.0, "N", "O", "2024-01-05"),
@@ -98,11 +74,11 @@ def test_price_index_hand_case(spark, tmp_path):
 def test_price_index_mixed_direction(spark, tmp_path):
     # Two parts, one doubling and one halving with asymmetric
     # quantities: Laspeyres and Paasche diverge, Fisher in between.
-    from dataingestionengineprocess_spark.queries.round5j import (
+    from dataingestionengineprocess_spark.queries.orders import (
         part_price_index,
     )
 
-    sf = _lineitem(spark, tmp_path, [
+    sf = write_lineitem(spark, tmp_path, [
         # part 1: p 1.00 -> 2.00, q1 = 10, q2 = 1
         (1, 1, 1, 1, 10.0, 10.00, 0.0, 0.0, "N", "O", "2024-01-05"),
         (2, 1, 1, 1, 1.0, 2.00, 0.0, 0.0, "N", "O", "2024-01-20"),

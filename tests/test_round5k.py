@@ -4,13 +4,7 @@ planted waveforms whose run structure is known exactly."""
 
 from __future__ import annotations
 
-
-def _documents(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents
 
 
 def test_silence_planted_runs(spark, tmp_path):
@@ -19,11 +13,11 @@ def test_silence_planted_runs(spark, tmp_path):
     # 'a' -> (97-77)*256 = 5120 < 6400 silent; 'z' -> 6400*... =
     # (122-77)*256 = 11520 loud. Pattern 'aazzaz' of length 6 cycles
     # through 64 samples; runs of silent = the 'aa' and 'a' positions.
-    from dataingestionengineprocess_spark.queries.round5k import (
+    from dataingestionengineprocess_spark.queries.multimodal import (
         multimodal_audio_silence,
     )
 
-    sf = _documents(spark, tmp_path, [(0, "aazzaz", "en", "s", 6)])
+    sf = write_documents(spark, tmp_path, [(0, "aazzaz", "en", "s", 6)])
     r = multimodal_audio_silence(spark, sf).collect()[0]
     # 64 samples over pattern (len 6): full cycles 10 + 4 extra
     # ('a','a','z','z'). silent per cycle = 3 -> 10*3 + 2 = 32
@@ -39,11 +33,11 @@ def test_silence_planted_runs(spark, tmp_path):
 
 
 def test_silence_all_loud_and_all_silent(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round5k import (
+    from dataingestionengineprocess_spark.queries.multimodal import (
         multimodal_audio_silence,
     )
 
-    sf = _documents(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, "zzzz", "en", "s", 4),   # all loud: 0 segments
         (1, "abab", "en", "s", 4),   # all silent: 1 run of n
     ])
@@ -60,7 +54,7 @@ def test_silence_all_loud_and_all_silent(spark, tmp_path):
 def test_struct_battery_values(spark, sf_dir):
     # Every part <= 40 yields exactly two rows: pos 0 carries the real
     # (brand, size) through struct ops, pos 1 the ZZZ sentinel.
-    from dataingestionengineprocess_spark.queries.round5k import (
+    from dataingestionengineprocess_spark.queries.scalar import (
         scalar_struct_funcs,
     )
     from dataingestionengineprocess_spark.catalog import load

@@ -3,34 +3,12 @@ Oracle gate in test_oracle_parity.py."""
 
 from __future__ import annotations
 
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
-def _orders(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows, "o_orderkey long, o_custkey long, o_orderstatus string, "
-              "o_totalprice double, o_orderdate string, "
-              "o_orderpriority string",
-    ).withColumn("o_orderdate", F.to_timestamp("o_orderdate")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_events, write_orders
 
 
 def test_adstock_impulse_decays_geometrically(spark, tmp_path):
     # One event on day 0 only: adstock(t) = 0.7^t exactly (snapped).
-    from dataingestionengineprocess_spark.queries.round5l import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_adstock_decay,
     )
 
@@ -42,21 +20,21 @@ def test_adstock_impulse_decays_geometrically(spark, tmp_path):
     # second observed day: adstock(3) = 1 + 0.7^3.
     rows.append((2, "2024-01-04 01:00:00", 1, "view", 0.0, ""))
     out = events_adstock_decay(
-        spark, _events(spark, tmp_path, rows)).collect()
+        spark, write_events(spark, tmp_path, rows)).collect()
     assert [(r["t"], r["adstock_s"]) for r in out] == [
         (0, 1.0), (3, 1.343)]  # 1 + 0.7^3 = 1.343
 
 
 def test_adstock_accumulates_pressure(spark, tmp_path):
     # Constant 1 event/day for 4 days: adstock = 1, 1.7, 2.19, 2.533.
-    from dataingestionengineprocess_spark.queries.round5l import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_adstock_decay,
     )
 
     rows = [(d, f"2024-01-0{d + 1} 01:00:00", 1, "view", 0.0, "")
             for d in range(4)]
     out = events_adstock_decay(
-        spark, _events(spark, tmp_path, rows)).collect()
+        spark, write_events(spark, tmp_path, rows)).collect()
     got = [r["adstock_s"] for r in out]
     assert got == [1.0, 1.7, 2.19, 2.533]
 
@@ -64,11 +42,11 @@ def test_adstock_accumulates_pressure(spark, tmp_path):
 def test_key_discovery_verdicts(spark, tmp_path):
     # orderkey unique -> key; custkey repeats -> not; the
     # (custkey, orderdate) pair also repeats here -> not a key.
-    from dataingestionengineprocess_spark.queries.round5l import (
+    from dataingestionengineprocess_spark.queries.quality import (
         quality_key_discovery,
     )
 
-    sf = _orders(spark, tmp_path, [
+    sf = write_orders(spark, tmp_path, [
         (1, 1, "O", 1.0, "2024-01-01", "P"),
         (2, 1, "O", 2.0, "2024-01-01", "P"),
         (3, 2, "O", 3.0, "2024-01-02", "P"),

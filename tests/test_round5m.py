@@ -3,27 +3,14 @@ test). Oracle gate in test_oracle_parity.py."""
 
 from __future__ import annotations
 
-
-def _documents(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
-def _embeddings(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents, write_embeddings
 
 
 def test_temperature_mix_flattens_shares(spark, tmp_path):
     # en 80 docs vs fr 20: raw shares 0.8/0.2; alpha = 0.3 tempering
     # pulls weights toward uniform -- fr's weight rises above its raw
     # share, en's falls -- and quotas still sum exactly to 10000.
-    from dataingestionengineprocess_spark.queries.round5m import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_temperature_mix,
     )
 
@@ -31,7 +18,7 @@ def test_temperature_mix_flattens_shares(spark, tmp_path):
     rows += [(100 + i, "t", "fr", "s", 1) for i in range(20)]
     out = {r["lang"]: r
            for r in curation_temperature_mix(
-               spark, _documents(spark, tmp_path, rows)).collect()}
+               spark, write_documents(spark, tmp_path, rows)).collect()}
     assert out["en"]["p_s"] == 0.8 and out["fr"]["p_s"] == 0.2
     assert out["fr"]["weight_s"] > 0.2
     assert out["en"]["weight_s"] < 0.8
@@ -42,7 +29,7 @@ def test_temperature_mix_flattens_shares(spark, tmp_path):
 
 def test_temperature_mix_uniform_stays_uniform(spark, tmp_path):
     # Equal classes stay equal: weights 0.5/0.5, quotas 5000/5000.
-    from dataingestionengineprocess_spark.queries.round5m import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_temperature_mix,
     )
 
@@ -50,7 +37,7 @@ def test_temperature_mix_uniform_stays_uniform(spark, tmp_path):
     rows += [(100 + i, "t", "fr", "s", 1) for i in range(10)]
     out = {r["lang"]: r
            for r in curation_temperature_mix(
-               spark, _documents(spark, tmp_path, rows)).collect()}
+               spark, write_documents(spark, tmp_path, rows)).collect()}
     assert out["en"]["weight_s"] == out["fr"]["weight_s"] == 0.5
     assert out["en"]["quota"] == out["fr"]["quota"] == 5000
 
@@ -58,14 +45,14 @@ def test_temperature_mix_uniform_stays_uniform(spark, tmp_path):
 def test_permutation_test_separated_groups_significant(spark, tmp_path):
     # Class 0 scores hugely above the rest: no random relabeling can
     # match the observed gap -> p = 0.
-    from dataingestionengineprocess_spark.queries.round5m import (
+    from dataingestionengineprocess_spark.queries.stat import (
         stat_permutation_test,
     )
 
     rows = [(i, [1000.0 + i, 0.0], 0) for i in range(10)]
     rows += [(100 + i, [float(i), 0.0], 1) for i in range(30)]
     r = stat_permutation_test(
-        spark, _embeddings(spark, tmp_path, rows)).collect()[0]
+        spark, write_embeddings(spark, tmp_path, rows)).collect()[0]
     assert r["n_perms"] >= 15  # degenerate single-group perms drop
     assert r["p_value_s"] == 0.0
     assert r["obs_diff_s"] > 900.0
@@ -75,12 +62,12 @@ def test_permutation_test_identical_groups_insignificant(spark,
                                                          tmp_path):
     # All scores equal: every |diff| is 0, observed too -> every
     # permutation "beats" it -> p = 1.
-    from dataingestionengineprocess_spark.queries.round5m import (
+    from dataingestionengineprocess_spark.queries.stat import (
         stat_permutation_test,
     )
 
     rows = [(i, [5.0, 0.0], i % 2) for i in range(40)]
     r = stat_permutation_test(
-        spark, _embeddings(spark, tmp_path, rows)).collect()[0]
+        spark, write_embeddings(spark, tmp_path, rows)).collect()[0]
     assert r["obs_diff_s"] == 0.0
     assert r["p_value_s"] == 1.0

@@ -3,6 +3,8 @@ audit). Oracle gate in test_oracle_parity.py."""
 
 from __future__ import annotations
 
+from fixture_tables import write_documents
+
 
 def _lineitem_part(spark, tmp_path, lines, parts):
     from pyspark.sql import functions as F
@@ -22,17 +24,9 @@ def _lineitem_part(spark, tmp_path, lines, parts):
     return str(tmp_path)
 
 
-def _documents(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
 def test_did_hand_case(spark, tmp_path):
     # control: 10 -> 12 (+2); treated: 20 -> 30 (+10). DiD = +8.
-    from dataingestionengineprocess_spark.queries.round5n import (
+    from dataingestionengineprocess_spark.queries.orders import (
         orders_promo_lift_did,
     )
 
@@ -56,7 +50,7 @@ def test_did_hand_case(spark, tmp_path):
 
 def test_did_parallel_trends_zero(spark, tmp_path):
     # Both groups move by the same amount: DiD = 0 exactly.
-    from dataingestionengineprocess_spark.queries.round5n import (
+    from dataingestionengineprocess_spark.queries.orders import (
         orders_promo_lift_did,
     )
 
@@ -78,7 +72,7 @@ def test_transitivity_triangle_vs_chain(spark, tmp_path):
     # 1.0); a separate chain a-b-c where a and c share nothing stays
     # open. Here: docs 0,1,2 identical -> triangle. Expect 3 edges,
     # 3 two-paths, all closed.
-    from dataingestionengineprocess_spark.queries.round5n import (
+    from dataingestionengineprocess_spark.queries.dedup import (
         dedup_transitivity_audit,
     )
 
@@ -87,7 +81,7 @@ def test_transitivity_triangle_vs_chain(spark, tmp_path):
     rows = [(i, base, "en", "s", 1) for i in range(3)]
     rows.append((9, " ".join(f"w{i}" for i in range(20)), "en", "s", 1))
     r = dedup_transitivity_audit(
-        spark, _documents(spark, tmp_path, rows)).collect()[0]
+        spark, write_documents(spark, tmp_path, rows)).collect()[0]
     assert r["n_edges"] == 3
     assert r["n_two_paths"] == 3
     assert r["n_closed"] == 3

@@ -4,24 +4,16 @@ path is pinned here on planted code-like docs."""
 
 from __future__ import annotations
 
-
-def _documents(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents
 
 
 def test_code_screen_flags_code_not_prose(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round5o import (
-        text_code_screen,
-    )
+    from dataingestionengineprocess_spark.queries.text import text_code_screen
 
     code = "def f(x):\n    y = x[0]\n    return {1: y};\n    pass"
     prose = ("the quick brown fox jumps over the lazy dog and keeps "
              "running through the quiet field all afternoon long")
-    sf = _documents(spark, tmp_path, [
+    sf = write_documents(spark, tmp_path, [
         (0, code, "en", "code", len(code)),
         (1, prose, "en", "prose", len(prose)),
     ])
@@ -35,12 +27,10 @@ def test_code_screen_flags_code_not_prose(spark, tmp_path):
 def test_code_screen_indent_rule_alone(spark, tmp_path):
     # No symbols at all, but 3+ lines mostly indented -> code via the
     # indent-regularity rule.
-    from dataingestionengineprocess_spark.queries.round5o import (
-        text_code_screen,
-    )
+    from dataingestionengineprocess_spark.queries.text import text_code_screen
 
     doc = "start\n  one\n  two\n  three"
-    sf = _documents(spark, tmp_path, [(0, doc, "en", "s", len(doc))])
+    sf = write_documents(spark, tmp_path, [(0, doc, "en", "s", len(doc))])
     r = text_code_screen(spark, sf).collect()[0]
     assert r["n_code"] == 1
     assert r["indent_share_s"] == 0.75

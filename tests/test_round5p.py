@@ -5,21 +5,11 @@ where every admission decision is known by hand."""
 
 from __future__ import annotations
 
-
-def _events(spark, tmp_path, rows):
-    from pyspark.sql import functions as F
-
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts")) \
-     .write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_events
 
 
 def _drain(spark, sf):
-    from dataingestionengineprocess_spark.queries.round5p import (
+    from dataingestionengineprocess_spark.queries.stream import (
         stream_rate_limit_gate,
     )
 
@@ -35,7 +25,7 @@ def test_rate_limit_exhaust_and_refill(spark, tmp_path):
     # Epoch 2: same again.
     rows = [(i, f"2024-01-01 0{i % 10}:0{i // 10}:00", 1, "view",
              0.0, "") for i in range(18)]
-    sf = _events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = _drain(spark, sf)
     assert (out[0]["n_admitted"], out[0]["n_rejected"]) == (4, 2)
     assert (out[1]["n_admitted"], out[1]["n_rejected"]) == (2, 4)
@@ -53,7 +43,7 @@ def test_rate_limit_idle_epoch_resets_bucket(spark, tmp_path):
              for i in (1, 4)]
     rows += [(i, "2024-01-01 03:00:00", 1, "view", 0.0, "")
              for i in (2, 5, 8, 11)]
-    sf = _events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = _drain(spark, sf)
     assert (out[0]["n_admitted"], out[0]["n_rejected"]) == (4, 2)
     assert (out[1]["n_admitted"], out[1]["n_rejected"]) == (2, 0)
@@ -65,7 +55,7 @@ def test_rate_limit_light_user_never_throttled(spark, tmp_path):
     # admitted in every epoch.
     rows = [(i, "2024-01-01 01:00:00", 1, "view", 0.0, "")
             for i in range(6)]
-    sf = _events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = _drain(spark, sf)
     for k in range(3):
         assert out[k]["n_rejected"] == 0

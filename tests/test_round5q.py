@@ -6,14 +6,7 @@ from __future__ import annotations
 
 import math
 
-
-def _docs(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, "
-        "n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
+from fixture_tables import write_documents
 
 
 def _bm25_ref(corpus, terms, k1=1.2, b=0.75):
@@ -40,7 +33,7 @@ def _bm25_ref(corpus, terms, k1=1.2, b=0.75):
 
 
 def test_bm25_matches_hand_reference(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round5q import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_bm25_retrieval,
     )
 
@@ -50,7 +43,7 @@ def test_bm25_matches_hand_reference(spark, tmp_path):
         3: "merge sort join",
         4: "plain prose with no query words",
     }
-    sf = _docs(spark, tmp_path,
+    sf = write_documents(spark, tmp_path,
                [(d, t, "en", "s", len(t)) for d, t in corpus.items()])
     got = {r["doc_id"]: r["bm25_s"]
            for r in text_bm25_retrieval(spark, sf).collect()}
@@ -62,14 +55,14 @@ def test_bm25_matches_hand_reference(spark, tmp_path):
 
 
 def test_bm25_top20_truncates_by_integer_score_then_id(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round5q import (
+    from dataingestionengineprocess_spark.queries.text import (
         text_bm25_retrieval,
     )
 
     # 30 identical docs -> identical scores; the top-20 must be the
     # 20 smallest doc_ids (integer-key tiebreak, no float ambiguity)
     rows = [(i, "vector hash", "en", "s", 11) for i in range(30)]
-    sf = _docs(spark, tmp_path, rows)
+    sf = write_documents(spark, tmp_path, rows)
     got = [r["doc_id"] for r in text_bm25_retrieval(spark, sf).collect()]
     assert sorted(got) == list(range(20))
 
@@ -83,7 +76,7 @@ def _emb(spark, tmp_path, vecs):
 
 
 def test_matryoshka_full_dim_is_identity_and_bounds(spark, tmp_path):
-    from dataingestionengineprocess_spark.queries.round5q import (
+    from dataingestionengineprocess_spark.queries.knn import (
         knn_matryoshka_recall,
     )
 

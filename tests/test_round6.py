@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataingestionengineprocess_spark.catalog import load
-from dataingestionengineprocess_spark.queries.round6 import (
+from dataingestionengineprocess_spark.queries.stream import (
     _fold_user_stats,
     stream_tws_user_stats,
     tws_runtime_available,
@@ -59,7 +59,7 @@ def test_gbdt_stumps_reduce_training_mse(spark):
     # variance-reduction gain, thresholds must lie in bucket range,
     # and left/right leaves must pull in opposite directions of the
     # residual mean (their count-weighted sum is the zero-mean total).
-    from dataingestionengineprocess_spark.queries.round6 import (
+    from dataingestionengineprocess_spark.queries.ml import (
         ml_gbdt_stumps_portable,
     )
 
@@ -89,7 +89,7 @@ def test_hnsw_layer_structure(spark):
     # be ~1/16 of layer 0 (binomial bound), every sampled node appears
     # at layer 0 with <= 4 ranked-contiguous neighbors, and layer-1
     # nodes' neighbors are layer-1 members only.
-    from dataingestionengineprocess_spark.queries.round6 import (
+    from dataingestionengineprocess_spark.queries.knn import (
         knn_hnsw_layer_portable,
     )
 
@@ -166,7 +166,7 @@ def test_als_halfstep_matches_numpy_solve(spark):
 
     import numpy as np
 
-    from dataingestionengineprocess_spark.queries.round6 import (
+    from dataingestionengineprocess_spark.queries.ml import (
         _ALS_LAMBDA,
         ml_als_halfstep_portable,
     )

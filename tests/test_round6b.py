@@ -8,11 +8,15 @@ import math
 from pyspark.sql import functions as F
 
 from dataingestionengineprocess_spark.catalog import load
-from dataingestionengineprocess_spark.queries.round6b import (
+from dataingestionengineprocess_spark.queries.graph import (
     graph_label_propagation,
     graph_modularity_communities,
+)
+from dataingestionengineprocess_spark.queries.ml import (
     ml_conformal_split,
     ml_shapley_linear,
+)
+from dataingestionengineprocess_spark.queries.text import (
     text_rrf_hybrid_retrieval,
 )
 from tests.conftest import SF_SMOKE

@@ -8,12 +8,16 @@ import math
 from pyspark.sql import functions as F
 
 from dataingestionengineprocess_spark.catalog import load
-from dataingestionengineprocess_spark.queries.round6c import (
+from dataingestionengineprocess_spark.queries.embedding import (
     _sign_words,
     embedding_binary_quantize,
-    knn_mmr_diversify,
+)
+from dataingestionengineprocess_spark.queries.knn import knn_mmr_diversify
+from dataingestionengineprocess_spark.queries.ml import (
     ml_gmm_em_portable,
     ml_ols_normal_equations,
+)
+from dataingestionengineprocess_spark.queries.stat import (
     stat_benjamini_hochberg,
     stat_kendall_tau,
 )

@@ -8,11 +8,15 @@ import math
 from pyspark.sql import functions as F
 
 from dataingestionengineprocess_spark.catalog import load
-from dataingestionengineprocess_spark.queries.round6d import (
+from dataingestionengineprocess_spark.queries.curation import (
     curation_kcenter_coreset,
+)
+from dataingestionengineprocess_spark.queries.graph import (
     graph_jaccard_link_prediction,
-    ml_knn_classifier,
-    stat_theil_sen_slope,
+)
+from dataingestionengineprocess_spark.queries.ml import ml_knn_classifier
+from dataingestionengineprocess_spark.queries.stat import stat_theil_sen_slope
+from dataingestionengineprocess_spark.queries.window import (
     window_hampel_filter,
 )
 from tests.conftest import SF_SMOKE

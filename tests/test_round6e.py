@@ -8,18 +8,16 @@ import math
 from pyspark.sql import functions as F
 
 from dataingestionengineprocess_spark.catalog import load
-from dataingestionengineprocess_spark.queries.round6e import (
+from dataingestionengineprocess_spark.queries.curation import (
     curation_facility_location,
-    ml_dbscan_labels,
-    text_rake_keywords,
 )
+from dataingestionengineprocess_spark.queries.ml import ml_dbscan_labels
+from dataingestionengineprocess_spark.queries.text import text_rake_keywords
 from tests.conftest import SF_SMOKE
 
 
 def test_dbscan_matches_python_allpairs(spark):
-    from dataingestionengineprocess_spark.queries.round4k import (
-        md5_points,
-    )
+    from dataingestionengineprocess_spark.queries.join import md5_points
 
     rows = ml_dbscan_labels(spark, SF_SMOKE).collect()
     pts = {r["c_custkey"]: (r["x"], r["y"])

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dataingestionengineprocess_spark.catalog import load
-from dataingestionengineprocess_spark.queries.round6f import (
+from dataingestionengineprocess_spark.queries.graph import (
     graph_hits_bipartite,
     graph_personalized_pagerank,
 )

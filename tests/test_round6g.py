@@ -7,17 +7,21 @@ import math
 from pyspark.sql import functions as F
 
 from dataingestionengineprocess_spark.catalog import load
-from dataingestionengineprocess_spark.queries.round6g import (
+from dataingestionengineprocess_spark.queries.embedding import (
     embedding_procrustes_2d,
+)
+from dataingestionengineprocess_spark.queries.events import (
     events_holt_linear,
     events_nelson_aalen,
+)
+from dataingestionengineprocess_spark.queries.sample import (
     sample_neyman_allocation,
 )
 from tests.conftest import SF_SMOKE
 
 
 def test_nelson_aalen_vs_kaplan_meier(spark):
-    from dataingestionengineprocess_spark.queries.round4h import (
+    from dataingestionengineprocess_spark.queries.events import (
         events_kaplan_meier,
     )
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dataingestionengineprocess_spark.catalog import load
-from dataingestionengineprocess_spark.queries.round6h import (
+from dataingestionengineprocess_spark.queries.stream import (
     stream_stream_semi_join,
 )
 from tests.conftest import SF_SMOKE

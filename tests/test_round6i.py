@@ -7,10 +7,10 @@ import math
 from pyspark.sql import functions as F
 
 from dataingestionengineprocess_spark.catalog import load
-from dataingestionengineprocess_spark.queries.round6i import (
+from dataingestionengineprocess_spark.queries.quality import (
     quality_wasserstein_drift,
-    stat_brown_forsythe,
 )
+from dataingestionengineprocess_spark.queries.stat import stat_brown_forsythe
 from tests.conftest import SF_SMOKE
 
 

@@ -51,7 +51,7 @@ def _reference(rows, fraction=0.3):
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_token_budget_matches_reference(spark, tmp_path_factory, case):
-    from dataingestionengineprocess_spark.queries.round4d import (
+    from dataingestionengineprocess_spark.queries.curation import (
         curation_token_budget_select,
     )
 

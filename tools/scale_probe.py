@@ -85,16 +85,14 @@ def main() -> None:
         global_rank as _global_rank,
         grouped_rank as _grouped_rank,
     )
-    from dataingestionengineprocess_spark.queries.mlprep import (
+    from dataingestionengineprocess_spark.queries.quality import (
         classifier_score,
     )
-    from dataingestionengineprocess_spark.queries.round4k import md5_points
-    from dataingestionengineprocess_spark.queries.round6d import (
+    from dataingestionengineprocess_spark.queries.join import md5_points
+    from dataingestionengineprocess_spark.queries.graph import (
         jaccard_link_scores,
     )
-    from dataingestionengineprocess_spark.queries.round6e import (
-        eps_neighbor_pairs,
-    )
+    from dataingestionengineprocess_spark.queries.ml import eps_neighbor_pairs
     from dataingestionengineprocess_spark.session import get_spark
 
     spark = get_spark("scale-probe", extra_confs={
@@ -122,7 +120,7 @@ def main() -> None:
     from dataingestionengineprocess_spark.operators.graph import (  # noqa: E402
         copurchase_edges as _copurchase_edges,
     )
-    from dataingestionengineprocess_spark.queries.round4c import (  # noqa: E402
+    from dataingestionengineprocess_spark.queries.window import (  # noqa: E402
         banded_rolling_distinct as _banded_rolling,
     )
 
