@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from ..session import local_frame
+from ..session import checkpoint, local_frame
 
 
 def _adjacent_pairs(syms: str = "syms") -> Column:
@@ -161,7 +161,7 @@ def bpe_train_merges(docs: DataFrame, text_col: str = "text",
     if num_merges <= 0:
         raise ValueError(f"num_merges must be positive, got {num_merges}")
     spark = docs.sparkSession
-    vocab = (
+    vocab = checkpoint(
         docs.select(F.explode(tokens(text_col)).alias("w"))
         # consecutive/leading/trailing spaces split into empty tokens;
         # they carry no symbols and must not enter the vocab
@@ -171,7 +171,6 @@ def bpe_train_merges(docs: DataFrame, text_col: str = "text",
             "freq",
             F.expr("filter(split(w, ''), x -> x != '')").alias("syms"),
         )
-        .localCheckpoint(eager=True)
     )
 
     if local_vocab_limit and vocab.count() <= local_vocab_limit:
@@ -203,9 +202,9 @@ def bpe_train_merges(docs: DataFrame, text_col: str = "text",
             break
         l, r, c = top[0]["m"]["l"], top[0]["m"]["r"], int(-top[0]["m"]["nc"])
         merges.append((rank, l, r, l + r, c))
-        vocab = vocab.select(
+        vocab = checkpoint(vocab.select(
             "freq", _merge_expr(F.col("syms"), l, r).alias("syms")
-        ).localCheckpoint(eager=True)
+        ))
 
     return local_frame(
         spark, merges,

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import cached, checkpoint
+
 
 def connected_components(pairs: DataFrame, src: str = "id_a",
                          dst: str = "id_b", max_iter: int = 25) -> DataFrame:
@@ -49,43 +51,43 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     edges = (
         e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
         .distinct()
-        .cache()
     )
     labels = edges.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("component")
     )
 
-    for _ in range(max_iter):
-        # Change detection rides the SAME aggregation that computes the
-        # new labels: self rows are tagged, so min-over-tagged recovers
-        # the previous label without the extra labels-vs-new join (and
-        # its shuffle) a separate comparison pass would cost per round.
-        neigh = (
-            edges.join(labels, edges["d"] == labels["node"])
-            .select(edges["s"].alias("node"), "component",
-                    F.lit(0).alias("is_self"))
-        )
-        # LAZY checkpoint: the convergence count below materializes
-        # the round's labels AND answers the changed-row question in
-        # ONE job (eager=True spent a separate job on the same pass
-        # every round -- the operators/ranking.py fusion move).
-        merged = (
-            labels.withColumn("is_self", F.lit(1))
-            .union(neigh)
-            .groupBy("node")
-            .agg(
-                F.min("component").alias("component"),
-                F.min(F.when(F.col("is_self") == 1, F.col("component")))
-                .alias("prev"),
+    with cached(edges):
+        for _ in range(max_iter):
+            # Change detection rides the SAME aggregation that computes the
+            # new labels: self rows are tagged, so min-over-tagged recovers
+            # the previous label without the extra labels-vs-new join (and
+            # its shuffle) a separate comparison pass would cost per round.
+            neigh = (
+                edges.join(labels, edges["d"] == labels["node"])
+                .select(edges["s"].alias("node"), "component",
+                        F.lit(0).alias("is_self"))
             )
-            .localCheckpoint(eager=False)
-        )
-        changed = merged.filter(F.col("component") != F.col("prev")).count()
-        labels = merged.select("node", "component")
-        if changed == 0:
-            break
+            # LAZY checkpoint: the convergence count below materializes
+            # the round's labels AND answers the changed-row question in
+            # ONE job (eager=True spent a separate job on the same pass
+            # every round -- the operators/ranking.py fusion move).
+            merged = checkpoint(
+                labels.withColumn("is_self", F.lit(1))
+                .union(neigh)
+                .groupBy("node")
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min(F.when(F.col("is_self") == 1, F.col("component")))
+                    .alias("prev"),
+                ),
+                eager=False,
+            )
+            changed = merged.filter(
+                F.col("component") != F.col("prev")).count()
+            labels = merged.select("node", "component")
+            if changed == 0:
+                break
 
-    edges.unpersist()
     return labels
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, shingles
+from ..session import cached, checkpoint
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -202,7 +203,7 @@ def minhash_neardup_pairs(df: DataFrame, id_col: str = "doc_id",
         ).alias("band_idx", "band_key"),
     )
     if materialize:
-        banded = banded.localCheckpoint(eager=True)
+        banded = checkpoint(banded)
     # Skew guard: drop degenerate buckets (e.g. every empty doc hashes
     # identically) before the self-join blows up quadratically. The
     # per-bucket count uses agg + join-back rather than count-over-
@@ -458,9 +459,9 @@ def simhash_neardup_pairs(df: DataFrame, id_col: str = "doc_id",
     # phase profile: ~2x the found-pairs cost). The table is one
     # 16-byte (id, sh) row per doc, the cheapest possible proxy to
     # store at any scale.
-    sh = simhash_signatures(df, id_col, text_col,
-                            repartition_to=repartition_to,
-                            hash_fn=hash_fn).localCheckpoint(eager=True)
+    sh = checkpoint(simhash_signatures(df, id_col, text_col,
+                                       repartition_to=repartition_to,
+                                       hash_fn=hash_fn))
     def chunk_val(c: int) -> Column:
         v = F.shiftright("sh", offsets[c])
         if sizes[c] < 64:  # 64-bit mask literal would overflow LongType
@@ -517,29 +518,26 @@ def prefix_filter_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     # The (id, shingle) explode feeds BOTH the corpus-frequency
     # aggregate and the rarity join below; uncached, the
     # tokenize+shingle+explode subtree executes twice per doc.
-    # Cache it so the build pays the derivation once (same lifecycle
-    # as toksets: released after the pair result is checkpointed).
+    # Cache it so the build pays the derivation once.
     sh = df.select(
         F.col(id_col).alias("id"),
         F.explode(shingles(text_col, n)).alias("s"),
-    ).persist()
-    toksets = None
-    try:
-        freq = sh.groupBy("s").agg(F.count("*").alias("f"))
-        by_rarity = sh.join(freq, "s").groupBy("id").agg(
-            F.sort_array(F.collect_list(F.struct("f", "s"))).alias("fs")
-        )
-        # Referenced three times below (prefix explode + both verification
-        # sides) -- cache the rarity-sorted sets so the freq-join/
-        # collect_list subtree doesn't execute per reference. persist (not
-        # localCheckpoint: measured 2.3x faster here -- no eager RDD
-        # materialization of the wide arrays); the cache is released below
-        # once the (small) pair result is checkpointed.
-        toksets = by_rarity.select(
-            "id",
-            F.transform("fs", lambda x: x.getField("s")).alias("toks"),
-            F.size("fs").alias("n"),
-        ).persist()
+    )
+    freq = sh.groupBy("s").agg(F.count("*").alias("f"))
+    by_rarity = sh.join(freq, "s").groupBy("id").agg(
+        F.sort_array(F.collect_list(F.struct("f", "s"))).alias("fs")
+    )
+    # Referenced three times below (prefix explode + both verification
+    # sides) -- cache the rarity-sorted sets so the freq-join/
+    # collect_list subtree doesn't execute per reference. persist (not
+    # localCheckpoint: measured 2.3x faster here -- no eager RDD
+    # materialization of the wide arrays).
+    toksets = by_rarity.select(
+        "id",
+        F.transform("fs", lambda x: x.getField("s")).alias("toks"),
+        F.size("fs").alias("n"),
+    )
+    with cached(sh), cached(toksets):
         # The prefix must be PPJoin-safe for every pair the REFERENCE
         # admits. Two corrections to the textbook |S| - ceil(t|S|) + 1:
         # (a) the reference thresholds on round(jac, 4), so pairs with
@@ -620,19 +618,10 @@ def prefix_filter_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         # a pair at jac = t - 0.00004 rounds up into the reference output,
         # so the optimized plan must admit it too.
         jac = F.round(inter / (F.col("na") + F.col("nb") - inter), 4)
-        return (
+        return checkpoint(
             cand.filter(jac >= threshold)
             .select("id_a", "id_b", jac.alias("jaccard"))
-            # Qualifying pairs are tiny relative to the corpus:
-            # checkpoint them eagerly so the caches can be dropped
-            # below instead of leaking past the operator.
-            .localCheckpoint(eager=True)
         )
-    finally:
-        # released on every exit, a failed build included
-        if toksets is not None:
-            toksets.unpersist()
-        sh.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -715,11 +704,11 @@ def incremental_jaccard_admission(corpus: DataFrame | None,
     # first consumer's job materializes it (checkpoint-fusion idiom),
     # the other three read the persisted blocks. 16 B/doc + the
     # shingle array: the cheapest proxy of the batch at any scale.
-    base = (
+    base = checkpoint(
         _spread_input(new_docs.select(F.col(id_col).alias("new_id"),
                                       shingles(text_col, n).alias("__sh")))
-        .withColumn("n_a", F.size("__sh"))
-        .localCheckpoint(eager=False)
+        .withColumn("n_a", F.size("__sh")),
+        eager=False,
     )
     sh_new = base.select(
         "new_id", F.explode("__sh").alias("s"),

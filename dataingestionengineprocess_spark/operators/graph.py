@@ -33,8 +33,12 @@ count:
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import cached, checkpoint
 
 #: Truncate lineage EVERY iteration: materializing the rank table per
 #: iteration (broadcast build or shuffle input) walks the pending
@@ -107,13 +111,13 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # and on a 49-leaf star alike; with AQE off it is 2. Lineage
     # truncation is identical -- localCheckpoint swaps in the RDD scan
     # at construction time either way.
-    w_edges = (
+    w_edges = checkpoint(
         edges.join(out_deg, src)
         .select(
             F.col(src).alias("__src"), F.col(dst).alias("node"),
             (F.lit(1.0) / F.col("__deg")).alias("__w"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     nodes = (
         w_edges.select(F.col("__src").alias("node"))
@@ -124,11 +128,13 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         nodes = nodes.join(
             reset.select("node", F.col("p").alias("__p")), "node", "left"
         ).select("node", F.coalesce("__p", F.lit(0.0)).alias("__p"))
-    nodes = nodes.localCheckpoint(eager=False)
+    nodes = checkpoint(nodes, eager=False)
     # The strategy decision needs the node count; this count is also
     # the job that materializes both checkpoints above.
     use_broadcast = nodes.count() <= broadcast_node_limit
-    if not use_broadcast:
+    if use_broadcast:
+        scope = nullcontext(w_edges)
+    else:
         # Pre-bucket the stationary edges by join key and CACHE (not
         # checkpoint): under AQE a localCheckpoint captures the
         # adaptive plan's UnknownPartitioning, while a cached
@@ -136,20 +142,16 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         # re-plan cached output partitioning by default). Every
         # iteration's join then sees edges already distributed by
         # __src and plans an exchange ONLY on the narrow rank side.
-        w_edges = w_edges.repartition("__src").cache()
-        w_edges.count()  # materialize once, before the loop
+        scope = cached(w_edges.repartition("__src"))
 
     if reset is not None:
         ranks = nodes.select("node", F.col("__p").alias("rank"))
     else:
         ranks = nodes.withColumn("rank", F.lit(1.0))
 
-    # The iteration loop runs inside try/finally: an exception mid-loop
-    # (executor loss, interrupt, OOM in a checkpoint job) must not leak
-    # the cached LARGE edge relation for the session lifetime -- one
-    # leaked InMemoryRelation per failed pagerank call would otherwise
-    # pin executor memory until the session ends.
-    try:
+    with scope as w_edges:
+        if not use_broadcast:
+            w_edges.count()  # materialize once, before the loop
         for i in range(iterations):
             ranks = pagerank_iteration(
                 w_edges, nodes, ranks, damping, use_broadcast
@@ -162,17 +164,14 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                 # truncated at plan-construction time (localCheckpoint
                 # swaps in the RDD scan immediately), so the plan stays
                 # bounded per iteration either way.
-                ranks = ranks.localCheckpoint(eager=False)
+                ranks = checkpoint(ranks, eager=False)
         if not use_broadcast:
             # The final ranks must be made independent of the cache
             # before it is released (a later consumer action would
             # otherwise recompute the edge repartition per action).
             # The loop's checkpoints are lazy, so force one
             # materializing checkpoint here while the cache is alive.
-            ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        if not use_broadcast:
-            w_edges.unpersist()
+            ranks = checkpoint(ranks)
     return ranks
 
 
@@ -247,12 +246,12 @@ def khop_bfs(edges: DataFrame, seeds: DataFrame, hops: int = 2,
     # computed exactly once -- the union/visited/next-hop consumers
     # all read the persisted blocks); eager spent one job per hop on
     # a pass the consumer pays anyway. Lineage stays flat either way.
-    d0 = seeds.select(node).distinct().localCheckpoint(eager=False)
+    d0 = checkpoint(seeds.select(node).distinct(), eager=False)
     frontier, visited = d0, d0
     out = d0.withColumn("dist", F.lit(0))
     for hop in range(1, hops + 1):
-        nxt = bfs_hop(frontier, edges, visited, src=src, dst=dst,
-                      node=node).localCheckpoint(eager=False)
+        nxt = checkpoint(bfs_hop(frontier, edges, visited, src=src,
+                                 dst=dst, node=node), eager=False)
         out = out.union(nxt.withColumn("dist", F.lit(hop)))
         visited = visited.union(nxt)
         frontier = nxt
@@ -338,7 +337,7 @@ def copurchase_half(pairs: DataFrame, key: str = "l_orderkey",
     # build, BFS seed job, ...) materializes and persists the RDD as
     # a side effect -- an eager job here double-paid that pass.
     # Lineage is truncated at construction time either way.
-    return half.localCheckpoint(eager=False)
+    return checkpoint(half, eager=False)
 
 
 def copurchase_edges(pairs: DataFrame, key: str = "l_orderkey",

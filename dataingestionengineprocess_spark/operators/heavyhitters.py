@@ -29,6 +29,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
@@ -83,9 +85,9 @@ def heavy_hitters(items: DataFrame, item_col: str,
 
     # One sketch pass produces BOTH the candidate set and the global N
     # (sentinel rows), computed once (localCheckpoint: two consumers).
-    sketch = stream.mapInPandas(
+    sketch = checkpoint(stream.mapInPandas(
         mg, schema="item string, part_n long"
-    ).localCheckpoint(eager=True)
+    ))
     candidates = sketch.filter(F.col("item").isNotNull()) \
         .select("item").distinct()
     total = sketch.agg(F.sum("part_n").alias("n_total"))

@@ -5,7 +5,7 @@ The reference validates partner CSVs inside its opaque Python process;
 here rules are named Column predicates evaluated in ONE pass -- the
 violation list is assembled as an array column, so a 100 TB batch is
 scanned once regardless of rule count, and the split is two cheap
-filters on the same cached scan.
+filters on the same scan (cached by the caller, `ValidationResult`).
 """
 
 from __future__ import annotations
@@ -62,14 +62,9 @@ class ReferentialRule:
 class ValidationResult:
     passed: DataFrame
     quarantined: DataFrame  # original columns + _violations array<string>
-    #: the cached marked frame both splits derive from; callers
-    #: unpersist after their writes (streams would otherwise leak one
-    #: cache entry per micro-batch)
-    marked: DataFrame | None = None
-
-    def unpersist(self) -> None:
-        if self.marked is not None:
-            self.marked.unpersist()
+    #: the marked frame both splits derive from; a caller that reads
+    #: both holds it in `session.cached` so the rules run in one scan
+    marked: DataFrame
 
 
 def validate(df: DataFrame, rules: list) -> ValidationResult:
@@ -97,7 +92,6 @@ def validate(df: DataFrame, rules: list) -> ValidationResult:
     )
     for ref in refs:
         marked = marked.drop(f"__ok_{ref.name}")
-    marked = marked.cache()
     passed = marked.filter(F.size(VIOLATIONS_COL) == 0).drop(VIOLATIONS_COL)
     quarantined = marked.filter(F.size(VIOLATIONS_COL) > 0)
     return ValidationResult(passed=passed, quarantined=quarantined,

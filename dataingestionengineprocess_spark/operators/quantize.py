@@ -46,7 +46,7 @@ from .similarity import (
     sample_vectors_pandas,
     vector_dim,
 )
-from ..session import local_frame
+from ..session import checkpoint, local_frame
 
 __all__ = [
     "semantic_dedup", "semantic_dedup_multi", "pq_topk",
@@ -252,7 +252,7 @@ def _semantic_assigned(corpus: DataFrame, n_clusters: int, id_col: str,
         # materialize it once so the scoring isn't paid twice --
         # the same localCheckpoint move the minhash banded-signature
         # subtree makes for its 3x-referenced plan.
-        assigned = assigned.localCheckpoint()
+        assigned = checkpoint(assigned)
         sizes = assigned.groupBy("clabel").agg(
             F.count(F.lit(1)).alias("__csize")
         )
@@ -666,22 +666,20 @@ def quantized_covariance(emb: DataFrame, id_col: str,
     # id evaluates per OUTPUT row (one key per (row, dim) -- the
     # self-join would match nothing but the diagonal), and the
     # checkpoint also pins one assignment for both self-join sides.
-    keyed = (
+    keyed = checkpoint(
         emb.select(
             F.monotonically_increasing_id().alias("_obs"),
             F.col(vec_col).cast("array<double>").alias("_v"),
         )
-        .localCheckpoint(eager=True)
     )
-    x = (
+    x = checkpoint(
         keyed.select(
             "_obs", F.posexplode(F.col("_v")).alias("i0", "val"),
         )
         .select(
             "_obs", (F.col("i0") + 1).alias("i"),
             q6(F.col("val")).alias("q"),
-        )
-        .localCheckpoint(eager=True)  # means + both self-join sides
+        )  # means + both self-join sides
     )
     # n comes from F.count over the SAME exploded rows as the sums
     # (per dimension for the mean, per (i, j) group for the final

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import checkpoint, local_frame
 
 
 def _nf(order_cols: list[str]) -> list:
@@ -62,10 +62,10 @@ def _with_offsets(df: DataFrame, order_cols: list[str],
     # fuse-materialization-into-the-decision-action move grouped_rank
     # makes for its offsets probe); eager=True spent a separate job on
     # the same pass at every call site (~50 rank consumers x 1 job).
-    parted = (
+    parted = checkpoint(
         df.repartitionByRange(n_parts, *_nf(order_cols))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn("__pid", F.spark_partition_id()),
+        eager=False,
     )
     totals = {
         r["__pid"]: r["t"]
@@ -107,10 +107,10 @@ def distributed_prefix_sums(df: DataFrame, order_cols: list[str],
     n_parts = spark.sparkContext.defaultParallelism
     # lazy checkpoint + totals collect fuse into one job (see
     # _with_offsets)
-    parted = (
+    parted = checkpoint(
         df.repartitionByRange(n_parts, *_nf(order_cols))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn("__pid", F.spark_partition_id()),
+        eager=False,
     )
     totals = {
         r["__pid"]: r
@@ -220,7 +220,7 @@ def grouped_rank(df: DataFrame, group_cols: list[str],
     # decision into ONE job (eager=True would spend a second job on
     # the same pass); with ``known_group_count`` the checkpoint stays
     # unmaterialized until the query itself runs -- no build-time job.
-    offs = offs.localCheckpoint(eager=False)
+    offs = checkpoint(offs, eager=False)
     n_groups = (known_group_count if known_group_count is not None
                 else offs.count())
     # Above the limit, PIN the non-broadcast strategy (shuffle-hash:

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import checkpoint, local_frame
 
 _M = 1_000_000
 
@@ -111,10 +111,9 @@ def systematic_weighted_sample(df: DataFrame, weight_col: str,
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     # Pin the range layout: boundaries come from a sample pass, and the
     # totals action + final action must agree on who owns which rows.
-    parted = (
+    parted = checkpoint(
         df.repartitionByRange(n_parts, order_col)
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     wlong = F.col(weight_col).cast("long")
     part_totals = {

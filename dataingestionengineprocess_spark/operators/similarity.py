@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, cosine, dot, l2_norm
 from .skew import spread_input
-from ..session import local_frame
+from ..session import cached, local_frame
 
 
 def _plane(seed: str, plane_idx: int, dim: int) -> list[float]:
@@ -727,8 +727,8 @@ def kmeans_portable_fit(corpus: DataFrame, n_clusters: int = 8,
             F.col("v"),
             lambda x: F.floor(x * scale + F.lit(0.5)).cast("long"),
         ),
-    ).persist()
-    try:
+    )
+    with cached(vecs):
         # init from the SAME cached (id, v) projection -- the first
         # action below both materializes the cache and picks the seed
         # rows, so the raw corpus is scanned exactly once per fit
@@ -767,8 +767,6 @@ def kmeans_portable_fit(corpus: DataFrame, n_clusters: int = 8,
             centroids = [
                 updated.get(j, centroids[j]) for j in range(n_clusters)
             ]
-    finally:
-        vecs.unpersist()
 
     spark = corpus.sparkSession
     rows = [

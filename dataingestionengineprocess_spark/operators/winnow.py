@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
+
 
 def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 8,
                         id_col: str = "doc_id",
@@ -52,7 +54,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 8,
     # each re-run the explode + per-gram md5 -- the dominant cost of
     # the operator. Same compute-for-storage trade a shuffle makes;
     # the stream is (id, pos, h), far narrower than the text.
-    grams = grams.localCheckpoint(eager=True)
+    grams = checkpoint(grams)
     bounds = grams.groupBy(id_col).agg(F.max("pos").alias("max_pos"))
     wmin_w = (W.partitionBy(id_col).orderBy("pos")
               .rowsBetween(W.currentRow, w - 1))

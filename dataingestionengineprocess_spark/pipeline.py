@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 from .objectstore import hadoop_fs
 from .operators.dedup import dedup_exact
 from .operators.quality import VIOLATIONS_COL, ValidationResult, validate
-from .session import local_frame
+from .session import cached, checkpoint, local_frame
 from .streaming.telemetry import emit_run_status
 from .sinks.warehouse import (
     RunStatus,
@@ -108,9 +108,8 @@ def run_stages(
     """validate -> keep-latest dedup -> enrich. Returns (curated,
     quarantined, validation). Pure transformations: the caller decides
     when/where actions and writes happen (batch and streaming share
-    this) -- and calls ``validation.unpersist()`` once its writes
-    finish, releasing the validation scan's cache (a stream would
-    otherwise leak one cache entry per micro-batch)."""
+    this), and holds ``validation.marked`` in `session.cached` while
+    it writes."""
     result: ValidationResult = validate(clean, feed.rules)
 
     deduped = dedup_exact(
@@ -166,7 +165,7 @@ def run_stages(
             # counting pass the A8 telemetry policy below forbids.
             from .operators.skew import needs_salting, salted_join
 
-            curated = curated.localCheckpoint(eager=False)
+            curated = checkpoint(curated, eager=False)
             dim_named = dim_side.withColumnRenamed(key, e.fact_col)
             if needs_salting(curated, e.fact_col):
                 curated = salted_join(curated, dim_named,
@@ -197,57 +196,54 @@ def _finish_run(spark: SparkSession, feed: FeedConfig, sinks: SinkConfig,
     quarantine write, and the loaded count over the cached curated
     rows on the warehouse write.
 
-    The run's caches are released on every exit, failed runs included
-    (a stream would otherwise leak one cache entry per micro-batch)."""
+    The run's caches (the parse, the validation scan and the curated
+    rows) are released on every exit, failed runs included."""
     from pyspark.sql import Observation
 
     load_obs = Observation(f"loaded_{run_id}")
     rej_obs = Observation(f"rejects_{run_id}")
     quar_obs = Observation(f"quarantine_{run_id}")
-    curated = validation = None
-    try:
+    with cached(batch.source):
         curated, _, validation = run_stages(feed, batch.clean)
         # One curated pipeline execution: the warehouse write populates
         # the cache, the OLTP write reuses the cached rows.
-        curated = curated.cache()
-        write_warehouse(
-            curated.observe(load_obs, F.count(F.lit(1)).alias("rows")),
-            sinks.warehouse_dir, feed.name, run_id=run_id,
-        )
-        write_oltp(curated, sinks, f"{feed.name}_oltp", run_id=run_id)
-        # Rejects/quarantine are separate branches of the cached scans;
-        # their writes ARE the actions that produce their counts.
-        # Quarantined rows are persisted, not just counted: silently
-        # discarding rule violations would lose partner data.
-        write_run_partition(
-            batch.rejects.observe(rej_obs, F.count(F.lit(1)).alias("rows")),
-            os.path.join(sinks.warehouse_dir, f"{feed.name}_rejects"), run_id,
-        )
-        violated = F.size(VIOLATIONS_COL) > 0
-        write_run_partition(
-            validation.marked.observe(
-                quar_obs, F.count(F.lit(1)).alias("clean"),
-                F.count_if(violated).alias("rows"),
-            ).filter(violated)
-            .withColumn(VIOLATIONS_COL, F.array_join(VIOLATIONS_COL, ",")),
-            os.path.join(sinks.warehouse_dir, f"{feed.name}_quarantine"),
-            run_id,
-        )
-        rows_rejected = int(rej_obs.get["rows"])
-        status = RunStatus(
-            run_id=run_id, feed=feed.name,
-            rows_read=int(quar_obs.get["clean"]) + rows_rejected,
-            rows_loaded=int(load_obs.get["rows"]),
-            rows_rejected=rows_rejected,
-            rows_quarantined=int(quar_obs.get["rows"]),
-            started_at=started, finished_at=time.time(),
-        )
-        emit_run_status(spark, sinks, status)
-        return status
-    finally:
-        for cached in (curated, validation, batch):
-            if cached is not None:
-                cached.unpersist()
+        with cached(validation.marked), cached(curated):
+            write_warehouse(
+                curated.observe(load_obs, F.count(F.lit(1)).alias("rows")),
+                sinks.warehouse_dir, feed.name, run_id=run_id,
+            )
+            write_oltp(curated, sinks, f"{feed.name}_oltp", run_id=run_id)
+            # Rejects/quarantine are separate branches of the cached scans;
+            # their writes ARE the actions that produce their counts.
+            # Quarantined rows are persisted, not just counted: silently
+            # discarding rule violations would lose partner data.
+            write_run_partition(
+                batch.rejects.observe(
+                    rej_obs, F.count(F.lit(1)).alias("rows")),
+                os.path.join(sinks.warehouse_dir, f"{feed.name}_rejects"),
+                run_id,
+            )
+            violated = F.size(VIOLATIONS_COL) > 0
+            write_run_partition(
+                validation.marked.observe(
+                    quar_obs, F.count(F.lit(1)).alias("clean"),
+                    F.count_if(violated).alias("rows"),
+                ).filter(violated)
+                .withColumn(VIOLATIONS_COL, F.array_join(VIOLATIONS_COL, ",")),
+                os.path.join(sinks.warehouse_dir, f"{feed.name}_quarantine"),
+                run_id,
+            )
+            rows_rejected = int(rej_obs.get["rows"])
+            status = RunStatus(
+                run_id=run_id, feed=feed.name,
+                rows_read=int(quar_obs.get["clean"]) + rows_rejected,
+                rows_loaded=int(load_obs.get["rows"]),
+                rows_rejected=rows_rejected,
+                rows_quarantined=int(quar_obs.get["rows"]),
+                started_at=started, finished_at=time.time(),
+            )
+            emit_run_status(spark, sinks, status)
+            return status
 
 
 def ingest_batch(spark: SparkSession, feed: FeedConfig,
@@ -384,17 +380,14 @@ def _merge_clean_rows(merge, rejects_path: str):
     + source file) as the epoch's ``stream-<epoch>`` partition of
     ``rejects_path``, and hand ``merge(clean, epoch_id)`` only the
     parsed rows. Without the split a bad key would merge as a key-NULL
-    row and a bad value as a partial-null row. The split's cache is
-    released on every exit."""
+    row and a bad value as a partial-null row."""
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch = split_corrupt_records(batch_df)
-        try:
+        with cached(batch.source):
             write_run_partition(batch.rejects, rejects_path,
                                 f"stream-{epoch_id:012d}")
             merge(batch.clean.drop("_source_file"), epoch_id)
-        finally:
-            batch.unpersist()
 
     return process_batch
 
@@ -525,29 +518,28 @@ def replay_quarantine(spark: SparkSession, feed: FeedConfig,
         src = src.drop("_run_id")
 
     curated, still_failing, validation = run_stages(feed, src)
-    curated = curated.localCheckpoint(eager=True)
     load_obs = Observation(f"replay_loaded_{run_id}")
-    curated = curated.observe(load_obs, F.count(F.lit(1)).alias("rows"))
     quar_obs = Observation(f"replay_quarantine_{run_id}")
     still_failing = still_failing.withColumn(
         "_violations", F.array_join("_violations", ",")
     ).withColumn("_run_id", F.lit(run_id)).observe(
         quar_obs, F.count(F.lit(1)).alias("rows")
     )
+    with cached(validation.marked):
+        curated = checkpoint(curated)
+        curated = curated.observe(load_obs, F.count(F.lit(1)).alias("rows"))
+        write_warehouse(curated, sinks.warehouse_dir, feed.name,
+                        run_id=run_id)
+        write_oltp(curated, sinks, f"{feed.name}_oltp", run_id=run_id)
 
-    write_warehouse(curated, sinks.warehouse_dir, feed.name, run_id=run_id)
-    write_oltp(curated, sinks, f"{feed.name}_oltp", run_id=run_id)
-
-    # Durable side write, then swap (never overwrite the table being
-    # read in this very run). Partitioned like every other quarantine
-    # write so the table keeps ONE layout (mixing flat files with
-    # _run_id= dirs would break partition discovery).
-    write_run_partition(still_failing, quar_path + "__replaying", run_id)
+        # Durable side write, then swap (never overwrite the table being
+        # read in this very run). Partitioned like every other quarantine
+        # write so the table keeps ONE layout (mixing flat files with
+        # _run_id= dirs would break partition discovery).
+        write_run_partition(still_failing, quar_path + "__replaying", run_id)
     fs, hp = hadoop_fs(spark, quar_path)
     swap_into_place(fs, hp, hp.suffix("__replaying"),
                     hp.suffix("__prereplay"), "replay_quarantine")
-
-    validation.unpersist()
     # counts were observed on the writes above: rows_loaded on the
     # warehouse write, rows_quarantined on the durable side write
     # whose directory was just swapped into the quarantine path --

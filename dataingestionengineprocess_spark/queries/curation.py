@@ -21,6 +21,7 @@ from ..functions.exact import q6, q6 as _q6, snap6 as _snap6
 from ..functions.text import md5_bucket, shingles, token_count, tokens
 from ..functions.vectors import as_double, dot, l2_norm
 from ..operators.skew import spread_input
+from ..session import checkpoint
 from . import register
 from .dedup import NEARDUP_COMPONENTS_CTE
 
@@ -703,7 +704,7 @@ def curation_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MIX_ORACLE = "WITH RECURSIVE " + NEARDUP_COMPONENTS_CTE + """,
+_TRAINING_MIX_ORACLE = "WITH RECURSIVE " + NEARDUP_COMPONENTS_CTE + """,
 assigned AS (
   SELECT d.doc_id, d.lang, d.text, d.n_chars,
          coalesce(c.component_id, d.doc_id) AS component,
@@ -725,7 +726,7 @@ GROUP BY 1, 2
 """
 
 
-@register("curation_training_mix", oracle=_MIX_ORACLE)
+@register("curation_training_mix", oracle=_TRAINING_MIX_ORACLE)
 def curation_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokens
     from ..operators.components import connected_components
@@ -904,7 +905,7 @@ def curation_chunk_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("curation_export_corpus", oracle=_MIX_ORACLE)
+@register("curation_export_corpus", oracle=_TRAINING_MIX_ORACLE)
 def curation_export_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import scratch_dir
     from ..operators.components import connected_components
@@ -1056,7 +1057,7 @@ def curation_split_contamination_audit(spark: SparkSession,
 def repetition_stats(docs: DataFrame) -> DataFrame:
     """Per-document repetition statistics (doc_id, top2, tot2, dup3,
     tot3) — shared by `text_repetition_filters` and the capstone gate
-    chain (`round4b.curation_pretrain_pipeline`) so the gram build and
+    chain (`curation_pretrain_pipeline`) so the gram build and
     the x12/x10 keep-rule inputs live in exactly one Spark site.
 
     Both n-gram families come from ONE scan/Generate: each doc
@@ -1190,13 +1191,12 @@ def curation_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = _dsir_with_grams(docs).select(
         "doc_id", "lang", F.explode("grams").alias("g")
     )
-    feat = (
+    # feat feeds the model aggregate AND the per-doc fold;
+    # materialize so the explode+hash scan runs once
+    feat = checkpoint(
         grams.withColumn("b", _dsir_bucket(F.col("g")))
         .groupBy("doc_id", "lang", "b")
         .agg(F.count("*").alias("c"))
-        # feat feeds the model aggregate AND the per-doc fold;
-        # materialize so the explode+hash scan runs once
-        .localCheckpoint(eager=True)
     )
     model = feat.groupBy("b").agg(
         F.sum(F.when(F.col("lang") == "en", F.col("c")).otherwise(0))
@@ -1230,10 +1230,10 @@ def curation_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             16, 10).cast("long") + F.lit(1))
         / F.lit(16777217.0)
     )
-    sc = dw.select(
+    sc = checkpoint(dw.select(
         "doc_id", "logw",
         (F.col("logw") - F.log(-F.log(u))).alias("score"),
-    ).localCheckpoint(eager=True)
+    ))
 
     n_docs = sc.count()
     k = int(n_docs * 0.25)
@@ -1280,7 +1280,7 @@ SELECT doc_id, shuffle_key, pos, pos % 8 AS shard FROM r
 
 @register("curation_training_order", oracle=_TRAINING_ORDER_ORACLE)
 def curation_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    keyed = (
+    keyed = checkpoint(
         load(spark, sf_dir, "documents")
         .select(
             "doc_id",
@@ -1297,7 +1297,6 @@ def curation_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
                 W.partitionBy("__pid").orderBy("shuffle_key", "doc_id")
             ),
         )
-        .localCheckpoint()
     )
     counts = keyed.groupBy("__pid").agg(F.count(F.lit(1)).alias("__c"))
     wo = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)
@@ -1586,15 +1585,15 @@ def curation_token_budget_select(spark: SparkSession,
     global order, counting every doc) stays <= budget."""
     docs = load(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
-    # Persist the tokenized projection: three consumers follow (budget
-    # agg, the per-bucket window, the bucket-total offsets), and without
-    # the cache each one re-tokenizes the full corpus -- the dominant
-    # cost at scale. The cached rows are four narrow columns per doc.
-    t = docs.select(
+    # Checkpoint the tokenized projection: three consumers follow
+    # (budget agg, the per-bucket window, the bucket-total offsets),
+    # and without it each one re-tokenizes the full corpus -- the
+    # dominant cost at scale. The rows are four narrow columns per doc.
+    t = checkpoint(docs.select(
         "doc_id", "source",
         F.size(toks).alias("n_tok"),
         F.size(F.array_distinct(toks)).alias("n_dist"),
-    ).filter(F.col("n_tok") > 0).persist()
+    ).filter(F.col("n_tok") > 0))
 
     # corpus total -> budget: ONE long of driver state (exact int sum)
     total = t.agg(F.sum("n_tok")).collect()[0][0]
@@ -1645,9 +1644,7 @@ def curation_token_budget_select(spark: SparkSession,
 _DECON_THRESHOLD = 0.35
 
 
-# Rebinds `_DECON_ORACLE` (bound above for `curation_decontaminate`):
-# each binding is read once, by the @register that follows it.
-_DECON_ORACLE = f"""
+_SEMANTIC_DECON_ORACLE = f"""
 SELECT eval_id, best_train_id, max_cos_s,
        max_cos_s >= {_DECON_THRESHOLD} AS contaminated
 FROM (
@@ -1674,7 +1671,8 @@ ORDER BY eval_id
 """
 
 
-@register("curation_semantic_decontaminate", oracle=_DECON_ORACLE)
+@register("curation_semantic_decontaminate",
+          oracle=_SEMANTIC_DECON_ORACLE)
 def curation_semantic_decontaminate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1773,7 +1771,7 @@ def curation_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokens
 
     docs = load(spark, sf_dir, "documents")
-    base = docs.agg(
+    base = checkpoint(docs.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.countDistinct("source").cast("long").alias("n_sources"),
         F.countDistinct("lang").cast("long").alias("n_langs"),
@@ -1782,7 +1780,7 @@ def curation_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct(F.md5("text")).cast("long").alias("n_unique"),
         F.sum(F.when(F.length("text") < 50, 1).otherwise(0)).cast("long")
         .alias("n_short"),
-    ).localCheckpoint(eager=True)  # feeds every metric + both entropies
+    ))  # feeds every metric + both entropies
 
     def entropy(col: str):
         cm = docs.groupBy(col).agg(F.count(F.lit(1)).cast("long")
@@ -2198,11 +2196,11 @@ def curation_kcenter_coreset(spark: SparkSession,
     emb = load(spark, sf_dir, "embeddings")
     vecs = emb.select("vec_id", as_double("embedding").alias("v"))
     v0 = vecs.where(F.col("vec_id") == 0).select(F.col("v").alias("v0"))
-    d1 = (
+    # feeds s2 argmin AND step 3
+    d1 = checkpoint(
         vecs.where(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(v0))
         .select("vec_id", "v", q6(cosine("v", "v0")).alias("cos1"))
-        .localCheckpoint(eager=True)  # feeds s2 argmin AND step 3
     )
 
     def argmin(df: DataFrame, val: str) -> DataFrame:
@@ -2321,13 +2319,12 @@ def curation_facility_location(spark: SparkSession,
                          F.col("v").alias("xv"),
                          F.col("vn").alias("xn"))
     n_df = corpus.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    sims = (
+    sims = checkpoint(
         corpus.crossJoin(F.broadcast(cand))
         .select("cid", "xid",
                 F.greatest(q6(dot("cv", "xv")
                               / (F.col("cn") * F.col("xn"))), F.lit(0))
-                .cast("long").alias("sq"))
-        .localCheckpoint(eager=True)  # reused by all three steps
+                .cast("long").alias("sq"))  # reused by all three steps
     )
 
     def argmax(tot: DataFrame) -> DataFrame:

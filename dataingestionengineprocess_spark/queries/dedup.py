@@ -24,7 +24,7 @@ from ..operators.dedup import (
     containment_pairs, dedup_exact_text, minhash_neardup_pairs,
     ngram_jaccard_pairs, prefix_filter_jaccard_pairs, simhash_neardup_pairs,
 )
-from ..session import local_frame
+from ..session import checkpoint, local_frame
 from . import register
 from .quality import classifier_score, classifier_score_sql
 
@@ -181,8 +181,8 @@ _STRATUM_MOD = 3
 def exact_jaccard_stratum(docs: DataFrame, text_col: str,
                           tenths: int) -> tuple:
     """Shared exact-side scaffold of the shingle-Jaccard certificates
-    (`simhash_certificate_facts` here, `dedup_minhash_lsh_certificate`
-    in round7.py -- one source so a layout change cannot silently
+    (`simhash_certificate_facts` and `dedup_minhash_lsh_certificate`,
+    both in this module -- one source so a layout change cannot silently
     diverge the kernels): the spread + checkpointed 3-token shingle
     stream, per-doc shingle sizes, and the ``id % 3 == 0`` stratum's
     exact integer-J >= tenths/10 pair set (checkpointed -- it feeds
@@ -209,9 +209,9 @@ def exact_jaccard_stratum(docs: DataFrame, text_col: str,
     # spread first: a single-file parquet source arrives as ONE
     # partition and would serialize the explode (and any upstream
     # hex/regexp block derivation) onto one core
-    sh = spread_input(docs).select(F.col("doc_id").alias("id"),
-                                   F.explode(shingles(text_col, 3))
-                                   .alias("s")).localCheckpoint(eager=True)
+    sh = checkpoint(spread_input(docs).select(
+        F.col("doc_id").alias("id"),
+        F.explode(shingles(text_col, 3)).alias("s")))
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
     inter = (
         sh.select(F.col("id").alias("id_a"), "s")
@@ -221,7 +221,7 @@ def exact_jaccard_stratum(docs: DataFrame, text_col: str,
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_inter"))
     )
-    exact = (
+    exact = checkpoint(
         inter
         .join(sizes.select(F.col("id").alias("id_a"),
                            F.col("n_sh").alias("n_a")), "id_a")
@@ -231,7 +231,6 @@ def exact_jaccard_stratum(docs: DataFrame, text_col: str,
                 >= tenths * (F.col("n_a") + F.col("n_b")
                              - F.col("n_inter")))
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
     )
     return sh, sizes, exact
 
@@ -271,7 +270,7 @@ def pair_certificate_facts(spark: SparkSession, exact: DataFrame,
     The found set is checkpointed once, and every count lands in ONE
     action: the one-row aggregates cross-join into a single row, a
     constant-size fan-out, never data x data."""
-    found = found.localCheckpoint(eager=True)
+    found = checkpoint(found)
     pairs = found.select("id_a", "id_b")
     s = (
         exact.agg(F.count(F.lit(1)).alias("n_exact"))
@@ -746,18 +745,17 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", cq)
         .groupBy("id_a").agg(F.max("cq").alias("mxcq"))
     )
-    base = (
+    base = checkpoint(
         emb.select(F.col("vec_id").alias("id_a"))
         .filter(F.col("id_a") % _SEM_AUDIT_MOD == 0)
         .join(nmax, "id_a", "left")
-        .localCheckpoint(eager=True)
     )
     iso449 = base.filter(F.col("mxcq").isNull() | (F.col("mxcq") < 449000))
     iso919 = base.filter(F.col("mxcq").isNull() | (F.col("mxcq") < 919000))
 
-    multi = semantic_dedup_multi(
+    multi = checkpoint(semantic_dedup_multi(
         emb, [_SEM_AUDIT_T_LOW, _SEM_AUDIT_T_HIGH], n_clusters=8,
-    ).localCheckpoint(eager=True)
+    ))
     # slice with the SAME constants passed to the kernel (ADVICE r9)
     out45 = multi.filter(F.col("threshold") == _SEM_AUDIT_T_LOW)
     out92 = multi.filter(F.col("threshold") == _SEM_AUDIT_T_HIGH)
@@ -1052,9 +1050,9 @@ def dedup_semantic_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"embeddings have dim {dim}; oracle is built for "
             f"{_SEMDEDUP_DIM} -- update _SEMDEDUP_DIM"
         )
-    res = semantic_dedup(
+    res = checkpoint(semantic_dedup(
         emb, threshold=threshold, n_clusters=_SEMDEDUP_K, train="portable"
-    ).localCheckpoint(eager=True)
+    ))
     # Norms ride each vector ONCE (the norm_side idiom): the two
     # pairwise certificate scans below would otherwise re-fold both
     # operand norms per PAIR -- 3x the aggregate-lambda work of the
@@ -1385,12 +1383,12 @@ def dedup_transitivity_audit(spark: SparkSession,
     -- the chain-link warning before components collapse clusters."""
     from ..operators.dedup import minhash_neardup_pairs
 
-    pairs = minhash_neardup_pairs(
+    pairs = checkpoint(minhash_neardup_pairs(
         load(spark, sf_dir, "documents"), num_hashes=32, bands=16,
         est_threshold=0.5,
         repartition_to=spark.sparkContext.defaultParallelism,
         hash_fn="portable", est_round=None,
-    ).select("id_a", "id_b").localCheckpoint(eager=True)
+    ).select("id_a", "id_b"))
     adj = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")) \
         .unionByName(pairs.select(F.col("id_b").alias("u"),
                                   F.col("id_a").alias("v")))

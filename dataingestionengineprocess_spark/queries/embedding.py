@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, functions as F, SparkSession
 from ..catalog import load
 from ..functions.exact import q6, snap6, snap6 as _snap6
 from ..functions.vectors import as_double
+from ..session import checkpoint
 from . import register
 
 
@@ -475,7 +476,7 @@ def embedding_binary_quantize(spark: SparkSession,
     from ..operators.ranking import grouped_rank
 
     emb = load(spark, sf_dir, "embeddings")
-    words = _sign_words(emb).localCheckpoint(eager=True)
+    words = checkpoint(_sign_words(emb))
     qw = words.where(F.col("vec_id") < _BQ_NQ).select(
         F.col("vec_id").alias("qid"), F.col("w1").alias("qw1"),
         F.col("w2").alias("qw2"))

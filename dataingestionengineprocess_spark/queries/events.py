@@ -19,7 +19,7 @@ from ..functions.exact import (
     q6f as _q6f, snap6 as _snap6, US_PER_DAY as _US_PER_DAY,
 )
 from ..functions.text import md5_bucket
-from ..session import local_frame
+from ..session import checkpoint, local_frame, scoped_conf
 from . import register
 
 
@@ -609,9 +609,8 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = F.datediff(F.to_date("ts"), F.to_date(F.lit(_EPOCH)))
     # one corpus scan: the per-user table feeds both the max-day agg
     # and the duration rollup
-    u = (ev.groupBy("user_id")
-         .agg(F.min(day).alias("fd"), F.max(day).alias("ld"))
-         .localCheckpoint(eager=True))
+    u = checkpoint(ev.groupBy("user_id")
+                   .agg(F.min(day).alias("fd"), F.max(day).alias("ld")))
     mx = u.agg(F.max("ld").alias("max_day"))
     durs = (
         u.crossJoin(F.broadcast(mx))
@@ -692,10 +691,10 @@ def events_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the daily event count."""
     ev = load(spark, sf_dir, "events")
     day = F.datediff(F.to_date("ts"), F.to_date(F.lit(_EPOCH)))
-    daily = (
+    # grand/dow/trend all reuse it
+    daily = checkpoint(
         ev.groupBy(day.alias("day_num"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True)  # grand/dow/trend all reuse it
     )
     grand = daily.agg(
         _snap6(F.sum("n").cast("double") / F.count(F.lit(1)))
@@ -888,10 +887,10 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     earliest-argmax changepoint flag."""
     ev = load(spark, sf_dir, "events")
     day = F.datediff(F.to_date("ts"), F.to_date(F.lit("2024-01-01")))
-    daily = (
+    # mean/std + cusum reuse
+    daily = checkpoint(
         ev.groupBy(day.alias("day_num"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True)  # mean/std + cusum reuse
     )
     m = daily.agg(
         F.floor(F.sum("n").cast("double") / F.count(F.lit(1)) * 1e6
@@ -994,19 +993,17 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     wl = W.partitionBy("user_id").orderBy("ts", "event_id")
     # checkpoint both model tables: the corpus lag window would
     # otherwise re-run for the output lineage after the grid collect
-    cnt = (
+    cnt = checkpoint(
         ev.withColumn("prev_type", F.lag("event_type").over(wl))
         .filter(F.col("prev_type").isNotNull())
         .groupBy(F.col("prev_type").alias("s_from"),
                  F.col("event_type").alias("s_to"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
-    states = (
+    states = checkpoint(
         ev.select("event_type").distinct()
         .select(F.col("event_type").alias("s"))
         .withColumn("idx", F.row_number().over(W.orderBy("s")).cast("long"))
-        .localCheckpoint(eager=True)
     )
     sf_ = states.select(F.col("s").alias("s_from"),
                         F.col("idx").alias("i"))
@@ -1209,12 +1206,12 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signup-to-first-purchase lag per signup-week cohort with exact
     rank-crossing median and p90."""
     ev = load(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
+    per_user = checkpoint(ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "signup", F.col("ts")))
         .alias("t0"),
         F.min(F.when(F.col("event_type") == "purchase", F.col("ts")))
         .alias("tp"),
-    ).localCheckpoint(eager=True)  # feeds conv AND cohort_n: scan once
+    ))  # feeds conv AND cohort_n: scan once
     # Cohorts are guarded to t0 >= the 2024-01-01 fixture anchor: for
     # earlier rows the truncating `/7 -> long` here and the flooring
     # `// 7` in the oracle would disagree on negative week indexes
@@ -1330,11 +1327,10 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = dense.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("y").cast("long").alias("tot"))
-    centered = (
+    centered = checkpoint(
         dense.crossJoin(F.broadcast(stats))
         .select("d", (F.col("n") * F.col("y") - F.col("tot"))
-                .cast("long").alias("cy"))
-        .localCheckpoint(eager=True)  # bounded day axis, reused 3x
+                .cast("long").alias("cy"))  # bounded day axis, reused 3x
     )
     lags = F.broadcast(
         local_frame(spark, [(k,) for k in range(1, 8)], "lag long"))
@@ -1413,9 +1409,9 @@ def events_markov_entropy_rate(spark: SparkSession,
         "event_type",
         F.lag("event_type").over(wl).alias("prev_type"),
     ).where(F.col("prev_type").isNotNull())
-    bi = seq.groupBy("prev_type", "event_type").agg(
+    bi = checkpoint(seq.groupBy("prev_type", "event_type").agg(
         F.count(F.lit(1)).cast("long").alias("c_xy")
-    ).localCheckpoint(eager=True)  # bounded state space, feeds 2 legs
+    ))  # bounded state space, feeds 2 legs
     uni = bi.groupBy("prev_type").agg(
         F.sum("c_xy").cast("long").alias("c_x"))
     n = uni.agg(F.sum("c_x").cast("long").alias("n_total"))
@@ -1487,12 +1483,12 @@ def events_fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fano factor (var/mean) of daily counts per event type from
     exact integer power sums over the densified day axis."""
     ev = load(spark, sf_dir, "events")
-    counts = ev.groupBy(
+    # bounded (type x day), feeds 3 legs
+    counts = checkpoint(ev.groupBy(
         "event_type",
         F.datediff(F.to_date("ts"), F.to_date(F.lit("2024-01-01")))
         .alias("d"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("y")) \
-     .localCheckpoint(eager=True)  # bounded (type x day), feeds 3 legs
+    ).agg(F.count(F.lit(1)).cast("long").alias("y")))
     span = counts.agg((F.max("d") + 1).cast("long").alias("n_days"))
     types = counts.select("event_type").distinct()
     axis = (
@@ -1737,10 +1733,10 @@ def events_markov_attribution(spark: SparkSession,
     )
     firstp = seq.where(F.col("event_type") == "purchase") \
         .groupBy("user_id").agg(F.min("rn").alias("prn"))
-    j = (
+    # feeds 3 transition legs
+    j = checkpoint(
         seq.join(firstp, "user_id", "left")
         .where(F.col("prn").isNull() | (F.col("rn") < F.col("prn")))
-        .localCheckpoint(eager=True)  # feeds 3 transition legs
     )
     wj = W.partitionBy("user_id").orderBy("rn")
     mid = j.select(
@@ -1763,11 +1759,10 @@ def events_markov_attribution(spark: SparkSession,
             F.when(F.col("prn").isNull(), "NULL").otherwise("CONV")
             .alias("dst"))
     )
-    cnt = (
+    cnt = checkpoint(
         mid.unionByName(start).unionByName(start_conv).unionByName(last)
         .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)  # bounded model table
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))  # bounded model table
     )
     outd = cnt.groupBy("src").agg(F.sum("c").cast("long").alias("o"))
     p_rows = (
@@ -1897,9 +1892,9 @@ def events_rfm_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("period"),
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
     )
-    u = p.groupBy("user_id", "period").agg(
+    u = checkpoint(p.groupBy("user_id", "period").agg(
         F.sum("cents").cast("long").alias("spend")
-    ).localCheckpoint(eager=True)  # user x period rollup
+    ))  # user x period rollup
     # Terciles WITHOUT the per-period ntile window (two periods, so
     # the window form funnels half the user universe through one
     # task): ntile(k) is pure integer arithmetic over the per-period
@@ -1985,12 +1980,12 @@ def events_snaive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive (lag-7) forecast backtest over the final week:
     exact MAE and quantized-term MAPE per event type."""
     ev = load(spark, sf_dir, "events")
-    counts = ev.groupBy(
+    # bounded type x day, two legs
+    counts = checkpoint(ev.groupBy(
         "event_type",
         F.expr(f"unix_micros(ts) div {_US_PER_DAY}").cast("long")
         .alias("day"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("y")) \
-     .localCheckpoint(eager=True)  # bounded type x day, two legs
+    ).agg(F.count(F.lit(1)).cast("long").alias("y")))
     # lag by 7 CALENDAR days (a self-join on day - 7), not 7 rows:
     # a type with zero-event days would otherwise pair day d with an
     # older observation and silently score the wrong seasonal twin
@@ -2088,12 +2083,12 @@ def events_adstock_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geometric adstock of daily event counts per type via a bounded
     triangular self-join with a shared literal decay table."""
     ev = load(spark, sf_dir, "events")
-    counts = ev.groupBy(
+    # bounded type x day, three legs
+    counts = checkpoint(ev.groupBy(
         "event_type",
         F.expr(f"unix_micros(ts) div {_US_PER_DAY}").cast("long")
         .alias("day"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x")) \
-     .localCheckpoint(eager=True)  # bounded type x day, three legs
+    ).agg(F.count(F.lit(1)).cast("long").alias("x")))
     d0 = counts.agg(F.min("day").cast("long").alias("dmin"))
     rel = counts.crossJoin(F.broadcast(d0)).select(
         "event_type", (F.col("day") - F.col("dmin")).alias("t"), "x")
@@ -2157,9 +2152,8 @@ def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     final-day right-censoring; int64 hazard-step running sum."""
     ev = load(spark, sf_dir, "events")
     day = F.datediff(F.to_date("ts"), F.to_date(F.lit(_EPOCH)))
-    u = (ev.groupBy("user_id")
-         .agg(F.min(day).alias("fd"), F.max(day).alias("ld"))
-         .localCheckpoint(eager=True))
+    u = checkpoint(ev.groupBy("user_id")
+                   .agg(F.min(day).alias("fd"), F.max(day).alias("ld")))
     mx = u.agg(F.max("ld").alias("max_day"))
     durs = (
         u.crossJoin(F.broadcast(mx))
@@ -2274,9 +2268,7 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scoped pin keeps the per-step aggregate exchanges equally
     # narrow, and the eager checkpoint executes the recursion inside
     # the scope (shuffle width is read at execution time).
-    days.coalesce(1).localCheckpoint(eager=True) \
+    checkpoint(days.coalesce(1)) \
         .createOrReplaceTempView("__holt_days")
-    from ..streaming.analytics import scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(spark, 1):
-        return spark.sql(_HOLT_SPARK_BODY).localCheckpoint(eager=True)
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "1"):
+        return checkpoint(spark.sql(_HOLT_SPARK_BODY))

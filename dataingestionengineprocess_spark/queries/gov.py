@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, functions as F, SparkSession
 from ..catalog import load
 from ..functions.exact import epoch_day as _epoch_day, snap6 as _snap6
 from ..functions.text import md5_bucket
+from ..session import checkpoint
 from . import register
 
 
@@ -229,15 +230,14 @@ def gov_erasure_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    doomed = cust.filter(
+    doomed = checkpoint(cust.filter(
         md5_bucket(F.concat(F.col("c_custkey").cast("string"),
                             F.lit(":erase")), 100) < _ERASE_PCT
-    ).select("c_custkey").localCheckpoint(eager=True)  # 2 consumers
-    doomed_orders = (
+    ).select("c_custkey"))  # 2 consumers
+    doomed_orders = checkpoint(
         orders.join(F.broadcast(doomed),
                     orders.o_custkey == doomed.c_custkey, "left_semi")
-        .select("o_orderkey")
-        .localCheckpoint(eager=True)  # count + the lineitem semi-join
+        .select("o_orderkey")  # count + the lineitem semi-join
     )
     purged_li = li.join(F.broadcast(doomed_orders),
                         li.l_orderkey == doomed_orders.o_orderkey,

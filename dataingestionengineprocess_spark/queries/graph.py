@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, functions as F, SparkSession
 from ..catalog import load
 from ..functions.exact import snap6
 from ..operators.graph import COPURCHASE_HALF_SQL
+from ..session import checkpoint
 from . import register
 
 
@@ -124,10 +125,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = ranked.select(
+    oriented = checkpoint(ranked.select(
         F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).localCheckpoint(eager=True)
+    ))
     # Wedges fan out only from each edge's LOWER-degree endpoint:
     # e1=(u,v), e2=(u,w) with v < w (each unordered wedge once),
     # closed by the edge between v and w in EITHER orientation --
@@ -542,9 +543,6 @@ def graph_personalized_pagerank(spark: SparkSession,
     )
 
 
-_HITS_ITER = 2
-
-
 _HITS_ORACLE = f"""
 WITH e AS (
   SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
@@ -574,12 +572,11 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-30 part authorities, sum-normalized half-steps."""
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    e = (
+    e = checkpoint(
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .select(F.col("o_custkey").alias("c"),
                 F.col("l_partkey").alias("p"))
-        .distinct()
-        .localCheckpoint(eager=True)  # static edges feed 3 half-steps
+        .distinct()  # static edges feed 3 half-steps
     )
 
     def normalize(df: DataFrame, col: str) -> DataFrame:

@@ -15,7 +15,7 @@ from ..catalog import load, scratch_dir
 from ..functions.exact import snap6 as _snap6
 from ..functions.text import md5_bucket
 from ..operators.skew import interval_overlap_join
-from ..session import local_frame
+from ..session import checkpoint, local_frame, scoped_conf
 from . import register
 
 
@@ -602,9 +602,9 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned: the selective chain feeds TWO jobs (the eager bloom-word
     # build and the broadcast exact verify) — without this every
     # invocation re-runs the 4-table join
-    keys = orders.join(
+    keys = checkpoint(orders.join(
         F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"]
-    ).select("o_orderkey").localCheckpoint(eager=True)
+    ).select("o_orderkey"))
 
     words = (
         keys.select(
@@ -814,9 +814,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
         + F.lit(0.5)
     ).cast("long")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
         out = (
             spark.table("bkt_orders")
             .join(spark.table("bkt_lineitem"),
@@ -830,8 +828,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         # time while the conf override is active; restoring the conf
         # afterwards does not re-plan the returned frame
         out._jdf.queryExecution().executedPlan()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     return out
 
 
@@ -897,9 +893,9 @@ def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "c_custkey", "cx", "cy")
     supp = md5_points(load(spark, sf_dir, "supplier"),
                       "s_suppkey", "sx", "sy")
-    pairs = (
+    # count + top-k reuse
+    pairs = checkpoint(
         grid_radius_pairs(cust, supp, _R, "c_custkey", "s_suppkey")
-        .localCheckpoint(eager=True)  # count + top-k reuse
     )
     tot = pairs.agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
     return (

@@ -18,7 +18,7 @@ from ..operators.similarity import (
     brp_similarity_join, brute_force_topk, centroid_classify, ivf_topk,
     lsh_topk,
 )
-from ..session import local_frame
+from ..session import checkpoint, local_frame
 from . import register
 from .dedup import certificate_oracle_rows, pair_certificate_facts
 from .text import _SW_SQL
@@ -32,7 +32,7 @@ def _bands_sql(n_planes: int = 8, n_bands: int = 8, dim: int = 64) -> str:
     bits independently. Sign bits agree bit-exactly because both
     engines evaluate the same literals with the same left-to-right
     double accumulation (the JL-projection oracle's proven property).
-    Shared by `_lsh_oracle` and the HNSW-layer oracle (round6)."""
+    Shared by `_lsh_oracle` and `_hnsw_oracle`."""
     from ..operators.similarity import _plane
 
     band_exprs = []
@@ -111,8 +111,8 @@ def ann_certificate_facts(spark: SparkSession, emb: DataFrame,
     scores equal the exact re-ranked cosine. The exact side is linear
     in the corpus (|probe set| x n), so the audit holds its cost
     shape at any scale."""
-    found = found.select("query_id", "neighbor_id", "cos_sim", "rank") \
-        .localCheckpoint(eager=True)
+    found = checkpoint(
+        found.select("query_id", "neighbor_id", "cos_sim", "rank"))
 
     from ..functions.vectors import norm_side, quantized_cosine
 
@@ -132,14 +132,13 @@ def ann_certificate_facts(spark: SparkSession, emb: DataFrame,
     from pyspark.sql import Window
 
     w = Window.partitionBy("id_a").orderBy(F.desc("cq"), F.asc("id_b"))
-    top5 = (
+    top5 = checkpoint(
         va.filter(F.col("id_a") < 10)
         .join(vb, F.col("id_a") != F.col("id_b"))
         .select("id_a", "id_b", cq)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
         .select("id_a", "id_b", "cq")
-        .localCheckpoint(eager=True)
     )
 
     shape = found.groupBy("query_id").agg(
@@ -955,8 +954,8 @@ def knn_hnsw_layer_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.col("vec_id").cast("string")).alias("h"),
     ).withColumn(
         "lvl", F.length(F.regexp_extract("h", "^0*", 0)))
-    samp = (base.orderBy("h", "vec_id").limit(12)
-            .localCheckpoint(eager=True))  # feeds both layers + counts
+    # feeds both layers + counts
+    samp = checkpoint(base.orderBy("h", "vec_id").limit(12))
     l1 = base.where(F.col("lvl") >= 1).select("vec_id", "embedding")
 
     pops = base.agg(
@@ -1098,12 +1097,11 @@ def knn_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("rel_q"))
         .withColumn("nrel", -F.col("rel_q"))
     )
-    pool = (
+    pool = checkpoint(
         grouped_rank(rel, ["qid"], ["nrel", "nid"], "rn",
                      known_group_count=_MMR_NQ)
         .where(F.col("rn") <= _MMR_POOL)
-        .select("qid", "nid", "rel_q")
-        .localCheckpoint(eager=True)  # feeds sims + all three steps
+        .select("qid", "nid", "rel_q")  # feeds sims + all three steps
     )
     pv = vecs.select(F.col("vec_id").alias("pvid"), F.col("v"), F.col("n"))
     pa = pool.join(pv, pool["nid"] == F.col("pvid")) \
@@ -1112,13 +1110,12 @@ def knn_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     pb = pool.join(pv, pool["nid"] == F.col("pvid")) \
         .select(F.col("qid").alias("qb"), F.col("nid").alias("nb"),
                 F.col("v").alias("vb"), F.col("n").alias("nnb"))
-    sims = (
+    sims = checkpoint(
         pa.join(pb, (F.col("qb") == F.col("qid"))
                 & (F.col("nb") != F.col("na")))
         .select("qid", "na", "nb",
                 q6(dot("va", "vb") / (F.col("nna") * F.col("nnb")))
-                .alias("sim_q"))
-        .localCheckpoint(eager=True)  # reused by steps 2 and 3
+                .alias("sim_q"))  # reused by steps 2 and 3
     )
 
     def argmax(objs: DataFrame) -> DataFrame:
@@ -1227,13 +1224,12 @@ def similarity_brp_lsh_certificate(spark: SparkSession,
     cq = quantized_cosine().alias("cq")
     # exact side: only the audit stratum ever joins (filter pushed
     # below the pair join -- 1/5 of the all-pairs work)
-    exact = (
+    exact = checkpoint(
         va.filter(F.col("id_a") % _BRP_AUDIT_MOD == 0)
         .join(vb, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", cq)
         .filter(F.col("cq") >= 400100)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
     )
     approx = brp_similarity_join(emb, threshold_cos=0.4).select(
         "id_a", "id_b")

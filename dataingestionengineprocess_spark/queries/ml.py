@@ -22,7 +22,7 @@ from ..functions.exact import (
 )
 from ..functions.text import md5_bucket, tokens
 from ..operators.skew import spread_input
-from ..session import local_frame
+from ..session import cached, checkpoint, local_frame
 from . import register
 from .join import _coord_sql, md5_points
 from .knn import _COS
@@ -619,8 +619,8 @@ def ml_logreg_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("y"),
         (F.col("n_chars") / 500.0).alias("x1"),
         (F.size(tokens("text")) / 100.0).alias("x2"),
-    ).persist()
-    try:
+    )
+    with cached(d):
         n = d.count()
         w = [0.0, 0.0, 0.0]
         for it in range(2):
@@ -642,8 +642,6 @@ def ml_logreg_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_correct = d.filter(
             (margin > 0) == (F.col("y") == 1.0)
         ).count()
-    finally:
-        d.unpersist()
 
     rows = [
         ("bias", math.floor(w[0] * 1e6 + 0.5) / 1e6, n, n_correct),
@@ -743,8 +741,8 @@ def ml_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("y"),
         (F.col("n_chars") / 500.0).alias("x1"),
         (F.size(tokens("text")) / 100.0).alias("x2"),
-    ).persist()
-    try:
+    )
+    with cached(d):
         def q(col):
             return F.floor(col * 1e6 + F.lit(0.5)).cast("long")
 
@@ -814,12 +812,10 @@ def ml_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("source")
         )
-    finally:
-        # the two gradient collects already consumed the cache; the
-        # caller's action re-derives d (a map-only projection of the
-        # scan) for the eval join, keeping the returned plan honest
-        # (and plan-testable) instead of a checkpointed RDD scan
-        d.unpersist()
+    # the two gradient collects already consumed the cache; the
+    # caller's action re-derives d (a map-only projection of the
+    # scan) for the eval join, keeping the returned plan honest
+    # (and plan-testable) instead of a checkpointed RDD scan
     return out
 
 
@@ -1031,7 +1027,7 @@ def ml_bradley_terry_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (<= |sources|^2 rows) every MM iteration re-reads -- without it
     # each of the ~5 downstream references replays the corpus-wide
     # pair synthesis (measured 6.5 -> 5.0 s cold / 1.9 s warm, sf0.1).
-    sym = (
+    sym = checkpoint(
         games.select(
             F.col("winner").alias("i"), F.col("loser").alias("j"),
             F.col("n"), F.col("n").alias("w"))
@@ -1040,7 +1036,6 @@ def ml_bradley_terry_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n"), F.lit(0).cast("long").alias("w")))
         .groupBy("i", "j")
         .agg(F.sum("n").alias("n_games"), F.sum("w").alias("wins_i"))
-        .localCheckpoint(eager=True)
     )
     wtot = sym.groupBy(F.col("i").alias("source")).agg(
         F.sum("wins_i").alias("wins"), F.sum("n_games").alias("games")
@@ -1416,14 +1411,13 @@ def ml_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MI, marginal entropies, and normalized MI between the length
     band and the language, via quantized exact-count reduces."""
     docs = load(spark, sf_dir, "documents")
-    j = (
+    j = checkpoint(
         docs.select(
             F.floor(F.col("n_chars") / 100.0).cast("long").alias("x"),
             F.col("lang").alias("y"),
         )
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     mx = j.groupBy("x").agg(F.sum("c").cast("long").alias("cx"))
     my = j.groupBy("y").agg(F.sum("c").cast("long").alias("cy"))
@@ -1506,7 +1500,7 @@ def ml_auprc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact average precision of document length predicting 'en',
     via the grouped descending-cumulative pass."""
     docs = load(spark, sf_dir, "documents")
-    by_score = (
+    by_score = checkpoint(
         docs.select(
             F.col("n_chars").alias("score"),
             F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
@@ -1515,8 +1509,7 @@ def ml_auprc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum("y").cast("long").alias("p_s"),
             (F.count(F.lit(1)) - F.sum("y")).cast("long").alias("n_s"),
-        )
-        .localCheckpoint(eager=True)  # cum pass + totals reuse
+        )  # cum pass + totals reuse
     )
     w = W.orderBy(F.col("score").desc()).rowsBetween(
         W.unboundedPreceding, W.currentRow)
@@ -1619,15 +1612,14 @@ def ml_expected_calibration_error(spark: SparkSession,
             F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
         )
     )
-    bins = (
+    bins = checkpoint(
         scored.groupBy(F.least(F.floor(F.col("p_q") / 100000), F.lit(9))
                        .cast("long").alias("bin"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_b"),
             F.sum("p_q").cast("long").alias("sum_pq"),
             F.sum("y").cast("long").alias("n_pos"),
-        )
-        .localCheckpoint(eager=True)  # reliability rows + ECE reuse
+        )  # reliability rows + ECE reuse
     )
     tot = bins.agg(F.sum("n_b").cast("long").alias("n"))
     rel = bins.select(
@@ -1855,15 +1847,14 @@ def ml_ndcg_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("label").alias("q_label"))
     n_lab = emb.select(F.col("vec_id").alias("neighbor_id"),
                        F.col("label").alias("n_label"))
-    ranked = (
+    ranked = checkpoint(
         topk.join(F.broadcast(q_lab), "query_id")
         .join(F.broadcast(n_lab), "neighbor_id")
         .select(
             "query_id", "rank",
             F.when(F.col("q_label") == F.col("n_label"), 1).otherwise(0)
             .alias("rel"),
-        )
-        .localCheckpoint(eager=True)  # dcg + ideal both read it
+        )  # dcg + ideal both read it
     )
     log2 = F.log(F.col("rank") + 1.0) / F.log(F.lit(2.0))
     dcg = ranked.groupBy("query_id").agg(
@@ -2235,9 +2226,9 @@ def ml_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         _snap6(F.element_at("embedding", 1).cast("double")).alias("s"),
     )
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    scored = emb.join(docs, emb.vec_id == docs.doc_id).select(
+    scored = checkpoint(emb.join(docs, emb.vec_id == docs.doc_id).select(
         "source", "vec_id", "s",
-    ).localCheckpoint(eager=True)  # feeds persrc, nn, AND global_rank
+    ))  # feeds persrc, nn, AND global_rank
     # per-source rank WITHOUT the per-source window (sources are a
     # small bounded universe -- the window form funnels each source's
     # whole eval population through one task's sort)
@@ -2359,8 +2350,9 @@ def ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p2") - F.col("p1"))
         * _snap6(F.log(F.col("p2") / F.col("p1"))) * 1e6 + 0.5
     ).cast("long")
-    quant = terms.select("bucket", "c1", "c2", term_q.alias("term_q")) \
-        .localCheckpoint(eager=True)  # 10 rows, feeds bucket + total legs
+    # 10 rows, feeds bucket + total legs
+    quant = checkpoint(
+        terms.select("bucket", "c1", "c2", term_q.alias("term_q")))
     per = quant.select(
         F.col("bucket").cast("string").alias("bucket"), "c1", "c2",
         _snap6(F.col("term_q") / 1e6).alias("psi_s"),
@@ -2451,10 +2443,10 @@ def ml_woe_iv_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     woe_s = _snap6(F.log(F.col("pg") / F.col("pb")))
     iv_q = F.floor((F.col("pg") - F.col("pb")) * woe_s * 1e6 + 0.5) \
         .cast("long")
-    woe = rates.select(
+    woe = checkpoint(rates.select(
         "pri", "n_good", "n_bad", woe_s.alias("woe_s"),
         iv_q.alias("iv_q"),
-    ).localCheckpoint(eager=True)  # bounded category table, two legs
+    ))  # bounded category table, two legs
     per = woe.select(
         F.col("pri").alias("o_orderpriority"), "n_good", "n_bad",
         "woe_s", _snap6(F.col("iv_q") / 1e6).alias("iv_s"),
@@ -2538,12 +2530,12 @@ def ml_isotonic_calibration(spark: SparkSession,
           F.sum("y").cast("long").alias("pos"))
     w_ord = W.orderBy("bin")
     w_run = w_ord.rowsBetween(W.unboundedPreceding, 0)
-    idx = binned.select(
+    idx = checkpoint(binned.select(
         "bin", "n", "pos",
         F.row_number().over(w_ord).cast("long").alias("i"),
         F.sum("n").over(w_run).cast("long").alias("cumn"),
         F.sum("pos").over(w_run).cast("long").alias("cumpos"),
-    ).localCheckpoint(eager=True)  # <= 20 rows, feeds three legs
+    ))  # <= 20 rows, feeds three legs
     a = idx.select(F.col("i").alias("ai"),
                    (F.col("cumn") - F.col("n")).alias("n0"),
                    (F.col("cumpos") - F.col("pos")).alias("p0"))
@@ -2626,12 +2618,12 @@ def ml_brier_decomposition(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     """Murphy decomposition of the Brier score (reliability,
     resolution, uncertainty) plus the raw Brier, exact units."""
-    q = load(spark, sf_dir, "embeddings").select(
+    q = checkpoint(load(spark, sf_dir, "embeddings").select(
         F.floor(_p_col() * 1e6 + 0.5).cast("long").alias("pq"),
         F.when(F.col("label") == 0, 1).otherwise(0).alias("y"),
         F.least(F.floor(_p_col() * _CAL_BINS).cast("long"),
                 F.lit(_CAL_BINS - 1)).alias("bin"),
-    ).localCheckpoint(eager=True)  # feeds raw + bins legs
+    ))  # feeds raw + bins legs
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     raw = q.agg(
         F.count(F.lit(1)).cast("long").alias("nn"),
@@ -2714,10 +2706,10 @@ def ml_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         _snap6(F.element_at("embedding", 1).cast("double")).alias("s"),
         F.when(F.col("label") == 0, 1).otherwise(0).alias("x"),
     )
-    grp = scored.groupBy("s").agg(
+    grp = checkpoint(scored.groupBy("s").agg(
         F.sum("x").cast("long").alias("c1"),
         F.sum(1 - F.col("x")).cast("long").alias("c2"),
-    ).localCheckpoint(eager=True)  # value-group table, three legs
+    ))  # value-group table, three legs
     # BOTH class cumulatives from ONE range-partition pass
     cum = distributed_prefix_sums(grp, ["s"], {"k1": "c1", "k2": "c2"})
     tot = grp.agg(F.sum("c1").cast("long").alias("n1"),
@@ -2892,14 +2884,14 @@ def ml_gbdt_stumps_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket would hit Python's mixed-type sort in the split search
     # and DuckDB's NULLS LAST prefix window differently -- stated,
     # not incidental (fixtures carry no NULL ts/value today).
-    d = ev.where(F.col("value").isNotNull()
+    d = checkpoint(ev.where(F.col("value").isNotNull()
                  & F.col("ts").isNotNull()).select(
         F.when(F.col("event_type") == "purchase", F.lit(1.0))
         .otherwise(F.lit(0.0)).alias("y"),
         F.least(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT) div 1000"),
                 F.lit(63).cast("long")).alias("b1"),
         F.hour("ts").cast("long").alias("b2"),
-    ).localCheckpoint(eager=True)  # one materialization feeds all rounds
+    ))  # one materialization feeds all rounds
 
     head = d.agg(F.count(F.lit(1)).cast("long").alias("n"),
                  F.sum(F.col("y").cast("long")).cast("long").alias("sy")
@@ -3188,9 +3180,6 @@ def ml_conformal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SHAP_W = {"qty": 2.0, "disc": -50000.0, "tax": 30000.0}
 
 
-_SHAP_B = 100.0
-
-
 _SHAPLEY_ORACLE = f"""
 WITH means AS (
   SELECT sum(CAST(floor(l_quantity * 1e6 + 0.5) AS BIGINT))
@@ -3322,7 +3311,7 @@ def ml_gmm_em_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = o.select(
         xc.alias("xc"), r2q.alias("r2q"),
     )
-    s = r.agg(
+    s = checkpoint(r.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("r2q").cast("long").alias("s2"),
         F.sum(F.floor((F.col("r2q") / 1e6) * F.col("xc") + F.lit(0.5))
@@ -3330,7 +3319,7 @@ def ml_gmm_em_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.floor(((1e6 - F.col("r2q")) / 1e6) * F.col("xc")
                       + F.lit(0.5)).cast("long")).cast("long")
         .alias("num1"),
-    ).localCheckpoint(eager=True)  # one-row model state: both
+    ))  # one-row model state: both
     # component projections read it, so the union plans ONE scan of
     # orders instead of recomputing the aggregate per branch.
     c1 = s.select(
@@ -3643,10 +3632,9 @@ def ml_dbscan_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN core/border/noise labels, eps-neighbors via the 3x3
     grid-cell join proven lossless by the all-pairs oracle."""
     cust = load(spark, sf_dir, "customer")
-    pts = md5_points(cust, "c_custkey", "cx", "cy") \
-        .localCheckpoint(eager=True)  # one md5 pass feeds both sides
-    nbr = eps_neighbor_pairs(pts) \
-        .localCheckpoint(eager=True)  # feeds the count AND border pass
+    # one md5 pass feeds both sides
+    pts = checkpoint(md5_points(cust, "c_custkey", "cx", "cy"))
+    nbr = checkpoint(eps_neighbor_pairs(pts))  # the count AND border pass
     cnt = (
         pts.join(nbr.groupBy("p").agg(F.count(F.lit(1)).alias("c")),
                  pts["c_custkey"] == F.col("p"), "left")

@@ -16,6 +16,7 @@ from ..functions.exact import (
     epoch_day as _epoch_day, FIXTURE_SPLIT_DAY as _DID_SPLIT_DAY,
     FIXTURE_SPLIT_DAY as _PRICE_SPLIT_DAY, snap6 as _snap6,
 )
+from ..session import checkpoint
 from . import register
 
 
@@ -57,12 +58,11 @@ def basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     by lift above a fractional min-support cut."""
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
-    baskets = (
+    baskets = checkpoint(
         li.join(F.broadcast(part.select("p_partkey", "p_brand")),
                 li.l_partkey == F.col("p_partkey"))
         .select("l_orderkey", "p_brand")
-        .distinct()
-        .localCheckpoint(eager=True)  # pair self-join + marginals reuse
+        .distinct()  # pair self-join + marginals reuse
     )
     n_ord = baskets.agg(
         F.countDistinct("l_orderkey").cast("long").alias("n"))
@@ -216,10 +216,10 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     month = (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    first_ord = (
+    # sizes + the rev join reuse
+    first_ord = checkpoint(
         orders.groupBy("o_custkey")
         .agg(F.min(month).cast("long").alias("cohort"))
-        .localCheckpoint(eager=True)  # sizes + the rev join reuse
     )
     sizes = first_ord.groupBy("cohort").agg(
         F.count(F.lit(1)).cast("long").alias("n_customers"))
@@ -590,7 +590,7 @@ def supplier_shipment_concurrency(spark: SparkSession,
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate")
     epoch = F.to_date(F.lit(_EPOCH))
-    iv = (
+    iv = checkpoint(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.col("l_suppkey").alias("sk"),
@@ -600,8 +600,7 @@ def supplier_shipment_concurrency(spark: SparkSession,
             F.datediff(
                 F.to_date(F.greatest("o_orderdate", "l_shipdate")), epoch)
             .alias("hi"),
-        )
-        .localCheckpoint(eager=True)  # feeds the sweep AND the base agg
+        )  # feeds the sweep AND the base agg
     )
     opens = iv.groupBy("sk", F.col("lo").alias("d")).agg(
         F.count(F.lit(1)).cast("long").alias("delta"))
@@ -905,15 +904,14 @@ def orders_promo_lift_did(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("p_type") == "PROMO", 1).otherwise(0)
         .alias("treated"),
     )
-    cells = (
+    cells = checkpoint(
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("treated", "period")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_lines"),
             (F.floor(F.sum("cents").cast("double") / F.count(F.lit(1))
                      + 0.5) / 100).alias("mean_rev_s"),
-        )
-        .localCheckpoint(eager=True)  # 4 rows, feeds cells + estimate
+        )  # 4 rows, feeds cells + estimate
     )
     def cell(t, p):  # noqa: E306
         return F.max(F.when((F.col("treated") == t)

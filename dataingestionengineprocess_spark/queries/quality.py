@@ -15,6 +15,7 @@ from ..catalog import load
 from ..functions.exact import snap6 as _snap6
 from ..functions.text import lang_id, LANG_MARKERS, md5_bucket, tokens
 from ..operators.skew import spread_input
+from ..session import checkpoint
 from . import register
 from .join import join_fuzzy_levenshtein
 
@@ -138,7 +139,7 @@ def quality_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layouts whenever exchange reuse is disabled -- offsets would then
     # misalign with ranks. localCheckpoint materializes the ranked
     # frame once; every consumer reads the same snapshot.
-    local = _calibration_ranked(spark, sf_dir).localCheckpoint()
+    local = checkpoint(_calibration_ranked(spark, sf_dir))
     # per-partition counts -> exclusive prefix offsets + global N:
     # a #partitions-row table, trivially window-able
     counts = local.groupBy("__pid").agg(F.count("*").alias("__c"))
@@ -633,12 +634,11 @@ def quality_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (<= |classes|^2 rows -- bounded model state), checkpoint it, and
     # derive both margins from that; without the checkpoint the
     # by-truth and by-pred branches each rescan + re-score the corpus.
-    cm = (
+    cm = checkpoint(
         spread_input(docs)
         .select(F.col("lang"), lang_id("text").alias("lang_pred"))
         .groupBy("lang", "lang_pred")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True)
     )
     by_truth = cm.groupBy(F.col("lang").alias("class")).agg(
         F.sum("n").cast("long").alias("n_true"),
@@ -834,9 +834,7 @@ def quality_bot_user_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Rebinds `_PROFILE_ORACLE` (bound above for `quality_profile_orders`):
-# each binding is read once, by the @register that follows it.
-_PROFILE_ORACLE = """
+_COLUMN_PROFILE_ORACLE = """
 WITH t AS (
   SELECT o_orderkey, o_custkey, o_orderstatus,
          CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS price_cents,
@@ -880,7 +878,7 @@ ORDER BY col_name
 """
 
 
-@register("quality_column_profile", oracle=_PROFILE_ORACLE)
+@register("quality_column_profile", oracle=_COLUMN_PROFILE_ORACLE)
 def quality_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column null / distinct / min / max profile of orders from
     ONE wide aggregate, unpivoted with stack()."""
@@ -1150,7 +1148,7 @@ _KEY_CANDIDATES = [
 def quality_key_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-key audit over orders: distinct combinations,
     duplicate rows, and the is_key verdict per candidate."""
-    orders = load(spark, sf_dir, "orders").localCheckpoint(eager=True)
+    orders = checkpoint(load(spark, sf_dir, "orders"))
     n = orders.agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
     parts = []
     for cols in _KEY_CANDIDATES:
@@ -1236,7 +1234,7 @@ def quality_wasserstein_drift(spark: SparkSession,
              F.sum("b").cast("long").alias("nb"))
     )
     c = distributed_prefix_sums(d, ["vq"], {"ca": "na", "cb": "nb"})
-    c = global_rank(c, ["vq"], "rn").localCheckpoint(eager=True)
+    c = checkpoint(global_rank(c, ["vq"], "rn"))
     tot = d.agg(F.sum("na").cast("long").alias("ta"),
                 F.sum("nb").cast("long").alias("tb"))
     nxt = c.select(F.col("vq").alias("nxt_vq"),

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, functions as F, SparkSession
 from ..catalog import load
 from ..functions.exact import q6, q6 as _q6, snap6, snap6 as _snap6
 from ..functions.text import md5_bucket
+from ..session import checkpoint
 from . import register
 
 
@@ -158,10 +159,9 @@ def stat_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-squared statistic + Cramer's V for lang x source, from the
     checkpointed exact contingency table."""
     docs = load(spark, sf_dir, "documents")
-    cm = (
+    cm = checkpoint(
         docs.groupBy("lang", "source")
         .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        .localCheckpoint(eager=True)
     )
     rows_m = cm.groupBy("lang").agg(F.sum("o").cast("long").alias("r_tot"))
     cols_m = cm.groupBy("source").agg(F.sum("o").cast("long").alias("c_tot"))
@@ -441,10 +441,10 @@ def stat_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding components, exact 2x-scaled integer rank algebra."""
     from ..operators.ranking import distributed_prefix_sum
 
-    scored = load(spark, sf_dir, "embeddings").select(
+    scored = checkpoint(load(spark, sf_dir, "embeddings").select(
         _snap6(F.element_at("embedding", 1).cast("double")).alias("s1"),
         _snap6(F.element_at("embedding", 2).cast("double")).alias("s2"),
-    ).localCheckpoint(eager=True)  # feeds both rank legs + the join
+    ))  # feeds both rank legs + the join
 
     def rank_leg(col: str) -> DataFrame:
         grp = scored.groupBy(col).agg(
@@ -617,11 +617,11 @@ def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("xq"),
     )
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    st = scored.groupBy("label").agg(
+    st = checkpoint(scored.groupBy("label").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(dec(F.col("xq"))).alias("sx"),
         F.sum(dec(F.col("xq")) * F.col("xq")).alias("sxx"),
-    ).localCheckpoint(eager=True)  # bounded label table, two legs
+    ))  # bounded label table, two legs
     # per-label terms descale to ORIGINAL units^2, quantize to the
     # 1e-6 grid as integers, THEN sum: sums of raw doubles would be
     # addition-order-dependent across partitions/engines
@@ -753,7 +753,7 @@ def stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n1") > 0) & (F.col("n2") > 0),
         F.abs(F.col("s1").cast("double") / F.col("n1")
               - F.col("s2").cast("double") / F.col("n2")))
-    d = sums.select("b", ad.alias("ad")).localCheckpoint(eager=True)
+    d = checkpoint(sums.select("b", ad.alias("ad")))
     obs = d.where(F.col("b") == 0).select(
         F.col("ad").alias("obs_ad"))
     perms = d.where(F.col("b") > 0).where(F.col("ad").isNotNull())

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, functions as F, SparkSession, Window as W
 
 from ..catalog import load, scratch_dir
 from ..objectstore import hadoop_fs
+from ..session import checkpoint, scoped_conf
 from ..streaming.analytics import (
     read_events_stream, run_to_table, session_windows, sliding_counts,
     stateful_user_totals, streaming_dedup_counts, tumbling_counts,
@@ -214,13 +215,11 @@ def stream_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..catalog import scratch_dir
 
-    from ..streaming.analytics import (
-        FIXTURE_STATE_PARTITIONS,
-        scoped_shuffle_partitions,
-    )
+    from ..streaming.analytics import FIXTURE_STATE_PARTITIONS
 
     work = scratch_dir("rollup", sf_dir)
-    with scoped_shuffle_partitions(spark, FIXTURE_STATE_PARTITIONS):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions",
+                     str(FIXTURE_STATE_PARTITIONS)):
         q = continuous_rollup(spark, sf_dir, f"{work}/wh", f"{work}/ckpt")
         q.awaitTermination()
     return read_rollup(spark, f"{work}/wh")
@@ -494,7 +493,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # zero-row files, which changes nothing downstream (the final
         # readback unions every part file), so probing for emptiness
         # bought a whole cluster round-trip to save nothing.
-        batch = batch_df.localCheckpoint(eager=False)
+        batch = checkpoint(batch_df, eager=False)
         sess = batch_df.sparkSession
         fs, sp = hadoop_fs(sess, seen_path)
         if fs.exists(sp):
@@ -511,12 +510,10 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         decisions.write.mode("append").parquet(out_path)
         batch.write.mode("append").parquet(seen_path)
 
-    from ..streaming.analytics import (
-        FIXTURE_STATE_PARTITIONS,
-        scoped_shuffle_partitions,
-    )
+    from ..streaming.analytics import FIXTURE_STATE_PARTITIONS
 
-    with scoped_shuffle_partitions(spark, FIXTURE_STATE_PARTITIONS):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions",
+                     str(FIXTURE_STATE_PARTITIONS)):
         (
             spark.readStream.schema(docs_schema)
             .option("maxFilesPerTrigger", 1)
@@ -641,10 +638,9 @@ def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- model fit on the static corpus: the grammed corpus is
     # materialized ONCE and feeds the model aggregate, the threshold
     # fold, and the doc count -- three consumers, one scan+gram build
-    static_g = (
+    static_g = checkpoint(
         _dsir_with_grams(static)
         .select("doc_id", "lang", "grams")
-        .localCheckpoint(eager=True)
     )
     feat = (
         static_g
@@ -719,7 +715,7 @@ def _stage_late_epochs(spark: SparkSession, sf_dir: str) -> str:
     every 20th event_id delayed TWO epochs (the straggler subset the
     dual-watermark rules will genuinely drop). Shared staging
     mechanics (fingerprint cache, atomic publish, ordered mtimes) in
-    `queries.streaming.stage_epoch_files`."""
+    `stage_epoch_files`."""
     from ..catalog import load
 
     def frame():
@@ -937,13 +933,11 @@ def stream_oltp_jdbc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("driver", _DERBY_DRIVER)
          .mode(mode).save())
 
-    from ..streaming.analytics import (
-        FIXTURE_STATE_PARTITIONS,
-        scoped_shuffle_partitions,
-    )
+    from ..streaming.analytics import FIXTURE_STATE_PARTITIONS
 
     ckpt = scratch_dir("derby_stream_ckpt", sf_dir, uuid.uuid4().hex)
-    with scoped_shuffle_partitions(spark, FIXTURE_STATE_PARTITIONS):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions",
+                     str(FIXTURE_STATE_PARTITIONS)):
         q = (
             stream.writeStream.foreachBatch(write_epoch)
             .option("checkpointLocation", ckpt)
@@ -1063,7 +1057,7 @@ ORDER BY o_orderpriority, month
 def _stage_retraction_epochs(spark: SparkSession, sf_dir: str) -> str:
     """Orders as a 3-epoch signed CDC drop directory (scaffolding,
     outside the measured drain -- shared stager semantics in
-    queries/streaming.stage_epoch_files)."""
+    `stage_epoch_files`)."""
 
     def frame():
         orders = load(spark, sf_dir, "orders")
@@ -1249,7 +1243,7 @@ def stream_rate_limit_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(src).schema
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch = batch_df.localCheckpoint(eager=True)
+        batch = checkpoint(batch_df)
         if batch.isEmpty():
             return
         sess = batch.sparkSession
@@ -1270,11 +1264,11 @@ def stream_rate_limit_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ranked = ranked.join(tokens, "user_id", "left")
         else:
             avail = F.lit(_RL_CAP)
-        decided = ranked.select(
+        decided = checkpoint(ranked.select(
             "user_id", "event_id", avail.alias("avail"),
             F.when(F.col("rk") <= avail, 1).otherwise(0)
             .alias("admitted"),
-        ).localCheckpoint(eager=True)
+        ))
         decided.select(
             F.lit(int(epoch_id)).alias("epoch"), "user_id", "event_id",
             "admitted",
@@ -1462,22 +1456,12 @@ def stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_events_stream(spark, sf_dir).select("user_id", "value")
     if tws_runtime_available():  # pragma: no cover - needs protobuf
-        prev = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
-        try:
+        with scoped_conf(spark,
+                         "spark.sql.streaming.stateStore.providerClass",
+                         "org.apache.spark.sql.execution.streaming.state."
+                         "RocksDBStateStoreProvider"):
             drained = run_to_table(user_stats_tws(ev), spark,
                                    output_mode="update")
-        finally:
-            if prev is None:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev)
     else:
         drained = run_to_table(user_stats_apws(ev), spark,
                                output_mode="update")

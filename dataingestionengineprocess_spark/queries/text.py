@@ -21,7 +21,7 @@ from ..functions.text import (
     token_count, tokens,
 )
 from ..operators.skew import spread_input
-from ..session import local_frame
+from ..session import checkpoint, local_frame
 from . import register
 from .curation import repetition_stats
 from .quality import _LEXICON_VALUES, classifier_score, classifier_score_sql
@@ -365,13 +365,12 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # base symbol universe: every character of every non-empty token
     # (same derivation as text_bpe_train_certificate)
-    words = (
+    words = checkpoint(
         docs.select(F.explode(tokens("text")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w").agg(F.count("*").alias("freq"))
         .select("freq",
                 F.expr("filter(split(w, ''), x -> x != '')").alias("syms"))
-        .localCheckpoint(eager=True)
     )
     known = {
         r["ch"]
@@ -484,7 +483,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r.left, r.right)
         for r in bpe_train_merges(docs, num_merges=16).orderBy("rank").collect()
     ]
-    enc16 = bpe_encode_counts(docs, merges).localCheckpoint(eager=True)
+    enc16 = checkpoint(bpe_encode_counts(docs, merges))
     enc2s = bpe_encode_counts(
         docs.filter(F.col("doc_id") % _BPE_SAMPLE_MOD == 0), merges[:2]
     )
@@ -1280,12 +1279,11 @@ def text_kl_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus is exploded exactly once. Size is |sources| x |vocab| --
     # Zipf-bounded, and distributed (localCheckpoint stores partitions
     # on executors, nothing driver-side).
-    st = (
+    st = checkpoint(
         spread_input(docs)
         .select("source", F.explode(tokens("text")).alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c_st"))
-        .localCheckpoint(eager=True)
     )
     vocab = st.groupBy("tok").agg(F.sum("c_st").cast("long").alias("c_t"))
     per_src = st.groupBy("source").agg(
@@ -1347,11 +1345,10 @@ def text_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpoint the distinct gram set: a/b self-join sides and both
     # size lookups would otherwise each re-run the shingle explode +
     # distinct (4 corpus scans; one suffices).
-    sg = (
+    sg = checkpoint(
         spread_input(docs)
         .select("source", F.explode(shingles("text", 3)).alias("g"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sizes = sg.groupBy("source").agg(F.count(F.lit(1)).cast("long")
                                      .alias("n_g"))
@@ -1431,13 +1428,13 @@ def text_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 source-distinctive tokens by Dirichlet-smoothed log-odds
     z-score over the global top-200 vocabulary."""
     docs = load(spark, sf_dir, "documents")
-    cnt = (
+    # vocab cut + marginals + z reuse
+    cnt = checkpoint(
         spread_input(docs)
         .select("source", F.explode(tokens("text")).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("y_st"))
-        .localCheckpoint(eager=True)  # vocab cut + marginals + z reuse
     )
     vocab = cnt.groupBy("tok").agg(F.sum("y_st").cast("long").alias("y_t"))
     wv = W.orderBy(F.col("y_t").desc(), "tok")
@@ -1799,10 +1796,10 @@ def text_vocab_growth_heaps(spark: SparkSession,
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     coin = F.md5(F.col("doc_id").cast("string").cast("binary"))
-    ranked = global_rank(
+    ranked = checkpoint(global_rank(
         docs.select("doc_id", "text", coin.alias("coin")),
         ["coin", "doc_id"], rank_col="r",
-    ).select("doc_id", "text", "r").localCheckpoint(eager=True)
+    ).select("doc_id", "text", "r"))
     nn = ranked.agg(F.count(F.lit(1)).cast("long").alias("n"))
     tok = ranked.select(F.explode(tokens("text")).alias("w"), "r")
     firstr = tok.groupBy("w").agg(F.min("r").cast("long").alias("fr"))
@@ -1832,7 +1829,7 @@ def text_vocab_growth_heaps(spark: SparkSession,
     )
     # ln pairs quantized to INTEGERS before any sum: sums of snapped
     # doubles are addition-order-dependent across engines/partitions
-    lg = (
+    lg = checkpoint(
         n_tokens.join(vocab, "ck")
         .select(
             "ck", "n_docs", "n_tokens", "vocab",
@@ -1840,8 +1837,7 @@ def text_vocab_growth_heaps(spark: SparkSession,
             .alias("lxq"),
             F.floor(F.log("vocab") * 1e6 + 0.5).cast("long")
             .alias("lyq"),
-        )
-        .localCheckpoint(eager=True)  # 10 rows, feeds fit + output
+        )  # 10 rows, feeds fit + output
     )
     fit = lg.agg(
         F.count(F.lit(1)).cast("long").alias("m"),
@@ -2216,9 +2212,10 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stop", F.when(F.col("tok").isin(*STOPWORDS), 1).otherwise(0))
     w = Window.partitionBy("doc_id").orderBy("pos")
     marked = tok.withColumn("phrase_id", F.sum("stop").over(w))
-    words = marked.where((F.col("stop") == 0) & (F.col("tok") != "")) \
-        .select("doc_id", "tok", "pos", "phrase_id") \
-        .localCheckpoint(eager=True)  # feeds plen, wstat, phrase agg
+    # feeds plen, wstat, phrase agg
+    words = checkpoint(
+        marked.where((F.col("stop") == 0) & (F.col("tok") != ""))
+        .select("doc_id", "tok", "pos", "phrase_id"))
     plen = words.groupBy("doc_id", "phrase_id") \
         .agg(F.count(F.lit(1)).cast("long").alias("n_words"))
     wstat = (

@@ -6,12 +6,19 @@ pandas exchange, UTC session timezone so timestamp semantics match the
 DuckDB oracle, and shuffle partitions sized to cores in local mode
 (on a real cluster you'd size to ~2-3x total executor cores, or leave
 AQE's coalescing to shrink the default).
+
+The module is also the one home of what a step does to the session:
+materializing an intermediate (`checkpoint`), caching one for a block
+(`cached`), pinning a conf for a block (`scoped_conf`) and building a
+frame from driver-known rows (`local_frame`).
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable
+import sys
+from collections.abc import Iterable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -62,6 +69,8 @@ _SIZING_CONFS = frozenset({
     "spark.sql.shuffle.partitions",
     "spark.sql.files.maxPartitionBytes",
 })
+
+_DESCRIPTION = "spark.job.description"
 
 
 def get_spark(app_name: str = "dataingestionengineprocess-spark",
@@ -116,6 +125,57 @@ def release_persistent_rdds(spark: SparkSession) -> None:
     it = jmap.values().iterator()
     while it.hasNext():
         it.next().unpersist(False)
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """A local checkpoint of ``df``, eager or lazy, with every job it
+    submits described by its call site, for example
+    ``operators.graph.pagerank:167``.
+
+    This is the package's one ``localCheckpoint`` call, so every step
+    that materializes an intermediate names itself in the status store
+    (and in any job group the caller opened). A lazy checkpoint is
+    covered too: under AQE, building one runs the plan's non-final
+    stages. The caller's own description comes back on return.
+    """
+    caller = sys._getframe(1)
+    module = caller.f_globals["__name__"].removeprefix(__package__ + ".")
+    sc = df.sparkSession.sparkContext
+    previous = sc.getLocalProperty(_DESCRIPTION)
+    sc.setJobDescription(
+        f"{module}.{caller.f_code.co_name}:{caller.f_lineno}")
+    try:
+        return df.localCheckpoint(eager=eager)
+    finally:
+        sc.setLocalProperty(_DESCRIPTION, previous)
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` persisted for the block, released on every exit, raised
+    exceptions included: the package's one ``persist``. A frame built
+    from ``df`` before the block still reads the cache, since Spark
+    looks cached plans up when a query runs, not when it is built."""
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """``key`` set to ``value`` for the block; on exit the previous
+    value comes back, or the key is unset when it had none."""
+    previous = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if previous is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, previous)
 
 
 def local_frame(spark: SparkSession, rows: Iterable[tuple],

@@ -28,18 +28,14 @@ CORRUPT_COL = "_corrupt_record"
 class CsvBatch:
     """Parsed landing-zone batch, split into clean and rejected rows.
 
-    ``source`` is the cached parse frame both splits derive from (set
-    in PERMISSIVE mode only); callers unpersist it once the batch's
-    writes finish -- a long-running ingest loop would otherwise
-    accumulate one CacheManager entry (and its spilled blocks) per
-    batch for the life of the session."""
+    ``source`` is the parse frame both splits derive from (set in
+    PERMISSIVE mode only). The run that reads the batch holds it in
+    `session.cached` while it reads the splits: Spark answers a query
+    on the corrupt-record column only over materialized parse
+    results, and the cache keeps the split to one scan."""
     clean: DataFrame
     rejects: DataFrame
     source: DataFrame | None = None
-
-    def unpersist(self) -> None:
-        if self.source is not None:
-            self.source.unpersist()
 
 
 def with_corrupt_col(schema: T.StructType) -> T.StructType:
@@ -75,11 +71,10 @@ def split_corrupt_records(parsed: DataFrame,
     """Split a PERMISSIVE parse (its schema ends in CORRUPT_COL) into
     clean rows and rejects, each carrying the originating file.
 
-    The file name is stamped BEFORE the cache: ``input_file_name()``
-    evaluated over the cached rows returns ''. The cache itself is the
-    PERMISSIVE quirk -- corrupt-record access needs materialized parse
-    results -- and keeps the split to one scan."""
-    df = parsed.withColumn(source_file_col, F.input_file_name()).cache()
+    The file name is stamped on ``source``, the frame the caller
+    caches (see `CsvBatch`): ``input_file_name()`` evaluated over
+    cached rows returns ''."""
+    df = parsed.withColumn(source_file_col, F.input_file_name())
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     rejects = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw_record"), F.col(source_file_col)
@@ -189,7 +184,6 @@ def read_csv_feed_by_name(spark: SparkSession, path: str,
     for f in schema.fields:
         this = F.col(f"__raw_{f.name}").isNotNull() & F.col(f.name).isNull()
         bad = this if bad is None else (bad | this)
-    casted = casted.cache()
     clean = casted.filter(~F.coalesce(bad, F.lit(False))).select(
         *[f.name for f in schema.fields], source_file_col
     )

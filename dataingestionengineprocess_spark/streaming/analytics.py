@@ -15,14 +15,13 @@ oracles, where expressible) work unchanged.
 from __future__ import annotations
 
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import table_path
-from ..session import tune_session
+from ..session import checkpoint, scoped_conf, tune_session
 
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType([
@@ -66,50 +65,35 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int | None):
-    """Temporarily pin ``spark.sql.shuffle.partitions`` around a drain.
-
-    Stateful streaming operators materialize one STATE STORE INSTANCE
-    per shuffle partition per operator per micro-batch — the right
-    number tracks key cardinality and cluster parallelism, NOT the
-    batch-side default (AQE never re-plans a stream). At fixture scale
-    the instance overhead dominates the actual work (measured 2.7x on
-    the stream-stream outer join: 5.8 s at 32 partitions -> 2.2 s
-    at 8), and in a plain 200-partition driver session the waste is
-    proportionally worse. Production sizing goes UP for the same
-    reason it goes down here. Session-global for the drain's duration;
-    drains are sequential in every harness that calls this.
-    """
-    if n is None:
-        yield
-        return
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-#: Fixture-scale state-partition count for the drain helpers: every
-#: registered query streams the (bounded) driver fixtures, where key
-#: cardinality per micro-batch is thousands, not billions.
+#: Fixture-scale state-partition count the drain helpers pin
+#: ``spark.sql.shuffle.partitions`` to (`session.scoped_conf`, for the
+#: drain's duration; drains are sequential in every harness). Stateful
+#: streaming operators materialize one STATE STORE INSTANCE per shuffle
+#: partition per operator per micro-batch -- the right number tracks
+#: key cardinality and cluster parallelism, NOT the batch-side default
+#: (AQE never re-plans a stream). Every registered query streams the
+#: (bounded) driver fixtures, where key cardinality per micro-batch is
+#: thousands, not billions, so the instance overhead dominates the
+#: actual work (measured 2.7x on the stream-stream outer join: 5.8 s
+#: at 32 partitions -> 2.2 s at 8), and in a plain 200-partition
+#: driver session the waste is proportionally worse. Production sizing
+#: goes UP for the same reason it goes down here.
 FIXTURE_STATE_PARTITIONS = 8
 
 
 def run_to_table(stream_df: DataFrame, spark: SparkSession,
                  output_mode: str = "complete",
-                 state_partitions: int | None = FIXTURE_STATE_PARTITIONS,
+                 state_partitions: int = FIXTURE_STATE_PARTITIONS,
                  ) -> DataFrame:
     """Drain a bounded streaming aggregation into a memory sink and
     return the result as a batch DataFrame. ``state_partitions`` pins
     the stateful operators' partition count for the drain (see
-    `scoped_shuffle_partitions`); pass None to use the session value.
-    The partition count changes task layout only, never results —
-    every drain-backed query is hash-checked against its oracle."""
+    `FIXTURE_STATE_PARTITIONS`). The partition count changes task
+    layout only, never results — every drain-backed query is
+    hash-checked against its oracle."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, state_partitions):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions",
+                     str(state_partitions)):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory").queryName(name)
@@ -123,7 +107,7 @@ def run_to_table(stream_df: DataFrame, spark: SparkSession,
     # driver's correctness sweep) would grow one resident result set
     # per drain. localCheckpoint blocks are reference-counted and GC'd
     # with the returned DataFrame instead.
-    out = spark.table(name).localCheckpoint(eager=True)
+    out = checkpoint(spark.table(name))
     spark.catalog.dropTempView(name)
     return out
 

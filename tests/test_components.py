@@ -8,6 +8,8 @@ rounds-to-converge equals the chain length).
 
 from __future__ import annotations
 
+import pytest
+
 from dataingestionengineprocess_spark.operators.components import (
     canonical_per_component,
     connected_components,
@@ -48,3 +50,19 @@ def test_canonical_annotation(spark):
     assert not rows[2]["keep"] and not rows[3]["keep"]
     assert rows[10]["keep"] and rows[10]["cluster_size"] == 2
     assert not rows[11]["keep"]
+
+
+def test_failed_iteration_releases_the_edge_cache(spark, monkeypatch):
+    """An iteration that fails (here: its label checkpoint raises)
+    leaves the session cache manager as it found it."""
+    def _fail(self, *a, **k):
+        raise RuntimeError("injected iteration failure")
+
+    df = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
+    spark.catalog.clearCache()
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    # patch the concrete class: pyspark.sql.DataFrame is its abstract base
+    monkeypatch.setattr(type(df), "localCheckpoint", _fail)
+    with pytest.raises(RuntimeError, match="injected"):
+        connected_components(df, "id_a", "id_b")
+    assert jcm.isEmpty()

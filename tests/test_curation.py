@@ -258,3 +258,13 @@ def test_bpe_local_and_distributed_paths_are_identical(spark):
         .orderBy("rank").collect()
     ]
     assert local == dist and len(local) == 14
+
+
+def test_token_budget_select_leaves_no_cache(spark):
+    """The query's tokenized projection feeds three consumers of the
+    returned plan, so it is checkpointed rather than cached: once the
+    query has run, the session cache manager is empty."""
+    spark.catalog.clearCache()
+    all_queries()["curation_token_budget_select"](spark, SF) \
+        .write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

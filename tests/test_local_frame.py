@@ -92,6 +92,19 @@ def test_no_list_built_frames_in_the_package():
     assert not offenders, offenders
 
 
+@pytest.mark.parametrize("call", [
+    ".localCheckpoint(", ".persist(", ".cache()", ".unpersist(",
+])
+def test_intermediates_materialize_through_session_only(call):
+    """The package materializes and releases intermediates through
+    `session.checkpoint` and `session.cached` only: a direct call
+    anywhere but `session.py` would submit jobs no step names, or hold
+    a cache that no scope releases."""
+    offenders = _lines_with(
+        call, (f for f in PKG.rglob("*.py") if f != PKG / "session.py"))
+    assert not offenders, offenders
+
+
 def test_filesystem_handles_and_keep_latest_windows_have_one_home():
     """Every Hadoop FileSystem handle comes from `objectstore.hadoop_fs`
     (one line in the package calls ``getFileSystem(``), and the ingest

@@ -4,6 +4,7 @@ after the development round that added it."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -65,3 +66,35 @@ def test_every_family_module_holds_queries():
 
 def test_no_module_is_named_after_a_round():
     assert not [f for f in os.listdir(QUERY_DIR) if f.startswith("round")]
+
+
+def _module_bindings(tree: ast.Module) -> list[str]:
+    """Names bound at module level: assignments, defs and classes."""
+    names = []
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target])
+            names += [n.id for t in targets for n in ast.walk(t)
+                      if isinstance(n, ast.Name)]
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                               ast.ClassDef)):
+            names.append(node.name)
+    return names
+
+
+def test_no_module_level_name_is_bound_twice():
+    """A module name bound twice (say, one oracle string per query
+    under the same name) makes whichever reader runs later silently
+    get the other binding."""
+    root = os.path.dirname(QUERY_DIR)
+    twice = []
+    for sub in ("queries", "operators"):
+        for fn in sorted(os.listdir(os.path.join(root, sub))):
+            if not fn.endswith(".py"):
+                continue
+            with open(os.path.join(root, sub, fn)) as f:
+                names = _module_bindings(ast.parse(f.read()))
+            twice += sorted(f"{sub}/{fn}:{n}" for n in set(names)
+                            if names.count(n) > 1)
+    assert not twice, twice

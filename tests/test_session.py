@@ -1,15 +1,22 @@
-"""`session.tune_session` and the scale stager's key-range guard."""
+"""`session.tune_session`, the step helpers (`checkpoint`,
+`scoped_conf`) and the scale stager's key-range guard."""
 
 from __future__ import annotations
 
 import glob
 import importlib.util
 import os
+import sys
 from types import SimpleNamespace
 
 import pytest
+from pyspark.sql import functions as F
 
-from dataingestionengineprocess_spark.session import tune_session
+from dataingestionengineprocess_spark.session import (
+    checkpoint,
+    scoped_conf,
+    tune_session,
+)
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -29,6 +36,49 @@ def test_tune_session_sets_the_seven_semantic_confs():
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
     ])
+
+
+def test_checkpoint_names_its_call_site_on_every_job(spark):
+    """Each job a checkpoint submits, eager or lazy (under AQE a lazy
+    one still runs the plan's shuffle stage), is described by the
+    caller's module, function and line; the caller's own description
+    and job group survive the call."""
+    sc = spark.sparkContext
+    def grouped():  # a fresh plan per call: no shuffle stage to reuse
+        return spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+
+    sc.setJobGroup("checkpoint-step-names", "outer step")
+    try:
+        line = sys._getframe().f_lineno + 1
+        checkpoint(grouped())
+        checkpoint(grouped(), eager=False)
+        assert sc.getLocalProperty("spark.job.description") == "outer step"
+        assert sc.getLocalProperty("spark.jobGroup.id") == \
+            "checkpoint-step-names"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup("checkpoint-step-names")
+    described = sorted(store.job(j).description().get() for j in jobs)
+    site = f"{__name__}.test_checkpoint_names_its_call_site_on_every_job"
+    assert len(jobs) >= 2
+    assert set(described) == {f"{site}:{line}", f"{site}:{line + 1}"}
+
+
+def test_scoped_conf_restores_a_set_key_and_unsets_a_new_one(spark):
+    """On exit, exceptions included, a key that had a value gets it
+    back and a key that had none is unset again."""
+    key, fresh = "spark.sql.shuffle.partitions", "spark.graft.test.scoped"
+    before = spark.conf.get(key)
+    assert spark.conf.get(fresh, None) is None
+    with pytest.raises(RuntimeError, match="inside"):
+        with scoped_conf(spark, key, "3"), scoped_conf(spark, fresh, "x"):
+            assert spark.conf.get(key) == "3"
+            assert spark.conf.get(fresh) == "x"
+            raise RuntimeError("inside")
+    assert spark.conf.get(key) == before
+    assert spark.conf.get(fresh, None) is None
 
 
 def _scale_queries():

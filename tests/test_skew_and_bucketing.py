@@ -306,11 +306,11 @@ def test_enrichment_auto_strategy_is_report_driven(spark):
         )
 
     hot = fact(hot=True)
-    auto, _, v1 = run_stages(feed("auto"), hot)
+    auto, _, _ = run_stages(feed("auto"), hot)
     plan_auto = auto._jdf.queryExecution().executedPlan().toString()
     assert "__salt" in plan_auto, plan_auto
 
-    bcast, _, v2 = run_stages(feed("broadcast"), hot)
+    bcast, _, _ = run_stages(feed("broadcast"), hot)
 
     def checksum(df):
         return tuple(df.agg(
@@ -323,10 +323,7 @@ def test_enrichment_auto_strategy_is_report_driven(spark):
         == checksum(bcast.select("k", "uid", "attr"))
 
     uniform = fact(hot=False)
-    plain, _, v3 = run_stages(feed("auto"), uniform)
+    plain, _, _ = run_stages(feed("auto"), uniform)
     plan_plain = plain._jdf.queryExecution().executedPlan().toString()
     assert "__salt" not in plan_plain, plan_plain
     assert plain.where(F.col("attr").isNull()).count() == 0
-
-    for v in (v1, v2, v3):
-        v.unpersist()
