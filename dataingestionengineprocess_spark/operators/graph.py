@@ -307,11 +307,15 @@ def copurchase_half(pairs: DataFrame, key: str = "l_orderkey",
     shuffle of every row -- measured 2.3x faster at sf0.1 with
     identical edges (see `graph_pagerank_parts`). Per-key fan-out is
     |items|^2, the same quadratic the self-join pays, but with no join
-    machinery. Eagerly checkpointed: every caller feeds the half-pair
+    machinery. Checkpointed LAZILY: every caller feeds the half-pair
     table to at least two consumers (mirror union + degrees, or an
     iterative BFS/PageRank loop), so flat lineage computed once is the
-    right default. THE single source of the co-purchase edge build --
-    `graph_pagerank_parts`, `graph_khop_reachability`,
+    right default, and the caller's first action fills it. Under AQE
+    "lazy" still runs work at construction: building the checkpoint
+    executes every non-final stage of its plan, so the groupBy
+    shuffle stage runs here (measured: 1 job for a groupBy plan with
+    AQE on, 0 with it off). THE single source of the co-purchase edge
+    build -- `graph_pagerank_parts`, `graph_khop_reachability`,
     `graph_jaccard_link_prediction`, and tools/scale_probe.py all
     route through here so the idiom cannot drift between surfaces.
     """

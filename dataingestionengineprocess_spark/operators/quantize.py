@@ -40,8 +40,8 @@ from pyspark.sql.types import (
 from ..functions.vectors import as_double, cosine, dot
 from .skew import spread_input
 from .similarity import (
-    _centroid_score_structs,
     _fit_centroids,
+    _nearest_centroids,
     portable_init_sample,
     sample_vectors_pandas,
     vector_dim,
@@ -234,14 +234,13 @@ def _semantic_assigned(corpus: DataFrame, n_clusters: int, id_col: str,
     Returns ``(assigned, group_keys)``."""
     corpus = spread_input(corpus)
     cvecs = _fit_centroids(corpus, n_clusters, id_col, vec_col, train)
-    best = F.array_max(_centroid_score_structs(as_double(vec_col), cvecs))
-    assigned = corpus.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        as_double(vec_col).alias("v"),
-        (-best["nl"]).cast("int").alias("clabel"),
-        # score is dot(v, unit_centroid); dividing by |v| makes it the
-        # true cosine used for the farthest-first ordering.
-        (best["score"] / F.sqrt(dot(as_double(vec_col), as_double(vec_col))))
+    vecs = corpus.select(F.col(id_col).cast("long").alias("vec_id"),
+                         as_double(vec_col).alias("v"))
+    assigned = _nearest_centroids(vecs, "vec_id", "v", cvecs).select(
+        "vec_id", "v", F.col("__j").alias("clabel"),
+        # __score is dot(v, unit_centroid); dividing by |v| makes it
+        # the true cosine used for the farthest-first ordering.
+        (F.col("__score") / F.sqrt(dot(F.col("v"), F.col("v"))))
         .alias("centroid_cos"),
     )
 

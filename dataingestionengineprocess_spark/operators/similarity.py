@@ -113,7 +113,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
     The whole n_bands x n_planes plane matrix rides in as ONE nested
     literal scored by a single transform lambda (the
-    `_centroid_score_structs` move): per-plane inline fold expressions
+    `_nearest_centroids` move): per-plane inline fold expressions
     each carrying their own 64-double array literal made the
     expression tree ~n_bands x n_planes larger for identical
     semantics (measured 9.3 s -> ~2 s at sf0.1). Bit-identical dots:
@@ -257,37 +257,55 @@ def lsh_knn_graph(corpus: DataFrame, k: int = 4,
 _INLINE_CENTROID_BUDGET = 65536
 
 
-def _centroid_score_structs(v: Column, cents: list[list[float]]) -> Column:
-    """array<struct<score double, nl int>>: element j scores ``v``
-    against centroid j, computed map-only with NO join and NO shuffle.
+def _nearest_centroids(df: DataFrame, key: str, v: str,
+                       cents: list[list[float]], n: int = 1) -> DataFrame:
+    """``df`` with one row per (row, one of its ``n`` nearest
+    centroids) and two more columns: ``__j``, the centroid's index
+    (int), and ``__score``, dot(``v``, unit centroid j) --
+    proportional to cosine, the |v| divisor being constant across
+    centroids. Nearest means highest score, ties to the LOWEST index.
+    The one assignment behind `ivf_topk`'s lists and
+    `semantic_dedup`'s clusters.
 
-    The whole centroid matrix rides in as ONE array<array<double>>
-    literal (pre-L2-normalized on the driver) and a single two-arg
-    ``transform`` lambda scores every centroid. One Literal node + one
-    lambda keeps the expression tree a constant size regardless of
-    n_lists x dim, so Catalyst analysis and codegen stay trivial where
+    The centroids are L2-normalized on the driver. While
+    n_centroids x dim fits `_INLINE_CENTROID_BUDGET`, the whole matrix
+    rides in as ONE array<array<double>> literal scored by a single
+    two-arg ``transform`` lambda: map-only, no join, no shuffle, and an
+    expression tree of constant size however large the matrix, where
     per-centroid inline expressions would build a multi-thousand-node
-    plan.
-
-    ``score`` is dot(v, unit_centroid): proportional to cosine (the
-    |v| divisor is constant across centroids), so struct ordering --
-    compare ``score``, then ``nl`` -- realizes "highest cosine, ties
-    to the LOWEST centroid index" for both ``array_max`` (argmax in
-    SemDeDup cluster assignment) and ``array_sort``+``reverse``
-    (top-nprobe in IVF). ``nl`` stores the NEGATED index so that a tie on score
-    prefers the larger nl, i.e. the smaller index; callers recover the
-    index as ``-nl``."""
+    plan. Past the budget the literal would ship with every task, so
+    the unit centroids become a broadcast frame and a window over
+    ``key`` (unique per row) keeps the top n. Both paths fold the same
+    coefficients in the same order, so they assign identically."""
     import math
 
     units = []
     for c in cents:
-        n = math.sqrt(sum(x * x for x in c))
-        units.append([x / n for x in c] if n > 0 else [0.0] * len(c))
-    return F.transform(
-        F.lit(units),
-        lambda cu, i: F.struct(
-            dot(v, cu).alias("score"), (-i).alias("nl")
-        ),
+        norm = math.sqrt(sum(x * x for x in c))
+        units.append([x / norm for x in c] if norm > 0 else [0.0] * len(c))
+    if len(cents) * len(cents[0]) <= _INLINE_CENTROID_BUDGET:
+        # struct order -- score, then nl = -index -- sorts a tie on
+        # score to the smaller index last, i.e. first once reversed
+        structs = F.transform(
+            F.lit(units),
+            lambda cu, i: F.struct(dot(F.col(v), cu).alias("score"),
+                                   (-i).alias("nl")),
+        )
+        top = F.slice(F.reverse(F.array_sort(structs)), 1, n)
+        return df.select("*", F.explode(top).alias("__s")).select(
+            *df.columns,
+            (-F.col("__s.nl")).cast("int").alias("__j"),
+            F.col("__s.score").alias("__score"),
+        )
+    cent = F.broadcast(local_frame(df.sparkSession, list(enumerate(units)),
+                                   "__j int, __cu array<double>"))
+    w = W.partitionBy(key).orderBy(F.desc("__score"), "__j")
+    return (
+        df.join(cent)
+        .withColumn("__score", dot(F.col(v), F.col("__cu")))
+        .withColumn("__r", F.row_number().over(w))
+        .filter(F.col("__r") <= n)
+        .drop("__cu", "__r")
     )
 
 
@@ -370,7 +388,7 @@ def kmeans_centroids_local(corpus: DataFrame, n_clusters: int,
             np.linalg.norm(cents, axis=1, keepdims=True), 1e-12
         )
         # argmax cosine, ties to the lowest centroid index (argmax
-        # returns the first max, matching `_centroid_score_structs`)
+        # returns the first max, matching `_nearest_centroids`)
         assign = (x @ units.T).argmax(axis=1)
         for c in range(n_clusters):
             mask = assign == c
@@ -448,13 +466,14 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     bounded hash-ordered sample, so the model and its driver state
     stay fixed-size however large the corpus grows.
 
-    Assignment strategy: when n_lists x dim fits the inline budget the
-    centroids are embedded as plan literals and every vector learns its
-    list (and every query its nprobe lists) in a MAP-ONLY expression --
-    the corpus is never shuffled or joined just to be partitioned, so
-    the whole plan's only wide stage is the final per-query top-k.
-    Past the budget (real IVF: ~10k lists x 768 dims), assignment
-    falls back to a broadcast join + max_by argmax.
+    Assignment strategy (`_nearest_centroids`): when n_lists x dim
+    fits the inline budget the centroids are embedded as plan literals
+    and every vector learns its list (and every query its nprobe
+    lists) in a MAP-ONLY expression -- the corpus is never shuffled or
+    joined just to be partitioned, so the whole plan's only wide stage
+    is the final per-query top-k. Past the budget (real IVF: ~10k
+    lists x 768 dims), assignment falls back to a broadcast join and
+    a per-vector window.
 
     Returns (query_id, neighbor_id, cos_sim, rank).
 
@@ -465,7 +484,6 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     """
     corpus = spread_input(corpus)
     spark = corpus.sparkSession
-    cent = None
     if label_col is not None:
         cent = _centroid_vectors(corpus, vec_col, label_col)
         # (label value, vector) sorted by label -- index j stands in
@@ -486,47 +504,17 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             spark, [],
             "query_id long, neighbor_id long, cos_sim double, rank long",
         )
-    inline = len(cvecs) * len(cvecs[0]) <= _INLINE_CENTROID_BUDGET
-    if inline:
-        label_df = F.broadcast(local_frame(
-            spark, list(enumerate(labels)),
-            f"__j bigint, clabel {label_type}",
-        ))
-    elif cent is None:
-        cent = local_frame(spark, list(enumerate(cvecs)),
-                           "clabel int, carr array<double>")
+    label_df = F.broadcast(local_frame(
+        spark, list(enumerate(labels)), f"__j int, clabel {label_type}",
+    ))
 
     def assign(df: DataFrame, prefix: str, n: int) -> DataFrame:
         """Top-n centroid labels per vector (ties -> lowest label)."""
         v = df.select(F.col(id_col).alias(f"{prefix}_id"),
                       as_double(vec_col).alias(f"{prefix}v"))
-        if inline:
-            structs = _centroid_score_structs(
-                F.col(f"{prefix}v"), cvecs
-            )
-            # sort ascending by (cos, -j), reverse -> cos desc, j asc
-            top = F.slice(F.reverse(F.array_sort(structs)), 1, n)
-            picked = v.select(
-                f"{prefix}_id", f"{prefix}v",
-                F.explode(top).alias("__s"),
-            ).select(
-                f"{prefix}_id", f"{prefix}v",
-                (-F.col("__s.nl")).cast("int").alias("__j"),
-            )
-            return picked.join(label_df, "__j").select(
-                f"{prefix}_id", f"{prefix}v", "clabel"
-            )
-        scored = v.join(F.broadcast(cent)).withColumn(
-            "__c_cos", cosine(F.col(f"{prefix}v"), F.col("carr"))
-        )
-        w = W.partitionBy(f"{prefix}_id").orderBy(
-            F.desc("__c_cos"), "clabel"
-        )
-        return (
-            scored.withColumn("__cr", F.row_number().over(w))
-            .filter(F.col("__cr") <= n)
-            .select(f"{prefix}_id", f"{prefix}v", "clabel")
-        )
+        return _nearest_centroids(
+            v, f"{prefix}_id", f"{prefix}v", cvecs, n
+        ).join(label_df, "__j").select(f"{prefix}_id", f"{prefix}v", "clabel")
 
     inverted = assign(corpus, "neighbor", 1)      # each vector in ONE list
     probes = assign(queries, "query", nprobe)     # each query probes nprobe

@@ -41,12 +41,11 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     fits, strategy probes), eager localCheckpoints, streaming drains,
     and in the extreme (``events_holt_linear``) the full recursion.
     The bench times construction + action together, so this is always
-    measured; but plan-only tooling (tools/explain_query.py,
-    tools/dump_plans.py) pays that execution too, and anything that
-    mutates session state during construction (temp views, scoped
-    shuffle-partition pins) assumes the bench's SEQUENTIAL,
-    one-query-at-a-time methodology -- do not construct registered
-    queries concurrently on one session.
+    measured; but plan-only tooling (tools/dump_plans.py) pays that
+    execution too, and anything that mutates session state during
+    construction (temp views, scoped shuffle-partition pins) assumes
+    the bench's SEQUENTIAL, one-query-at-a-time methodology -- do not
+    construct registered queries concurrently on one session.
     """
 
     def deco(fn: QueryFn) -> QueryFn:

@@ -48,6 +48,12 @@ ENGINE_CONFS: dict[str, str] = {
     # hash map (guide §3.1/§9): skips both sorts. Giant-vs-giant joins
     # keep sort-merge (the size conditions fail), so the spill-safe
     # path still covers the cases that need it.
+    # Risk at scale (ADVICE r11): the size conditions read estimates.
+    # A build side the planner under-estimates is hashed in memory
+    # per partition instead of sorted and spilled, and can OOM that
+    # task. The interleaved 8-core A/B that decides keep, scope or
+    # revert waits for a host with at least 8 cores; every A/B so far
+    # ran on 4.
     "spark.sql.join.preferSortMergeJoin": "false",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",

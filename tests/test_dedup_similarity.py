@@ -233,6 +233,35 @@ def test_ivf_join_fallback_matches_inline(spark, emb, monkeypatch, train):
     assert joined == inline
 
 
+@pytest.mark.parametrize("train", ["local", "portable"])
+def test_semantic_dedup_join_fallback_matches_inline(spark, emb, monkeypatch,
+                                                     train):
+    """SemDeDup assigns clusters through the same budgeted step as
+    `ivf_topk`: past the inline budget it returns the inline run's
+    rows, and its plan no longer carries the centroid matrix as a
+    literal."""
+    import re
+
+    from dataingestionengineprocess_spark.operators import similarity
+    from dataingestionengineprocess_spark.operators.quantize import (
+        semantic_dedup,
+    )
+
+    inline = sorted(map(tuple, semantic_dedup(
+        emb, threshold=0.92, n_clusters=8, train=train).collect()))
+    monkeypatch.setattr(similarity, "_INLINE_CENTROID_BUDGET", 0)
+    joined = sorted(map(tuple, semantic_dedup(
+        emb, threshold=0.92, n_clusters=8, train=train).collect()))
+    assert joined == inline
+    # without the max_cluster split nothing is checkpointed, so the
+    # assignment itself is in the final plan
+    plan = semantic_dedup(
+        emb, threshold=0.92, n_clusters=8, train=train, max_cluster=None
+    )._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation [__j" in plan
+    assert not re.search(r"\[\[-?[0-9]", plan), "centroid matrix inlined"
+
+
 def test_ivf_labeled_full_probe_equals_bruteforce(spark, emb):
     """The label-derived quantizer path must also be exhaustive at
     full probe (back-compat for corpora with an existing clustering)."""

@@ -1,5 +1,5 @@
 """`session.tune_session`, the step helpers (`checkpoint`,
-`scoped_conf`) and the scale stager's key-range guard."""
+`scoped_conf`) and the scale stager's key-range guard and replicas."""
 
 from __future__ import annotations
 
@@ -100,7 +100,39 @@ def test_stage_rejects_keys_at_the_replica_offset(spark, tmp_path):
         spark.range(1).selectExpr(
             *[f"CAST({key} AS BIGINT) AS {c}" for c in cols] or ["id"]
         ).write.parquet(str(src / f"{name}.parquet"))
+    with pytest.raises(ValueError, match="documents"):
+        sq.check_key_range(spark, str(src))
     staged_before = set(glob.glob("/tmp/engine_sfscale_*"))
     with pytest.raises(ValueError, match="documents"):
         sq.stage(spark, str(src), 2)
     assert set(glob.glob("/tmp/engine_sfscale_*")) == staged_before
+
+
+def test_replicas_at_k2_shift_keys_by_the_offset(spark, sf_dir):
+    """The shared union helper at k=2: rows double, replica 1 is the
+    source with every offset key raised by exactly REPLICA_OFFSET, and
+    an FK join matches twice as many rows. At k=1 nothing is staged."""
+    sq = _scale_queries()
+    sq.check_key_range(spark, sf_dir)
+    assert sq.stage(spark, sf_dir, 1) == sf_dir
+
+    def read(name):
+        return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+    lineitem, orders = read("lineitem"), read("orders")
+    cols = sq.OFFSET_COLS["orders"]
+    orders2 = sq.replicated(orders, 2, cols)
+    lineitem2 = sq.replicated(lineitem, 2, sq.OFFSET_COLS["lineitem"])
+    assert orders2.count() == 2 * orders.count()
+    assert lineitem2.count() == 2 * lineitem.count()
+
+    replica1 = orders2.where(F.col("o_orderkey") >= sq.REPLICA_OFFSET)
+    shifted = orders.withColumns(
+        {c: F.col(c) + sq.REPLICA_OFFSET for c in cols})
+    assert replica1.exceptAll(shifted).count() == 0
+    assert shifted.exceptAll(replica1).count() == 0
+
+    def fk_matches(li, o):
+        return li.join(o, li.l_orderkey == o.o_orderkey).count()
+
+    assert fk_matches(lineitem2, orders2) == 2 * fk_matches(lineitem, orders)

@@ -1,8 +1,11 @@
-"""Regenerate PLANS.md: formatted physical plans for the headline
-queries, so plan quality (pushdown, broadcasts, partial aggs, codegen
-spans) is reviewable without running anything.
+"""Formatted physical plans of registered queries.
 
-    python tools/dump_plans.py [sf_dir]
+    python tools/dump_plans.py [sf_dir] [name1,name2,...]
+
+With names, prints each named query's plan to stdout. Without, it
+regenerates PLANS.md from the headline queries, so plan quality
+(pushdown, broadcasts, partial aggs, codegen spans) is reviewable
+without running anything.
 """
 
 from __future__ import annotations
@@ -12,7 +15,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dataingestionengineprocess_spark.session import get_spark  # noqa: E402
+from dataingestionengineprocess_spark.session import (  # noqa: E402
+    get_spark,
+    release_persistent_rdds,
+)
 from dataingestionengineprocess_spark.queries import all_queries  # noqa: E402
 
 SHOWCASE = [
@@ -174,10 +180,23 @@ SHOWCASE = [
 ]
 
 
+def formatted_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    ).rstrip()
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    names = sys.argv[2].split(",") if len(sys.argv) > 2 else []
     spark = get_spark("plan-dump", extra_confs={"spark.ui.enabled": "false"})
     qs = all_queries()
+    if names:
+        for name in names:
+            plan = formatted_plan(qs[name](spark, sf_dir))
+            print(f"## {name}\n\n{plan}\n")
+            release_persistent_rdds(spark)
+        return
     out = [
         "# PLANS — formatted physical plans (generated)",
         "",
@@ -189,11 +208,8 @@ def main() -> None:
         "",
     ]
     for name in SHOWCASE:
-        df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
+        plan = formatted_plan(qs[name](spark, sf_dir))
+        out += [f"## {name}", "", "```", plan, "```", ""]
     dest = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "PLANS.md")
     with open(dest, "w") as f:

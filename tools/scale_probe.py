@@ -35,22 +35,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
+from scale_queries import (  # noqa: E402
+    REPLICA_OFFSET,
+    check_key_range,
+    replicated,
+    warm_up,
+)
+
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 and sys.argv[2] else None
 KS = (tuple(int(k) for k in sys.argv[3].split(","))
       if len(sys.argv) > 3 else (1, 2, 4))
-
-
-def scaled(df: DataFrame, k: int, id_col: str) -> DataFrame:
-    """k copies with disjoint id ranges (ids offset per replica)."""
-    if k == 1:
-        return df
-    off = 10_000_000
-    out = df
-    for i in range(1, k):
-        out = out.unionAll(
-            df.withColumn(id_col, F.col(id_col) + F.lit(i * off)))
-    return out
 
 
 def main() -> None:
@@ -101,6 +96,9 @@ def main() -> None:
         # khop) need real heap; the default 1g JVM OOMs
         "spark.driver.memory": "8g",
     })
+    # every replica below offsets its ids by REPLICA_OFFSET: refuse a
+    # source whose keys reach it before anything is timed
+    check_key_range(spark, SF)
     docs = load(spark, SF, "documents").select("doc_id", "text")
     emb = load(spark, SF, "embeddings")
     li = load(spark, SF, "lineitem").select(
@@ -130,26 +128,15 @@ def main() -> None:
     def scaled_time_events(k: int) -> DataFrame:
         """k copies in disjoint 40-day time blocks with offset ids:
         row count grows k-fold, per-hour density stays constant."""
-        out = ev
-        for i in range(1, k):
-            out = out.unionAll(
-                ev.withColumn("ts", F.col("ts")
-                              + F.expr(f"INTERVAL {i * 40} DAYS"))
-                .withColumn("event_id",
-                            F.col("event_id") + F.lit(i * 10_000_000)))
-        return out
+        return replicated(ev, k, ["event_id"], lambda rep, i: rep.withColumn(
+            "ts", F.col("ts") + F.expr(f"INTERVAL {i * 40} DAYS")))
 
     def scaled_salted_docs(k: int) -> DataFrame:
         """k doc replicas with PER-REPLICA token salt: every token of
         replica i gets an `_ri` suffix, so replica shingle universes
         are disjoint and pair density stays constant as rows grow."""
-        out = docs
-        for i in range(1, k):
-            out = out.unionAll(docs.select(
-                (F.col("doc_id") + F.lit(i * 10_000_000)).alias("doc_id"),
-                F.regexp_replace("text", r"(\S+)", f"$1_r{i}")
-                .alias("text")))
-        return out
+        return replicated(docs, k, ["doc_id"], lambda rep, i: rep.withColumn(
+            "text", F.regexp_replace("text", r"(\S+)", f"$1_r{i}")))
 
     def scaled_signed_emb(k: int) -> DataFrame:
         """k embedding replicas, each under a deterministic per-replica
@@ -157,19 +144,18 @@ def main() -> None:
         Gaussian-ish marginals are preserved, signatures decorrelate."""
         import hashlib
 
-        out = emb.select("vec_id", "embedding")
-        for i in range(1, k):
+        def signed(rep: DataFrame, i: int) -> DataFrame:
             mask = [
                 1.0 if int(hashlib.md5(f"sp:{i}:{d}".encode())
                            .hexdigest(), 16) % 2 == 0 else -1.0
                 for d in range(64)
             ]
-            out = out.unionAll(emb.select(
-                (F.col("vec_id") + F.lit(i * 10_000_000)).alias("vec_id"),
-                F.zip_with(F.col("embedding").cast("array<double>"),
-                           F.lit(mask), lambda x, m: x * m)
-                .alias("embedding")))
-        return out
+            return rep.withColumn("embedding", F.zip_with(
+                F.col("embedding").cast("array<double>"),
+                F.lit(mask), lambda x, m: x * m))
+
+        return replicated(emb.select("vec_id", "embedding"), k, ["vec_id"],
+                          signed)
 
     batch_docs = docs.limit(200).localCheckpoint(eager=True)
     _index_dir = tempfile.mkdtemp(prefix="scale_probe_idx_")
@@ -197,7 +183,7 @@ def main() -> None:
                            F.explode(shingles(text_col, 3)).alias("s"))
         sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
         a = sh.filter((F.col("id") % 3 == 0)
-                      & (F.col("id") < 10_000_000)) \
+                      & (F.col("id") < REPLICA_OFFSET)) \
             .select(F.col("id").alias("id_a"), "s")
         inter = (
             a.join(sh.select(F.col("id").alias("id_b"), "s"), "s")
@@ -223,7 +209,7 @@ def main() -> None:
         quantized-cosine terms, linear in the corpus."""
         va = norm_side(emb_k, "vec_id", "embedding", "id_a", "va", "na") \
             .filter((F.col("id_a") % 5 == 0)
-                    & (F.col("id_a") < 10_000_000))
+                    & (F.col("id_a") < REPLICA_OFFSET))
         vb = norm_side(emb_k, "vec_id", "embedding", "id_b", "vb", "nb")
         return (
             va.join(vb, F.col("id_a") < F.col("id_b"))
@@ -249,7 +235,7 @@ def main() -> None:
         spread = _spread_input(emb_k)
         va = norm_side(spread, "vec_id", "embedding", "id_a", "va",
                        "na").filter((F.col("id_a") % 5 == 0)
-                                    & (F.col("id_a") < 10_000_000))
+                                    & (F.col("id_a") < REPLICA_OFFSET))
         vb = norm_side(spread, "vec_id", "embedding", "id_b", "vb", "nb")
         nmax = (
             va.join(vb, F.col("id_a") != F.col("id_b"))
@@ -259,7 +245,7 @@ def main() -> None:
         base = (
             emb_k.select(F.col("vec_id").alias("id_a"))
             .filter((F.col("id_a") % 5 == 0)
-                    & (F.col("id_a") < 10_000_000))
+                    & (F.col("id_a") < REPLICA_OFFSET))
             .join(nmax, "id_a", "left")
         )
         return base.agg(
@@ -312,7 +298,7 @@ def main() -> None:
                         tbl.schema.get_field_index("event_id"),
                         "event_id",
                         pc.add(tbl.column("event_id"),
-                               i * 10_000_000))
+                               i * REPLICA_OFFSET))
                     reps.append(shifted)
                 tbl = pa.concat_tables(reps)
             pq.write_table(tbl, os.path.join(kdir, "events.parquet"))
@@ -342,60 +328,60 @@ def main() -> None:
     OPS = {
         # hash-agg battery over the fact table: the pure-shuffle baseline
         "agg_battery": lambda k: (
-            scaled(li, k, "l_orderkey")
+            replicated(li, k, ["l_orderkey"])
             .groupBy("l_returnflag")
             .agg(F.sum("l_quantity"), F.avg("l_extendedprice"),
                  F.count(F.lit(1)))
         ),
         # exact dedup: fingerprint shuffle, uniform keys
         "dedup_exact": lambda k: dedup_exact_text(
-            scaled(docs, k, "doc_id")),
+            replicated(docs, k, ["doc_id"])),
         # MinHash-LSH near-dup: banded candidates, never all-pairs
         "dedup_minhash": lambda k: minhash_neardup_pairs(
-            scaled(docs, k, "doc_id")),
+            replicated(docs, k, ["doc_id"])),
         # PPJoin prefix-filtered Jaccard: rare-first prefix pruning
         "dedup_ppjoin": lambda k: prefix_filter_jaccard_pairs(
-            scaled(docs, k, "doc_id")),
+            replicated(docs, k, ["doc_id"])),
         # LSH ANN: bucketed candidate join + exact re-rank on candidates
         "knn_lsh": lambda k: lsh_topk(
-            scaled(emb, k, "vec_id"),
+            replicated(emb, k, ["vec_id"]),
             emb.limit(50).select("vec_id", "embedding"),
             k=5, id_col="vec_id", vec_col="embedding"),
         # classifier gate: map-only scan, the linear control
         "classifier_scan": lambda k: (
-            scaled(docs, k, "doc_id")
+            replicated(docs, k, ["doc_id"])
             .select("doc_id", (classifier_score("text") >= 0.5).alias("keep"))
         ),
         # spatial grid radius join: left side grows (offset keys draw
         # fresh md5 points, so density rises with the data); pair
         # output grows ~linearly with |left| at fixed right side
         "spatial_grid": lambda k: grid_radius_pairs(
-            md5_points(scaled(cust, k, "c_custkey"),
+            md5_points(replicated(cust, k, ["c_custkey"]),
                        "c_custkey", "cx", "cy"),
             md5_points(supp, "s_suppkey", "sx", "sy"),
             0.02, "c_custkey", "s_suppkey"),
         # PCA covariance: the X^T X self-join, n * d^2 terms -- the
         # linear-in-n matrix accumulation behind ml_pca_power_portable
         "pca_covariance": lambda k: quantized_covariance(
-            scaled(emb, k, "vec_id"), "vec_id", "embedding"),
+            replicated(emb, k, ["vec_id"]), "vec_id", "embedding"),
         # winnowing fingerprints: per-doc window + selective
         # (doc, h=wmin) equi-join -- cost linear in total grams
         "winnowing": lambda k: winnow_fingerprints(
-            scaled(docs, k, "doc_id")),
+            replicated(docs, k, ["doc_id"])),
         # bounded BFS: per-hop frontier equi-join + left-anti; edge
         # count grows ~linearly with replicated orders (offset order
         # keys, fixed part universe), frontier bounded by nodes
         "khop_bfs": lambda k: khop_bfs(
-            _copurchase_edges(scaled(
+            _copurchase_edges(replicated(
                 li_full.select("l_orderkey", "l_partkey"),
-                k, "l_orderkey")),
+                k, ["l_orderkey"])),
             part_seeds, hops=2),
         # distributed global rank: the two-pass range-partition prefix
         # (operators/ranking.py) -- per-partition totals to bounded
         # driver state, partition-local windows; must stay ~linear
         "global_rank": lambda k: _global_rank(
-            scaled(li_full.select("l_orderkey", "l_linenumber",
-                                  "l_extendedprice"), k, "l_orderkey"),
+            replicated(li_full.select("l_orderkey", "l_linenumber",
+                                      "l_extendedprice"), k, ["l_orderkey"]),
             ["l_extendedprice", "l_orderkey", "l_linenumber"]),
         # grouped rank on a 3-value key: the funnel-removal primitive
         # behind the round-5 rewrites (per-group rank = global rank -
@@ -403,9 +389,9 @@ def main() -> None:
         # a third of the table in ONE task and scale ~k log k per
         # task; this must stay ~linear with flat parallelism.
         "grouped_rank_flag": lambda k: _grouped_rank(
-            scaled(li_full.select("l_returnflag", "l_orderkey",
-                                  "l_linenumber", "l_extendedprice"),
-                   k, "l_orderkey"),
+            replicated(li_full.select("l_returnflag", "l_orderkey",
+                                      "l_linenumber", "l_extendedprice"),
+                       k, ["l_orderkey"]),
             ["l_returnflag"],
             ["l_extendedprice", "l_orderkey", "l_linenumber"]),
         # trailing-hour rolling distinct as the banded (type, hour)
@@ -425,7 +411,7 @@ def main() -> None:
         # greedy prune drops them against the first kept rep, so the
         # kept set per cluster stays bounded too.
         "semantic_dedup": lambda k: semantic_dedup(
-            scaled(emb, k, "vec_id"), n_clusters=8 * k),
+            replicated(emb, k, ["vec_id"]), n_clusters=8 * k),
         # containment pairs: the shingle equi-join is candidate-bound,
         # so like rolling_distinct the probe must hold DENSITY
         # constant -- replicas get per-replica token salt (disjoint
@@ -472,7 +458,7 @@ def main() -> None:
         # the cell equi-join's cost must then track k.
         "dbscan_neighbors": lambda k: (
             eps_neighbor_pairs(
-                md5_points(scaled(cust, k, "c_custkey"),
+                md5_points(replicated(cust, k, ["c_custkey"]),
                            "c_custkey", "cx", "cy"),
                 eps=0.02 / (k ** 0.5))
             .groupBy("p").agg(F.count(F.lit(1)).alias("n"))
@@ -491,25 +477,13 @@ def main() -> None:
         # edges ~k. 4 iterations (half the query's 8) keep the decade
         # probe inside minutes without changing the growth exponent.
         "pagerank": lambda k: _pagerank(
-            _copurchase_edges(
-                scaled(li_full.select("l_orderkey", "l_partkey"),
-                       k, "l_orderkey")
-                .withColumn(
-                    "l_partkey",
-                    F.col("l_partkey")
-                    + (F.col("l_orderkey") / F.lit(10_000_000))
-                    .cast("long") * F.lit(10_000_000))),
+            _copurchase_edges(replicated(
+                li_full.select("l_orderkey", "l_partkey"), k,
+                ["l_orderkey", "l_partkey"])),
             iterations=4),
-        "linkpred_wedges": lambda k: jaccard_link_scores(
-            scaled(li_full.select("l_orderkey", "l_partkey"),
-                   k, "l_orderkey")
-            # recover the replica index from the orderkey offset
-            # (fixture orderkeys < 10M) and shift partkeys by it
-            .withColumn(
-                "l_partkey",
-                F.col("l_partkey")
-                + (F.col("l_orderkey") / F.lit(10_000_000))
-                .cast("long") * F.lit(10_000_000))),
+        "linkpred_wedges": lambda k: jaccard_link_scores(replicated(
+            li_full.select("l_orderkey", "l_partkey"), k,
+            ["l_orderkey", "l_partkey"])),
         # --- round-8 additions (VERDICT r7 #6): the certificate audit
         # sides and one streaming drain.
         # MinHash-certificate exact side at deployment shape: a FIXED
@@ -519,7 +493,7 @@ def main() -> None:
         # (shingle sizes) + sample x per-shingle collisions -- must
         # track k, never pairs^2.
         "minhash_cert_audit": lambda k: _jaccard_audit_count(
-            scaled(docs, k, "doc_id")),
+            replicated(docs, k, ["doc_id"])),
         # BRP-certificate exact side at deployment shape: a FIXED
         # 1-in-5 audit sample of the ORIGINAL vectors scanned against
         # the k-scaled signed corpus (|sample| x n quantized-cosine
@@ -533,10 +507,10 @@ def main() -> None:
         # corpus, the round-9 kernels' spread + shared-scan layout).
         # SimHash certificate: text-shingle exact J>=0.9 stratum.
         "simhash_cert_audit": lambda k: _jaccard_audit_count(
-            scaled(docs, k, "doc_id"), tenths=9, spread=True),
+            replicated(docs, k, ["doc_id"]), tenths=9, spread=True),
         # pHash certificate: hex payload-block shingles, J>=0.9.
         "phash_cert_audit": lambda k: _jaccard_audit_count(
-            _payload_blocks(scaled(docs, k, "doc_id")), tenths=9,
+            _payload_blocks(replicated(docs, k, ["doc_id"])), tenths=9,
             text_col="block_str", spread=True),
         # SemDeDup certificate: stratum max-cosine isolation counts,
         # one scan feeding both thresholds.
@@ -549,9 +523,7 @@ def main() -> None:
         "stream_drain_tumbling": lambda k: _staged_drain(k),
     }
 
-    # warm the session once
-    li.groupBy("l_returnflag").count().write.format("noop") \
-        .mode("overwrite").save()
+    warm_up(spark, SF)
 
     out: dict[str, dict[str, float]] = {}
     for name, build in OPS.items():
