@@ -151,8 +151,10 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.9,
     Scale design:
     - The quantizer is the ``train`` fit `similarity._fit_centroids`
       resolves (``"local"`` k-means or the ``"portable"``
-      oracle-replayable init), with literal centroids and map-only
-      assignment -- no shuffle to cluster.
+      oracle-replayable init), and assignment is map-only
+      (`similarity._nearest_centroids`: the centroid matrix is a plan
+      literal under the inline budget, one broadcast row past it) --
+      no shuffle to cluster.
       ``n_clusters`` should grow with the corpus so the expected
       cluster size stays bounded (the paper uses ~n/10k clusters);
       the pairwise term is then k x (n/k)^2 = n^2/k, linear in n for
@@ -236,7 +238,7 @@ def _semantic_assigned(corpus: DataFrame, n_clusters: int, id_col: str,
     cvecs = _fit_centroids(corpus, n_clusters, id_col, vec_col, train)
     vecs = corpus.select(F.col(id_col).cast("long").alias("vec_id"),
                          as_double(vec_col).alias("v"))
-    assigned = _nearest_centroids(vecs, "vec_id", "v", cvecs).select(
+    assigned = _nearest_centroids(vecs, "v", cvecs).select(
         "vec_id", "v", F.col("__j").alias("clabel"),
         # __score is dot(v, unit_centroid); dividing by |v| makes it
         # the true cosine used for the farthest-first ordering.

@@ -249,16 +249,20 @@ def lsh_knn_graph(corpus: DataFrame, k: int = 4,
     )
 
 
-#: Above this many inlined coefficients (n_lists x dim) the centroid
-#: matrix literal stops being "tiny plan data" (it ships with every
-#: task); fall back to a broadcast join. 8 lists x 64 dims = 512 --
-#: far under; 10k lists x 768 dims at real IVF scale correctly takes
-#: the join path.
-_INLINE_CENTROID_BUDGET = 65536
+#: Above this many coefficients (n_lists x dim) the centroid matrix
+#: is not a plan literal: `F.lit` of a nested list issues one py4j
+#: `lit` call per coefficient before constant folding collapses them.
+#: Measured on a 4-core host with `semantic_dedup` at sf0.1 (dim 64,
+#: portable init): building the plan costs about 0.37 ms more per
+#: coefficient inline than as a broadcast row -- 64 centroids 2.5 s
+#: against 1.0 s, 1000 centroids 24-31 s against 4-5 s -- for the same
+#: action time. 512 keeps the 8-list x 64-dim quantizers of the
+#: registered queries inline, where the gap is about 0.2 s.
+_INLINE_CENTROID_BUDGET = 512
 
 
-def _nearest_centroids(df: DataFrame, key: str, v: str,
-                       cents: list[list[float]], n: int = 1) -> DataFrame:
+def _nearest_centroids(df: DataFrame, v: str, cents: list[list[float]],
+                       n: int = 1) -> DataFrame:
     """``df`` with one row per (row, one of its ``n`` nearest
     centroids) and two more columns: ``__j``, the centroid's index
     (int), and ``__score``, dot(``v``, unit centroid j) --
@@ -267,16 +271,17 @@ def _nearest_centroids(df: DataFrame, key: str, v: str,
     The one assignment behind `ivf_topk`'s lists and
     `semantic_dedup`'s clusters.
 
-    The centroids are L2-normalized on the driver. While
-    n_centroids x dim fits `_INLINE_CENTROID_BUDGET`, the whole matrix
-    rides in as ONE array<array<double>> literal scored by a single
-    two-arg ``transform`` lambda: map-only, no join, no shuffle, and an
+    The centroids are L2-normalized on the driver into ONE
+    array<array<double>> matrix, and a single two-arg ``transform``
+    lambda scores every centroid: map-only, no shuffle, and an
     expression tree of constant size however large the matrix, where
     per-centroid inline expressions would build a multi-thousand-node
-    plan. Past the budget the literal would ship with every task, so
-    the unit centroids become a broadcast frame and a window over
-    ``key`` (unique per row) keeps the top n. Both paths fold the same
-    coefficients in the same order, so they assign identically."""
+    plan. While n_centroids x dim fits `_INLINE_CENTROID_BUDGET` the
+    matrix is a plan literal; past it, it is the one column of a
+    one-row broadcast frame cross-joined onto ``df`` (each row still
+    meets the matrix once, so nothing is shuffled or multiplied). Both
+    paths score the same matrix with the same expression, so they
+    assign identically."""
     import math
 
     units = []
@@ -284,28 +289,22 @@ def _nearest_centroids(df: DataFrame, key: str, v: str,
         norm = math.sqrt(sum(x * x for x in c))
         units.append([x / norm for x in c] if norm > 0 else [0.0] * len(c))
     if len(cents) * len(cents[0]) <= _INLINE_CENTROID_BUDGET:
-        # struct order -- score, then nl = -index -- sorts a tie on
-        # score to the smaller index last, i.e. first once reversed
-        structs = F.transform(
-            F.lit(units),
-            lambda cu, i: F.struct(dot(F.col(v), cu).alias("score"),
-                                   (-i).alias("nl")),
-        )
-        top = F.slice(F.reverse(F.array_sort(structs)), 1, n)
-        return df.select("*", F.explode(top).alias("__s")).select(
-            *df.columns,
-            (-F.col("__s.nl")).cast("int").alias("__j"),
-            F.col("__s.score").alias("__score"),
-        )
-    cent = F.broadcast(local_frame(df.sparkSession, list(enumerate(units)),
-                                   "__j int, __cu array<double>"))
-    w = W.partitionBy(key).orderBy(F.desc("__score"), "__j")
-    return (
-        df.join(cent)
-        .withColumn("__score", dot(F.col(v), F.col("__cu")))
-        .withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= n)
-        .drop("__cu", "__r")
+        matrix, scored = F.lit(units), df
+    else:
+        matrix, scored = F.col("__cu"), df.crossJoin(F.broadcast(local_frame(
+            df.sparkSession, [(units,)], "__cu array<array<double>>")))
+    # struct order -- score, then nl = -index -- sorts a tie on score
+    # to the smaller index last, i.e. first once reversed
+    structs = F.transform(
+        matrix,
+        lambda cu, i: F.struct(dot(F.col(v), cu).alias("score"),
+                               (-i).alias("nl")),
+    )
+    top = F.slice(F.reverse(F.array_sort(structs)), 1, n)
+    return scored.select(*df.columns, F.explode(top).alias("__s")).select(
+        *df.columns,
+        (-F.col("__s.nl")).cast("int").alias("__j"),
+        F.col("__s.score").alias("__score"),
     )
 
 
@@ -471,9 +470,9 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     and every vector learns its list (and every query its nprobe
     lists) in a MAP-ONLY expression -- the corpus is never shuffled or
     joined just to be partitioned, so the whole plan's only wide stage
-    is the final per-query top-k. Past the budget (real IVF: ~10k
-    lists x 768 dims), assignment falls back to a broadcast join and
-    a per-vector window.
+    is the final per-query top-k. Past the budget (anything larger
+    than 8 lists x 64 dims), the same matrix arrives as one broadcast
+    row and assignment stays map-only.
 
     Returns (query_id, neighbor_id, cos_sim, rank).
 
@@ -512,9 +511,9 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         """Top-n centroid labels per vector (ties -> lowest label)."""
         v = df.select(F.col(id_col).alias(f"{prefix}_id"),
                       as_double(vec_col).alias(f"{prefix}v"))
-        return _nearest_centroids(
-            v, f"{prefix}_id", f"{prefix}v", cvecs, n
-        ).join(label_df, "__j").select(f"{prefix}_id", f"{prefix}v", "clabel")
+        return _nearest_centroids(v, f"{prefix}v", cvecs, n).join(
+            label_df, "__j"
+        ).select(f"{prefix}_id", f"{prefix}v", "clabel")
 
     inverted = assign(corpus, "neighbor", 1)      # each vector in ONE list
     probes = assign(queries, "query", nprobe)     # each query probes nprobe

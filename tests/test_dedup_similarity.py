@@ -238,8 +238,8 @@ def test_semantic_dedup_join_fallback_matches_inline(spark, emb, monkeypatch,
                                                      train):
     """SemDeDup assigns clusters through the same budgeted step as
     `ivf_topk`: past the inline budget it returns the inline run's
-    rows, and its plan no longer carries the centroid matrix as a
-    literal."""
+    rows, its plan no longer carries the centroid matrix as a
+    literal, and the assignment still shuffles nothing."""
     import re
 
     from dataingestionengineprocess_spark.operators import similarity
@@ -258,8 +258,9 @@ def test_semantic_dedup_join_fallback_matches_inline(spark, emb, monkeypatch,
     plan = semantic_dedup(
         emb, threshold=0.92, n_clusters=8, train=train, max_cluster=None
     )._jdf.queryExecution().optimizedPlan().toString()
-    assert "LocalRelation [__j" in plan
+    assert "LocalRelation [__cu" in plan
     assert not re.search(r"\[\[-?[0-9]", plan), "centroid matrix inlined"
+    assert "Window" not in plan
 
 
 def test_ivf_labeled_full_probe_equals_bruteforce(spark, emb):

@@ -89,6 +89,16 @@ def _scale_queries():
     return mod
 
 
+def test_loading_scale_queries_leaves_perfbench_off_the_path():
+    """The staging helpers import without perfbench: its run.py puts
+    perfbench/ first on sys.path, where its generic module names
+    (run, stats, fixtures) would shadow others for the whole process."""
+    before = set(sys.modules)
+    _scale_queries()
+    assert os.path.join(_ROOT, "perfbench") not in sys.path
+    assert not {"run", "spans"} & (set(sys.modules) - before)
+
+
 def test_stage_rejects_keys_at_the_replica_offset(spark, tmp_path):
     """One key at REPLICA_OFFSET would make replica 0's doc 10,000,000
     and replica 1's doc 0 the same id: stage() refuses before it

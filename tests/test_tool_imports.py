@@ -12,6 +12,7 @@ from __future__ import annotations
 import ast
 import importlib
 import pathlib
+import sys
 
 import pytest
 
@@ -37,12 +38,21 @@ def _checked_imports(path: pathlib.Path) -> list[tuple[str, str]]:
 def test_tool_imports_resolve(tool, monkeypatch):
     for d in LOCAL_DIRS:
         monkeypatch.syspath_prepend(str(d))
+    loaded = set(sys.modules)
     missing = []
-    for module, name in _checked_imports(tool):
-        mod = importlib.import_module(module)
-        if not hasattr(mod, name):
-            try:
-                importlib.import_module(f"{module}.{name}")
-            except ModuleNotFoundError:
-                missing.append(f"{module}.{name}")
+    try:
+        for module, name in _checked_imports(tool):
+            mod = importlib.import_module(module)
+            if not hasattr(mod, name):
+                try:
+                    importlib.import_module(f"{module}.{name}")
+                except ModuleNotFoundError:
+                    missing.append(f"{module}.{name}")
+    finally:
+        # the bare names (`run`, `spans`, `stats`) must not outlive the
+        # case and shadow same-named modules in later tests; monkeypatch
+        # restores sys.path, which perfbench/run.py also prepends to
+        for mod in set(sys.modules) - loaded:
+            if mod.split(".")[0] in LOCAL:
+                del sys.modules[mod]
     assert not missing, f"{tool.name} imports missing names: {missing}"

@@ -36,11 +36,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from scale_queries import (  # noqa: E402
+    PERFBENCH,
     REPLICA_OFFSET,
     check_key_range,
     replicated,
-    warm_up,
 )
+
+sys.path.insert(0, PERFBENCH)
+from run import warm_up  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 and sys.argv[2] else None

@@ -23,14 +23,16 @@ reused across invocations -- staging is scaffolding, never timed.
 `tools/scale_probe.py` replicates its operator inputs with the same
 offset, guard and union helper.
 
-Each query runs once after the bench warm-up, traced with perfbench's
-span accounting (`perfbench/spans.py`): wall time split into
-construction (``fn(spark, dir)``) and action (the noop write), and
-the jobs, tasks, executor CPU and shuffle bytes its Spark jobs ran.
-Prints one JSON line: {"cpus": N, "k": k, "sf_dir": dir, "queries":
-{name: {"wall_s", "construct_s", "action_s", "construct_jobs",
+Each listed query runs once after the bench warm-up, traced with
+perfbench's span accounting (`perfbench/spans.py`): wall time split
+into construction (``fn(spark, dir)``) and action (the noop write),
+and the jobs, tasks, executor CPU and shuffle bytes its Spark jobs
+ran. A name listed n times runs n times, in list order (``q1,q1,q1``
+gives the first run and two steady-state ones). Prints one JSON line:
+{"cpus": N, "k": k, "sf_dir": dir, "queries": {name: [run, ...]}},
+each run {"wall_s", "construct_s", "action_s", "construct_jobs",
 "action_jobs", "tasks", "executor_cpu_s", "shuffle_read_bytes",
-"shuffle_write_bytes"}}}; a failed query maps to {"error": message}.
+"shuffle_write_bytes"}, or {"error": message} for a failed run.
 NOT part of the bench contract -- bench.py is untouched; this exists
 for SCALE.md evidence only.
 """
@@ -43,8 +45,8 @@ import os
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PERFBENCH = os.path.join(ROOT, "perfbench")
 sys.path.insert(0, ROOT)
-sys.path.append(os.path.join(ROOT, "perfbench"))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
@@ -53,8 +55,6 @@ from dataingestionengineprocess_spark.session import (  # noqa: E402
     get_spark,
     release_persistent_rdds,
 )
-from run import warm_up  # noqa: E402
-from spans import Tracer, collect_tree, tree_total  # noqa: E402
 
 #: id columns shifted per replica: table -> [key columns]. Every FK
 #: references a shifted PK of the same name family, so offsetting both
@@ -135,9 +135,11 @@ def stage(spark, sf_dir: str, k: int) -> str:
     return dst
 
 
-def time_query(spark, tracer: Tracer, name: str, fn, sf_dir: str) -> dict:
-    """Construct and act (noop sink) once inside spans; the query's
-    wall split and the Spark counters of its jobs."""
+def time_query(spark, tracer, name: str, fn, sf_dir: str) -> dict:
+    """Construct and act (noop sink) once inside spans of ``tracer``
+    (a `spans.Tracer`); the query's wall split and the Spark counters
+    of its jobs."""
+    from spans import collect_tree, tree_total
     with tracer.span(f"scale:{name}") as root:
         with tracer.span(f"scale:{name}:construct") as cspan:
             df = fn(spark, sf_dir)
@@ -159,6 +161,13 @@ def main() -> int:
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
 
+    # perfbench is imported only to measure: run.py puts perfbench/
+    # first on sys.path, which importing the staging helpers above
+    # (the tests and scale_probe.py do) must not do
+    sys.path.insert(0, PERFBENCH)
+    from run import warm_up
+    from spans import Tracer
+
     spark = get_spark("scale-queries", extra_confs={
         "spark.ui.enabled": "false",
         "spark.driver.memory": "16g",
@@ -168,17 +177,18 @@ def main() -> int:
     warm_up(spark, staged)
 
     tracer = Tracer(spark.sparkContext)
-    results: dict[str, dict] = {}
+    results: dict[str, list[dict]] = {}
     for name in names:
         fn = registry.get(name)
         if fn is None:
             print(f"## unknown query {name}", file=sys.stderr)
             continue
         try:
-            results[name] = time_query(spark, tracer, name, fn, staged)
+            run = time_query(spark, tracer, name, fn, staged)
         except Exception as e:  # noqa: BLE001 -- record, keep sweeping
-            results[name] = {"error": f"{type(e).__name__}: {e}"}
+            run = {"error": f"{type(e).__name__}: {e}"}
             print(f"## {name} failed: {e}", file=sys.stderr)
+        results.setdefault(name, []).append(run)
         release_persistent_rdds(spark)
 
     print(json.dumps({
